@@ -1,34 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // one session-level init instead of per-query re-registration checks
-    functions.DotProduct.register(spark)
-    functions.NfcNormalize.register(spark)
-    functions.ShinglesK.register(spark)
-    functions.ShingleHashes.register(spark)
-    functions.LshBands.register(spark)
-    functions.JaroWinkler.register(spark)
-    plans.Rules.ensureInjected(spark)
-    // warm the JVM / parquet reader / codegen paths so startup cost is not
-    // attributed to whichever query happens to run first
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().count()
-    } catch { case _: Throwable => }
+    val spark = GraftSession.local()
+    warmUp(spark, sfDir)
     // dev-only subset filter: SPARK_GRAFT_ONLY=q1,q2 (unset = full protocol)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    val reasons = scala.collection.mutable.Map.empty[String, String]
     def runPass(subset: Option[Set[String]] = None): Map[String, Double] =
       SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) =>
@@ -40,7 +19,11 @@ object Bench {
         try {
           fn(spark, sfDir).count()
           Some(name -> (System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => failed += name; None }
+        } catch { case e: Throwable =>
+          failed += name
+          reasons(name) = Verify.reason(e)
+          None
+        }
       }.toMap
     // Two full passes, per-query MIN: this box's co-tenant load inflates a
     // single cold pass up to 100×+ on sub-second queries (BENCH_r04), and
@@ -63,6 +46,8 @@ object Bench {
     def js(m: Map[String, Double]) = m.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val fs = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val why = reasons.toSeq.sorted
+      .map { case (k, v) => s"${Verify.q(k)}:${Verify.q(v)}" }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // The harness archives only the last ~2000 chars of stdout; a full
     // per-query map over 440+ queries is ~15 KB and gets truncated into an
@@ -70,7 +55,7 @@ object Bench {
     // full detail goes to BENCH_FULL.json on disk, and the ONE stdout JSON
     // line stays compact — summary stats + the slowest queries — so it fits
     // whole inside the archived tail and parses.
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(results)},"queries_run1":${js(run1)},"passes":2,"passes_slowest15":3,"failed":$fs,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(results)},"queries_run1":${js(run1)},"passes":2,"passes_slowest15":3,"failed":$fs,"failed_reasons":$why,"sf":"$sfDir"}"""
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
         full.getBytes("UTF-8"))
@@ -104,4 +89,13 @@ object Bench {
     println(summary)
     spark.stop()
   }
+
+  /** Warm the JVM / parquet reader / codegen paths so startup cost is not
+    * attributed to whichever query happens to run first. */
+  def warmUp(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit =
+    try {
+      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .groupBy("l_returnflag").count().count()
+    } catch { case _: Throwable => }
 }

@@ -129,12 +129,7 @@ object GenDocs {
     * judge-visible evidence that scans prune, dims broadcast, aggregates
     * are two-phase, and the custom operators actually appear. */
   private def writePlans(): Unit = {
-    import org.apache.spark.sql.SparkSession
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val sf = "/root/testdata/sf0.001"
     val headline = Seq(
       "agg_group_sum" -> "two-phase hash aggregate, pruned scan",

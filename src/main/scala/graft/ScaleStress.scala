@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 10× scale-up stress for the candidate-generation operators: replicates
@@ -11,36 +11,14 @@ import org.apache.spark.sql.functions._
   */
 object ScaleStress {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SCALE.md's floors were recorded at local[32]
+    val spark = GraftSession.local(32)
     val dir = "/root/testdata/sf0.1"
-    // dev-only subset: SPARK_GRAFT_STRESS_ONLY=substr1,substr2 runs only
-    // rows whose tag contains a listed substring (fixture caches for
-    // skipped rows still build — acceptable for iteration)
-    val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY").map(_.split(",").toSet)
-    def time[T](tag: String)(f: => T): Unit = {
-      if (only.exists(o => !o.exists(tag.contains))) return
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[stress] $tag: ${(System.nanoTime() - t0) / 1e9}%.1f s ($r)")
-    }
+    val time = new Timer("stress")
     val docs = engine.Tables(spark, dir, "documents")
     val emb = engine.Tables(spark, dir, "embeddings")
-
-    def docsX(n: Int): DataFrame = (0 until n).map { i =>
-      docs.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-        array_join(transform(split(col("text"), " "),
-          t => concat(t, lit(i.toString))), " ").as("text"))
-    }.reduce(_ unionByName _)
-
-    def embX(n: Int): DataFrame = (0 until n).map { i =>
-      emb.select((col("vec_id") + lit(i * 10000000L)).as("vec_id"),
-        transform(col("embedding"), x => x + lit(i * 0.01f)).as("embedding"),
-        col("label"))
-    }.reduce(_ unionByName _)
+    def docsX(n: Int): DataFrame = ScaleStress.docsX(docs, n)
+    def embX(n: Int): DataFrame = ScaleStress.embX(emb, n)
 
     val d1 = docs.select("doc_id", "text").cache(); d1.count()
     val d10 = docsX(10).cache(); d10.count()
@@ -599,4 +577,33 @@ object ScaleStress {
         ".RocksDBStateStoreProvider"))
     spark.stop()
   }
+
+  /** Prints one timed stress row as `[label] tag: seconds (result)`.
+    * Dev-only subset: SPARK_GRAFT_STRESS_ONLY=substr1,substr2 runs only
+    * rows whose tag contains a listed substring (fixture caches for
+    * skipped rows still build — acceptable for iteration). */
+  final class Timer(label: String) {
+    private val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY").map(_.split(",").toSet)
+    def apply[T](tag: String)(f: => T): Unit = {
+      if (only.exists(o => !o.exists(tag.contains))) return
+      val t0 = System.nanoTime()
+      val r = f
+      println(f"[$label] $tag: ${(System.nanoTime() - t0) / 1e9}%.1f s ($r)")
+    }
+  }
+
+  /** `n` copies of the documents with disjoint ids and a per-copy suffix
+    * on every token, so copies don't trivially collide in blocking. */
+  def docsX(docs: DataFrame, n: Int): DataFrame = (0 until n).map { i =>
+    docs.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
+      array_join(transform(split(col("text"), " "),
+        t => concat(t, lit(i.toString))), " ").as("text"))
+  }.reduce(_ unionByName _)
+
+  /** `n` copies of the embeddings with disjoint ids and every vector
+    * shifted by 0.01 per copy; other columns ride along. */
+  def embX(emb: DataFrame, n: Int): DataFrame = (0 until n).map { i =>
+    emb.withColumn("vec_id", col("vec_id") + lit(i * 10000000L))
+      .withColumn("embedding", transform(col("embedding"), x => x + lit(i * 0.01f)))
+  }.reduce(_ unionByName _)
 }

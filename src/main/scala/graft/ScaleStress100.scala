@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 100× stress for the two design-scale claims the r11 verdict flagged
@@ -11,35 +11,16 @@ import org.apache.spark.sql.functions._
   * Results land in SCALE.md. */
 object ScaleStress100 {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SCALE.md's floors were recorded at local[32]
+    val spark = GraftSession.local(32)
     import spark.implicits._
     val dir = "/root/testdata/sf0.1"
-    // same dev-only subset filter as ScaleStress
-    val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY").map(_.split(",").toSet)
-    def time[T](tag: String)(f: => T): Unit = {
-      if (only.exists(o => !o.exists(tag.contains))) return
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[stress100] $tag: ${(System.nanoTime() - t0) / 1e9}%.1f s ($r)")
-    }
+    val time = new ScaleStress.Timer("stress100")
     val docs = engine.Tables(spark, dir, "documents").select("doc_id", "text")
     val emb = engine.Tables(spark, dir, "embeddings")
       .select("vec_id", "embedding")
-
-    def docsX(n: Int): DataFrame = (0 until n).map { i =>
-      docs.select((col("doc_id") + lit(i * 10000000L)).as("doc_id"),
-        array_join(transform(split(col("text"), " "),
-          t => concat(t, lit(i.toString))), " ").as("text"))
-    }.reduce(_ unionByName _)
-
-    def embX(n: Int): DataFrame = (0 until n).map { i =>
-      emb.select((col("vec_id") + lit(i * 10000000L)).as("vec_id"),
-        transform(col("embedding"), x => x + lit(i * 0.01f)).as("embedding"))
-    }.reduce(_ unionByName _)
+    def docsX(n: Int): DataFrame = ScaleStress.docsX(docs, n)
+    def embX(n: Int): DataFrame = ScaleStress.embX(emb, n)
 
     // ---- 1. ingest near-dedup state at 500k docs ------------------------
     // The unbounded deployment's state is ONE long per distinct (band,

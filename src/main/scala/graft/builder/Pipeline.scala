@@ -1,7 +1,9 @@
 package graft.builder
 
 import graft.engine.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 
 /** The pipeline-builder surface: a declarative Source → Transform* → Sink step
   * list, interpretable from config (steps are plain data with SQL-expression
@@ -107,7 +109,8 @@ object Pipeline {
     private def add(s: Step): Pipeline = copy(steps = steps :+ s)
 
     /** Interpret the step list into a DataFrame lineage. */
-    def run(spark: SparkSession, dir: String): DataFrame =
+    def run(spark: SparkSession, dir: String): DataFrame = {
+      graft.GraftSession.install(spark)
       steps.foldLeft(Tables(spark, dir, table).as(table)) {
         case (df, Filter(c))        => df.filter(c)
         case (df, SelectExpr(es))   => df.selectExpr(es: _*)
@@ -120,14 +123,14 @@ object Pipeline {
           if (g.isEmpty) df.agg(aggCols.head, aggCols.tail: _*)
           else df.groupBy(g.map(org.apache.spark.sql.functions.col): _*)
             .agg(aggCols.head, aggCols.tail: _*)
-        case (df, Sort(ks))         => df.orderBy(ks.map(org.apache.spark.sql.functions.expr): _*)
+        case (df, Sort(ks))         => df.orderBy(ks.map(sortKey): _*)
         case (df, Limit(n))         => df.limit(n)
         case (df, Distinct())       => df.distinct()
         case (df, UnionAll(o))      => df.unionByName(o.run(spark, dir))
         case (df, DedupKeepFirst(ks, ob)) =>
-          import org.apache.spark.sql.functions.{col, row_number, expr}
+          import org.apache.spark.sql.functions.{col, row_number}
           val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(ks.map(col): _*).orderBy(ob.map(expr): _*)
+            .partitionBy(ks.map(col): _*).orderBy(ob.map(sortKey): _*)
           df.withColumn("__rn", row_number().over(w))
             .filter(col("__rn") === 1).drop("__rn")
         case (df, Pivot(g, pc, vs, a)) =>
@@ -165,6 +168,7 @@ object Pipeline {
           df.withColumn("__rn", row_number().over(w))
             .filter(col("__rn") === 1).drop("__rn")
       }
+    }
 
     /** Terminal write. */
     def sinkTo(spark: SparkSession, dir: String, sink: Sink): Unit = {
@@ -175,6 +179,26 @@ object Pipeline {
   }
 
   def source(table: String): Pipeline = Pipeline(table)
+
+  private val SortKey = "(?is)(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*".r
+
+  /** A `sort` / `dedup` order key: an expression with an optional trailing
+    * `ASC|DESC [NULLS FIRST|LAST]`. `functions.expr` alone parses
+    * "v DESC" as `v AS DESC` and sorts ascending, so any key that still
+    * parses to an alias is rejected. */
+  private def sortKey(key: String): Column = {
+    val SortKey(e, dir, nulls) = key
+    require(!CatalystSqlParser.parseExpression(e).isInstanceOf[Alias],
+      s"sort key must be an expression with an optional " +
+        s"ASC|DESC [NULLS FIRST|LAST], got: $key")
+    val c = org.apache.spark.sql.functions.expr(e)
+    val desc = "DESC".equalsIgnoreCase(dir)
+    Option(nulls).map(_.toUpperCase) match {
+      case Some("FIRST") => if (desc) c.desc_nulls_first else c.asc_nulls_first
+      case Some("LAST") => if (desc) c.desc_nulls_last else c.asc_nulls_last
+      case _ => if (desc) c.desc else c
+    }
+  }
 
   /** Parse a pipeline from a JSON config document — the pipeline-builder entry
     * point: pipelines are data, authored/stored/diffed as config and only

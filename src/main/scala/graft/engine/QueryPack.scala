@@ -12,13 +12,20 @@ trait QueryPack {
 
   private val reg = mutable.LinkedHashMap.empty[String, (Q, Option[String])]
 
+  /** Every builder first installs graft into the session it is given, so a
+    * query runs on any session, not only one a graft harness built. */
+  private def installed(f: Q): Q = (s, dir) => {
+    graft.GraftSession.install(s)
+    f(s, dir)
+  }
+
   /** Register an oracle-backed graded query. */
   protected def q(name: String, oracle: String)(f: Q): Unit =
-    reg(name) = (f, Some(oracle.stripMargin.trim))
+    reg(name) = (installed(f), Some(oracle.stripMargin.trim))
 
   /** Register a declared query with no SQL-expressible oracle
     * (driver records a weaker rows-only check). */
-  protected def qNo(name: String)(f: Q): Unit = reg(name) = (f, None)
+  protected def qNo(name: String)(f: Q): Unit = reg(name) = (installed(f), None)
 
   def queries: Map[String, Q] = reg.view.mapValues(_._1).toMap
   def oracles: Map[String, String] =

@@ -110,8 +110,8 @@ object DamerauLevenshtein {
     d((n + 1) * w + m + 1)
   }
 
+  /** Make `graft_dl` (and the rest of graft) callable in this session;
+    * see [[graft.GraftSession.install]]. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dl", exprs => DamerauLevenshtein(exprs.head, exprs(1)),
-      "built-in")
+    graft.GraftSession.install(spark)
 }

@@ -82,11 +82,8 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  /** Make `graft_dot(a, b)` callable from SQL/expr in this session.
-    * (SparkSessionExtensions.injectFunction is the spark-submit-time
-    * equivalent; the harness owns session creation, so we register into
-    * the live registry instead.) */
+  /** Make `graft_dot` (and the rest of graft) callable in this session;
+    * see [[graft.GraftSession.install]]. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs.head, exprs(1)), "built-in")
+    graft.GraftSession.install(spark)
 }

@@ -98,7 +98,8 @@ object JaroWinkler {
     } else j
   }
 
+  /** Make `graft_jw` (and the rest of graft) callable in this session;
+    * see [[graft.GraftSession.install]]. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jw", exprs => JaroWinkler(exprs.head, exprs(1)), "built-in")
+    graft.GraftSession.install(spark)
 }

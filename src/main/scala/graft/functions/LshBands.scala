@@ -122,25 +122,10 @@ case class LshBands(child: Expression, bands: Int, rowsPerBand: Int,
 }
 
 object LshBands {
-  /** Make `graft_lsh_bands(e, bands, rowsPerBand)` callable from SQL/expr
-    * in this session. bands/rows must be foldable integer expressions —
-    * they size the hyperplane table at plan time. */
+  /** Make `graft_lsh_bands` (and the rest of graft) callable in this session;
+    * see [[graft.GraftSession.install]]. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lsh_bands", exprs => {
-        def intArg(e: Expression, name: String): Int = {
-          require(e.foldable,
-            s"graft_lsh_bands: $name must be a literal, got ${e.sql}")
-          e.eval() match {
-            case n: Number => n.intValue()
-            case other => throw new IllegalArgumentException(
-              s"graft_lsh_bands: $name must be integral, got $other")
-          }
-        }
-        LshBands(exprs.head, intArg(exprs(1), "bands"),
-          intArg(exprs(2), "rowsPerBand"),
-          if (exprs.length > 3) intArg(exprs(3), "dim") else defaultDim)
-      }, "built-in")
+    graft.GraftSession.install(spark)
 
   /** Width of the legacy hyperplane table. Tables at dim ≤ defaultDim are
     * generated at exactly this width with the SAME seed and consumption

@@ -45,8 +45,8 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 }
 
 object NfcNormalize {
-  /** Make `graft_nfc(s)` callable from SQL/expr in this session. */
+  /** Make `graft_nfc` (and the rest of graft) callable in this session;
+    * see [[graft.GraftSession.install]]. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs.head), "built-in")
+    graft.GraftSession.install(spark)
 }

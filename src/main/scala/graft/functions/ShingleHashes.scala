@@ -94,19 +94,8 @@ case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
 }
 
 object ShingleHashes {
-  /** Make `graft_shingle_hashes(tk, k)` callable from SQL/expr in this
-    * session. k must be a foldable integer. */
+  /** Make `graft_shingle_hashes` (and the rest of graft) callable in this
+    * session; see [[graft.GraftSession.install]]. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_hashes", exprs => {
-        val ke = exprs(1)
-        require(ke.foldable,
-          s"graft_shingle_hashes: k must be a literal, got ${ke.sql}")
-        val k = ke.eval() match {
-          case n: Number => n.intValue()
-          case other => throw new IllegalArgumentException(
-            s"graft_shingle_hashes: k must be integral, got $other")
-        }
-        ShingleHashes(exprs.head, k)
-      }, "built-in")
+    graft.GraftSession.install(spark)
 }

@@ -94,18 +94,8 @@ case class ShinglesK(child: Expression, k: Int) extends UnaryExpression {
 }
 
 object ShinglesK {
-  /** Make `graft_shingles(tk, k)` callable from SQL/expr in this session.
-    * k must be a foldable integer — it sizes the codegen loop at plan time. */
+  /** Make `graft_shingles` (and the rest of graft) callable in this session;
+    * see [[graft.GraftSession.install]]. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => {
-        val ke = exprs(1)
-        require(ke.foldable, s"graft_shingles: k must be a literal, got ${ke.sql}")
-        val k = ke.eval() match {
-          case n: Number => n.intValue()
-          case other => throw new IllegalArgumentException(
-            s"graft_shingles: k must be integral, got $other")
-        }
-        ShinglesK(exprs.head, k)
-      }, "built-in")
+    graft.GraftSession.install(spark)
 }

@@ -295,7 +295,7 @@ object Dedup {
                  maxDist: Int): DataFrame = {
     // LevPrefilter rewrites the threshold predicate below into a length
     // guard + banded DP — inject it if the session doesn't have it yet
-    graft.plans.Rules.ensureInjected(docs.sparkSession)
+    graft.GraftSession.install(docs.sparkSession)
     val width = maxDist + 1
     val base = fan(docs).select(col(idCol).cast("long").as("id"),
       col(textCol).as("t"),

@@ -21,24 +21,17 @@ object Sim {
     * list_reduce association exactly (0.0 + x == x in IEEE). Routed
     * through the native codegen DotProduct expression: same fold order,
     * ~10× faster than interpreted zip_with/aggregate lambdas (the
-    * pairwise queries evaluate millions of 64-dim dots). Callers must
-    * `ensureRegistered` once per session (all Sim entry points do). */
+    * pairwise queries evaluate millions of 64-dim dots). Installs graft
+    * into the active session; the Sim entry points also install into
+    * their input's session, since getActiveSession is a thread-local and
+    * is None on pool threads created before the session. */
   def dot(a: Column, b: Column): Column = {
-    // resolution happens at analysis time on the active session
     org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.DotProduct.register)
+      .foreach(graft.GraftSession.install)
     call_function("graft_dot", a, b)
   }
 
   def norm2(a: Column): Column = dot(a, a)
-
-  private def ensureRegistered(df: DataFrame): Unit = {
-    // df.sparkSession backstop: getActiveSession is a thread-local and is
-    // None on pool threads created before the session — every Sim entry
-    // point registers ALL the functions its plan may reach through here
-    graft.functions.DotProduct.register(df.sparkSession)
-    graft.functions.LshBands.register(df.sparkSession)
-  }
 
   def asDouble(a: Column): Column = transform(a, x => x.cast("double"))
 
@@ -82,7 +75,7 @@ object Sim {
   /** Brute-force top-k neighbors for each probe (rounded-sim ranking with
     * id tiebreak — deterministic). */
   def cosineTopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val p = withNorm(probes.select(col("vec_id").as("probe_id"),
         asDouble(col("embedding")).as("e")))
       .select(col("probe_id"), col("e").as("pe"), col("nrm").as("pn"))
@@ -109,7 +102,7 @@ object Sim {
     * corpus. Returns (pick_order, vec_id, sim, mmr). */
   def mmrDiversify(corpus: DataFrame, probeId: Long,
                    candK: Int, selectK: Int): DataFrame = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val c = withNorm(corpus.select(col("vec_id"), asDouble(col("embedding")).as("e")))
     val cand = c.filter(col("vec_id") =!= probeId)
       .crossJoin(broadcast(c.filter(col("vec_id") === probeId)
@@ -185,7 +178,7 @@ object Sim {
     * (augment vectors with sqrt(M²-|x|²) and run cosine LSH) reuses the
     * banded machinery above unchanged. */
   def mipsTopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val p = probes.select(col("vec_id").as("probe_id"), asDouble(col("embedding")).as("pe"))
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("ce"))
     val scored = fan(p).crossJoin(maybeBroadcast(c))
@@ -204,7 +197,7 @@ object Sim {
     * a large probe set, [[nearDupPairsBlocked]]'s banded candidate join is
     * the sub-linear path (same scoring expression — swap is plan-only). */
   def rangeSearch(probes: DataFrame, corpus: DataFrame, tau: Double): DataFrame = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val p = withNorm(probes.select(col("vec_id").as("probe_id"),
         asDouble(col("embedding")).as("e")))
       .select(col("probe_id"), col("e").as("pe"), col("nrm").as("pn"))
@@ -219,7 +212,7 @@ object Sim {
 
   /** All pairs with sim ≥ tau inside each label block. */
   def pairwiseThreshold(corpus: DataFrame, tau: Double): DataFrame = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val v = withNorm(fan(corpus).select(col("vec_id"), col("label"),
       asDouble(col("embedding")).as("e")))
     v.as("a").join(maybeBroadcast(v).as("b"),
@@ -287,7 +280,7 @@ object Sim {
   private def lshSignature(e: Column, bands: Int, rowsPerBand: Int,
                            dim: Int): Column = {
     org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.LshBands.register)
+      .foreach(graft.GraftSession.install)
     call_function("graft_lsh_bands", e, lit(bands), lit(rowsPerBand), lit(dim))
   }
 
@@ -319,7 +312,7 @@ object Sim {
     * the hyperplane table (dim ≤ 0 → infer from the data). */
   def bandedCandidates(corpus: DataFrame, bands: Int, rowsPerBand: Int,
                        dim: Int = 0): DataFrame = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val d = if (dim > 0) dim else inferDim(corpus)
     val v = fan(corpus).select(col("vec_id"), asDouble(col("embedding")).as("e"))
     candidatesFrom(bandedBuckets(v, bands, rowsPerBand, d))
@@ -336,7 +329,7 @@ object Sim {
   def nearDupPairsBlocked(corpus: DataFrame, tau: Double,
                           bands: Int = 32, rowsPerBand: Int = 8,
                           dim: Int = 0): DataFrame = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val d = if (dim > 0) dim else inferDim(corpus)
     val v = withNorm(fan(corpus).select(col("vec_id"), asDouble(col("embedding")).as("e")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -354,7 +347,7 @@ object Sim {
     * dispatcher's target below [[lshEffectiveTau]], where a threshold join
     * has no sub-quadratic exact implementation. */
   def nearDupPairsExact(corpus: DataFrame, tau: Double): DataFrame = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val v = withNorm(fan(corpus).select(col("vec_id"), asDouble(col("embedding")).as("e")))
     v.as("a").join(maybeBroadcast(v).as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
@@ -552,7 +545,7 @@ object Sim {
   def ivfTopK(probes: DataFrame, corpus: DataFrame, k: Int,
               stride: Int = 25, nProbe: Int = 8,
               coarseIters: Int = 0): DataFrame = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val cents = coarseCentroids(corpus, stride, coarseIters)
     val nearestCells = nearestCellsOf(cents) _
     val corpusCells = nearestCells(
@@ -614,7 +607,7 @@ object Sim {
                coarseIters: Int = 0, hierFactor: Int = 0,
                hierProbe: Int = 4, hierDup: Int = 1,
                hierSuperIters: Int = 0): PqModel = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val d = inferDim(corpus)
     require(d % m == 0, s"dim $d not divisible into $m subspaces")
     val sub = d / m
@@ -782,7 +775,7 @@ object Sim {
     * 100× row; the same cell join ivfPqTopK scores. */
   private[graft] def ivfCandidatesPerProbe(probes: DataFrame, corpus: DataFrame,
                                            stride: Int = 25, nProbe: Int = 8): Double = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val cents = strideCentroids(corpus, stride)
     val corpusCells = nearestCellsOf(cents)(
       corpus.select(col("vec_id"), asDouble(col("embedding")).as("ce")), "ce", 1, "cell")
@@ -886,7 +879,7 @@ object Sim {
   def annTopK(probes: DataFrame, corpus: DataFrame, k: Int,
               bands: Int = 24, rowsPerBand: Int = 6,
               dim: Int = 0): DataFrame = {
-    ensureRegistered(corpus)
+    graft.GraftSession.install(corpus.sparkSession)
     val d = if (dim > 0) dim else inferDim(corpus)
     val p = withNorm(probes.select(col("vec_id").as("probe_id"),
         asDouble(col("embedding")).as("e")))

@@ -78,7 +78,7 @@ object TextOps {
     * identical, silently breaking dedup blocking and n-gram features. */
   def nfc(text: Column): Column = {
     org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.NfcNormalize.register)
+      .foreach(graft.GraftSession.install)
     call_function("graft_nfc", text)
   }
 
@@ -136,7 +136,7 @@ object TextOps {
     * bit-identical — same concat_ws(" ") kernel, same order). */
   def shingles(toks: Column, k: Int): Column = {
     org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.ShinglesK.register)
+      .foreach(graft.GraftSession.install)
     call_function("graft_shingles", toks, lit(k))
   }
 
@@ -149,7 +149,7 @@ object TextOps {
     * isolated stage: ×0.82, values equal). */
   def shingleHashes(toks: Column, k: Int): Column = {
     org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.functions.ShingleHashes.register)
+      .foreach(graft.GraftSession.install)
     call_function("graft_shingle_hashes", toks, lit(k))
   }
 

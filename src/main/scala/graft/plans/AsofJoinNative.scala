@@ -213,7 +213,7 @@ object AsofNative {
            leftTs: String, rightTs: String,
            payload: Seq[String], tiebreak: String): DataFrame = {
     val spark = left.sparkSession
-    Rules.ensureInjected(spark)
+    graft.GraftSession.install(spark)
     def attr(df: DataFrame, n: String): Attribute =
       df.queryExecution.analyzed.output.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(

@@ -26,9 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * must be array<double>, the finish lambda must be the identity.
   *
   * Injection: `spark.sql.extensions=graft.GraftExtensions` at submit time,
-  * or [[DotRewrite.ensureInjected]] on a live session (the harness owns
-  * session creation) — `experimental.extraOptimizations` is the public
-  * seam for exactly this.
+  * or [[graft.GraftSession.install]] on a live session.
   */
 object DotRewrite extends Rule[LogicalPlan] {
 
@@ -70,21 +68,7 @@ object DotRewrite extends Rule[LogicalPlan] {
 }
 
 object Rules {
-  /** Idempotently add graft's optimizer rules and planner strategies to a
-    * session the harness already built (the runtime equivalent of
-    * GraftExtensions). */
-  def ensureInjected(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(DotRewrite)) {
-      spark.experimental.extraOptimizations = cur :+ DotRewrite
-    }
-    val cur2 = spark.experimental.extraOptimizations
-    if (!cur2.contains(LevPrefilter)) {
-      spark.experimental.extraOptimizations = cur2 :+ LevPrefilter
-    }
-    val strats = spark.experimental.extraStrategies
-    if (!strats.contains(AsofJoinStrategy)) {
-      spark.experimental.extraStrategies = strats :+ AsofJoinStrategy
-    }
-  }
+  /** Add graft's optimizer rules and planner strategy to a live session;
+    * see [[graft.GraftSession.install]]. */
+  def ensureInjected(spark: SparkSession): Unit = graft.GraftSession.install(spark)
 }

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.builder.Pipeline
 import graft.engine.{Det, QueryPack, Tables}
-import graft.functions.DotProduct
 import org.apache.spark.sql.functions._
 
 /** UDF / UDTF / custom-Expression / builder surface (SURVEY §2.11). */
@@ -152,7 +151,6 @@ object Extensibility extends QueryPack {
       |        z -> z[1] * z[2])), (x, y) -> x + y), 4) AS dot
       |FROM v a JOIN v b ON a.vec_id < b.vec_id
       |ORDER BY id_a, id_b""") { (s, dir) =>
-    DotProduct.register(s)
     val v = Tables(s, dir, "embeddings").filter(col("vec_id") < 20)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
     v.as("a").join(v.as("b"), col("a.vec_id") < col("b.vec_id"))
@@ -174,7 +172,6 @@ object Extensibility extends QueryPack {
       |        z -> z[1] * z[2])), (x, y) -> x + y), 4) AS dot
       |FROM v a JOIN v b ON a.vec_id < b.vec_id
       |ORDER BY id_a, id_b""") { (s, dir) =>
-    graft.plans.Rules.ensureInjected(s)
     val v = Tables(s, dir, "embeddings").filter(col("vec_id") < 20)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
     v.as("a").join(v.as("b"), col("a.vec_id") < col("b.vec_id"))

@@ -1475,9 +1475,6 @@ object LlmOps extends QueryPack {
       |  CAST(length(nfc_normalize('Cafe' || chr(769) || ' no' || chr(776) || 'el ' || text)) AS INT) AS n_norm
       |FROM documents
       |ORDER BY doc_id""") { (s, dir) =>
-    // explicit-session registration: TextOps.nfc's getActiveSession path is
-    // a thread-local and can be None on pool threads
-    graft.functions.NfcNormalize.register(s)
     val decomposed = concat(lit("Café nöel "), col("text"))
     Tables(s, dir, "documents")
       .select(col("doc_id"),

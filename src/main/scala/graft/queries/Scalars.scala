@@ -636,7 +636,6 @@ object Scalars extends QueryPack {
       |ORDER BY floor(jaro_winkler_similarity(a.n_name, b.n_name) * 1000000
       |  + 0.5) / 1000000 DESC, name1, name2
       |LIMIT 15""") { (s, dir) =>
-    graft.functions.JaroWinkler.register(s)
     val n = Tables(s, dir, "nation")
     val a = n.select(col("n_nationkey").as("k1"), col("n_name").as("name1"))
     val b = n.select(col("n_nationkey").as("k2"), col("n_name").as("name2"))
@@ -723,7 +722,6 @@ object Scalars extends QueryPack {
       |FROM q a JOIN q b ON a.blk = b.blk AND a.nm < b.nm
       |ORDER BY dl, name1, name2
       |LIMIT 25""") { (s, dir) =>
-    graft.functions.DamerauLevenshtein.register(s)
     val p = Tables(s, dir, "part").select(col("p_name").as("nm")).distinct()
     val q0 = p.select(col("nm"), split(col("nm"), " ").getItem(1).as("blk"))
     val a = q0.select(col("nm").as("name1"), col("blk"))

@@ -72,7 +72,6 @@ class DamerauSpec extends SparkSpec {
   }
 
   test("dl <= lev on fixture part-name pairs, and the graded query runs") {
-    graft.functions.DamerauLevenshtein.register(spark)
     val out = SparkEntry.queries("fn_damerau_levenshtein")(
       spark, "/root/testdata/sf0.001").collect()
     assert(out.nonEmpty)

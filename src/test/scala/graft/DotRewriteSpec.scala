@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{DotRewrite, Rules}
+import graft.plans.DotRewrite
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -24,7 +24,6 @@ class DotRewriteSpec extends SparkSpec {
   }
 
   test("rewrite fires: optimized plan contains graft_dot, no ArrayAggregate") {
-    Rules.ensureInjected(spark)
     // parquet-backed source: ConvertToLocalRelation eagerly folds projections
     // over LocalRelation, leaving no plan to inspect
     val df = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -36,7 +35,6 @@ class DotRewriteSpec extends SparkSpec {
   }
 
   test("rewritten result equals the un-rewritten lambda bit-for-bit") {
-    Rules.ensureInjected(spark)
     val rewritten = edgeDf.select(expr(lambdaSql).as("dot")).collect()
     // strip the rule, evaluate the raw lambda pipeline, restore
     val saved = spark.experimental.extraOptimizations
@@ -48,8 +46,6 @@ class DotRewriteSpec extends SparkSpec {
   }
 
   test("null/length edges match the lambda pipeline (soundness contract)") {
-    Rules.ensureInjected(spark)
-    graft.functions.DotProduct.register(spark)
     val rows = spark.sql(
       """SELECT CAST(a AS ARRAY<DOUBLE>) AS a, CAST(b AS ARRAY<DOUBLE>) AS b FROM VALUES
         |  (array(1.0D, 2.0D), array(3.0D)),
@@ -70,7 +66,6 @@ class DotRewriteSpec extends SparkSpec {
   }
 
   test("non-matching shapes are left alone") {
-    Rules.ensureInjected(spark)
     val shapes = Seq(
       "aggregate(zip_with(a, b, (x, y) -> x + y), 0D, (acc, x) -> acc + x)", // + not *
       "aggregate(zip_with(a, b, (x, y) -> x * y), 1D, (acc, x) -> acc + x)", // seed 1

@@ -1,14 +1,12 @@
 package graft
 
 import graft.builder.Pipeline
-import graft.functions.DotProduct
 import org.apache.spark.sql.functions._
 
 class ExtensibilitySpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_dot: codegen result equals hand computation; null-safe") {
-    DotProduct.register(spark)
     val df = Seq(
       (1L, Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)),
       (2L, Array(0.0, 0.0), Array(1.0, 1.0))
@@ -23,7 +21,6 @@ class ExtensibilitySpec extends SparkSpec {
   }
 
   test("graft_dot appears inside WholeStageCodegen") {
-    DotProduct.register(spark)
     // must come from a real scan — a local relation constant-folds the plan
     val df = engine.Tables(spark, sf, "embeddings")
       .selectExpr("transform(embedding, x -> CAST(x AS DOUBLE)) AS e")

@@ -19,7 +19,6 @@ class LevPrefilterSpec extends SparkSpec {
   ).toDF("id", "a", "b")
 
   test("rewrite fires: banded levenshtein + length guard in the optimized plan") {
-    graft.plans.Rules.ensureInjected(spark)
     // a local Seq would be constant-folded whole (ConvertToLocalRelation);
     // a file-backed relation keeps the Filter in the plan
     val path = "/tmp/graft_io/lev_spec"
@@ -32,7 +31,6 @@ class LevPrefilterSpec extends SparkSpec {
   }
 
   test("results are identical with and without the rule") {
-    graft.plans.Rules.ensureInjected(spark)
     val withRule = df.filter(levenshtein($"a", $"b") <= 2)
       .select("id").as[Long].collect().sorted.toSeq
     // semantics reference, computed without a filter-pattern the rule sees:
@@ -45,7 +43,6 @@ class LevPrefilterSpec extends SparkSpec {
   }
 
   test("rule leaves non-literal and degenerate thresholds alone") {
-    graft.plans.Rules.ensureInjected(spark)
     // threshold 0 → degenerate, not rewritten (still correct)
     val zero = df.filter(levenshtein($"a", $"b") <= 0)
       .select("id").as[Long].collect().sorted.toSeq

@@ -195,6 +195,29 @@ class PipelineJsonSpec extends SparkSpec {
       Seq("doc_id", "text_dedup", "n_kept", "n_chunks"))
   }
 
+  test("sort and dedup keys honour a trailing DESC; other aliases are rejected") {
+    val prices = Pipeline.fromJson(
+      """{"source": "orders", "steps": [
+        |  {"op": "sort", "keys": ["o_totalprice DESC"]}]}""".stripMargin)
+      .run(spark, sf).collect().map(_.getAs[Double]("o_totalprice")).toSeq
+    assert(prices.size > 1 && prices == prices.sorted.reverse)
+    // the latest order per customer, ties to the higher key
+    val latest = Pipeline.fromJson(
+      """{"source": "orders", "steps": [
+        |  {"op": "dedup", "keys": ["o_custkey"],
+        |   "orderBy": ["o_orderdate desc nulls last", "o_orderkey DESC"]},
+        |  {"op": "selectExpr", "exprs": ["o_custkey", "o_orderdate"]}]}""".stripMargin)
+      .run(spark, sf).collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    import org.apache.spark.sql.functions._
+    val expect = engine.Tables(spark, sf, "orders").groupBy("o_custkey")
+      .agg(max("o_orderdate")).collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(latest.nonEmpty && latest == expect)
+    val bad = intercept[IllegalArgumentException] {
+      Pipeline.source("orders").sort("o_totalprice AS p").run(spark, sf)
+    }
+    assert(bad.getMessage.contains("o_totalprice AS p"))
+  }
+
   test("unknown op and missing fields fail loudly") {
     intercept[IllegalArgumentException] {
       Pipeline.fromJson("""{"source": "orders", "steps": [{"op": "explode"}]}""")

@@ -88,7 +88,6 @@ class Round16Spec extends SparkSpec {
   test("codegen graft_shingles equals the interpreted transform-HOF " +
     "shingles on duplicate/empty-token/unicode arrays for k=1..8 (r16)") {
     import spark.implicits._
-    functions.ShinglesK.register(spark)
     // split(" ")-shaped inputs: duplicates, empty tokens from runs of
     // spaces, unicode, single-char tokens — everything the corpora produce
     val docs = Seq(
@@ -121,8 +120,6 @@ class Round16Spec extends SparkSpec {
   test("fused graft_shingle_hashes equals transform(shingles, xxhash64) " +
     "on duplicate/empty-token/unicode arrays for k=1..8 (r16)") {
     import spark.implicits._
-    functions.ShinglesK.register(spark)
-    functions.ShingleHashes.register(spark)
     val docs = Seq(
       "a b c d e f g h i",
       "a a a a a a a a",

@@ -228,7 +228,6 @@ class Round8Spec extends SparkSpec {
   }
 
   test("graft_jw: codegen matches interpreted and the textbook fixtures") {
-    graft.functions.JaroWinkler.register(spark)
     // Winkler's published examples
     assert(math.abs(graft.functions.JaroWinkler.similarity("MARTHA", "MARHTA")
       - 0.9611111111111111) < 1e-15)

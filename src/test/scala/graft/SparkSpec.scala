@@ -4,15 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs (one per JVM — tests fork once). */
+/** Shared local SparkSession for all specs (one per JVM — tests fork once),
+  * graft installed before the first spec runs. */
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
