@@ -36,22 +36,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object BlockWindow {
 
-  private val spreadMemo = scala.collection.concurrent.TrieMap.empty[
-    (org.apache.spark.sql.SparkSession, Int, String, Int), DataFrame]
-  private val spreadMemoCap = 64
-
   /** The shared phase-1 frame: `df` range-partitioned on (keys, order) and
-    * tagged with its block id. Memoized (ops/PlanMemo.scala): every call
-    * used to pin a fresh copy of the block assignment, so a full
-    * Verify/Bench session accumulated one persisted frame per invocation;
-    * same plan + params now reuse one entry, and the cap evicts
-    * oldest-first. The persist is load-bearing (object Scaladoc): every
-    * consumer of one call must read the SAME sampled block bounds. */
+    * tagged with its block id. Memoized (ops/PlanMemo) so that same plan +
+    * params share one persisted block assignment instead of pinning a
+    * fresh copy per call. The persist is load-bearing (object Scaladoc):
+    * every consumer of one call must read the SAME sampled block bounds. */
   private def spreadOf(df: DataFrame, keys: Seq[String], order: Seq[String],
                        blocks: Int): DataFrame =
-    PlanMemo.memoized(spreadMemo, spreadMemoCap,
-      (df.sparkSession, df.queryExecution.logical.semanticHash(),
-        (keys ++ order).mkString("\u0000"), blocks)) {
+    PlanMemo.byPlan(df, "BlockWindow.spreadOf", (keys ++ order, blocks)) {
       df.repartitionByRange(blocks, (keys ++ order).map(col): _*)
         .withColumn("__block", spark_partition_id())
         .persist(StorageLevel.MEMORY_AND_DISK)

@@ -27,26 +27,15 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
-  /** Memo of finished merge tables, keyed like the CC memo (session +
-    * canonicalized input plan + params): training is iterative and
-    * driver-coordinated, and the train-then-tokenize query re-derives the
-    * same table the standalone train query produces — one bounded entry
-    * per distinct corpus plan per session. The result is a handful of
-    * driver-side rows, so the memo costs nothing to retain. */
-  private val memo = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      String, Int), DataFrame]
-  private val memoCap = 32
-
   /** Learn `rounds` merges; returns (round, pair, freq) — the merge table
-    * a tokenizer would persist. */
-  def trainMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
-    if (memo.size >= memoCap) memo.clear()
-    memo.getOrElseUpdate(
-      (docs.sparkSession, docs.queryExecution.analyzed.canonicalized,
-        textCol, rounds),
-      computeMerges(docs, textCol, rounds))
-  }
+    * a tokenizer would persist. Memoized per input plan and params:
+    * training is iterative and driver-coordinated, and the
+    * train-then-tokenize query re-derives the same table the standalone
+    * train query produces. */
+  def trainMerges(docs: DataFrame, textCol: String, rounds: Int): DataFrame =
+    PlanMemo.byPlan(docs, "Bpe.trainMerges", (textCol, rounds)) {
+      computeMerges(docs, textCol, rounds)
+    }
 
   private def computeMerges(docs: DataFrame, textCol: String,
                             rounds: Int): DataFrame = {

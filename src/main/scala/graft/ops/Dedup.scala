@@ -132,20 +132,15 @@ object Dedup {
     * are EXACT (the cap only prunes candidate generation; shared
     * ubiquitous shingles are added back by [[interCounts]]'s correction).
     * Deterministic and SQL-expressible (the graded form). */
-  /** Memo of finished pair frames: SIX graded consumers (near, weight,
-    * cluster_report, apply, fuzzy, eval) call jaccardPairs with the same
-    * (corpus, k, tau) in one Verify/Bench session; without this each
-    * re-runs the candidate join. Keyed like Linalg's memo — (session,
-    * input-plan semantic hash, params) — entries are pure in their key. */
-  private val pairMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, String), DataFrame]
-
+  // Memoized (ops/PlanMemo): SIX graded consumers (near, weight,
+  // cluster_report, apply, fuzzy, eval) call jaccardPairs with the same
+  // (corpus, k, tau) in one Verify/Bench session; without the memo each
+  // re-runs the candidate join.
   def jaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                    k: Int, tau: Double,
                    dfCap: Int = stopShingleDfCap): DataFrame =
-    PlanMemo.memoized(pairMemo, 16,
-      (docs.sparkSession, docs.queryExecution.logical.semanticHash(),
-        s"jp|$textCol|$idCol|$k|$tau|$dfCap")) {
+    PlanMemo.byPlan(docs, "Dedup.jaccardPairs",
+        (textCol, idCol, k, tau, dfCap)) {
       val sh = pin(shingleSets(docs, textCol, idCol, k))
       val counts = sh.select(col("id"), size(col("sh")).as("n"))
       pin(interCounts(shingleRowsWithDf(sh), dfCap, _ < _)
@@ -206,9 +201,8 @@ object Dedup {
     * comma-joined values — an 8-byte join/state key, never the string. */
   def minhashBands(docs: DataFrame, textCol: String, idCol: String,
                    k: Int, numHashes: Int, bands: Int): DataFrame =
-  PlanMemo.memoized(pairMemo, 16,
-      (docs.sparkSession, docs.queryExecution.logical.semanticHash(),
-        s"mhb|$textCol|$idCol|$k|$numHashes|$bands")) {
+  PlanMemo.byPlan(docs, "Dedup.minhashBands",
+      (textCol, idCol, k, numHashes, bands)) {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(numHashes <= (1 << 26), "derived-hash family bound")
     val rows = numHashes / bands
@@ -236,9 +230,8 @@ object Dedup {
                    k: Int, numHashes: Int, bands: Int, tau: Double): DataFrame =
   // same memo seam as jaccardPairs: llm_dedup_minhash and llm_dedup_eval
   // share (corpus, params) in one session
-  PlanMemo.memoized(pairMemo, 16,
-      (docs.sparkSession, docs.queryExecution.logical.semanticHash(),
-        s"mh|$textCol|$idCol|$k|$numHashes|$bands|$tau")) {
+  PlanMemo.byPlan(docs, "Dedup.minhashPairs",
+      (textCol, idCol, k, numHashes, bands, tau)) {
     val sh = pin(shingleSets(docs, textCol, idCol, k))
     val banded = minhashBands(docs, textCol, idCol, k, numHashes, bands)
     val cand = banded.as("a")
@@ -333,35 +326,14 @@ object Dedup {
     *
     * Returns (id, cluster) with cluster = min id in the component.
     * Deterministic: min-labels are independent of partitioning/order. */
-  /** Memo of finished CC label frames, keyed by the canonicalized input
-    * plan: the labels are localCheckpointed (materialized RDD blocks, no
-    * lineage back to the input), so handing the same frame to every caller
-    * with a semantically-equal pair list is safe for the life of the
-    * context — and avoids re-running the whole iterative loop when e.g.
-    * the cluster query and the cluster-APPLY query both need the same
-    * components. Bounded by #distinct pair plans per session (tiny). */
-  private val ccMemo = scala.collection.concurrent.TrieMap.empty[
-    (org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, String, Int),
-    DataFrame]
-  private val ccMemoCap = 32
-
+  // Memoized per pair-list plan (ops/PlanMemo): the labels are
+  // localCheckpointed (no lineage back to the input), and the cluster
+  // query and the cluster-APPLY query both need the same components.
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 25): DataFrame = {
-    // keyed by (session, canonicalized plan OBJECT): TreeNode structural
-    // equality covers what prints/hashes can't — a LocalRelation's toString
-    // omits its DATA, so string/hash keys collide across different
-    // in-memory graphs (observed: a property test received another test's
-    // clusters) — and the session guard keeps a frame from one (possibly
-    // stopped) context out of another. Bounded: the key retains the input
-    // plan (LocalRelation data included), so a long-lived JVM clearing the
-    // map at the cap trades a recompute for unbounded driver heap.
-    if (ccMemo.size >= ccMemoCap) ccMemo.clear()
-    ccMemo.getOrElseUpdate(
-      (pairs.sparkSession, pairs.queryExecution.analyzed.canonicalized,
-        aCol, bCol, maxIter),
-      computeComponents(pairs, aCol, bCol, maxIter))
-  }
+                          maxIter: Int = 25): DataFrame =
+    PlanMemo.byPlan(pairs, "Dedup.connectedComponents", (aCol, bCol, maxIter)) {
+      computeComponents(pairs, aCol, bCol, maxIter)
+    }
 
   private def computeComponents(pairs: DataFrame, aCol: String, bCol: String,
                                 maxIter: Int): DataFrame = {
@@ -505,9 +477,8 @@ object Dedup {
   // the family-overlap capstone share (corpus, params) in one session —
   // without it the capstone re-runs the whole vote aggregation (measured
   // 2.7 s vs the members' 1.6 s at sf0.1)
-  PlanMemo.memoized(pairMemo, 16,
-      (docs.sparkSession, docs.queryExecution.logical.semanticHash(),
-        s"sim|$textCol|$idCol|$maxHamming")) {
+  PlanMemo.byPlan(docs, "Dedup.simhashPairs",
+      (textCol, idCol, maxHamming)) {
     // pigeonhole: 4 bands can only GUARANTEE candidates up to Hamming 3;
     // a larger radius would silently drop pairs whose differing bits span
     // all four bands

@@ -21,25 +21,17 @@ import org.apache.spark.storage.StorageLevel
   */
 object Linalg {
 
-  /** Memo of the persisted frames, keyed by (session, input-plan
-    * semantic hash, params) — the same seam as engine/Tables: emb_kmeans,
-    * emb_pca_power, and emb_whiten all read the same corpus in one
-    * Verify/Bench session, and without the memo each graded query would
-    * re-explode and (for the PCA pair) re-build the O(n·d²) moment matrix
-    * from scratch. Entries are pure functions of their key; worst-case
-    * race cost is one redundant persist, never a wrong result. */
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, String), DataFrame]
-  private val memoCap = 64
-  private def memoized(emb: DataFrame, tag: String)(build: => DataFrame): DataFrame =
-    PlanMemo.memoized(memo, memoCap,
-      (emb.sparkSession, emb.queryExecution.logical.semanticHash(), tag))(build)
+  // Frames and eigensolves are memoized per input plan (ops/PlanMemo):
+  // emb_kmeans, emb_pca_power and emb_whiten all read the same corpus in
+  // one Verify/Bench session, and without the memo each graded query
+  // would re-explode and (for the PCA pair) re-build the O(n·d²) moment
+  // matrix from scratch.
 
   /** Per-dimension explode of a vector column: (id, dim (1-based, to
     * match DuckDB's generate_subscripts), e as double). Persisted — every
     * caller reads it at least twice. */
   def dims(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
-    memoized(emb, s"dims|$idCol|$vecCol") {
+    PlanMemo.byPlan(emb, "Linalg.dims", (idCol, vecCol)) {
       emb.select(col(idCol).as("vec_id"),
           posexplode(col(vecCol)).as(Seq("dim", "e")))
         .select(col("vec_id"), (col("dim") + 1).as("dim"),
@@ -58,7 +50,7 @@ object Linalg {
     // memoized + persisted: the assignment is read by emb_kmeans AND the
     // centroid-outlier query in one session — the seam that already pays
     // for itself across the whiten/PCA trio
-    memoized(emb, s"kmeans|$idCol|$vecCol|$k|$iters") {
+    PlanMemo.byPlan(emb, "Linalg.kmeans", (idCol, vecCol, k, iters)) {
       computeKmeans(emb, idCol, vecCol, k, iters)
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
@@ -82,7 +74,7 @@ object Linalg {
     * the corpus is never joined against anything bigger than O(k·d). */
   def pqTrainKmeans(emb: DataFrame, idCol: String, vecCol: String,
                     m: Int, k: Int, iters: Int): DataFrame =
-    memoized(emb, s"pqtrain|$idCol|$vecCol|$m|$k|$iters") {
+    PlanMemo.byPlan(emb, "Linalg.pqtrain", (idCol, vecCol, m, k, iters)) {
       computePqTrain(emb, idCol, vecCol, m, k, iters)
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
@@ -148,27 +140,17 @@ object Linalg {
     picked
   }
 
-  /** Memo of collected d²-cell moment matrices and the eigensolves over
-    * them, keyed like [[memoized]]. UNBOUNDED and never evicted — an
-    * entry is ≤ d² (i, j, c) triples (64 KB at d=64), dimension-bounded
-    * and corpus-independent, so unlike the DataFrame memo there is
-    * nothing worth reclaiming; keeping it pins the whole PCA family to
-    * zero Spark jobs after the one O(n·d²) moment reduce per corpus
-    * (measured: emb_pca_deflate 15 s → sub-second on a warm session). */
-  private val eigMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, String),
-           (Array[(Int, Double)], Double)]
-  private val cellsMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, String),
-           Array[(Int, Int, Double)]]
-
+  /** The collected d²-cell moment matrix, memoized like the eigensolves
+    * over it: an entry is ≤ d² (i, j, c) triples, and keeping it pins the
+    * whole PCA family to zero Spark jobs after the one O(n·d²) moment
+    * reduce per corpus (measured: emb_pca_deflate 15 s → sub-second on a
+    * warm session). */
   private def momentCells(emb: DataFrame, idCol: String, vecCol: String)
   : Array[(Int, Int, Double)] =
-    cellsMemo.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.logical.semanticHash(),
-        s"cells|$idCol|$vecCol"),
+    PlanMemo.byPlan(emb, "Linalg.cells", (idCol, vecCol)) {
       BoundedCollect.rows(momentOf(emb, idCol, vecCol), "Linalg.momentCells")
-        .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))))
+        .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+    }
 
   /** The power loop, driver-side. The distributed reduce that SHOULD be
     * distributed (O(n·d²) over the corpus) happens in [[momentOf]]; what
@@ -229,10 +211,9 @@ object Linalg {
     val d = dims(emb, idCol, vecCol)
     val cells = momentCells(emb, idCol, vecCol)
     val dimsN = cells.iterator.map(_._1).max
-    val eig = eigMemo.getOrElseUpdate(
-      (emb.sparkSession, emb.queryExecution.logical.semanticHash(),
-        s"eig1|$idCol|$vecCol|$iters"),
-      powerRoundsLocal(cells, dimsN, iters))
+    val eig = PlanMemo.byPlan(emb, "Linalg.eig1", (idCol, vecCol, iters)) {
+      powerRoundsLocal(cells, dimsN, iters)
+    }
     val (v, n) = toFrames(emb.sparkSession, eig)
     (v, n, d)
   }
@@ -249,7 +230,7 @@ object Linalg {
     * sizes the parquet source arrives already split, so the narrow
     * explode inherits real parallelism without help. */
   private def momentOf(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
-    memoized(emb, s"moment|$idCol|$vecCol") {
+    PlanMemo.byPlan(emb, "Linalg.moment", (idCol, vecCol)) {
       val nEmb = emb.groupBy().agg(count(lit(1)).as("n"))
       emb.select(col(idCol).as("vec_id"),
           posexplode(col(vecCol)).as(Seq("i0", "ei")), col(vecCol).as("arr"))
@@ -277,13 +258,10 @@ object Linalg {
   : (DataFrame, DataFrame) = {
     val cells = momentCells(emb, idCol, vecCol)
     val dimsN = cells.iterator.map(_._1).max
-    val key = (emb.sparkSession, emb.queryExecution.logical.semanticHash(),
-      s"eig2|$idCol|$vecCol|$iters")
-    val eig2 = eigMemo.getOrElseUpdate(key, {
-      val (v1, nrm1) = eigMemo.getOrElseUpdate(
-        (emb.sparkSession, emb.queryExecution.logical.semanticHash(),
-          s"eig1|$idCol|$vecCol|$iters"),
-        powerRoundsLocal(cells, dimsN, iters))
+    val eig2 = PlanMemo.byPlan(emb, "Linalg.eig2", (idCol, vecCol, iters)) {
+      val (v1, nrm1) = PlanMemo.byPlan(emb, "Linalg.eig1", (idCol, vecCol, iters)) {
+        powerRoundsLocal(cells, dimsN, iters)
+      }
       val l = math.floor(nrm1 * 1000000L + 0.5) / 1000000L
       val v1a = new Array[Double](dimsN + 1)
       v1.foreach { case (j, x) => v1a(j) = x }
@@ -292,7 +270,7 @@ object Linalg {
           / 100000000L)
       }
       powerRoundsLocal(deflated, dimsN, iters)
-    })
+    }
     toFrames(emb.sparkSession, eig2)
   }
 }

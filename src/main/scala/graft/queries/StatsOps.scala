@@ -1852,18 +1852,19 @@ object StatsOps extends QueryPack {
       |    SUM(CASE WHEN arm = 0 THEN y ELSE 0 END) AS s0,
       |    SUM(CASE WHEN arm = 1 THEN y ELSE 0 END) AS s1
       |  FROM seg GROUP BY segment
+      |), m AS (
+      |  SELECT segment, n0, n1,
+      |    CAST(s0 AS DOUBLE) / NULLIF(n0, 0) AS m0,
+      |    CAST(s1 AS DOUBLE) / NULLIF(n1, 0) AS m1
+      |  FROM g
       |)
       |SELECT segment, n0, n1,
-      |  CAST(floor(CAST(s0 AS DOUBLE) / n0 / 100 * 10000 + 0.5) AS DOUBLE)
-      |    / 10000 AS mean_control,
-      |  CAST(floor(CAST(s1 AS DOUBLE) / n1 / 100 * 10000 + 0.5) AS DOUBLE)
-      |    / 10000 AS mean_treat,
-      |  CAST(floor((CAST(s1 AS DOUBLE) / n1 - CAST(s0 AS DOUBLE) / n0) / 100
-      |    * 10000 + 0.5) AS DOUBLE) / 10000 AS uplift,
-      |  CAST(floor((CAST(s1 AS DOUBLE) / n1 - CAST(s0 AS DOUBLE) / n0)
-      |    / (CAST(s0 AS DOUBLE) / n0) * 1000000 + 0.5) AS DOUBLE) / 1000000
-      |    AS rel_lift
-      |FROM g ORDER BY segment""") { (s, dir) =>
+      |  CAST(floor(m0 / 100 * 10000 + 0.5) AS DOUBLE) / 10000 AS mean_control,
+      |  CAST(floor(m1 / 100 * 10000 + 0.5) AS DOUBLE) / 10000 AS mean_treat,
+      |  CAST(floor((m1 - m0) / 100 * 10000 + 0.5) AS DOUBLE) / 10000 AS uplift,
+      |  CAST(floor((m1 - m0) / NULLIF(m0, 0) * 1000000 + 0.5) AS DOUBLE)
+      |    / 1000000 AS rel_lift
+      |FROM m ORDER BY segment""") { (s, dir) =>
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val ev = Tables(s, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
@@ -1885,8 +1886,10 @@ object StatsOps extends QueryPack {
         sum(when(col("arm") === 1, 1L).otherwise(0L)).cast("long").as("n1"),
         sum(when(col("arm") === 0, col("y")).otherwise(0L)).as("s0"),
         sum(when(col("arm") === 1, col("y")).otherwise(0L)).as("s1"))
-    val m0 = d(col("s0")) / col("n0")
-    val m1 = d(col("s1")) / col("n1")
+    // an empty arm (or a zero control mean) gives NULL, not an ANSI
+    // DIVIDE_BY_ZERO: at sf0.001 segment 4 has no control users
+    val m0 = d(col("s0")) / nullif(col("n0"), lit(0L))
+    val m1 = d(col("s1")) / nullif(col("n1"), lit(0L))
     g.select(col("segment"), col("n0"), col("n1"),
         (floor(m0 / 100 * 10000 + lit(0.5)).cast("double") / 10000)
           .as("mean_control"),
@@ -1894,7 +1897,8 @@ object StatsOps extends QueryPack {
           .as("mean_treat"),
         (floor((m1 - m0) / 100 * 10000 + lit(0.5)).cast("double") / 10000)
           .as("uplift"),
-        (floor((m1 - m0) / m0 * 1000000 + lit(0.5)).cast("double") / 1000000)
+        (floor((m1 - m0) / nullif(m0, lit(0.0)) * 1000000 + lit(0.5))
+          .cast("double") / 1000000)
           .as("rel_lift"))
       .orderBy("segment")
   }

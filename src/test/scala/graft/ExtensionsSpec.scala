@@ -114,15 +114,31 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  /** Regex match counts per source file under `dir` (files with none
+    * left out). */
+  private def matches(dir: String, re: scala.util.matching.Regex): Map[String, Int] =
+    Files.walk(Paths.get(dir)).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString -> re.findAllIn(Files.readString(p)).size)
+      .filter(_._2 > 0).toMap
+
   test("one session factory and one function registrar in main code; " +
     "tests build no session of their own") {
     def count(dir: String, re: scala.util.matching.Regex): Int =
-      Files.walk(Paths.get(dir)).iterator.asScala
-        .filter(_.toString.endsWith(".scala"))
-        .map(p => re.findAllIn(Files.readString(p)).size).sum
+      matches(dir, re).values.sum
     val builder = "SparkSession\\s*\\.\\s*builder".r
     assert(count("src/main", builder) == 1)
     assert(count("src/main", "createOrReplaceTempFunction".r) == 1)
     assert(count("src/test", builder) == 0)
+  }
+
+  test("one session memo in main code: TrieMap only in PlanMemo, no " +
+    "32-bit plan-hash keys") {
+    // LshBands.cache is a pure function of (nBits, width) and holds no
+    // session state, so it is not a session memo
+    assert(matches("src/main", "TrieMap".r).keySet == Set(
+      "src/main/scala/graft/ops/PlanMemo.scala",
+      "src/main/scala/graft/functions/LshBands.scala"))
+    assert(matches("src/main", "semanticHash\\(".r).isEmpty)
   }
 }

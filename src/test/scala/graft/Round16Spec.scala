@@ -176,50 +176,84 @@ class Round16Spec extends SparkSpec {
       .toDF("doc_id", "text")
     ops.Dedup.jaccardPairs(docs, "text", "doc_id", k = 3, tau = 0.1)
       .count()
-    def memoField(owner: AnyRef, name: String) = {
-      val f = owner.getClass.getDeclaredFields
-        .find(_.getName.endsWith(name)).get
-      f.setAccessible(true)
-      f.get(owner).asInstanceOf[scala.collection.concurrent.TrieMap[_, _]]
-    }
+    val entries = ops.PlanMemo.entries
     // every memo key carries the OWNING SparkSession as its first element:
     // entries can never outlive or cross sessions (PlanMemo evicts
     // stopped-session keys; a fresh session can never read ours), and the
-    // map itself is an in-memory TrieMap — no file-backed store anywhere.
-    for (nm <- Seq("pairMemo", "ccMemo")) {
-      val m = memoField(ops.Dedup, nm)
-      m.keys.foreach { k =>
-        assert(k.asInstanceOf[Product].productElement(0)
-          .isInstanceOf[org.apache.spark.sql.SparkSession],
-          s"$nm key not session-first: $k")
-      }
+    // map itself is in memory — no file-backed store anywhere.
+    entries.keys.foreach { k =>
+      assert(k.productElement(0).isInstanceOf[org.apache.spark.sql.SparkSession],
+        s"memo key not session-first: $k")
     }
-    val pm = memoField(ops.Dedup, "pairMemo")
-    assert(pm.keys.exists(
-      _.asInstanceOf[Product].productElement(0).asInstanceOf[AnyRef] eq spark),
+    assert(entries.keys.exists(k =>
+      k.site == "Dedup.jaccardPairs" && (k.session eq spark)),
       "pair memo not populated for the live session")
     // memoized frames that ARE persisted use memory-backed session-local
     // levels (MEMORY_AND_DISK spill at most) — never a stable on-disk
     // artifact; some memo entries (e.g. minhashBands) are plan-only and
     // carry no storage at all, which is equally safe
-    pm.values.foreach { v =>
-      val lvl = v.asInstanceOf[org.apache.spark.sql.DataFrame].storageLevel
-      assert(lvl == org.apache.spark.storage.StorageLevel.NONE
-        || lvl.useMemory, s"memoized frame disk-only: $lvl")
-      assert(lvl.replication == 1)
+    entries.values.foreach {
+      case v: org.apache.spark.sql.DataFrame =>
+        val lvl = v.storageLevel
+        assert(lvl == org.apache.spark.storage.StorageLevel.NONE
+          || lvl.useMemory, s"memoized frame disk-only: $lvl")
+        assert(lvl.replication == 1)
+      case _ => ()
     }
-    // PlanMemo eviction: at cap, the OLDEST entry leaves and its blocks
-    // are unpersisted — the memo can never grow into a cross-run store
-    val m2 = scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+    // eviction: at cap, the OLDEST entry leaves and its blocks are
+    // unpersisted — the memo can never grow into a cross-run store
+    val m = new ops.PlanMemo(1, _.sparkContext.isStopped)
     val f1 = Seq(1).toDF("x").persist()
     val f2 = Seq(2).toDF("x").persist()
-    ops.PlanMemo.memoized(m2, 1, (spark, "k1"))(f1)
-    ops.PlanMemo.memoized(m2, 1, (spark, "k2"))(f2)
-    assert(!m2.contains((spark, "k1")), "oldest entry not evicted at cap")
-    assert(m2.contains((spark, "k2")))
+    m.byDir(spark, "k1", "test")(f1)
+    m.byDir(spark, "k2", "test")(f2)
+    assert(m.entries.keys.map(_.input) == Set("k2"), "oldest entry not evicted at cap")
     assert(f1.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "evicted frame still persisted")
     f2.unpersist()
+  }
+
+  test("session memo: a stopped session's entries leave before the oldest " +
+    "live entry") {
+    // one SparkContext per JVM: the second session stands in for a stopped
+    // one through the memo's liveness check
+    val dead = spark.newSession()
+    val m = new ops.PlanMemo(3, _ eq dead)
+    m.byDir(spark, "live-oldest", "test")(1)
+    m.byDir(dead, "dead-1", "test")(2)
+    m.byDir(dead, "dead-2", "test")(3)
+    m.byDir(spark, "live-new", "test")(4)
+    assert(m.entries.keys.map(_.input) == Set("live-oldest", "live-new"))
+  }
+
+  test("session memo: separately built, semantically equal plans share one " +
+    "entry") {
+    import spark.implicits._
+    val base = Seq((1L, "a b"), (2L, "c d")).toDF("id", "t")
+    def built = base.filter(col("id") > 0).withColumn("u", upper(col("t")))
+    val m = new ops.PlanMemo(8, _.sparkContext.isStopped)
+    var builds = 0
+    assert(m.byPlan(built, "test", 1) { builds += 1; builds } == 1)
+    assert(m.byPlan(built, "test", 1) { builds += 1; builds } == 1)
+    assert(builds == 1 && m.entries.size == 1)
+  }
+
+  test("session memo: two in-memory corpora with the same params get two " +
+    "entries and their own results") {
+    import spark.implicits._
+    val rows = Seq((1L, "p q r s", "w x y z"), (2L, "p q r t", "k l m n"))
+    val a = rows.toDF("doc_id", "text", "title")
+    // same data, text and title swapped: canonicalization erases column
+    // names, so the plan alone cannot tell these two apart
+    val b = rows.toDF("doc_id", "title", "text")
+    def pairs(d: org.apache.spark.sql.DataFrame) =
+      ops.Dedup.jaccardPairs(d, "text", "doc_id", k = 3, tau = 0.1)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def keys = ops.PlanMemo.entries.keySet
+      .filter(k => k.site == "Dedup.jaccardPairs" && (k.session eq spark))
+    val before = keys
+    assert(pairs(a) == Set((1L, 2L)))
+    assert(pairs(b).isEmpty)
+    assert((keys -- before).size == 2)
   }
 }

@@ -401,4 +401,13 @@ class StatsSpec extends SparkSpec {
       assert(r.getAs[Long]("n_conversions") <= r.getAs[Long]("n_events"))
     }
   }
+
+  test("events_uplift_by_segment: an arm with no users gives NULL means, " +
+    "not a divide-by-zero") {
+    val seg4 = run("events_uplift_by_segment").collect()
+      .find(_.getAs[Number]("segment").intValue == 4).get
+    assert(seg4.getAs[Long]("n0") == 0L && seg4.getAs[Long]("n1") == 3L)
+    for (c <- Seq("mean_control", "uplift", "rel_lift"))
+      assert(seg4.isNullAt(seg4.fieldIndex(c)), c)
+  }
 }
