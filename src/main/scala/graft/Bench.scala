@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -59,7 +62,9 @@ object Bench {
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
         full.getBytes("UTF-8"))
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] BENCH_FULL.json not written: ${Verify.reason(e)}")
+    }
     val sorted = results.values.toSeq.sorted
     def pct(p: Double): Double =
       if (sorted.isEmpty) 0.0
@@ -85,7 +90,9 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_SUMMARY.json"),
         (summary + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] BENCH_SUMMARY.json not written: ${Verify.reason(e)}")
+    }
     println(summary)
     spark.stop()
   }
@@ -94,8 +101,10 @@ object Bench {
     * attributed to whichever query happens to run first. */
   def warmUp(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit =
     try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().count()
-    } catch { case _: Throwable => }
+      val lineitem = engine.Tables(spark, sfDir, "lineitem")
+      lineitem.count()
+      lineitem.groupBy("l_returnflag").count().count()
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] warm-up failed: ${Verify.reason(e)}")
+    }
 }

@@ -532,7 +532,7 @@ object Aggregates extends QueryPack {
       .agg(count(lit(1)).as("cnt_rows"),
         sum(cents(col("l_extendedprice"))).as("cents"))
       .write.mode("overwrite").parquet(partials)
-    s.read.parquet(partials)
+    Tables.parquet(s, partials)
       .groupBy(date_format(col("day"), "yyyy-MM").as("month"),
         col("l_returnflag"))
       .agg(sum(col("cnt_rows")).as("n"),

@@ -372,8 +372,8 @@ object Joins extends QueryPack {
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(factPath)
     Seq(("A", "keep"), ("R", "keep"), ("N", "drop")).toDF("flag", "action")
       .write.mode("overwrite").parquet(dimPath)
-    val fact = s.read.parquet(factPath)
-    val dim = s.read.parquet(dimPath).filter(col("action") === "keep")
+    val fact = Tables.parquet(s, factPath)
+    val dim = Tables.parquet(s, dimPath).filter(col("action") === "keep")
     fact.join(dim, col("l_returnflag") === col("flag"))
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"),

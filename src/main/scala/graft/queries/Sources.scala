@@ -67,7 +67,7 @@ object Sources extends QueryPack {
       |  (row_number() OVER (ORDER BY doc_id) - 1) // 1000 AS shard,
       |  'documents.parquet' AS file_name
       |FROM documents ORDER BY doc_id""") { (s, dir) =>
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.parquet(s, s"$dir/documents.parquet")
       .select(col("doc_id"), col("_metadata.row_index").as("row_idx"),
         floor(col("_metadata.row_index") / 1000).cast("long").as("shard"),
         element_at(split(col("_metadata.file_path"), "/"), -1).as("file_name"))
@@ -310,7 +310,7 @@ object Sources extends QueryPack {
     val out = "/tmp/graft_io/parquet_zstd"
     Tables(s, dir, "part").select("p_partkey", "p_name", "p_retailprice")
       .write.mode("overwrite").option("compression", "zstd").parquet(out)
-    s.read.parquet(out).orderBy("p_partkey")
+    Tables.parquet(s, out).orderBy("p_partkey")
   }
 
   // Row-level error quarantine: PERMISSIVE CSV parse captures malformed
@@ -397,7 +397,7 @@ object Sources extends QueryPack {
     Tables(s, dir, "lineitem")
       .select("l_orderkey", "l_linestatus", "l_extendedprice", "l_returnflag")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .filter(col("l_returnflag") === "R")
       .groupBy("l_linestatus")
       .agg(count(lit(1)).as("n"),
@@ -420,7 +420,7 @@ object Sources extends QueryPack {
       .select("l_orderkey", "l_linenumber", "l_returnflag")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     // read back ONE partition — the scan must prune to a single directory
-    s.read.parquet(out)
+    Tables.parquet(s, out)
       .filter(col("l_returnflag") === "R")
       .select("l_orderkey", "l_linenumber", "l_returnflag")
       .orderBy("l_orderkey", "l_linenumber")
@@ -516,7 +516,7 @@ object Sources extends QueryPack {
       // today allowReadingShredded defaults true so the lazy form
       // happened to work, but a session or version where it doesn't
       // would silently scan under the wrong conf
-      val agg = s.read.parquet(out)
+      val agg = Tables.parquet(s, out)
         .select(variant_get(col("v"), "$.tag", "string").as("tag"),
           variant_get(col("v"), "$.val", "double").as("val"),
           variant_get(col("v"), "$.k", "long").as("k"))

@@ -1257,7 +1257,7 @@ object Streaming extends QueryPack {
       .getOrElse(0)
     require(stateParts == 4,
       s"resume re-laid state to $stateParts partitions under a conf delta")
-    s.read.parquet(s"$base/out").select("user_id").orderBy("user_id")
+    Tables.parquet(s, s"$base/out").select("user_id").orderBy("user_id")
   }
 
   // CDC upsert through the streaming tier — the events stream read as a

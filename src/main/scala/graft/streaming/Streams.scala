@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.engine.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -39,7 +40,7 @@ object Streams {
     Files.createSymbolicLink(link, src)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // footer probe: which physical ts type did this fixture generation ship?
-    val tsType = spark.read.parquet(src.toString).schema("ts").dataType
+    val tsType = Tables.parquet(spark, src.toString).schema("ts").dataType
     val raw = spark.readStream.schema(eventsSchema(tsType))
       .parquet(stage.toString)
     tsType match {
@@ -123,6 +124,6 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
   }
 }

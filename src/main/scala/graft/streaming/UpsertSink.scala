@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.engine.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.io.File
@@ -91,7 +92,7 @@ object UpsertSink {
     val merged = (if (livePaths.isEmpty) agg else {
       // one keyed shuffle of touched-bucket rows × batch — both sides
       // hash-partition on user_id; untouched buckets are never read
-      spark.read.parquet(livePaths: _*)
+      Tables.parquet(spark, livePaths: _*)
         .select(col("user_id"), col("n_events"), col("cents"))
         .unionByName(agg.drop("bucket"))
         .groupBy("user_id")
@@ -182,7 +183,7 @@ object UpsertSink {
       sys.error(s"upsert table $table has no data buckets yet")
     val paths = m.live.toSeq.sorted
       .map { case (b, v) => s"$table/bucket=$b/v=$v" }
-    spark.read.parquet(paths: _*)
+    Tables.parquet(spark, paths: _*)
       .select(col("user_id"), col("n_events"), col("cents"))
   }
 
