@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -139,20 +139,16 @@ object Dev {
   /** Alternating same-session A/B of two plans for one stage. Both arms
     * read one persisted input, must agree on a row-count-and-hash-sum
     * signature, then run A,B ×4 into the `noop` sink. Edit `armA`/`armB`
-    * for a new experiment; the template compares codegen shingles plus an
-    * interpreted per-element xxhash64 against the fused shingle-hash
-    * expression. */
+    * for a new experiment; the template compares the builder's language
+    * filter as the built-in CASE chain ([[langIdExpr]]) against the
+    * `graft_lang_id` kernel behind `TextOps.langId`. */
   private def ab(spark: SparkSession, sfDir: String): Unit = {
-    val tk = engine.Tables.fan(
+    val docs = engine.Tables.fan(
         engine.Tables(spark, sfDir, "documents").select(col("doc_id"), col("text")))
-      .select(col("doc_id"), ops.TextOps.tokens(col("text")).as("tk"))
-      .filter(size(col("tk")) >= 3)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    println(s"[ab] shared input: ${tk.count()} rows")
-    def armA: DataFrame = tk.select(col("doc_id"), explode(array_distinct(
-      transform(ops.TextOps.shingles(col("tk"), 3), xxhash64(_)))).as("h"))
-    def armB: DataFrame = tk.select(col("doc_id"), explode(array_distinct(
-      ops.TextOps.shingleHashes(col("tk"), 3))).as("h"))
+    println(s"[ab] shared input: ${docs.count()} rows")
+    def armA: DataFrame = docs.filter(langIdExpr(col("text")) === "en")
+    def armB: DataFrame = docs.filter(ops.TextOps.langId(col("text")) === "en")
 
     def sig(df: DataFrame): Seq[Any] =
       df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
@@ -169,6 +165,20 @@ object Dev {
       time(s"A r$r")(armA)
       time(s"B r$r")(armB)
     }
-    tk.unpersist()
+    docs.unpersist()
+  }
+
+  /** Stopword-vote language ID from built-in expressions: four
+    * `size(array_intersect(split(lower(text)), stopwords))` scores under a
+    * CASE chain, the form `graft_lang_id` computes in one scan. */
+  private def langIdExpr(text: Column): Column = {
+    val toks = split(lower(text), " ")
+    val Seq(de, en, es, fr) = Seq("de", "en", "es", "fr").map(l =>
+      size(array_intersect(toks, array(ops.TextOps.stopwords(l).map(lit): _*))))
+    when(text.rlike("[\\u4e00-\\u9fff]"), "zh")
+      .when(de >= en && de >= es && de >= fr, "de")
+      .when(en >= es && en >= fr, "en")
+      .when(es >= fr, "es")
+      .otherwise("fr")
   }
 }

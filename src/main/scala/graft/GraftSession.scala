@@ -41,7 +41,9 @@ object GraftSession {
         if (e.length > 3) intArg("graft_lsh_bands", "dim", e(3))
         else LshBands.defaultDim)),
     ("graft_jw", e => JaroWinkler(e(0), e(1))),
-    ("graft_dl", e => DamerauLevenshtein(e(0), e(1))))
+    ("graft_dl", e => DamerauLevenshtein(e(0), e(1))),
+    ("graft_lang_id", e => LangId(e(0))),
+    ("graft_quality_score", e => QualityScore(e(0))))
 
   val rules: Seq[Rule[LogicalPlan]] = Seq(DotRewrite, LevPrefilter)
 

@@ -1,6 +1,7 @@
 package graft.builder
 
 import graft.engine.Tables
+import graft.ops.PlanMemo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
@@ -141,9 +142,12 @@ object Pipeline {
           df.unpivot(ids.map(col).toArray, vals.map(col).toArray, vn, valn)
         case (df, DedupNear(tc, ic, k, tau)) =>
           import org.apache.spark.sql.functions.{col, expr}
-          val losers = graft.ops.Dedup.jaccardPairs(df, tc, ic, k, tau)
+          // the pair search and the anti-join both read the step input:
+          // persisted once (owned by the memo), its upstream runs once
+          val in = PlanMemo.byPlan(df, "Pipeline.dedupNear", ())(PlanMemo.pin(df))
+          val losers = graft.ops.Dedup.jaccardPairs(in, tc, ic, k, tau)
             .select(col("id_b").as("__loser")).distinct()
-          df.join(losers, expr(s"$ic = __loser"), "left_anti")
+          in.join(losers, expr(s"$ic = __loser"), "left_anti")
         case (df, PiiScrub(c, out)) =>
           df.withColumn(out, graft.ops.TextOps.piiScrub(
             org.apache.spark.sql.functions.col(c)))
@@ -154,9 +158,8 @@ object Pipeline {
           import org.apache.spark.sql.functions.col
           df.filter(graft.ops.TextOps.langId(col(tc)) === lang)
         case (df, QualityGate(tc, min)) =>
-          import org.apache.spark.sql.functions.{col, size}
-          df.filter(graft.ops.TextOps.qualityScore(col(tc),
-            size(graft.ops.TextOps.tokens(col(tc)))) >= min)
+          df.filter(graft.ops.TextOps.qualityScore(
+            org.apache.spark.sql.functions.col(tc)) >= min)
         case (df, ImportanceSample(tc, ic)) =>
           graft.ops.Sampling.importanceSample(df, tc, ic).drop("__quality")
         case (df, ChunkDedup(tc, ic, w)) =>

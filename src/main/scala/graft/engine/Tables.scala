@@ -51,10 +51,19 @@ object Tables {
     * the NTZ→LTZ cast keeps the wall clock and yields µs values identical
     * to what DuckDB sees reading the same file (SURVEY §5.4 P3).
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame =
+    eventsTs(spark, s"$dir/events.parquet")(identity)
+
+  /** `read` of an events parquet `file` with `ts` normalized as
+    * [[events]] describes. `read` gets the batch read of `file` (its
+    * schema is the footer probe) and may return another reader of the same
+    * data, such as a stream. */
+  def eventsTs(spark: SparkSession, file: String)(
+      read: DataFrame => DataFrame): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = parquet(spark, s"$dir/events.parquet")
-    df.schema("ts").dataType match {
+    val batch = parquet(spark, file)
+    val df = read(batch)
+    batch.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case org.apache.spark.sql.types.TimestampNTZType =>

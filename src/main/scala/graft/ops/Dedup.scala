@@ -4,7 +4,6 @@ import graft.engine.Tables.fan
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines (SURVEY §2.9).
   *
@@ -42,13 +41,11 @@ object Dedup {
   /** Persist a frame the downstream DAG consumes ≥2× under DIFFERENT join
     * keys (ReuseExchange only dedupes identical exchanges, so e.g. the
     * candidate-verification joins on id_a then id_b would re-tokenize and
-    * re-shingle every document per consumer). MEMORY_AND_DISK: spills, never
-    * OOMs. Repeated calls do NOT leak: CacheManager keys cached data by the
-    * canonicalized plan, so re-invoking an operator on the same input reuses
-    * the existing entry (storage is bounded by #distinct inputs per
-    * session). At 100 TB the same seam is a checkpoint to reliable storage —
+    * re-shingle every document per consumer). Every pin below runs inside a
+    * memo build, so its [[PlanMemo]] entry owns it and unpersists it on
+    * eviction. At 100 TB the same seam is a checkpoint to reliable storage —
     * every published LSH pipeline materializes the signature stage. */
-  private def pin(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
+  private def pin(df: DataFrame): DataFrame = PlanMemo.pin(df)
 
   /** Exact dedup: keep the lowest-id row per identical text. */
   def exact(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
@@ -161,15 +158,17 @@ object Dedup {
     * only ever share ≥1 shingle, exact verification on those. */
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
                        k: Int, tau: Double,
-                       dfCap: Int = stopShingleDfCap): DataFrame = {
-    val sh = pin(shingleSets(docs, textCol, idCol, k))
-    val counts = sh.select(col("id"), size(col("sh")).as("n"))
-    interCounts(shingleRowsWithDf(sh), dfCap, _ =!= _)
-      .join(counts.as("ca"), col("id_a") === col("ca.id"))
-      .select(col("id_a"), col("id_b"),
-        round(col("inter").cast("double") / col("ca.n"), 4).as("containment"))
-      .filter(col("containment") >= tau)
-  }
+                       dfCap: Int = stopShingleDfCap): DataFrame =
+    PlanMemo.byPlan(docs, "Dedup.containmentPairs",
+        (textCol, idCol, k, tau, dfCap)) {
+      val sh = pin(shingleSets(docs, textCol, idCol, k))
+      val counts = sh.select(col("id"), size(col("sh")).as("n"))
+      interCounts(shingleRowsWithDf(sh), dfCap, _ =!= _)
+        .join(counts.as("ca"), col("id_a") === col("ca.id"))
+        .select(col("id_a"), col("id_b"),
+          round(col("inter").cast("double") / col("ca.n"), 4).as("containment"))
+        .filter(col("containment") >= tau)
+    }
 
   /** MinHash signatures + LSH banding: candidates share ≥1 of `bands`
     * band-hashes; candidates are then exact-verified with `jaccardPairs`-
@@ -258,23 +257,25 @@ object Dedup {
     * riding MLlib's implementation — both are 100 TB-shaped (bucket-join
     * candidates, verify only candidates). */
   def minhashPairsML(docs: DataFrame, textCol: String, idCol: String,
-                     k: Int, numHashTables: Int, tau: Double): DataFrame = {
-    import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
-    val sh = shingleSets(docs, textCol, idCol, k)
-    val tf = new HashingTF().setInputCol("sh").setOutputCol("features")
-      .setBinary(true).setNumFeatures(1 << 18)
-    // MLlib's documented contract: cache the transformed input before
-    // approxSimilarityJoin — the self-join consumes it once per side plus
-    // once per hash-table explode, each a full lineage recompute otherwise
-    val feat = pin(tf.transform(sh))
-    val mh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(42)
-    val model = mh.fit(feat)
-    model.approxSimilarityJoin(feat, feat, 1.0 - tau, "dist")
-      .select(col("datasetA.id").as("id_a"), col("datasetB.id").as("id_b"),
-        round(lit(1.0) - col("dist"), 4).as("jaccard"))
-      .filter(col("id_a") < col("id_b"))
-  }
+                     k: Int, numHashTables: Int, tau: Double): DataFrame =
+    PlanMemo.byPlan(docs, "Dedup.minhashPairsML",
+        (textCol, idCol, k, numHashTables, tau)) {
+      import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
+      val sh = shingleSets(docs, textCol, idCol, k)
+      val tf = new HashingTF().setInputCol("sh").setOutputCol("features")
+        .setBinary(true).setNumFeatures(1 << 18)
+      // MLlib's documented contract: cache the transformed input before
+      // approxSimilarityJoin — the self-join consumes it once per side plus
+      // once per hash-table explode, each a full lineage recompute otherwise
+      val feat = pin(tf.transform(sh))
+      val mh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
+        .setNumHashTables(numHashTables).setSeed(42)
+      val model = mh.fit(feat)
+      model.approxSimilarityJoin(feat, feat, 1.0 - tau, "dist")
+        .select(col("datasetA.id").as("id_a"), col("datasetB.id").as("id_b"),
+          round(lit(1.0) - col("dist"), 4).as("jaccard"))
+        .filter(col("id_a") < col("id_b"))
+    }
 
   /** Edit-distance (Levenshtein) near-dup pairs with banded blocking:
     * candidates must share the first token AND sit in the same or adjacent
@@ -518,7 +519,10 @@ object Dedup {
     * the chunk text (the chunk must travel to its bucket anyway to be
     * reassembled, so hashing the key would not shrink the shuffle), and
     * reassembly is one groupBy(doc_id) with an in-group sort by position.
-    * Both shuffles move each chunk exactly once. */
+    * Both shuffles move each chunk exactly once, and the tokenized input
+    * is read once: each chunk row carries its doc's chunk count
+    * (ceil(tokens / width), the rows posexplode makes for it) instead of a
+    * second count-and-join pass over the chunks. */
   def chunkDedup(docs: DataFrame, textCol: String, idCol: String,
                  width: Int): DataFrame = {
     require(width > 0, s"chunk width must be positive, got $width")
@@ -526,25 +530,22 @@ object Dedup {
       TextOps.tokens(col(textCol)).as("tk")))
     val nChunks = ceil(size(col("tk")).cast("double") / width).cast("int")
     val chunks = t
-      .select(col("doc_id"),
+      .select(col("doc_id"), nChunks.as("n_chunks"),
         posexplode(transform(sequence(lit(0), nChunks - 1),
           i => array_join(slice(col("tk"), i * width + 1, lit(width)), " "))))
       .withColumnRenamed("pos", "chunk_idx")
       .withColumnRenamed("col", "chunk")
     val w = Window.partitionBy(col("chunk")).orderBy(col("doc_id"), col("chunk_idx"))
-    val kept = chunks.withColumn("__rn", row_number().over(w))
+    chunks.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-    val tot = chunks.groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
-    kept.groupBy("doc_id")
+      .groupBy("doc_id")
       .agg(
         // struct sorts by field order (chunk_idx first) — positional order
         array_join(transform(
           array_sort(collect_list(struct(col("chunk_idx"), col("chunk")))),
           s => s.getField("chunk")), " ").as("text_dedup"),
-        count(lit(1)).cast("int").as("n_kept"))
-      .join(tot, "doc_id")
-      .select(col("doc_id"), col("text_dedup"), col("n_kept"),
-        col("n_chunks").cast("int").as("n_chunks"))
+        count(lit(1)).cast("int").as("n_kept"),
+        max(col("n_chunks")).as("n_chunks"))
   }
 
   /** Cross-document duplicated token SPANS (Lee et al. 2022 substring

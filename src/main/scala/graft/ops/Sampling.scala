@@ -19,8 +19,7 @@ object Sampling {
     * original columns plus the quality score as `qualityOut`. */
   def importanceSample(df: DataFrame, textCol: String, idCol: String,
                        qualityOut: String = "__quality"): DataFrame = {
-    val q = TextOps.qualityScore(col(textCol),
-      size(TextOps.tokens(col(textCol))))
+    val q = TextOps.qualityScore(col(textCol))
     val b = df.withColumn(qualityOut, q)
       .withColumn("__qb", floor(col(qualityOut) * 10).cast("int"))
       .withColumn("__u", md5(col(idCol).cast("string")))

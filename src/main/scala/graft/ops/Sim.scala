@@ -325,21 +325,24 @@ object Sim {
     * ~1e-6, pairs exactly at s=0.85 with 1.4e-4, at s=0.8 with 3.8e-3;
     * random bulk pairs (s≈0, p=0.5) collide in a band with 2^-8, so
     * candidates ≈ 12% of all pairs — the split widens with tau and with
-    * corpus anisotropy. */
+    * corpus anisotropy. The normalized vectors (read by the banding and
+    * both verification sides) are pinned by this call's memo entry. */
   def nearDupPairsBlocked(corpus: DataFrame, tau: Double,
                           bands: Int = 32, rowsPerBand: Int = 8,
                           dim: Int = 0): DataFrame = {
     graft.GraftSession.install(corpus.sparkSession)
-    val d = if (dim > 0) dim else inferDim(corpus)
-    val v = withNorm(fan(corpus).select(col("vec_id"), asDouble(col("embedding")).as("e")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = candidatesFrom(bandedBuckets(v, bands, rowsPerBand, d))
-    cand
-      .join(v.select(col("vec_id").as("id_a"), col("e").as("ea"), col("nrm").as("na")), "id_a")
-      .join(v.select(col("vec_id").as("id_b"), col("e").as("eb"), col("nrm").as("nb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(cosinePre(dot(col("ea"), col("eb")), col("na"), col("nb")), 4).as("sim"))
-      .filter(col("sim") >= tau)
+    PlanMemo.byPlan(corpus, "Sim.nearDupPairsBlocked", (tau, bands, rowsPerBand, dim)) {
+      val d = if (dim > 0) dim else inferDim(corpus)
+      val v = PlanMemo.pin(withNorm(
+        fan(corpus).select(col("vec_id"), asDouble(col("embedding")).as("e"))))
+      val cand = candidatesFrom(bandedBuckets(v, bands, rowsPerBand, d))
+      cand
+        .join(v.select(col("vec_id").as("id_a"), col("e").as("ea"), col("nrm").as("na")), "id_a")
+        .join(v.select(col("vec_id").as("id_b"), col("e").as("eb"), col("nrm").as("nb")), "id_b")
+        .select(col("id_a"), col("id_b"),
+          round(cosinePre(dot(col("ea"), col("eb")), col("na"), col("nb")), 4).as("sim"))
+        .filter(col("sim") >= tau)
+    }
   }
 
   /** Exhaustive twin of [[nearDupPairsBlocked]]: all O(n²) pairs scored.

@@ -165,27 +165,16 @@ object TextOps {
     "fr" -> Seq("le", "la", "de", "et", "est", "un", "une", "dans", "pour", "que"),
     "zh" -> Seq())
 
-  def langScores(toks: Column): Seq[(String, Column)] =
-    Seq("de", "en", "es", "fr").map { lang =>
-      lang -> size(array_intersect(toks,
-        array(stopwords(lang).map(lit): _*)))
-    }
-
-  /** Predicted language: CJK chars → zh, else max stopword score with
-    * alphabetical tiebreak (deterministic). */
-  def langId(text: Column): Column = langIdToks(text, tokens(lower(text)))
-
-  /** [[langId]] over a pre-materialized lowercase token array — use when a
-    * pipeline stage already carries the tokens below an exchange, so
-    * CollapseProject cannot re-inline the tokenization per consumer. */
-  def langIdToks(text: Column, lowerToks: Column): Column = {
-    // argmax as an explicit CASE chain — alphabetical priority on ties
-    val Seq(de, en, es, fr) = langScores(lowerToks).map(_._2)
-    when(text.rlike("[\\u4e00-\\u9fff]"), "zh")
-      .when(de >= en && de >= es && de >= fr, "de")
-      .when(en >= es && en >= fr, "en")
-      .when(es >= fr, "es")
-      .otherwise("fr")
+  /** Predicted language: any CJK char (U+4E00..U+9FFF) → zh, else the
+    * language whose stopword list holds the most distinct lowercase " "
+    * tokens, ties to the alphabetically first. One codegen expression
+    * (functions/TextScores.scala) scans each row once; the CASE chain over
+    * four `size(array_intersect(split(lower(text)), …))` scores it
+    * replaced gave the same values. */
+  def langId(text: Column): Column = {
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .foreach(graft.GraftSession.install)
+    call_function("graft_lang_id", text)
   }
 
   /** PII redaction: mask emails, phone numbers, IPv4 addresses with typed
@@ -200,23 +189,17 @@ object TextOps {
         "(\\+?[0-9]{1,2}[ -])?[0-9]{3}-[0-9]{3}-[0-9]{4}", "<PHONE>"),
       "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b", "<IP>")
 
-  /** Quality score in [0,1]: length saturation, non-punctuation share,
-    * stopword share — per-row IEEE arithmetic, association fixed.
-    * Punctuation is counted by stripping [A-Za-z0-9 ] (portable to any
-    * regexp dialect, no char-splitting needed). */
-  def qualityScore(text: Column, nTokens: Column): Column =
-    qualityScoreToks(text, tokens(lower(text)), nTokens)
-
-  /** [[qualityScore]] over pre-materialized lowercase tokens (see
-    * [[langIdToks]] for why pipelines pass them in). */
-  def qualityScoreToks(text: Column, lowerToks: Column, nTokens: Column): Column = {
-    val punct = length(regexp_replace(text, "[A-Za-z0-9 ]", ""))
-    val stop = size(array_intersect(lowerToks,
-      array(stopwords.values.flatten.toSeq.distinct.sorted.map(lit): _*)))
-    round(
-      least(length(text).cast("double") / 200, lit(1.0)) * 0.3
-        + (lit(1.0) - punct.cast("double") / length(text)) * 0.3
-        + (stop.cast("double") / nTokens) * 0.4, 4)
+  /** Quality score in [0,1], rounded to 4 places:
+    *   0.3 · min(length / 200, 1)
+    * + 0.3 · (1 − chars outside [A-Za-z0-9 ] / length)
+    * + 0.4 · distinct lowercase stopword tokens / " " tokens
+    * in per-row IEEE arithmetic with the association as written. One
+    * codegen expression (functions/TextScores.scala); empty text divides
+    * by zero. */
+  def qualityScore(text: Column): Column = {
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .foreach(graft.GraftSession.install)
+    call_function("graft_quality_score", text)
   }
 
   /** Corpus heavy hitters (frequency > n/k) with EXACT output counts via

@@ -1061,18 +1061,17 @@ object LlmOps extends QueryPack {
     //   persist() is the PREDICATE barrier: exchanges stop CollapseProject
     //   but not PushDownPredicates — without the cache, the language-gate
     //   filter below pushes through both repartitions into the file scan,
-    //   re-inlining scrub + tokenization into a single-task stage (measured
+    //   re-inlining the scrub into a single-task stage (measured
     //   as this query's dominant cost). CacheManager keys by canonical plan,
     //   so repeated runs reuse one bounded entry (same policy as Dedup.pin).
     val scrubbed = fan(fan(Tables(s, dir, "documents").select("doc_id", "text"))
       .select(col("doc_id"), TextOps.piiScrub(col("text")).as("text")))
     val staged = scrubbed.select(col("doc_id"), col("text"),
-        TextOps.tokens(lower(col("text"))).as("ltk"),
         size(TextOps.tokens(col("text"))).as("ntk"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val en = staged.filter(TextOps.langIdToks(col("text"), col("ltk")) === "en")
+    val en = staged.filter(TextOps.langId(col("text")) === "en")
     val scored = en.select(col("doc_id"), col("text"), col("ntk"),
-        TextOps.qualityScoreToks(col("text"), col("ltk"), col("ntk")).as("quality"))
+        TextOps.qualityScore(col("text")).as("quality"))
       .filter(col("quality") >= 0.6)
     Dedup.exact(scored, "text", "doc_id")
       .agg(count(lit(1)).as("n_docs"),
@@ -1094,7 +1093,7 @@ object LlmOps extends QueryPack {
       |ORDER BY doc_id""") { (s, dir) =>
     Tables(s, dir, "documents")
       .select(col("doc_id"),
-        TextOps.qualityScore(col("text"), size(TextOps.tokens(col("text")))).as("quality"))
+        TextOps.qualityScore(col("text")).as("quality"))
       .orderBy("doc_id")
   }
 
@@ -2398,8 +2397,7 @@ object LlmOps extends QueryPack {
     val d = fan(Tables(s, dir, "documents"))
       .select(col("source"),
         size(split(col("text"), " ")).cast("long").as("toks"),
-        floor(TextOps.qualityScore(col("text"),
-          size(TextOps.tokens(col("text")))) * 10000 + lit(0.5))
+        floor(TextOps.qualityScore(col("text")) * 10000 + lit(0.5))
           .cast("long").as("q4"))
     val src = d.groupBy("source").agg(sum("toks").cast("long").as("tokens"),
       sum("q4").cast("long").as("q4sum"),

@@ -180,7 +180,7 @@ object QualityOps extends QueryPack {
     val pairs = Dedup.jaccardPairs(docs, "text", "doc_id", k = 3, tau = 0.3)
     val cc = Dedup.connectedComponents(pairs, "id_a", "id_b")
     val q = docs.select(col("doc_id"),
-      TextOps.qualityScore(col("text"), size(TextOps.tokens(col("text")))).as("qs"))
+      TextOps.qualityScore(col("text")).as("qs"))
     cc.select(col("id").as("doc_id"), col("cluster").as("cluster_id"))
       .join(q, "doc_id")
       .groupBy("cluster_id")
@@ -396,7 +396,7 @@ object QualityOps extends QueryPack {
         sum(size(toks).cast("long")).as("n_tokens"),
         countDistinct(col("lang")).as("n_langs"),
         countDistinct(col("source")).as("n_sources"),
-        Det.avgFix(sum(Det.fix(TextOps.qualityScore(col("text"), size(toks)), 4)),
+        Det.avgFix(sum(Det.fix(TextOps.qualityScore(col("text")), 4)),
           4, count(lit(1))).as("avg_quality"),
         (count(lit(1)) - countDistinct(md5(col("text")))).as("n_exact_dups"))
       .select(col("n_docs").cast("long").as("n_docs"),

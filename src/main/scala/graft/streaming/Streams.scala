@@ -18,8 +18,8 @@ object Streams {
   /** events schema as the streaming source sees it. `ts` has shipped as
     * parquet timestamp[ns] (read as epoch-nano long under the legacy conf)
     * and timestamp[us] (read as TIMESTAMP_NTZ) across fixture generations —
-    * see Tables.events / SURVEY §5.4 P3 — so the declared type follows a
-    * one-time footer probe of the actual file. */
+    * see Tables.events / SURVEY §5.4 P3 — so the declared type follows the
+    * footer of the actual file. */
   private def eventsSchema(tsType: DataType): StructType = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", tsType),
     StructField("user_id", LongType), StructField("event_type", StringType),
@@ -38,16 +38,11 @@ object Streams {
     // collision between two dirs) must never point at the wrong source
     Files.deleteIfExists(link)
     Files.createSymbolicLink(link, src)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // footer probe: which physical ts type did this fixture generation ship?
-    val tsType = Tables.parquet(spark, src.toString).schema("ts").dataType
-    val raw = spark.readStream.schema(eventsSchema(tsType))
-      .parquet(stage.toString)
-    tsType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
+    // the batch read's schema says which physical ts type this fixture
+    // generation shipped
+    Tables.eventsTs(spark, src.toString)(batch =>
+      spark.readStream.schema(eventsSchema(batch.schema("ts").dataType))
+        .parquet(stage.toString))
   }
 
   /** Run a streaming transform of the events stream to completion

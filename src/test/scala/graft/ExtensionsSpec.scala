@@ -61,7 +61,7 @@ class ExtensionsSpec extends SparkSpec {
     // install on a session nobody touched adds exactly the same pieces
     val bare = spark.newSession()
     GraftSession.install(bare)
-    assert(fns.size == 7 && rules.size == 2 && strategies.size == 1)
+    assert(fns.size == 9 && rules.size == 2 && strategies.size == 1)
     assert(fns.keys.toSeq == GraftSession.functions.map(_._1))
     fns.keys.foreach { n =>
       assert(bare.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)), n)
@@ -102,9 +102,11 @@ class ExtensionsSpec extends SparkSpec {
 
   test("query keys that reach graft_* functions through ops run on a bare " +
     "session and match the installed one") {
-    // shingles, shingle hashes, nfc, dot, lsh bands, jw, dl
+    // shingles, shingle hashes, nfc, dot, lsh bands, jw, dl, lang id,
+    // quality score
     val keys = Seq("text_repetition", "text_boilerplate", "text_nfc_normalize",
-      "sim_cosine_topk", "sim_ann_lsh", "fn_jaro_winkler", "fn_damerau_levenshtein")
+      "sim_cosine_topk", "sim_ann_lsh", "fn_jaro_winkler", "fn_damerau_levenshtein",
+      "text_lang_id", "text_quality")
     def rows(s: SparkSession, key: String): Seq[String] =
       SparkEntry.queries(key)(s, sf).collect().map(_.toString).sorted.toSeq
     for (key <- keys) {
