@@ -559,22 +559,15 @@ object ScaleStress {
     // requires). Same 10×10k-key dedup workload, both providers —
     // identical emissions/state semantics, measured wall delta is the
     // swap's local cost.
-    def dedupUnderProvider(provider: String): String = {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      if (provider.nonEmpty) spark.conf.set(key, provider)
-      else spark.conf.unset(key)
-      try dedupStateRows(within = false)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    def dedupUnderProvider(provider: String): String =
+      graft.engine.Confs.withConfs(spark)(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          s"org.apache.spark.sql.execution.streaming.state.$provider")(
+        dedupStateRows(within = false))
     time("stream dedup 10x10k keys, default HDFSBacked state store")(
-      dedupUnderProvider(""))
+      dedupUnderProvider("HDFSBackedStateStoreProvider"))
     time("stream dedup 10x10k keys, RocksDB state store")(
-      dedupUnderProvider("org.apache.spark.sql.execution.streaming.state" +
-        ".RocksDBStateStoreProvider"))
+      dedupUnderProvider("RocksDBStateStoreProvider"))
     spark.stop()
   }
 

@@ -1,9 +1,11 @@
 package graft.engine
 
-import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
@@ -69,5 +71,23 @@ class FooterParquet extends ParquetFileFormat {
       respectUnknownTypeAnnotation =
         conf.parquetReaderRespectUnknownTypeAnnotation)
     ParquetFileFormat.readSchemaFromFooter(footer, converter)
+  }
+}
+
+object FooterParquet {
+
+  /** Whether `path` (a parquet file, or a directory's first data file by
+    * sorted path) stores `column` as INT64 TIMESTAMP(NANOS). */
+  def nanosTimestamp(spark: SparkSession, path: String, column: String): Boolean = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    p.getFileSystem(conf).listStatus(p).filter(f => f.isFile && !f.getPath.getName
+        .matches("[_.].*")).sortBy(_.getPath.toString).headOption.exists { file =>
+      val schema = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+        SKIP_ROW_GROUPS).getFileMetaData.getSchema
+      schema.containsField(column) && Seq(true, false)
+        .map(LogicalTypeAnnotation.timestampType(_, TimeUnit.NANOS))
+        .contains(schema.getType(schema.getFieldIndex(column)).getLogicalTypeAnnotation)
+    }
   }
 }

@@ -13,10 +13,12 @@ trait QueryPack {
   private val reg = mutable.LinkedHashMap.empty[String, (Q, Option[String])]
 
   /** Every builder first installs graft into the session it is given, so a
-    * query runs on any session, not only one a graft harness built. */
+    * query runs on any session, not only one a graft harness built, and
+    * builds as one query of the session's memo: it owns the frames it
+    * pins, until the session builds its next query. */
   private def installed(f: Q): Q = (s, dir) => {
     graft.GraftSession.install(s)
-    f(s, dir)
+    graft.ops.PlanMemo.query(s)(f(s, dir))
   }
 
   /** Register an oracle-backed graded query. */

@@ -43,14 +43,14 @@ object Tables {
 
   /** `events.ts` has shipped as two physical types across fixture
     * generations: parquet `timestamp[ns]` (which Spark 4.1 refuses to read
-    * by default — PARQUET_TYPE_ILLEGAL — so we read it as epoch-nano longs
-    * and floor to µs with INTEGER division; `/` would route a ~1.7e18 long
-    * through a 53-bit double mantissa and corrupt the low digits) and
-    * parquet `timestamp[us]` (which Spark reads as TIMESTAMP_NTZ). Both
-    * normalize to a session-TZ TIMESTAMP: the session TZ is pinned UTC, so
-    * the NTZ→LTZ cast keeps the wall clock and yields µs values identical
-    * to what DuckDB sees reading the same file (SURVEY §5.4 P3).
-    */
+    * by default — PARQUET_TYPE_ILLEGAL — so such a file sets the session's
+    * `nanosAsLong` flag, is read as epoch-nano longs and floored to µs with
+    * INTEGER division; `/` would route a ~1.7e18 long through a 53-bit
+    * double mantissa and corrupt the low digits) and parquet
+    * `timestamp[us]` (which Spark reads as TIMESTAMP_NTZ). Both normalize
+    * to a session-TZ TIMESTAMP: the session TZ is pinned UTC, so the
+    * NTZ→LTZ cast keeps the wall clock and yields µs values identical to
+    * what DuckDB sees reading the same file (SURVEY §5.4 P3). */
   def events(spark: SparkSession, dir: String): DataFrame =
     eventsTs(spark, s"$dir/events.parquet")(identity)
 
@@ -60,7 +60,8 @@ object Tables {
     * data, such as a stream. */
   def eventsTs(spark: SparkSession, file: String)(
       read: DataFrame => DataFrame): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (FooterParquet.nanosTimestamp(spark, file, "ts"))
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = parquet(spark, file)
     val df = read(batch)
     batch.schema("ts").dataType match {

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed running aggregations over keys with FEW distinct values —
   * the two-phase block prefix sum (SURVEY §2.9 scale hygiene).
@@ -46,7 +45,7 @@ object BlockWindow {
     PlanMemo.byPlan(df, "BlockWindow.spreadOf", (keys ++ order, blocks)) {
       df.repartitionByRange(blocks, (keys ++ order).map(col): _*)
         .withColumn("__block", spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(PlanMemo.pin)
     }
 
   private def resolveBlocks(df: DataFrame, nBlocks: Int): Int =

@@ -109,7 +109,7 @@ object BoundedCollect {
 
   /** Physical mirror of [[bounded]]'s shape (r12 review: the pre-r12
     * `exists` form let a persisted compound plan launder an unbounded
-    * branch past a bounded sibling — `.persist()` must not flip the
+    * branch past a bounded sibling — caching a plan must not flip the
     * guard's verdict). Walks DOWN the plan: bounding execs decide,
     * joins/unions recurse per branch, GenerateExec is never accepted,
     * any other unary exec (project/filter/sort/exchange/codegen

@@ -56,12 +56,9 @@ object Bpe {
     val para = spark.sparkContext.defaultParallelism.toLong
     val loopParts = math.max(math.max(1L, para / 4),
       math.min(para, nWords / 1000000L + 1L))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
+    graft.engine.Confs.withConfs(spark)(
+        "spark.sql.shuffle.partitions" -> loopParts.toString) {
       trainLoop(spark, vocab, rounds)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
   }
 
@@ -156,10 +153,8 @@ object Bpe {
     // per-merge folds are vocab-sized — scope the loop's shuffles like
     // trainMerges does (the folds themselves are narrow; only the
     // localCheckpoint repartitioning is affected)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(1L, spark.sparkContext.defaultParallelism.toLong / 4).toString)
-    try {
+    graft.engine.Confs.withConfs(spark)("spark.sql.shuffle.partitions" ->
+        math.max(1L, spark.sparkContext.defaultParallelism.toLong / 4).toString) {
       // lazy (r15): the fold chain is linear with no mid-loop driver
       // decision — each checkpoint still severs the O(4^k) expression
       // nesting at plan time, but the per-merge eager materialization job
@@ -167,8 +162,6 @@ object Bpe {
       for ((lSym, rSym) <- merges)
         vocab = vocab.select(col("w"), mergeFold(lSym, rSym).as("sym"))
           .localCheckpoint(eager = false)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
     tok.join(vocab.select(col("w"), size(col("sym")).as("ns")), "w")
       .groupBy(col(idCol))

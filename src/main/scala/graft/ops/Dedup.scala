@@ -358,9 +358,8 @@ object Dedup {
     val para = spark.sparkContext.defaultParallelism.toLong
     val loopParts = math.max(math.max(1L, para / 4),
       math.min(para, nEdges / 1000000L + 1L))
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
+    try graft.engine.Confs.withConfs(spark)(
+        "spark.sql.shuffle.partitions" -> loopParts.toString) {
       // Round 0 for free: labels(v) = min(v, min nbr(v)) is one aggregate
       // over the symmetric edge list — no join, and it already resolves
       // every clique component (the common near-dup shape) outright.
@@ -370,7 +369,6 @@ object Dedup {
         .localCheckpoint()
       var converged = false
       var it = 0
-      val dbg = sys.env.contains("GRAFT_CC_DEBUG")
       // Note on broadcast: localCheckpoint frames have no size stats, so
       // the planner never auto-broadcasts the label frame — but hinting
       // broadcast(labels) per round was MEASURED SLOWER here (0.3 → 0.5
@@ -380,7 +378,6 @@ object Dedup {
       // round fully pipelined; at real scale labels don't fit a broadcast
       // anyway.
       while (!converged && it < maxIter) {
-        val t0 = System.nanoTime()
         // Convergence detection rides INSIDE the round's only job: an
         // `observe` metric counts changed labels while localCheckpoint
         // materializes the round — one job per round, not a checkpoint job
@@ -422,8 +419,6 @@ object Dedup {
             .filter(col("cluster") =!= col("__prev")).count())
         }("changed").asInstanceOf[Long]
         converged = changed == 0L
-        if (dbg) System.err.println(
-          f"[cc] round $it: ${(System.nanoTime() - t0) / 1e9}%.2f s converged=$converged")
         labels = next
         it += 1
       }
@@ -434,10 +429,7 @@ object Dedup {
         s"connectedComponents did not converge in $maxIter rounds — " +
           "a component's diameter exceeds maxIter; raise it")
       labels
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      fwd.unpersist() // labels are localCheckpointed — lineage is cut
-    }
+    } finally PlanMemo.unpin(fwd) // labels are localCheckpointed — lineage is cut
   }
 
   /** One BSP half-step: per node, the min label among its neighbors. */

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics over edge-list DataFrames (beyond SURVEY §2 core —
   * the iterative-BSP family next to [[Dedup.connectedComponents]]).
@@ -77,7 +76,7 @@ object Graph {
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val nodes = fwd.select(col("src").as("id"))
       .union(fwd.select(col("dst").as("id"))).distinct()
     var pr = fwd.groupBy(col("dst").as("id"))
@@ -141,7 +140,7 @@ object Graph {
     // — persist the joined form so rounds pay a cached scan, not the
     // upstream edge derivation (often a multiway join) each time
     val deg = fwd.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val withDeg = fwd.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    val withDeg = fwd.join(deg, "src").transform(PlanMemo.pin)
     // materialize the (possibly expensive) upstream edge derivation ONCE,
     // outside the loop, and size the loop's shuffles to the edge count —
     // the same seam as the CC loop: an iterative plan pays scheduling for
@@ -157,9 +156,9 @@ object Graph {
           .join(broadcast(seeds.select(col("id"), lit(1L).as("seed"))),
             Seq("id"), "left")
           .select(col("id"), coalesce(col("seed"), lit(0L)).as("seed"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(PlanMemo.pin)
         case None => bare.select(col("id"), lit(1L).as("seed"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(PlanMemo.pin)
       }
       var ranks = nodes
         .select(col("id"), (col("seed") * 1000000L).as("r"))
@@ -202,9 +201,9 @@ object Graph {
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
     val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct().transform(PlanMemo.pin)
     val nodes = sym.select(col("src").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     // Self-loops fold the "keep own label" min into the SAME neighbor
     // aggregate, so each round is ONE join + MIN referencing the previous
     // round exactly once — essential for the oracle twin, where a round
@@ -212,7 +211,7 @@ object Graph {
     // without CTE materialization (observed: 2^8 re-evaluations spilled
     // DuckDB to disk), and one fewer join per round here too.
     val symx = sym.union(nodes.select(col("id").as("src"), col("id").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     var comp = nodes.select(col("id"), col("id").as("comp")).localCheckpoint(eager = false)
     for (_ <- 0 until iters) {
       comp = symx.join(comp, symx("dst") === comp("id"))
@@ -240,7 +239,7 @@ object Graph {
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
     val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct().transform(PlanMemo.pin)
     val nodes = sym.select(col("src").as("id")).distinct()
     var lab = nodes.select(col("id"), col("id").as("label")).localCheckpoint(eager = false)
     val w = org.apache.spark.sql.expressions.Window
@@ -267,16 +266,16 @@ object Graph {
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
     val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct().transform(PlanMemo.pin)
     val nodes = sym.select(col("src").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     // Weight-0 self-loops make the relax step a single join + MIN(d + w)
     // (MIN skips NULL-distance neighbors in both engines; the self-loop
     // guarantees every node keeps a row), referencing the previous round
     // once — same linear-chain rationale as [[labelPropagate]].
     val symw = sym.select(col("src"), col("dst"), lit(1L).as("w"))
       .union(nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("w")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val srcNode = nodes.agg(min("id").as("sid"))
     var dist = nodes.crossJoin(broadcast(srcNode))
       .select(col("id"),
@@ -326,7 +325,7 @@ object Graph {
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") < col("b"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     und.as("e1")
       .join(und.as("e2"), col("e1.b") === col("e2.a"))
       .join(und.as("e3"),
@@ -352,7 +351,7 @@ object Graph {
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") < col("b"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val deg = und.select(col("a").as("id")).union(und.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("dg"))
     // total order ≺ = (degree, id); ori holds u→v with key(u) < key(v),
@@ -364,7 +363,7 @@ object Graph {
         when(col("ka") < col("kb"), col("a")).otherwise(col("b")).as("u"),
         when(col("ka") < col("kb"), col("b")).otherwise(col("a")).as("v"),
         when(col("ka") < col("kb"), col("kb")).otherwise(col("ka")).as("kv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val closing = ori.select(col("u").as("cv"), col("v").as("cw"))
     ori.as("e1")
       .join(ori.as("e2"),
@@ -400,7 +399,7 @@ object Graph {
       .filter(col("src") =!= col("dst"))
       .distinct()
     val nodes = de.select(col("src").as("id")).union(de.select(col("dst")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct().transform(PlanMemo.pin)
     // seed with the identity so every node owns a reach row and the
     // mutual-reach MIN below is total (a singleton SCC is {v} itself)
     var reach = de
@@ -429,15 +428,15 @@ object Graph {
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
     val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct().transform(PlanMemo.pin)
     val nodes = sym.select(col("src").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     // weight-0 self-loops: one join + MIN(d+w) per round carries the
     // previous distance forward — the single-predecessor-reference shape
     // shared with bfsDist/labelPropagate (and their oracle CTE chains)
     val symw = sym.select(col("src"), col("dst"), lit(1L).as("w"))
       .union(nodes.select(col("id").as("src"), col("id").as("dst"), lit(0L).as("w")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     var dist = nodes.select(col("id").as("s"), col("id").as("v"), lit(0L).as("d"))
       .localCheckpoint(eager = false)
     for (_ <- 0 until iters) {

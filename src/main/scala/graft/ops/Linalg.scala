@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed linear algebra over embedding columns — Lloyd k-means and
   * power-iteration PCA — in the cross-engine-deterministic fixed-point
@@ -36,7 +35,7 @@ object Linalg {
           posexplode(col(vecCol)).as(Seq("dim", "e")))
         .select(col("vec_id"), (col("dim") + 1).as("dim"),
           col("e").cast("double").as("e"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(PlanMemo.pin)
     }
 
   /** Lloyd k-means assignment after `iters` rounds, seeded with the k
@@ -52,7 +51,7 @@ object Linalg {
     // for itself across the whiten/PCA trio
     PlanMemo.byPlan(emb, "Linalg.kmeans", (idCol, vecCol, k, iters)) {
       computeKmeans(emb, idCol, vecCol, k, iters)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(PlanMemo.pin)
     }
 
   /** Product-quantization sub-codebook TRAINING: per-subspace Lloyd
@@ -76,7 +75,7 @@ object Linalg {
                     m: Int, k: Int, iters: Int): DataFrame =
     PlanMemo.byPlan(emb, "Linalg.pqtrain", (idCol, vecCol, m, k, iters)) {
       computePqTrain(emb, idCol, vecCol, m, k, iters)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(PlanMemo.pin)
     }
 
   private def computePqTrain(emb: DataFrame, idCol: String, vecCol: String,
@@ -244,7 +243,7 @@ object Linalg {
         .select(col("i"), col("j"),
           (floor(col("sp").cast("double") / col("n") + lit(0.5))
             / lit(100000000L)).as("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK) // reused by every matvec round
+        .transform(PlanMemo.pin) // reused by every matvec round
     }
 
   /** Second principal component via Hotelling deflation: subtract the

@@ -23,12 +23,17 @@ private[graft] final case class MemoKey(session: SparkSession, site: String,
   *  - On a miss, entries of stopped sessions are dropped first (their
   *    blocks died with the context, and the key would keep the session
   *    reachable); then, while the memo holds `cap` entries, the OLDEST
-  *    entry leaves, one at a time, and a DataFrame that leaves is
-  *    unpersisted. A full clear would rebuild every expensive frame under
-  *    churn and yank cached blocks from under running queries.
-  *  - An entry owns the frames its build pinned through [[PlanMemo.pin]]
-  *    (inner stages read by several consumers, say), and they leave the
-  *    cache with it. A build nested in another belongs to its own entry.
+  *    entry leaves, one at a time, with its pins. A full clear would
+  *    rebuild every expensive frame under churn and yank cached blocks
+  *    from under running queries.
+  *  - [[PlanMemo.pin]] is the one way graft caches a frame. A pin belongs
+  *    to the innermost open owner on the building thread: the memo entry
+  *    whose build is running (a build nested in another is its own entry),
+  *    else the query a `QueryPack` builder is building (a query built
+  *    inside another is the outer one's). The first owner keeps a plan:
+  *    pinning a cached plan neither persists nor registers it again.
+  *  - An entry's pins leave the cache with the entry; a query's, when the
+  *    same session starts building its next query.
   *  - Races are tolerated, not locked away: a concurrent first touch may
   *    build twice (the first insert wins), and a frame evicted while in
   *    use only recomputes. Neither gives a wrong result. */
@@ -39,6 +44,9 @@ private[graft] class PlanMemo private[graft] (
 
   private val map = scala.collection.concurrent.TrieMap.empty[MemoKey, Entry]
   private val order = new java.util.concurrent.ConcurrentLinkedQueue[MemoKey]
+  /** The pins of each session's last query build. */
+  private val lastQuery =
+    scala.collection.concurrent.TrieMap.empty[SparkSession, Seq[Dataset[_]]]
 
   /** Memo keyed by a fixture dir. */
   def byDir[V](s: SparkSession, dir: String, site: String, params: Any = ())(
@@ -60,11 +68,28 @@ private[graft] class PlanMemo private[graft] (
   private[graft] def pins: Map[MemoKey, Seq[Dataset[_]]] =
     map.readOnlySnapshot().map { case (k, e) => k -> e.pins }.toMap
 
+  /** The frames `s`'s last query build pinned, for tests. */
+  private[graft] def queryPins(s: SparkSession): Seq[Dataset[_]] =
+    lastQuery.getOrElse(s, Nil)
+
+  /** `build` as one query of `s`: the pins of `s`'s previous query are
+    * released first, and the pins `build` makes outside memo builds are
+    * this query's. */
+  def query[V](s: SparkSession)(build: => V): V =
+    if (PlanMemo.open.get.exists(_.query)) build
+    else {
+      lastQuery.keys.filter(stopped).foreach(lastQuery.remove)
+      lastQuery.remove(s).foreach(PlanMemo.release)
+      val (v, pins) = PlanMemo.owning(query = true)(build)
+      lastQuery.put(s, pins)
+      v
+    }
+
   private def memo[V](key: MemoKey)(build: => V): V = map.get(key) match {
     case Some(e) => e.value.asInstanceOf[V]
     case None =>
       evict()
-      val (v, pins) = PlanMemo.owning(build)
+      val (v, pins) = PlanMemo.owning(query = false)(build)
       map.putIfAbsent(key, Entry(v, pins)) match {
         case Some(first) => first.value.asInstanceOf[V]
         case None => order.add(key); v
@@ -76,16 +101,20 @@ private[graft] class PlanMemo private[graft] (
     order.removeIf(k => stopped(k.session))
     var oldest = if (map.size >= cap) order.poll() else null
     while (oldest != null) {
-      map.remove(oldest).foreach(e => PlanMemo.release(e.value +: e.pins))
+      map.remove(oldest).foreach(e => PlanMemo.release(e.pins))
       oldest = if (map.size >= cap) order.poll() else null
     }
   }
 }
 
-/** The session memo every site uses: [[byDir]], [[byPlan]] and [[pin]]. */
+/** The session memo every site uses: [[byDir]], [[byPlan]], [[pin]] and
+  * [[query]]. */
 private[graft] object PlanMemo {
 
   private final case class Entry(value: Any, pins: Seq[Dataset[_]])
+
+  /** An open owner on this thread: a memo build or a query build. */
+  private final class Owner(val query: Boolean) { val pins = ListBuffer.empty[Dataset[_]] }
 
   /** The cap is 128 entries: all 600 graded queries run in one session
     * (sf0.001, local[4], each result written to noop) peak at 49 live
@@ -95,8 +124,8 @@ private[graft] object PlanMemo {
   /** The memo this thread's sites use; [[using]] swaps it for a test. */
   private val active = new scala.util.DynamicVariable(shared)
 
-  /** The pins of this thread's open builds, innermost first. */
-  private val open = ThreadLocal.withInitial[List[ListBuffer[Dataset[_]]]](() => Nil)
+  /** This thread's open owners, innermost first. */
+  private val open = ThreadLocal.withInitial[List[Owner]](() => Nil)
 
   def byDir[V](s: SparkSession, dir: String, site: String, params: Any = ())(
       build: => V): V = active.value.byDir(s, dir, site, params)(build)
@@ -104,15 +133,27 @@ private[graft] object PlanMemo {
   def byPlan[V](df: DataFrame, site: String, params: Any)(build: => V): V =
     active.value.byPlan(df, site, params)(build)
 
+  def query[V](s: SparkSession)(build: => V): V = active.value.query(s)(build)
+
   private[graft] def entries: Map[MemoKey, Any] = active.value.entries
 
-  /** Persist `df` (MEMORY_AND_DISK: spills, never OOMs) for the memo
-    * entry whose build is running on this thread, which unpersists it on
-    * eviction. Outside a build the caller owns the pin. */
-  def pin(df: DataFrame): DataFrame = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    open.get.headOption.foreach(_ += p)
-    p
+  /** Persist `ds` (MEMORY_AND_DISK: spills, never OOMs) for the innermost
+    * open owner, which releases it (the class Scaladoc has the rule). A
+    * plan that is already cached stays its first owner's; outside any
+    * owner the caller owns the pin. */
+  def pin[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.storageLevel != StorageLevel.NONE) ds
+    else {
+      val p = ds.persist(StorageLevel.MEMORY_AND_DISK)
+      open.get.headOption.foreach(_.pins += p)
+      p
+    }
+
+  /** Release `ds` now if an open owner pinned it: a frame that dies inside
+    * its own build. A frame another owner pinned first stays cached. */
+  def unpin(ds: Dataset[_]): Unit = open.get.find(_.pins.contains(ds)).foreach { o =>
+    o.pins -= ds
+    release(Seq(ds))
   }
 
   /** Run `body` with `m` as the memo of this thread's sites. */
@@ -120,18 +161,16 @@ private[graft] object PlanMemo {
 
   /** `build`'s value and the frames it pinned; a failed build releases
     * its pins. */
-  private def owning[V](build: => V): (V, Seq[Dataset[_]]) = {
-    val mine = ListBuffer.empty[Dataset[_]]
+  private def owning[V](query: Boolean)(build: => V): (V, Seq[Dataset[_]]) = {
+    val mine = new Owner(query)
     open.set(mine :: open.get)
     try {
       val v = build
-      (v, mine.toList)
-    } catch { case e: Throwable => release(mine.toList); throw e }
+      (v, mine.pins.toList)
+    } catch { case e: Throwable => release(mine.pins.toList); throw e }
     finally open.set(open.get.tail)
   }
 
-  private def release(frames: Seq[Any]): Unit = frames.foreach {
-    case df: Dataset[_] => try df.unpersist(false) catch { case _: Throwable => () }
-    case _ => ()
-  }
+  private def release(frames: Seq[Dataset[_]]): Unit =
+    frames.foreach(f => try f.unpersist(false) catch { case _: Throwable => () })
 }

@@ -617,7 +617,7 @@ object Sim {
     val subIdx = explode(sequence(lit(0), lit(m - 1)))
     val cents = coarseCentroids(corpus, stride, coarseIters)
     val c = fan(corpus).select(col("vec_id"), asDouble(col("embedding")).as("ce"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     // coarse cell per corpus vector + residual against its centroid —
     // elementwise subtraction is the same IEEE op in both engines.
     // hierFactor > 0 swaps the linear corpus×cells argmin for the
@@ -632,7 +632,7 @@ object Sim {
       .join(broadcast(cents.select(col("cent_id").as("cell"), col("cent"))), "cell")
       .select(col("vid").as("vec_id"), col("cell"),
         zip_with(col("e"), col("cent"), (a, b) => a - b).as("re"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val seeds = resid
       .orderBy("vec_id").limit(nCentroids)
       .withColumn("code", row_number().over(Window.orderBy("vec_id")))
@@ -654,7 +654,7 @@ object Sim {
       val rsub = resid.withColumn("subq", subIdx)
         .select(col("vec_id"), col("subq"),
           slice(col("re"), col("subq") * sub + 1, lit(sub)).as("ev"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(PlanMemo.pin)
       var cb = codebook0
       for (_ <- 1 to trainIters) {
         val cbN2i = cb.select(col("code"), col("subq"), col("cv"),
@@ -679,8 +679,8 @@ object Sim {
       }
       // rsub has no consumers once the codebook is built (each round's
       // localCheckpoint is eager, so cb no longer reads it) — release the
-      // corpus×m-row cache instead of pinning it for the session
-      rsub.unpersist(false)
+      // corpus×m-row cache now instead of with its owner
+      PlanMemo.unpin(rsub)
       cb
     }
     // |cv|² hoisted per CODEBOOK ENTRY (m·nCentroids rows) before the
@@ -702,10 +702,8 @@ object Sim {
       // (corpus·m·nCentroids rows) and `codes` has TWO consumers in one
       // ANN run (the stored-norm build below + the ADC join) plus the
       // distortion diagnostic — without this the stage re-runs per
-      // consumer. corpus·m rows of 3 ints, spills if it must; identical
-      // canonical plan across calls, so the session CacheManager shares
-      // one copy between sim_ann_ivfpq and emb_pq_distortion.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // consumer. corpus·m rows of 3 ints, spills if it must.
+      .transform(PlanMemo.pin)
     // stored quantized norm — |x_q|² for x_q = cent + r_q, expanded as
     // |cent|² + Σ_m (2·dot(cent_m, cv_m) + |cv_m|²): the per-(cell, subq,
     // code) cross term is a tiny broadcastable table (cells × m ×
@@ -746,9 +744,9 @@ object Sim {
     * error is one sequential-fold dot over the diff (graft_dot's
     * association), quantized to a 1e-6 integer BEFORE the sum, so the
     * per-subspace BIGINT total is aggregation-order-free; the mean
-    * divides once at the end. Work: one encode pass (shared with the
-    * ANN query through the session cache) + one re-join of codes to the
-    * broadcast codebook — never more than O(corpus × m) rows. */
+    * divides once at the end. Work: one encode pass + one re-join of
+    * codes to the broadcast codebook — never more than O(corpus × m)
+    * rows. */
   def pqDistortion(corpus: DataFrame, m: Int = 8,
                    nCentroids: Int = 128, trainIters: Int = 0): DataFrame = {
     val pq = pqEncode(corpus, m, nCentroids, trainIters = trainIters)
@@ -889,7 +887,7 @@ object Sim {
       .select(col("probe_id"), col("e").as("pe"), col("nrm").as("pn"))
     val c = withNorm(corpus.select(col("vec_id"), asDouble(col("embedding")).as("e")))
       .select(col("vec_id"), col("e").as("ce"), col("nrm").as("cn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val pb = bandedBuckets(p.select(col("probe_id").as("vec_id"), col("pe").as("e")),
       bands, rowsPerBand, d).withColumnRenamed("vec_id", "probe_id")
     val cb = bandedBuckets(c.select(col("vec_id"), col("ce").as("e")),

@@ -399,6 +399,6 @@ object TextOps {
                     textCol: String): DataFrame =
     PlanMemo.byPlan(docs, "TextOps.cdcChunks", (idCol, textCol)) {
       cdcChunks(docs, idCol, textCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(PlanMemo.pin)
     }
 }

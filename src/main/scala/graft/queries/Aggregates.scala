@@ -661,7 +661,7 @@ object Aggregates extends QueryPack {
       |ORDER BY n_both DESC, pa, pb LIMIT 20""") { (s, dir) =>
     val i = Tables(s, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(graft.ops.PlanMemo.pin)
     val nOrders = i.agg(countDistinct("o").as("n_orders"))
     val pc = i.groupBy("p").agg(count(lit(1)).as("np"))
     // co-purchase pairs from each basket's SORTED in-array combinations

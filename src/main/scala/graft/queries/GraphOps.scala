@@ -45,7 +45,7 @@ object GraphOps extends QueryPack {
         // BoundedCollect proof (the distinct IS the visible bound) and
         // the plan-shape pins; the cached plan keeps the Aggregate.
         .coalesce(1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.ops.PlanMemo.pin)
     }
 
   private val oracleEdges =
@@ -241,7 +241,7 @@ object GraphOps extends QueryPack {
   private def strongTradeEdges(s: SparkSession, dir: String): DataFrame =
     graft.ops.PlanMemo.byDir(s, dir, "GraphOps.strongTradeEdges") {
       strongTradeEdgesBuild(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(graft.ops.PlanMemo.pin)
     }
 
   private def strongTradeEdgesBuild(s: SparkSession, dir: String): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.PlanMemo
 import graft.engine.{Det, QueryPack, Tables}
 import graft.ops.{BlockWindow, Dedup, Multimodal, Sim, TextOps}
 import org.apache.spark.sql.DataFrame
@@ -867,8 +868,8 @@ object LlmOps extends QueryPack {
   // Per-subspace PQ reconstruction error — the quality diagnostic for the
   // sim_ann_ivfpq layout (how much signal each subspace's 128-entry
   // codebook destroys — the number you watch when choosing m/nCentroids).
-  // Shares the encode CTE prefix with the ANN oracle and the session
-  // cache with the ANN query (Sim.pqEncode). Determinism: the per-row
+  // Shares the encode CTE prefix with the ANN oracle (Sim.pqEncode).
+  // Determinism: the per-row
   // squared error is a sequential-fold dot over the element diffs,
   // quantized to a 1e-6 integer BEFORE the per-subspace sum (order-free
   // BIGINT), mean divides once at the end.
@@ -1062,13 +1063,13 @@ object LlmOps extends QueryPack {
     //   but not PushDownPredicates — without the cache, the language-gate
     //   filter below pushes through both repartitions into the file scan,
     //   re-inlining the scrub into a single-task stage (measured
-    //   as this query's dominant cost). CacheManager keys by canonical plan,
-    //   so repeated runs reuse one bounded entry (same policy as Dedup.pin).
+    //   as this query's dominant cost). The pin is this query's and
+    //   leaves the cache when the session builds its next query.
     val scrubbed = fan(fan(Tables(s, dir, "documents").select("doc_id", "text"))
       .select(col("doc_id"), TextOps.piiScrub(col("text")).as("text")))
     val staged = scrubbed.select(col("doc_id"), col("text"),
         size(TextOps.tokens(col("text"))).as("ntk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val en = staged.filter(TextOps.langId(col("text")) === "en")
     val scored = en.select(col("doc_id"), col("text"), col("ntk"),
         TextOps.qualityScore(col("text")).as("quality"))
@@ -1158,7 +1159,7 @@ object LlmOps extends QueryPack {
       .filter(size(col("tk")) >= 3)
       .select(col("doc_id"),
         array_distinct(TextOps.shingleHashes(col("tk"), 3)).as("hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val bench = sh.filter(col("doc_id") % 97 === 0)
       .select(explode(col("hs")).as("sg")).distinct()
     val corpus = sh.filter(col("doc_id") % 97 =!= 0)
@@ -1685,7 +1686,7 @@ object LlmOps extends QueryPack {
     // component). The 16-byte-per-image frame is the RIGHT thing to cache
     // at 100 TB (never the payload bytes). Same for `cand`, read by both
     // the candidate count and the Hamming verify.
-    val ph = Multimodal.phashFrame(media).persist()
+    val ph = Multimodal.phashFrame(media).transform(PlanMemo.pin)
     val bands = ph.select(col("id"), col("phash"),
         explode(sequence(lit(0), lit(3))).as("band"))
       .select(col("id"), col("phash"), col("band"),
@@ -1695,7 +1696,7 @@ object LlmOps extends QueryPack {
       .join(bands.select(col("band"), col("key"),
         col("id").as("idb"), col("phash").as("pb")), Seq("band", "key"))
       .filter(col("ida") < col("idb"))
-      .select("ida", "idb", "pa", "pb").distinct().persist()
+      .select("ida", "idb", "pa", "pb").distinct().transform(PlanMemo.pin)
     val near = cand.filter(expr("bit_count(pa ^ pb) <= 6"))
     ph.agg(count(lit(1)).cast("long").as("n_images"))
       .crossJoin(broadcast(
@@ -1906,7 +1907,7 @@ object LlmOps extends QueryPack {
       .filter(size(col("tk")) >= 2)
       .select(explode(TextOps.shingles(col("tk"), 2)).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("c_vw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val bs = bc.select(substring_index(col("bg"), " ", 1).as("v"),
       substring_index(col("bg"), " ", -1).as("w"), col("c_vw"))
     val ctx = bs.groupBy("v")
@@ -3857,7 +3858,7 @@ object LlmOps extends QueryPack {
         floor(col("x") / col("nv") * 1000000 + lit(0.5)).cast("long").as("q"))
     val dims = qn.groupBy("dim")
       .agg(sum("q").as("s"), sum(col("q").cast(dec38) * col("q")).as("t"))
-      .persist()
+      .transform(PlanMemo.pin)
     val tot = dims.groupBy()
       .agg(sum(col("s").cast(dec38) * col("s")).as("p"), sum("t").as("t"))
     val n = e.groupBy().agg(count(lit(1)).as("n"))

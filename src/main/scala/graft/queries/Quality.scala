@@ -1,11 +1,11 @@
 package graft.queries
 
+import graft.ops.PlanMemo
 import graft.engine.{Det, QueryPack, Tables}
 import graft.engine.Tables.fan
 import graft.ops.{BlockWindow, Dedup, Sim, TextOps}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Corpus-quality and data-management operators beyond SURVEY §2's core
   * list: boilerplate-phrase detection, soft-dedup training weights,
@@ -58,7 +58,7 @@ object QualityOps extends QueryPack {
       .filter(size(col("tk")) >= 3)
       .select(col("doc_id"), col("source"),
         array_distinct(TextOps.shingleHashes(col("tk"), 3)).as("hs"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // reuse barrier: totals + explode
+      .transform(PlanMemo.pin) // reuse barrier: totals + explode
     val srcDocs = sh.groupBy("source").agg(count(lit(1)).as("n_docs"))
     val e = sh.select(col("doc_id"), col("source"), explode(col("hs")).as("h"))
     val bp = e.groupBy("source", "h").agg(count(lit(1)).as("nd"))
@@ -434,11 +434,11 @@ object QualityOps extends QueryPack {
     val t = fan(fan(Tables(s, dir, "documents").select(col("doc_id"), col("text")))
         .select(col("doc_id"), TextOps.tokens(col("text")).as("tk")))
       .filter(size(col("tk")) >= 8)
-      .persist(StorageLevel.MEMORY_AND_DISK) // reused: shingles + final sizes
+      .transform(PlanMemo.pin) // reused: shingles + final sizes
     val sh = t.select(col("doc_id"),
         posexplode(TextOps.shingles(col("tk"), 8)))
       .select(col("doc_id"), col("pos"), xxhash64(col("col")).as("h"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // reused: dup count + coverage join
+      .transform(PlanMemo.pin) // reused: dup count + coverage join
     val dup = sh.groupBy("h").agg(count(lit(1)).as("c"))
       .filter(col("c") > 1).select("h")
     val cov = sh.join(dup, "h")
@@ -570,12 +570,12 @@ object QualityOps extends QueryPack {
     val t = fan(fan(Tables(s, dir, "documents").select(col("doc_id"), col("text")))
         .select(col("doc_id"), TextOps.tokens(lower(col("text"))).as("tk")))
       .filter(size(col("tk")) >= 2)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     // strings die here: only (doc_id, hash(bigram), hash(head)) shuffles
     val bg = t.select(col("doc_id"), explode(TextOps.shingles(col("tk"), 2)).as("b"))
       .select(col("doc_id"), xxhash64(col("b")).as("hb"),
         xxhash64(element_at(split(col("b"), " "), 1)).as("hw"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // reused: both counts + per-doc join
+      .transform(PlanMemo.pin) // reused: both counts + per-doc join
     val cb = bg.groupBy("hb").agg(count(lit(1)).as("c12"))
     val cu = bg.groupBy("hw").agg(count(lit(1)).as("c1"))
     val v = t.select(explode(col("tk")).as("w"))
@@ -2204,16 +2204,16 @@ object QualityOps extends QueryPack {
     val t = fan(Tables(s, dir, "documents").select(col("source"), col("text")))
       .select(col("source"), TextOps.tokens(lower(col("text"))).as("tk"))
       .filter(size(col("tk")) >= 2)
-      .persist(StorageLevel.MEMORY_AND_DISK) // reused: bigrams + vocab
+      .transform(PlanMemo.pin) // reused: bigrams + vocab
     // strings die here: only (source, hash(bigram), hash(head)) shuffles
     val bg = t.select(col("source"), explode(TextOps.shingles(col("tk"), 2)).as("b"))
       .select(col("source"), xxhash64(col("b")).as("hb"),
         xxhash64(element_at(split(col("b"), " "), 1)).as("hw"))
     val sb = bg.groupBy("source", "hb", "hw").agg(count(lit(1)).as("cs12"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // reused: global rollup + join
+      .transform(PlanMemo.pin) // reused: global rollup + join
     val gb = sb.groupBy("hb").agg(sum("cs12").cast("long").as("c12g"))
     val sw = bg.groupBy("source", "hw").agg(count(lit(1)).as("cs1"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val gw = sw.groupBy("hw").agg(sum("cs1").cast("long").as("c1g"))
     val v = t.select(explode(col("tk")).as("w"))
       .agg(countDistinct(xxhash64(col("w"))).as("v"))

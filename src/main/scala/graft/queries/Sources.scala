@@ -525,7 +525,7 @@ object Sources extends QueryPack {
           sum(graft.engine.Det.cents(col("val"))).cast("long").as("cents"),
           sum(col("k")).cast("long").as("sum_k"))
         .orderBy("tag")
-        .cache()
+        .transform(graft.ops.PlanMemo.pin)
       agg.count()
       agg
     }

@@ -1175,7 +1175,7 @@ object Streaming extends QueryPack {
       .select(col("key.user_id").as("user_id"),
         col("value.count").as("cents"))
       .as[TwsSeeded.Seed]
-      .cache()
+      .transform(graft.ops.PlanMemo.pin)
     val out = Streams.withTwsConf(s, partitions = 8) {
       Streams.drainToMemory(s, s"graft_rescale2_$tag", {
         val ev2 = s.readStream.schema(halfSchema).parquet(s"$base/h2")

@@ -224,7 +224,7 @@ object Subqueries extends QueryPack {
     val months = s.table("orders")
       .groupBy(month(col("o_orderdate")).as("mth"))
       .agg(sum(Det.cents(col("o_totalprice")).cast("long")).as("mcents"))
-      .coalesce(1).cache()
+      .coalesce(1).transform(graft.ops.PlanMemo.pin)
     months.count() // materialize before the loop so iterations hit cache
     months.createOrReplaceTempView("graft_month_cents")
     try graft.engine.Confs.withConfs(s)(
@@ -247,7 +247,7 @@ object Subqueries extends QueryPack {
     finally {
       // SET evaluates its scalar subquery eagerly per iteration, so the
       // returned frame no longer references the view — safe to release
-      months.unpersist()
+      graft.ops.PlanMemo.unpin(months)
       s.catalog.dropTempView("graft_month_cents")
     }
   }

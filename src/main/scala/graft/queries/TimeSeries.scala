@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.PlanMemo
 import graft.engine.{Det, QueryPack, Tables}
 import graft.ops.BlockWindow
 import org.apache.spark.sql.expressions.Window
@@ -2464,7 +2465,7 @@ object TimeSeriesOps extends QueryPack {
         ((unix_timestamp(col("wk")) - unix_timestamp(col("cohort"))) / 604800)
           .cast("long").as("w"))
       .agg(countDistinct(col("user_id")).as("active"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val sz = ret.filter(col("w") === 0)
       .select(col("cohort").as("c2"), col("active").as("size"))
     val pts = ret.join(sz, col("cohort") === col("c2"))
@@ -2539,7 +2540,7 @@ object TimeSeriesOps extends QueryPack {
     val lagd = daily.select(col("v"),
       (col("v") - lag("v", 1).over(wo)).as("d1"),
       (col("v") - lag("v", 5).over(wo)).as("d5"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val m1 = lagd.filter(col("d1").isNotNull).agg(
       count(col("d1")).as("n1"), sum(dec(col("d1"))).as("s1"),
       sum(dec(col("d1")) * col("d1")).as("q1"))
@@ -2604,7 +2605,7 @@ object TimeSeriesOps extends QueryPack {
     val daily = Tables(s, dir, "orders")
       .groupBy(to_date(date_trunc("day", col("o_orderdate"))).as("day"))
       .agg(sum(Det.cents(col("o_totalprice")).cast("long")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val wm = Window.orderBy("v", "day")
     val med = daily
       .withColumn("rn", row_number().over(wm))
@@ -2707,7 +2708,7 @@ object TimeSeriesOps extends QueryPack {
     val lf = daily
       .select(col("y"), lag("y", 1).over(wd).as("y1"), lag("x", 1).over(wd).as("x1"))
       .filter(col("y1").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(PlanMemo.pin)
     val m = lf.agg(
       count(lit(1)).cast("double").as("n"),
       sum(dec(col("y1"))).cast("double").as("s1"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.engine.Tables
+import graft.engine.{Confs, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -77,30 +77,25 @@ object Streams {
     spark.table(if (alias == null) name else alias)
   }
 
-  /** Snapshot/restore the two confs every tws drain tunes (r13 review:
-    * the try/finally dance had been copy-pasted per query): the RocksDB
-    * provider transformWithState requires (set inside the ops at query
-    * build — restored here after the drain so later queries keep the
-    * default store) and `spark.sql.shuffle.partitions`, which is fixed
-    * into the STATE layout at query start — each state partition opens
-    * its own RocksDB instance, so it is sized to key cardinality
-    * (default 8; measured 4.32 → 2.48 s on the interval join vs the
-    * session's 32). Fresh per-run checkpoints make re-layout safe. */
-  def withTwsConf[T](spark: SparkSession, partitions: Int = 8)(body: => T): T = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevPart = spark.conf.get(partKey)
-    spark.conf.set(partKey, partitions.toString)
-    try body
-    finally {
-      spark.conf.set(partKey, prevPart)
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-    }
-  }
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+
+  /** Switch `spark` to the RocksDB state store, which transformWithState
+    * requires. A query reads the provider when it STARTS, so the tws ops
+    * set it at query build; safe because every graft stream starts from a
+    * fresh checkpoint. */
+  def useRocksDbStore(spark: SparkSession): Unit = spark.conf.set(providerKey,
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** Scope the two confs every tws drain tunes: the state store provider,
+    * held at its current value so a tws op's switch ends with the window,
+    * and `spark.sql.shuffle.partitions`, which is fixed into the STATE
+    * layout at query start — each state partition opens its own RocksDB
+    * instance, so it is sized to key cardinality (default 8; measured
+    * 4.32 → 2.48 s on the interval join vs the session's 32). Fresh
+    * per-run checkpoints make re-layout safe. */
+  def withTwsConf[T](spark: SparkSession, partitions: Int = 8)(body: => T): T =
+    Confs.withConfs(spark)("spark.sql.shuffle.partitions" -> partitions.toString,
+      providerKey -> spark.conf.get(providerKey))(body)
 
   /** Streaming parquet sink: drain the events stream into parquet with a
     * checkpoint, then hand back the written data (exactly-once replay). */

@@ -55,11 +55,7 @@ object TwsCounts {
   def counts(events: Dataset[Ev], ttlMs: Long = 0L): Dataset[TypeCount] = {
     implicit val keyEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.product[TypeCount]
-    // transformWithState requires the column-family-capable RocksDB store
-    // (graded callers snapshot/restore the conf around the drained run)
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    Streams.useRocksDbStore(events.sparkSession)
     val (ttl, mode) =
       if (ttlMs > 0)
         (TTLConfig(java.time.Duration.ofMillis(ttlMs)),

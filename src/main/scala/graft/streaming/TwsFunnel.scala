@@ -54,10 +54,7 @@ object TwsFunnel {
   def conversions(events: Dataset[Ev], ttlMs: Long = 0L): Dataset[Conversion] = {
     implicit val keyEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.product[Conversion]
-    // transformWithState requires a column-family-capable state store
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    Streams.useRocksDbStore(events.sparkSession)
     // state TTL requires the processing-time TimeMode
     val timeMode = if (ttlMs > 0L) TimeMode.ProcessingTime() else TimeMode.None()
     events.groupByKey(_.user_id)

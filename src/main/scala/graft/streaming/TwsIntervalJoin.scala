@@ -93,12 +93,7 @@ object TwsIntervalJoin {
   def pairs(events: Dataset[Tagged], windowUs: Long): Dataset[Pair] = {
     implicit val keyEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.product[Pair]
-    // transformWithState requires the column-family-capable RocksDB store
-    // (session-wide at query START — see TwsSessions' note; graded
-    // callers snapshot/restore the conf around the drained run)
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    Streams.useRocksDbStore(events.sparkSession)
     events.groupByKey(_.user_id)
       .transformWithState(new Processor(windowUs), TimeMode.EventTime(),
         OutputMode.Append())

@@ -49,11 +49,7 @@ object TwsSeeded {
     implicit val keyEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.product[Total]
     implicit val seedEnc = Encoders.product[Seed]
-    // transformWithState requires the column-family-capable RocksDB store
-    // (graded callers snapshot/restore the conf around the drained run)
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    Streams.useRocksDbStore(events.sparkSession)
     val seeded: KeyValueGroupedDataset[Long, Seed] =
       seeds.groupByKey(_.user_id)
     events.groupByKey(_.user_id)

@@ -66,15 +66,7 @@ object TwsSessions {
   def sessions(events: Dataset[SessEv], gapMs: Long): Dataset[SessionOut] = {
     implicit val keyEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.product[SessionOut]
-    // transformWithState requires the column-family-capable RocksDB store.
-    // NOTE session-wide effect (same as TwsFunnel): the conf must hold when
-    // the streaming query STARTS, so set-and-restore is not an option.
-    // Safe here because every graft stream starts from a fresh checkpoint;
-    // a deployment restoring old checkpoints must pin one provider
-    // globally anyway.
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    Streams.useRocksDbStore(events.sparkSession)
     events.groupByKey(_.user_id)
       .transformWithState(new Processor(gapMs), TimeMode.EventTime(), OutputMode.Append())
   }

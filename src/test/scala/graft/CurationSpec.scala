@@ -148,14 +148,36 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     ownsAndReleases(m, 1, Map("Dedup.minhashBands" -> 1)) {
       Dedup.minhashBands(docs, "text", "doc_id", k = 3, numHashes = 8, bands = 4).count()
     }
-    // minhashPairs builds minhashBands inside its own build: two entries
-    ownsAndReleases(m, 1, Map("Dedup.minhashPairs" -> 2, "Dedup.minhashBands" -> 1)) {
+    // minhashPairs builds minhashBands inside its own build: two entries,
+    // and the shingle sets both pin stay with minhashPairs, which pinned
+    // them first
+    ownsAndReleases(m, 1, Map("Dedup.minhashPairs" -> 2, "Dedup.minhashBands" -> 0)) {
       Dedup.minhashPairs(docs, "text", "doc_id", k = 3, numHashes = 8, bands = 4,
         tau = 0.1).count()
     }
     ownsAndReleases(m, 1, Map("Sim.nearDupPairsBlocked" -> 1)) {
       Sim.nearDupPairsBlocked(vecs, 0.9, bands = 4, rowsPerBand = 2, dim = 3).count()
     }
+  }
+
+  test("minhashPairs' shingle sets have one owner: evicting the nested " +
+    "minhashBands entry leaves them cached, and nothing re-caches them") {
+    import spark.implicits._
+    val docs = Seq((1L, "one owner probe a b c d e"), (2L, "one owner probe a b c d f"),
+      (3L, "q r s t u v")).toDF("doc_id", "text")
+    val m = new PlanMemo(2, _.sparkContext.isStopped)
+    val logged = warnings {
+      PlanMemo.using(m)(Dedup.minhashPairs(docs, "text", "doc_id", k = 3,
+        numHashes = 8, bands = 4, tau = 0.1).count())
+    }
+    assert(!logged.exists(_.contains("Asked to cache already cached data")), logged)
+    val Seq(sh, _) = m.pins.collectFirst { case (k, v) if k.site == "Dedup.minhashPairs" => v }.get
+    // the inner build finished first, so its entry is the oldest
+    m.byDir(spark, "evict-1", "test")(())
+    assert(m.entries.keys.map(_.site) == Set("Dedup.minhashPairs", "test"))
+    assert(cached(sh), "the nested entry's eviction released minhashPairs' shingle sets")
+    m.byDir(spark, "evict-2", "test")(())
+    assert(!cached(sh))
   }
 
   test("the near-dedup step's persisted input belongs to its memo entry") {

@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
@@ -20,27 +17,6 @@ import scala.jdk.CollectionConverters._
 class ExtensionsSpec extends SparkSpec {
 
   private val replaced = "replaced a previously registered function"
-
-  /** Messages logged at WARN or above while `f` runs. */
-  private def warnings(f: => Unit): Seq[String] = {
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val app = new AbstractAppender("graft-spec-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        lines.add(e.getMessage.getFormattedMessage)
-    }
-    app.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    root.addAppender(app, Level.WARN, null)
-    ctx.updateLoggers()
-    try f finally {
-      root.removeAppender(app.getName)
-      ctx.updateLoggers()
-      app.stop()
-    }
-    lines.asScala.toSeq
-  }
 
   test("GraftExtensions registers graft_dot into a fresh extensions set") {
     val fns = mutable.LinkedHashMap.empty[String, Seq[Expression] => Expression]
@@ -159,5 +135,21 @@ class ExtensionsSpec extends SparkSpec {
       // bytes-read probes whose recorded figures (SCALE.md) were taken
       // through Spark's own read
       "src/main/scala/graft/ScaleStress100.scala" -> 4))
+  }
+
+  test("one way to cache a frame (PlanMemo.pin) and one scoped-conf path") {
+    // the harness mains keep their own persists and release them or exit
+    val harness = Seq("ScaleStress", "ScaleStress100", "Dev")
+      .map(n => s"src/main/scala/graft/$n.scala").toSet
+    val memo = Set("src/main/scala/graft/ops/PlanMemo.scala")
+    val caching = """\.(?:un)?persist\(|\.cache\(\)""".r
+    assert(matches("src/main", caching).keySet -- harness == memo)
+    assert(matches("src/main", "StorageLevel".r).keySet -- harness == memo)
+    // Confs.withConfs, the state-store switch tws ops need at query start,
+    // and the flag a TIMESTAMP(NANOS) events file needs
+    assert(matches("src/main", """conf\.set\(""".r) == Map(
+      "src/main/scala/graft/engine/Confs.scala" -> 2,
+      "src/main/scala/graft/streaming/Streams.scala" -> 1,
+      "src/main/scala/graft/engine/Tables.scala" -> 1))
   }
 }

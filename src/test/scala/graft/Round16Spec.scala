@@ -203,10 +203,8 @@ class Round16Spec extends SparkSpec {
     // eviction: at cap, the OLDEST entry leaves and its blocks are
     // unpersisted — the memo can never grow into a cross-run store
     val m = new ops.PlanMemo(1, _.sparkContext.isStopped)
-    val f1 = Seq(1).toDF("x").persist()
-    val f2 = Seq(2).toDF("x").persist()
-    m.byDir(spark, "k1", "test")(f1)
-    m.byDir(spark, "k2", "test")(f2)
+    val f1 = m.byDir(spark, "k1", "test")(ops.PlanMemo.pin(Seq(1).toDF("x")))
+    val f2 = m.byDir(spark, "k2", "test")(ops.PlanMemo.pin(Seq(2).toDF("x")))
     assert(m.entries.keys.map(_.input) == Set("k2"), "oldest entry not evicted at cap")
     assert(f1.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "evicted frame still persisted")

@@ -67,10 +67,40 @@ class TablesSpec extends SparkSpec {
 
   for (table <- Tables.all) test(s"$table: first touch starts no job; " +
     "schema, rows and plan equal spark.read.parquet's") {
-    val s = spark.newSession()
-    val (n, _) = jobsOf(Tables(s, sf, table))
+    val (n, _) = jobsOf(Tables(spark.newSession(), sf, table))
     assert(n == 0, s"$table: first touch started $n jobs")
-    assertSameAsSpark(s, s"$sf/$table.parquet")
+    // a fresh session: the touch leaves the session's confs as they were
+    assertSameAsSpark(spark.newSession(), s"$sf/$table.parquet")
+  }
+
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  test("reading the timestamp[us] events fixture leaves the session's " +
+    "confs unset") {
+    val s = spark.newSession()
+    Tables(s, sf, "events").collect()
+    assert(!s.conf.getAll.contains(nanosAsLong))
+  }
+
+  test("a TIMESTAMP(NANOS) events file reads as the µs-floored timestamp") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType("message events " +
+      "{ required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val file = s"$tmp/events_nanos.parquet"
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(file))
+      .withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    Seq(1L -> 1700000000123456789L, 2L -> 999L).foreach { case (id, ns) =>
+      w.write(groups.newGroup().append("event_id", id).append("ts", ns)) }
+    w.close()
+    val s = spark.newSession()
+    val df = Tables.eventsTs(s, file)(identity)
+    assert(df.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(rows(df.select(col("event_id"), unix_micros(col("ts")))) ==
+      Seq("[1,1700000000123456]", "[2,0]"))
+    assert(s.conf.get(nanosAsLong) == "true")
   }
 
   test("a first touch of all tables starts no job") {
