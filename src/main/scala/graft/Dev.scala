@@ -151,8 +151,8 @@ object Dev {
     def armB: DataFrame = docs.filter(ops.TextOps.langId(col("text")) === "en")
 
     def sig(df: DataFrame): Seq[Any] =
-      df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
-        .cast("decimal(38,0)"))).collect().head.toSeq
+      df.agg(count(lit(1)),
+        sum(engine.Det.wide(xxhash64(df.columns.map(col): _*)))).collect().head.toSeq
     val (sa, sb) = (sig(armA), sig(armB))
     require(sa == sb, s"A/B results differ: $sa vs $sb")
     println(s"[ab] signatures equal: $sa")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.Det
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -384,7 +385,7 @@ object ScaleStress {
       import spark.implicits._
       val bb = (1 to 100).toDF("b")
       val hv = ev.select(
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"),
+        Det.fix(col("value"), 2).cast("long").as("cents"),
         md5(col("event_id").cast("string")).as("h"))
       hv.crossJoin(broadcast(bb))
         .select(col("b"), col("cents"),

@@ -31,10 +31,23 @@ import org.apache.spark.sql.functions._
   * Averages/ratios: exact integer sum → double → IEEE divisions → round(4).
   * An exact tie at the 4th decimal place is unrepresentable in binary, so
   * both engines round the identical double to the identical result.
+  *
+  * Two rules are written only here; query code calls these four helpers
+  * and never spells either rule out:
+  *
+  *  - P12, rounding: [[half]] is `floor(x + 0.5)`, never `round()`;
+  *    [[fix]] scales by 10^s first, and [[quant]] divides back to the 4- or
+  *    6-decimal double output.
+  *  - P16, 128-bit products: [[wide]] casts to DECIMAL(38,0) before a
+  *    product or sum that could pass int64.
+  *
+  * A site whose argument is integral or decimal (`longCol * 10000`) calls
+  * [[half]] on the scaled value, so the multiply keeps its type; [[fix]]
+  * and [[quant]] multiply by a double and are for double arguments.
   */
 object Det {
   /** Per-row money→integer-cents (BIGINT). */
-  def cents(c: Column): Column = floor(c * lit(100.0) + lit(0.5))
+  def cents(c: Column): Column = fix(c, 2)
 
   /** Sum-of-cents → money output (DOUBLE; see header for why not DECIMAL). */
   def money(sumCents: Column): Column =
@@ -44,11 +57,21 @@ object Det {
   def avg4(sumCents: Column, cnt: Column): Column =
     round(sumCents.cast("double") / 100 / cnt, 4)
 
+  /** P12: round half up to an integer, as pure IEEE math in both engines
+    * (BIGINT for a double argument). */
+  def half(x: Column): Column = floor(x + lit(0.5))
+
   /** Generic per-row fixed-point: x scaled by 10^s into BIGINT. */
-  def fix(c: Column, s: Int): Column = {
-    val p = math.pow(10, s)
-    floor(c * lit(p) + lit(0.5))
-  }
+  def fix(c: Column, s: Int): Column = half(c * lit(math.pow(10, s)))
+
+  /** x quantized to s decimals, as a double: the 4- or 6-decimal output
+    * form of a statistic. */
+  def quant(x: Column, s: Int): Column =
+    fix(x, s).cast("double") / math.pow(10, s)
+
+  /** P16: widen to DECIMAL(38,0) before a product or sum that could pass
+    * int64. */
+  def wide(c: Column): Column = c.cast("decimal(38,0)")
 
   /** Sum-of-fixed-point + count → 4-dp average (double). Quantization is
     * floor(x·10⁴+0.5), NOT round(): at an exact .xxxx5 tie Spark's round
@@ -57,8 +80,7 @@ object Det {
     * dyadic (k + 0.5 is exactly representable), so floor(x+0.5) is the
     * same pure-IEEE branch in both engines. */
   def avgFix(sumFix: Column, s: Int, cnt: Column): Column =
-    floor(sumFix.cast("double") / math.pow(10, s) / cnt * 10000 + lit(0.5))
-      .cast("double") / 10000
+    quant(sumFix.cast("double") / math.pow(10, s) / cnt, 4)
 
   /** Fixed-point natural log: floor(ln(x)·10^s + 0.5) as BIGINT. Use with
     * INTEGER-valued x only: Java's Math.log and DuckDB's libm ln can
@@ -68,10 +90,7 @@ object Det {
     * hit astronomically unlikely. Measured: fixing ln over 300k distinct
     * per-row rationals hit exactly one boundary cell at sf0.01; the
     * integer-argument form over the same data hit none. */
-  def lnFix(x: Column, s: Int): Column = {
-    val p = math.pow(10, s)
-    floor(log(x.cast("double")) * lit(p) + lit(0.5))
-  }
+  def lnFix(x: Column, s: Int): Column = fix(log(x.cast("double")), s)
 
   // ---- Oracle-side (DuckDB SQL) spellings of the same helpers ----
 

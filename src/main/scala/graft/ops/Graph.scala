@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.engine.Det
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,6 +30,26 @@ import org.apache.spark.sql.functions._
   * same plan shape, not a different algorithm.
   */
 object Graph {
+
+  /** The directed edge list as (src, dst) longs, self-loops dropped. */
+  private def directed(edges: DataFrame): DataFrame =
+    edges
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .filter(col("src") =!= col("dst"))
+
+  /** Both orientations of every [[directed]] edge, each pair once. */
+  private def symmetric(edges: DataFrame): DataFrame = {
+    val fwd = directed(edges)
+    fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  }
+
+  /** Each undirected edge once, as (a, b) with a < b. */
+  private def lowHigh(edges: DataFrame): DataFrame =
+    edges
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") < col("b"))
+      .distinct()
 
   /** Scoped confs for a fixed-round BSP loop over `sized` (a persisted
     * frame whose row count ≈ the per-round shuffle volume): shuffle
@@ -72,11 +93,7 @@ object Graph {
     * inside int64 for any r this truncation makes sense at. Returns
     * (id, katz) with katz in 2^-rounds units. */
   def katz(edges: DataFrame, rounds: Int): DataFrame = {
-    val fwd = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .transform(PlanMemo.pin)
+    val fwd = directed(edges).distinct().transform(PlanMemo.pin)
     val nodes = fwd.select(col("src").as("id"))
       .union(fwd.select(col("dst").as("id"))).distinct()
     var pr = fwd.groupBy(col("dst").as("id"))
@@ -132,10 +149,7 @@ object Graph {
     * would broadcast the node table, corpus-sized on a real graph. */
   private def prLoop(edges: DataFrame, seedsOpt: Option[DataFrame],
                      iters: Int): DataFrame = {
-    val fwd = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    val fwd = directed(edges).distinct()
     // (src, dst, outdeg) is consumed once per round under the same join key
     // — persist the joined form so rounds pay a cached scan, not the
     // upstream edge derivation (often a multiway join) each time
@@ -175,9 +189,8 @@ object Graph {
         ranks = nodes
           .join(contribs, nodes("id") === contribs("dst"), "left")
           .select(col("id"),
-            floor(col("seed").cast("double") * 150000.0
-              + lit(0.85) * coalesce(col("s"), lit(0L)).cast("double")
-              + lit(0.5)).cast("long").as("r"))
+            Det.half(col("seed").cast("double") * 150000.0
+              + lit(0.85) * coalesce(col("s"), lit(0L)).cast("double")).cast("long").as("r"))
           .localCheckpoint(eager = false)
       }
       ranks
@@ -197,11 +210,7 @@ object Graph {
     * path — this fixed-round form exists for bounded-diameter analytics
     * graphs where the unrolled plan is cheaper than the adaptive loop. */
   def labelPropagate(edges: DataFrame, iters: Int): DataFrame = {
-    val fwd = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().transform(PlanMemo.pin)
+    val sym = symmetric(edges).transform(PlanMemo.pin)
     val nodes = sym.select(col("src").as("id")).distinct()
       .transform(PlanMemo.pin)
     // Self-loops fold the "keep own label" min into the SAME neighbor
@@ -235,11 +244,7 @@ object Graph {
     * each round references its predecessor exactly once (the oracle-twin
     * inlining constraint, see [[labelPropagate]]). */
   def modeLabelPropagate(edges: DataFrame, iters: Int): DataFrame = {
-    val fwd = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().transform(PlanMemo.pin)
+    val sym = symmetric(edges).transform(PlanMemo.pin)
     val nodes = sym.select(col("src").as("id")).distinct()
     var lab = nodes.select(col("id"), col("id").as("label")).localCheckpoint(eager = false)
     val w = org.apache.spark.sql.expressions.Window
@@ -262,11 +267,7 @@ object Graph {
     * BSP plan shape as [[labelPropagate]] — one relax join + integer-MIN
     * aggregate per round, k bounds the radius explored. */
   def bfsDist(edges: DataFrame, iters: Int): DataFrame = {
-    val fwd = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().transform(PlanMemo.pin)
+    val sym = symmetric(edges).transform(PlanMemo.pin)
     val nodes = sym.select(col("src").as("id")).distinct()
       .transform(PlanMemo.pin)
     // Weight-0 self-loops make the relax step a single join + MIN(d + w)
@@ -299,11 +300,7 @@ object Graph {
     * list; the symmetric list makes out-degree = degree, so no second
     * aggregate is needed. */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val fwd = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    var sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(eager = false)
+    var sym = symmetric(edges).localCheckpoint(eager = false)
     for (_ <- 0 until rounds) {
       val keep = sym.groupBy(col("src").as("kid")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("kid"))
@@ -320,12 +317,7 @@ object Graph {
     * low→high, then a triangle is exactly one (a,b)-(b,c) wedge closed by
     * (a,c) — two equi-joins, no post-dedup. */
   def triangles(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-      .transform(PlanMemo.pin)
+    val und = lowHigh(edges).transform(PlanMemo.pin)
     und.as("e1")
       .join(und.as("e2"), col("e1.b") === col("e2.a"))
       .join(und.as("e3"),
@@ -346,12 +338,7 @@ object Graph {
     * the sorted (na < nb < nc) triple, so callers and the oracle cannot
     * tell the plans apart. */
   def trianglesOriented(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct()
-      .transform(PlanMemo.pin)
+    val und = lowHigh(edges).transform(PlanMemo.pin)
     val deg = und.select(col("a").as("id")).union(und.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("dg"))
     // total order ≺ = (degree, id); ori holds u→v with key(u) < key(v),
@@ -394,10 +381,7 @@ object Graph {
     * same join-per-round plan shape, different work bound. Each round
     * localCheckpoints to cut the iterative lineage (the CC-loop seam). */
   def scc(edges: DataFrame, doublingRounds: Int): DataFrame = {
-    val de = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    val de = directed(edges).distinct()
     val nodes = de.select(col("src").as("id")).union(de.select(col("dst")))
       .distinct().transform(PlanMemo.pin)
     // seed with the identity so every node owns a reach row and the
@@ -424,11 +408,7 @@ object Graph {
     * billion-node closeness estimation swaps this for sampled pivots
     * (HyperBall-style sketches), same per-round plan shape. */
   def allPairsDist(edges: DataFrame, iters: Int): DataFrame = {
-    val fwd = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().transform(PlanMemo.pin)
+    val sym = symmetric(edges).transform(PlanMemo.pin)
     val nodes = sym.select(col("src").as("id")).distinct()
       .transform(PlanMemo.pin)
     // weight-0 self-loops: one join + MIN(d+w) per round carries the

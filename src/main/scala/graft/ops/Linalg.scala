@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.engine.Det
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -96,16 +97,15 @@ object Linalg {
     val rounds = (1 to iters).map { it =>
       val a = d.join(broadcast(cent), Seq("subq", "dim"))
         .select(col("vec_id"), col("subq"), col("code"),
-          floor((col("e") - col("mm")) * (col("e") - col("mm")) * 100000000L
-            + lit(0.5)).as("dd"))
+          Det.fix((col("e") - col("mm")) * (col("e") - col("mm")), 8).as("dd"))
         .groupBy("vec_id", "subq", "code").agg(sum("dd").as("d2"))
       val picked = a.withColumn("rn", row_number().over(wv))
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("subq"), col("code"), col("d2"))
       cent = picked.join(d, Seq("vec_id", "subq"))
         .groupBy("subq", "code", "dim")
-        .agg((floor(sum(graft.engine.Det.fix(col("e"), 6)).cast("double")
-          / count(lit(1)) + lit(0.5)) / 1000000).as("mm"))
+        .agg((Det.half(sum(Det.fix(col("e"), 6)).cast("double")
+          / count(lit(1))) / 1000000).as("mm"))
       picked.groupBy("subq")
         .agg(countDistinct(col("code")).cast("long").as("n_codes"),
           count(lit(1)).as("n"), sum("d2").as("sd2"))
@@ -126,15 +126,14 @@ object Linalg {
     for (_ <- 1 to iters) {
       val a = d.join(broadcast(cent), "dim")
         .select(col("vec_id"), col("cid"),
-          floor((col("e") - col("m")) * (col("e") - col("m")) * 100000000L
-            + lit(0.5)).as("dd"))
+          Det.fix((col("e") - col("m")) * (col("e") - col("m")), 8).as("dd"))
         .groupBy("vec_id", "cid").agg(sum("dd").as("d2"))
       picked = a.withColumn("rn", row_number().over(wv))
         .filter(col("rn") === 1).select(col("vec_id"), col("cid"), col("d2"))
       cent = picked.join(d, "vec_id")
         .groupBy("cid", "dim")
-        .agg((floor(sum(graft.engine.Det.fix(col("e"), 6)).cast("double")
-          / count(lit(1)) + lit(0.5)) / 1000000).as("m"))
+        .agg((Det.half(sum(Det.fix(col("e"), 6)).cast("double")
+          / count(lit(1))) / 1000000).as("m"))
     }
     picked
   }
@@ -236,12 +235,11 @@ object Linalg {
         .select((col("i0") + 1).as("i"), col("ei").cast("double").as("e"),
           posexplode(col("arr")).as(Seq("j0", "ej")))
         .select(col("i"), (col("j0") + 1).as("j"),
-          floor(col("e") * col("ej").cast("double") * lit(100000000L)
-            + lit(0.5)).as("p"))
+          Det.fix(col("e") * col("ej").cast("double"), 8).as("p"))
         .groupBy("i", "j").agg(sum("p").as("sp"))
         .crossJoin(broadcast(nEmb))
         .select(col("i"), col("j"),
-          (floor(col("sp").cast("double") / col("n") + lit(0.5))
+          (Det.half(col("sp").cast("double") / col("n"))
             / lit(100000000L)).as("c"))
         .transform(PlanMemo.pin) // reused by every matvec round
     }

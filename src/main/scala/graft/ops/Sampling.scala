@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.engine.Det
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,7 +29,7 @@ object Sampling {
     val counts = b.groupBy("__qb").agg(count(lit(1)).as("__n"))
     ranked.join(broadcast(counts), "__qb")
       .filter(col("__rk") <=
-        floor(col("__qb").cast("double") / 10 * col("__n") + lit(0.5)))
+        Det.half(col("__qb").cast("double") / 10 * col("__n")))
       .drop("__qb", "__u", "__rk", "__n")
   }
 }

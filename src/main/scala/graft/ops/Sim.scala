@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.engine.Det
 import graft.engine.Tables.fan
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -108,8 +109,8 @@ object Sim {
       .crossJoin(broadcast(c.filter(col("vec_id") === probeId)
         .select(col("e").as("pe"), col("nrm").as("pn"))))
       .select(col("vec_id"), col("e"),
-        floor(round(cosinePre(dot(col("pe"), col("e")), col("pn"), col("nrm")), 4)
-          * 10000 + lit(0.5)).cast("long").as("su"))
+        Det.fix(round(cosinePre(dot(col("pe"), col("e")), col("pn"), col("nrm")), 4),
+          4).cast("long").as("su"))
       .withColumn("rn", row_number().over(
         Window.orderBy(col("su").desc, col("vec_id"))))
       .filter(col("rn") <= candK)
@@ -436,8 +437,8 @@ object Sim {
     assigned
       .select(col(key), posexplode(col(vec)).as(Seq("dim", "x")))
       .groupBy(key, "dim")
-      .agg((floor(sum(graft.engine.Det.fix(col("x"), 6)).cast("double")
-        / count(lit(1)) + lit(0.5)) / 1000000).as("cm"))
+      .agg((Det.half(sum(Det.fix(col("x"), 6)).cast("double")
+        / count(lit(1))) / 1000000).as("cm"))
       .groupBy(key)
       .agg(transform(
         sort_array(collect_list(struct(col("dim"), col("cm")))),
@@ -669,8 +670,8 @@ object Sim {
           .select(col("subq"), col("code"),
             posexplode(col("ev")).as(Seq("dim", "e")))
           .groupBy("subq", "code", "dim")
-          .agg((floor(sum(graft.engine.Det.fix(col("e"), 6)).cast("double")
-            / count(lit(1)) + lit(0.5)) / 1000000).as("cm"))
+          .agg((Det.half(sum(Det.fix(col("e"), 6)).cast("double")
+            / count(lit(1))) / 1000000).as("cm"))
           .groupBy("subq", "code")
           .agg(transform(
             sort_array(collect_list(struct(col("dim"), col("cm")))),
@@ -719,10 +720,10 @@ object Sim {
         slice(col("cent"), col("subq") * sub + 1, lit(sub)).as("ctv"))
     val cellCode = centSl.join(broadcast(codebook), "subq")
       .select(col("cell"), col("subq"), col("code"),
-        graft.engine.Det.fix(lit(2.0) * dot(col("ctv"), col("cv"))
+        Det.fix(lit(2.0) * dot(col("ctv"), col("cv"))
           + dot(col("cv"), col("cv")), 6).cast("long").as("xfix"))
     val centN2 = cents.select(col("cent_id").as("cell"),
-      graft.engine.Det.fix(dot(col("cent"), col("cent")), 6).cast("long").as("cn2"))
+      Det.fix(dot(col("cent"), col("cent")), 6).cast("long").as("cn2"))
     // cellCode is O(cells · m · nCentroids) and cells grow with the
     // corpus (8 M rows at 200 k vectors) — size-gated broadcast, never
     // unconditional (an unconditional hint OOMed the 100× stress)
@@ -760,12 +761,12 @@ object Sim {
       .join(codes, Seq("vec_id", "subq"))
       .join(broadcast(codebook), Seq("subq", "code"))
       .select(col("subq"),
-        floor(dot(diff, diff) * 1000000 + lit(0.5)).cast("long").as("sqfix"))
+        Det.fix(dot(diff, diff), 6).cast("long").as("sqfix"))
       .groupBy("subq")
       .agg(count(lit(1)).cast("long").as("n_vecs"),
         sum("sqfix").as("sq"))
       .select(col("subq").cast("int").as("subq"), col("n_vecs"),
-        (floor(col("sq").cast("double") / col("n_vecs") + lit(0.5))
+        (Det.half(col("sq").cast("double") / col("n_vecs"))
           / 1000000).as("mse"))
       .orderBy("subq")
   }
@@ -809,7 +810,7 @@ object Sim {
         slice(col("pe"), col("subq") * sub + 1, lit(sub)).as("pv"))
       .join(broadcast(codebook), "subq")
       .select(col("probe_id"), col("subq"), col("code"),
-        graft.engine.Det.fix(dot(col("pv"), col("cv")), 6).cast("long").as("partial"))
+        Det.fix(dot(col("pv"), col("cv")), 6).cast("long").as("partial"))
     // coarse candidate pruning — the corpus cell assignment is REUSED from
     // the encode pass (pq.resid carries it), not recomputed
     val corpusCells = pq.resid.select(col("vec_id"), col("cell"))
@@ -823,7 +824,7 @@ object Sim {
     val base = probeCells
       .join(broadcast(pq.cents.select(col("cent_id").as("cell"), col("cent"))), "cell")
       .select(col("probe_id"), col("cell"),
-        graft.engine.Det.fix(dot(col("pe"), col("cent")), 6).cast("long").as("bfix"))
+        Det.fix(dot(col("pe"), col("cent")), 6).cast("long").as("bfix"))
     // no distinct: a corpus vector lives in EXACTLY one cell (nearest-1
     // assignment) and a probe's nProbe cells are distinct, so the cell
     // join already yields at most one row per (probe, vector) — the

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.engine.Det
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -246,8 +247,7 @@ object TextOps {
       .withColumn("n", sum(col("c")).over(Window.partitionBy()))
       .filter(col("tok").isNotNull && col("c") * k > col("n"))
       .select(col("tok"), col("c").cast("long").as("c"),
-        (floor(col("c").cast("double") / col("n").cast("double")
-          * 1000000 + lit(0.5)) / 1000000).as("share"))
+        Det.quant(col("c").cast("double") / col("n").cast("double"), 6).as("share"))
   }
 
   /** Content-defined chunking (FastCDC/Gear-style, fixed 4-codepoint
@@ -334,7 +334,7 @@ object TextOps {
     val tot = pc.agg(sum("c").cast("double").as("tt"))
     val ps = pc.crossJoin(broadcast(tot))
       .select(col("piece"), col("c"),
-        floor(log(col("c").cast("double") / col("tt")) * 1000000 + lit(0.5))
+        Det.fix(log(col("c").cast("double") / col("tt")), 6)
           .cast("long").as("s6"))
       .localCheckpoint(eager = false)
     // r16 (guide §2.4): the Viterbi E-step used to run as maxLen unrolled

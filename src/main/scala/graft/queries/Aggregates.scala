@@ -209,15 +209,16 @@ object Aggregates extends QueryPack {
       sum(col("qx") * col("pd")).as("sxy"),
       sum(col("df")).as("sd"), sum(col("qx") * col("df")).as("sxd"))
     val nD = col("n").cast("double")
-    def d(c: String) = col(c).cast("double")
-    val varFix = (nD * d("sxx") - d("sx") * col("sx")) / (nD * (col("n") - 1))
+    val varFix = (nD * col("sxx").cast("double") - col("sx").cast("double") * col("sx")) /
+      (nD * (col("n") - 1))
     m.select(col("l_returnflag"),
         round(sqrt(varFix / 10000), 3).as("sd_qty"),
         round(varFix / 10000, 3).as("var_qty"),
-        round((nD * d("sxy") - d("sx") * col("sy"))
-          / (sqrt(nD * d("sxx") - d("sx") * col("sx"))
-            * sqrt(nD * d("syy") - d("sy") * col("sy"))), 6).as("corr_qty_price"),
-        round((nD * d("sxd") - d("sx") * col("sd"))
+        round((nD * col("sxy").cast("double") - col("sx").cast("double") * col("sy"))
+          / (sqrt(nD * col("sxx").cast("double") - col("sx").cast("double") * col("sx"))
+            * sqrt(nD * col("syy").cast("double") - col("sy").cast("double") * col("sy"))),
+              6).as("corr_qty_price"),
+        round((nD * col("sxd").cast("double") - col("sx").cast("double") * col("sd"))
           / (nD * (col("n") - 1)) / 1000000, 6).as("covar_qty_disc"))
       .orderBy("l_returnflag")
   }
@@ -851,18 +852,17 @@ object Aggregates extends QueryPack {
       |  floor(m3 / (m2 * sqrt(m2)) * 10000 + 0.5) / 10000 AS skewness,
       |  floor((m4 / (m2 * m2) - 3) * 10000 + 0.5) / 10000 AS kurtosis
       |FROM c ORDER BY event_type""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val v = Det.cents(col("value"))
     val st = Tables(s, dir, "events")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
-        sum(v.cast(dec38)).as("s1"),
-        sum((v * v).cast(dec38)).as("s2"),
+        sum(Det.wide(v)).as("s1"),
+        sum(Det.wide(v * v)).as("s2"),
         // promote BEFORE the 3rd/4th power: cents⁴ at value≈550 already
         // exceeds int64 per ROW (the fixture max 490 leaves only 1.6×
         // headroom); decimal×long stays exact at any plausible magnitude
-        sum(v.cast(dec38) * v * v).as("s3"),
-        sum(v.cast(dec38) * v * v * v).as("s4"))
+        sum(Det.wide(v) * v * v).as("s3"),
+        sum(Det.wide(v) * v * v * v).as("s4"))
     val m = st.select(col("event_type"), col("n"),
       (col("s1").cast("double") / col("n")).as("a1"),
       (col("s2").cast("double") / col("n")).as("a2"),
@@ -876,10 +876,8 @@ object Aggregates extends QueryPack {
         + lit(6) * col("a1") * col("a1") * col("a2")
         - lit(3) * col("a1") * col("a1") * col("a1") * col("a1")).as("m4"))
     c.select(col("event_type"), col("n").cast("long").as("n"),
-      (floor(col("m3") / (col("m2") * sqrt(col("m2"))) * 10000 + lit(0.5))
-        / 10000).as("skewness"),
-      (floor((col("m4") / (col("m2") * col("m2")) - lit(3)) * 10000 + lit(0.5))
-        / 10000).as("kurtosis"))
+      Det.quant(col("m3") / (col("m2") * sqrt(col("m2"))), 4).as("skewness"),
+      Det.quant(col("m4") / (col("m2") * col("m2")) - lit(3), 4).as("kurtosis"))
       .orderBy("event_type")
   }
 
@@ -928,8 +926,8 @@ object Aggregates extends QueryPack {
       .groupBy("l_returnflag")
       .agg((sum_distinct(q100).cast("double") / 100).as("sum_distinct_qty"),
         countDistinct(q100).cast("long").as("n_distinct_qty"),
-        (floor(sum_distinct(q100).cast("double") / countDistinct(q100)
-          / 100 * 10000 + lit(0.5)).cast("double") / 10000)
+        Det.quant(sum_distinct(q100).cast("double") / countDistinct(q100)
+          / 100, 4)
           .as("avg_distinct_qty"))
       .orderBy("l_returnflag")
   }
@@ -959,7 +957,7 @@ object Aggregates extends QueryPack {
       |GROUP BY et, q ORDER BY event_type, pct""") { (s, dir) =>
     val h = Tables(s, dir, "events")
       .groupBy(col("event_type").as("et"),
-        graft.engine.Det.cents(col("value")).cast("long").as("v"))
+        Det.cents(col("value")).cast("long").as("v"))
       .agg(count(lit(1)).cast("long").as("c"))
     val wp = Window.partitionBy("et")
     val cum = h
@@ -1037,10 +1035,10 @@ object Aggregates extends QueryPack {
     pick
       .select(col("st").as("o_orderstatus"),
         (col("q") * 10).cast("long").as("pct"),
-        (floor((col("b.cv").cast("double")
+        Det.quant((col("b.cv").cast("double")
           - (col("b.cc") - expr("(q * n + 9) div 10")).cast("double")
             * col("b.v"))
-          / col("tv").cast("double") * 1000000 + lit(0.5)) / 1000000)
+          / col("tv").cast("double"), 6)
           .as("bottom_share"))
       .orderBy("o_orderstatus", "pct")
   }
@@ -1147,20 +1145,17 @@ object Aggregates extends QueryPack {
     import org.apache.spark.sql.functions._
     val v = graft.engine.Tables(s, dir, "events")
       .filter(col("event_type") === "purchase")
-      .select(graft.engine.Det.cents(col("value")).cast("long").as("v"))
+      .select(Det.cents(col("value")).cast("long").as("v"))
       .filter(col("v") > 0)
     val m = v.agg(count(lit(1)).cast("long").as("n"),
-      sum("v").cast("decimal(38,0)").as("s"),
-      sum(graft.engine.Det.lnFix(col("v"), 9).cast("decimal(38,0)"))
+      Det.wide(sum("v")).as("s"),
+      sum(Det.wide(Det.lnFix(col("v"), 9)))
         .as("slnv"),
-      sum(expr("1000000000000 div v")).cast("decimal(38,0)").as("hinv"))
+      Det.wide(sum(expr("1000000000000 div v"))).as("hinv"))
     m.select(col("n"),
-      (floor(col("s").cast("double") / col("n") / 100 * 10000 + lit(0.5))
-        .cast("double") / 10000).as("arith_usd"),
-      (floor(exp(col("slnv").cast("double") / col("n") / 1000000000L) / 100
-        * 10000 + lit(0.5)).cast("double") / 10000).as("geo_usd"),
-      (floor(col("n").cast("double") * 1000000000000L
-        / col("hinv").cast("double") / 100 * 10000 + lit(0.5))
-        .cast("double") / 10000).as("harmonic_usd"))
+      Det.quant(col("s").cast("double") / col("n") / 100, 4).as("arith_usd"),
+      Det.quant(exp(col("slnv").cast("double") / col("n") / 1000000000L) / 100, 4).as("geo_usd"),
+      Det.quant(col("n").cast("double") * 1000000000000L
+        / col("hinv").cast("double") / 100, 4).as("harmonic_usd"))
   }
 }

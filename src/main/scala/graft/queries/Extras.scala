@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.engine.{QueryPack, Tables}
+import graft.engine.{Det, QueryPack, Tables}
 import graft.ops.BlockWindow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,7 +78,6 @@ object Extras extends QueryPack {
       |  FROM lineitem GROUP BY l_returnflag
       |)
       |ORDER BY l_returnflag""") { (s, dir) =>
-    import graft.engine.Det
     val x = col("l_quantity").cast("long")
     val yc = Det.cents(col("l_extendedprice")).cast("long")
     val sums = Tables(s, dir, "lineitem")
@@ -303,7 +302,7 @@ object Extras extends QueryPack {
       |WHERE abs(${graft.engine.Det.oFix("e.value", 2)} - sv / n)
       |      / sqrt(greatest(0, svv - sv * sv / n) / (n - 1)) > 2.5
       |ORDER BY e.event_id""") { (s, dir) =>
-    val vc = graft.engine.Det.fix(col("value"), 2).cast("long")
+    val vc = Det.fix(col("value"), 2).cast("long")
     val ev = Tables(s, dir, "events")
     val stats = ev.select(col("event_type").as("st_type"), vc.as("vc"))
       .groupBy("st_type")
@@ -587,16 +586,14 @@ object Extras extends QueryPack {
     val p = r.crossJoin(broadcast(st))
       .filter(col("rn") === expr("(n_keys * 99 + 99) div 100"))
       .select(col("c").as("p99"))
-    def d(c: String) = col(c).cast("double")
     r.crossJoin(broadcast(st)).crossJoin(broadcast(p))
       .filter(col("rd") <= 5)
       .select(col("rd").as("rank"), col("key"), col("c").as("key_rows"),
         col("n_keys"), col("n_rows"),
-        (floor(d("n_rows") / d("n_keys") * 100 + lit(0.5)).cast("double")
-          / 100).as("avg_rows"),
+        Det.quant(col("n_rows").cast("double") / col("n_keys").cast("double"), 2).as("avg_rows"),
         col("p99").cast("long").as("p99_rows"),
-        (floor(d("max_c") * d("n_keys") / d("n_rows") * 10000 + lit(0.5))
-          .cast("double") / 10000).as("skew_factor"))
+        Det.quant(col("max_c").cast("double") * col("n_keys").cast("double") /
+          col("n_rows").cast("double"), 4).as("skew_factor"))
       .orderBy("rank")
   }
 
@@ -639,12 +636,10 @@ object Extras extends QueryPack {
         .otherwise(0L).as("delay"))
     l.agg(count(lit(1)).cast("long").as("n_events"),
         sum("late").cast("long").as("n_late"),
-        (floor(sum("late").cast("double") / count(lit(1)) * 1000000 + lit(0.5))
-          .cast("double") / 1000000).as("pct_late"),
+        Det.quant(sum("late").cast("double") / count(lit(1)), 6).as("pct_late"),
         max("delay").cast("long").as("max_delay_s"),
         when(sum("late") === 0, lit(null)).otherwise(
-          floor(sum("delay").cast("double") / sum("late") * 100 + lit(0.5))
-            .cast("double") / 100).as("avg_late_delay_s"))
+          Det.quant(sum("delay").cast("double") / sum("late"), 2)).as("avg_late_delay_s"))
   }
 
   // Order-backlog aging buckets: open (non-finished) orders bucketed by
@@ -678,7 +673,7 @@ object Extras extends QueryPack {
         col("o_totalprice"))
       .groupBy("age_bucket")
       .agg(count(lit(1)).cast("long").as("n_orders"),
-        (sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
+        (sum(Det.fix(col("o_totalprice"), 2).cast("long"))
           .cast("double") / 100).as("open_value"))
       .orderBy("age_bucket")
   }
@@ -708,8 +703,7 @@ object Extras extends QueryPack {
       .crossJoin(broadcast(tot))
       .select(col("n_supp").cast("long").as("n_suppliers"),
         col("n_parts").cast("long").as("n_parts"),
-        (floor(col("n_parts").cast("double") / col("np") * 1000000 + lit(0.5))
-          / 1000000).as("share_of_parts"))
+        Det.quant(col("n_parts").cast("double") / col("np"), 6).as("share_of_parts"))
       .orderBy("n_suppliers")
   }
 
@@ -765,8 +759,7 @@ object Extras extends QueryPack {
           - size(array_intersect(col("ta"), col("tb")))).cast("long").as("uni"))
     pr.filter(lit(4) * col("inter") >= col("uni"))
       .select(col("name_a"), col("name_b"), col("inter"), col("uni"),
-        (floor(col("inter").cast("double") / col("uni") * 10000 + lit(0.5))
-          / 10000).as("sim"))
+        Det.quant(col("inter").cast("double") / col("uni"), 4).as("sim"))
       .orderBy(col("sim").desc, col("name_a"), col("name_b"))
   }
 
@@ -798,7 +791,7 @@ object Extras extends QueryPack {
       |FROM t ORDER BY rank""") { (s, dir) =>
     val u = (conv(substring(md5(col("doc_id").cast("string").cast("binary")),
       1, 8), 16, 10).cast("long") + 1)
-    val key = ((graft.engine.Det.lnFix(u.cast("double"), 12).cast("long")
+    val key = ((Det.lnFix(u.cast("double"), 12).cast("long")
       - lit(22180709777918L)).cast("double") / col("n_chars")).as("key")
     val top = Tables(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"), key)
@@ -833,7 +826,7 @@ object Extras extends QueryPack {
     // fallback below, so the two paths cannot drift
     def metricExprs = Seq(
       count(lit(1)).as("n_rows"),
-      sum(graft.engine.Det.cents(col("o_totalprice")).cast("long"))
+      sum(Det.cents(col("o_totalprice")).cast("long"))
         .as("cents"),
       sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L))
         .as("n_finished"),

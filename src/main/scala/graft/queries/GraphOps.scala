@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.engine.{QueryPack, Tables}
+import graft.engine.{Det, QueryPack, Tables}
 import graft.ops.Graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -220,7 +220,7 @@ object GraphOps extends QueryPack {
     inter
       .join(deg.as("da"), col("node_a") === col("da.id"))
       .join(deg.as("db"), col("node_b") === col("db.id"))
-      .filter(j >= lit(0.5))
+      .filter(j >= 0.5)
       .select(col("node_a"), col("node_b"),
         col("shared").cast("long").as("shared"), round(j, 4).as("jaccard"))
       .orderBy("node_a", "node_b")
@@ -352,7 +352,6 @@ object GraphOps extends QueryPack {
        |    * 1000000 + 0.5) AS DOUBLE) / 1000000 AS q_total
        |FROM nu JOIN region r ON nu.comp = r.r_regionkey
        |ORDER BY r_name""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val fwd = strongTradeEdges(s, dir).filter(col("src") =!= col("dst"))
     val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint()
@@ -370,8 +369,8 @@ object GraphOps extends QueryPack {
       .groupBy(col("ca").as("comp")).agg(count(lit(1)).as("e2_c"))
     val nu = dc.join(ec, Seq("comp"), "left").crossJoin(broadcast(mm))
       .select(col("comp"), coalesce(col("e2_c"), lit(0L)).as("e2_c"), col("d_c"),
-        (dec(coalesce(col("e2_c"), lit(0L))) * col("m2")
-          - dec(col("d_c")) * col("d_c")).as("num"), col("m2"))
+        (Det.wide(coalesce(col("e2_c"), lit(0L))) * col("m2")
+          - Det.wide(col("d_c")) * col("d_c")).as("num"), col("m2"))
       .localCheckpoint()
     val tot = nu.agg(sum("num").as("num_tot"))
     nu.crossJoin(broadcast(tot))
@@ -379,12 +378,10 @@ object GraphOps extends QueryPack {
       .select(col("r_name"),
         expr("e2_c div 2").cast("long").as("intra_edges"),
         col("d_c").cast("long").as("degree_sum"),
-        (floor(col("num").cast("double")
-          / (col("m2").cast("double") * col("m2").cast("double"))
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("contribution"),
-        (floor(col("num_tot").cast("double")
-          / (col("m2").cast("double") * col("m2").cast("double"))
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("q_total"))
+        Det.quant(col("num").cast("double")
+          / (col("m2").cast("double") * col("m2").cast("double")), 6).as("contribution"),
+        Det.quant(col("num_tot").cast("double")
+          / (col("m2").cast("double") * col("m2").cast("double")), 6).as("q_total"))
       .orderBy("r_name")
   }
 
@@ -415,7 +412,6 @@ object GraphOps extends QueryPack {
        |    / sqrt((mm * sxx - sx * sx) * (mm * syy - sy * sy))
        |    * 1000000 + 0.5) AS DOUBLE) / 1000000 AS assortativity
        |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val fwd = strongTradeEdges(s, dir).filter(col("src") =!= col("dst"))
     val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint()
@@ -428,17 +424,16 @@ object GraphOps extends QueryPack {
       .select(col("x"), col("y"))
     val m = xy.agg(
       count(lit(1)).cast("double").as("mm"),
-      sum(dec(col("x"))).cast("double").as("sx"),
-      sum(dec(col("y"))).cast("double").as("sy"),
-      sum(dec(col("x")) * col("y")).cast("double").as("sxy"),
-      sum(dec(col("x")) * col("x")).cast("double").as("sxx"),
-      sum(dec(col("y")) * col("y")).cast("double").as("syy"),
+      sum(Det.wide(col("x"))).cast("double").as("sx"),
+      sum(Det.wide(col("y"))).cast("double").as("sy"),
+      sum(Det.wide(col("x")) * col("y")).cast("double").as("sxy"),
+      sum(Det.wide(col("x")) * col("x")).cast("double").as("sxx"),
+      sum(Det.wide(col("y")) * col("y")).cast("double").as("syy"),
       count(lit(1)).cast("long").as("m_directed"))
     m.select(expr("m_directed div 2").cast("long").as("m_edges"),
-      (floor((col("mm") * col("sxy") - col("sx") * col("sy"))
+      Det.quant((col("mm") * col("sxy") - col("sx") * col("sy"))
         / sqrt((col("mm") * col("sxx") - col("sx") * col("sx"))
-          * (col("mm") * col("syy") - col("sy") * col("sy")))
-        * 1000000 + lit(0.5)).cast("double") / 1000000).as("assortativity"))
+          * (col("mm") * col("syy") - col("sy") * col("sy"))), 6).as("assortativity"))
   }
 
   private val bfsIters = 6
@@ -498,9 +493,11 @@ object GraphOps extends QueryPack {
   // Normalization, the usual float hazard of HITS, is INTEGER: each
   // half-round rescales scores to ·1e6 by floor division by the round's
   // max, so both engines carry identical BIGINTs and the oracle unrolls
-  // the same 3 rounds as chained CTEs with scalar-subquery maxima. Same
-  // BSP seam as graph_pagerank (edge frame persisted once; per-round
-  // frames are |V|-sized).
+  // the same 3 rounds as chained CTEs with window maxima (`MAX(ar) OVER
+  // ()`): each CTE reads the round before it once, so the chain grows
+  // linearly (a scalar-subquery maximum re-read it, and DuckDB's work grew
+  // exponentially with the round count). Same BSP seam as graph_pagerank
+  // (edge frame persisted once; per-round frames are |V|-sized).
   private val hitsIters = 3
 
   private def hitsRound(k: Int): String =
@@ -510,7 +507,7 @@ object GraphOps extends QueryPack {
        |    JOIN h${k - 1} ON e.src = h${k - 1}.id GROUP BY e.dst) m
        |  ON n.id = m.dst
        |), a$k AS (
-       |  SELECT id, ar * 1000000 // (SELECT MAX(ar) FROM a${k}r) AS a
+       |  SELECT id, ar * 1000000 // MAX(ar) OVER () AS a
        |  FROM a${k}r
        |), h${k}r AS (
        |  SELECT n.id, COALESCE(m.s, 0) AS hr FROM nodes n LEFT JOIN (
@@ -518,7 +515,7 @@ object GraphOps extends QueryPack {
        |    JOIN a$k ON e.dst = a$k.id GROUP BY e.src) m
        |  ON n.id = m.src
        |), h$k AS (
-       |  SELECT id, hr * 1000000 // (SELECT MAX(hr) FROM h${k}r) AS h
+       |  SELECT id, hr * 1000000 // MAX(hr) OVER () AS h
        |  FROM h${k}r
        |)""".stripMargin
 
@@ -604,7 +601,7 @@ object GraphOps extends QueryPack {
     val term = sym.groupBy("id").agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2)
       .select(col("id"),
-        floor(lit(1000000.0) / log(col("n").cast("double")) + lit(0.5))
+        Det.half(lit(1000000.0) / log(col("n").cast("double")))
           .cast("long").as("t"))
     sym.as("x")
       .join(sym.as("y"), col("x.nbr") === col("y.nbr") && col("x.id") < col("y.id"))
@@ -744,8 +741,8 @@ object GraphOps extends QueryPack {
     e.agg(count(lit(1)).cast("long").as("n_edges"))
       .crossJoin(broadcast(recip))
       .select(col("n_edges"), col("n_reciprocal"),
-        (floor(col("n_reciprocal").cast("double") / col("n_edges").cast("double")
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("reciprocity"))
+        Det.quant(col("n_reciprocal").cast("double") / col("n_edges").cast("double"),
+          6).as("reciprocity"))
   }
 
   // Strongly connected components of the DIRECTED strong-trade graph
@@ -833,9 +830,8 @@ object GraphOps extends QueryPack {
       .select(col("n_name"), col("r").as("n_reachable"),
         col("sd").as("sum_dist"),
         when(col("sd") === 0, lit(0.0)).otherwise(
-          floor(((col("r") - 1).cast("double") / (col("n") - 1))
-            * ((col("r") - 1).cast("double") / col("sd")) * 1000000
-            + lit(0.5)).cast("double") / 1000000).as("closeness"))
+          Det.quant(((col("r") - 1).cast("double") / (col("n") - 1))
+            * ((col("r") - 1).cast("double") / col("sd")), 6)).as("closeness"))
       .orderBy("n_name")
   }
 
@@ -875,8 +871,7 @@ object GraphOps extends QueryPack {
       .withColumn("tot", sum("n_pairs").over(
         Window.partitionBy()))
       .select(col("hops").cast("long").as("hops"), col("n_pairs"),
-        (floor(col("cum").cast("double") / col("tot") * 1000000 + lit(0.5))
-          / 1000000).as("cum_share"))
+        Det.quant(col("cum").cast("double") / col("tot"), 6).as("cum_share"))
       .orderBy("hops")
   }
 
@@ -959,7 +954,6 @@ object GraphOps extends QueryPack {
       |    / CAST(mom.n * mom.sxx - mom.sx * mom.sx AS DOUBLE) * 1000000 + 0.5)
       |    AS DOUBLE) / 1000000 AS degree_slope
       |FROM mom CROSS JOIN st""") { (s, dir) =>
-    import graft.engine.Det
     val edges = Tables(s, dir, "lineitem")
       .join(Tables(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
@@ -975,20 +969,18 @@ object GraphOps extends QueryPack {
         row_number().over(Window.orderBy(col("d").desc, col("cust"))))
     val pts = rk.select(Det.lnFix(col("r"), 8).cast("long").as("x"),
       Det.lnFix(col("d"), 8).cast("long").as("y"))
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val mom = pts.agg(count(lit(1)).as("n"),
-      sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("x")) * col("y")).as("sxy"))
+      sum(Det.wide(col("x"))).as("sx"), sum(Det.wide(col("y"))).as("sy"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"),
+      sum(Det.wide(col("x")) * col("y")).as("sxy"))
     val st = deg.agg(count(lit(1)).cast("long").as("n_nodes"),
       sum("d").cast("long").as("n_edges"),
       max("d").cast("long").as("max_degree"))
     mom.crossJoin(broadcast(st))
       .select(col("n_nodes"), col("n_edges"), col("max_degree"),
         col("n").cast("long").as("n_points"),
-        (floor((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-          / (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("degree_slope"))
+        Det.quant((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
+          / (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"), 6).as("degree_slope"))
   }
 
   // Rich-club coefficient at k=8 — do the highest-degree trade hubs
@@ -1035,7 +1027,6 @@ object GraphOps extends QueryPack {
         col("b") === col("tb"), "left_semi")
       .agg(count(lit(1)).cast("long").as("n_edges_within"))
       .select(lit(8L).as("k"), col("n_edges_within"),
-        (floor(lit(2.0) * col("n_edges_within") / (8 * 7) * 1000000
-          + lit(0.5)).cast("double") / 1000000).as("phi"))
+        Det.quant(lit(2.0) * col("n_edges_within") / (8 * 7), 6).as("phi"))
   }
 }

@@ -377,11 +377,11 @@ object LlmOps extends QueryPack {
       val det = lit(1.0) - powChain(lit(1.0) - powChain(col("jaccard"), r), b)
       pairs
         .agg(count(lit(1)).as("np"),
-          sum(floor(det * 1000000 + lit(0.5)).cast("long")).as("sq"))
+          sum(Det.fix(det, 6).cast("long")).as("sq"))
         .select(lit(r).as("rows_per_band"), lit(b).as("bands"),
           col("np").cast("long").as("n_pairs"),
-          (floor(col("sq").cast("double") / col("np").cast("double")
-            + lit(0.5)) / 1000000).as("expected_recall"))
+          (Det.half(col("sq").cast("double") / col("np").cast("double")) /
+            1000000).as("expected_recall"))
     }.reduce(_ unionByName _).orderBy("rows_per_band")
   }
 
@@ -939,8 +939,7 @@ object LlmOps extends QueryPack {
     Tables(s, dir, "documents")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
-        (floor(sum(col("n_chars")).cast("double") / count(lit(1)) * 10000 + lit(0.5))
-          .cast("double") / 10000).as("avg_chars"))
+        Det.quant(sum(col("n_chars")).cast("double") / count(lit(1)), 4).as("avg_chars"))
       .orderBy("lang")
   }
 
@@ -2001,7 +2000,7 @@ object LlmOps extends QueryPack {
     val e = col("embedding").cast("array<double>")
     val amax = array_max(transform(e, x => abs(x)))
     val qCode = (x: org.apache.spark.sql.Column) =>
-      floor(x / (col("amax") / 127) + 0.5).cast("long")
+      Det.half(x / (col("amax") / 127)).cast("long")
     Tables(s, dir, "embeddings")
       .select(col("vec_id"), e.as("e"), amax.as("amax"))
       .filter(col("amax") > 0)
@@ -2063,8 +2062,7 @@ object LlmOps extends QueryPack {
       .groupBy("doc_id")
       .agg(sum("nll6").as("s6"), count(lit(1)).as("n"))
       .select(col("doc_id"),
-        (floor(col("s6").cast("double") / 1000000 / col("n") * 10000 + lit(0.5))
-          .cast("double") / 10000).as("lm_nll"),
+        Det.quant(col("s6").cast("double") / 1000000 / col("n"), 4).as("lm_nll"),
         col("n").cast("int").as("n_tokens"))
       .orderBy("doc_id")
   }
@@ -2143,7 +2141,6 @@ object LlmOps extends QueryPack {
       |    / n_s / 1000000 * 10000 + 0.5) AS DOUBLE) / 10000 AS kl
       |FROM acc JOIN ns ON acc.source = ns.source CROSS JOIN nt
       |ORDER BY acc.source""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     // session-memoized (source, term, c) rollup — shared with text_yule_k
     val tfs = TextOps.srcTermCounts(s, dir)
     val tfc = tfs.groupBy("term").agg(sum("c").as("d2"))
@@ -2151,15 +2148,15 @@ object LlmOps extends QueryPack {
     val nt = tfs.agg(sum("c").as("n"))
     val acc = tfs.join(tfc, "term")
       .select(col("source"),
-        (dec(col("c")) * (Det.lnFix(col("c"), 6).cast("long")
+        (Det.wide(col("c")) * (Det.lnFix(col("c"), 6).cast("long")
           - Det.lnFix(col("d2"), 6).cast("long"))).as("term6"))
       .groupBy("source").agg(sum("term6").as("a"))
     acc.join(ns, "source").crossJoin(broadcast(nt))
       .select(col("source"), col("n_s").cast("long").as("n_tokens"),
-        (floor((col("a") + dec(col("n_s"))
+        Det.quant((col("a") + Det.wide(col("n_s"))
             * (Det.lnFix(col("n"), 6).cast("long")
               - Det.lnFix(col("n_s"), 6).cast("long"))).cast("double")
-          / col("n_s") / 1000000 * 10000 + lit(0.5)).cast("double") / 10000).as("kl"))
+          / col("n_s") / 1000000, 4).as("kl"))
       .orderBy("source")
   }
 
@@ -2189,7 +2186,7 @@ object LlmOps extends QueryPack {
     u.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"),
         round(col("u").cast("double") / col("tot"), 4).as("weight"),
-        floor(lit(10000.0) * col("u") / col("tot") + lit(0.5)).cast("int")
+        Det.half(lit(10000.0) * col("u") / col("tot")).cast("int")
           .as("epoch_docs"))
       .orderBy("source")
   }
@@ -2311,7 +2308,7 @@ object LlmOps extends QueryPack {
       .agg(count(lit(1)).as("n_sh"), novel.as("nv"))
       .select(col("doc_id"), col("n_sh").cast("long").as("n_shingles"),
         col("nv").cast("long").as("n_novel"),
-        (floor(col("nv").cast("double") / col("n_sh") * 10000 + lit(0.5)) / 10000)
+        Det.quant(col("nv").cast("double") / col("n_sh"), 4)
           .as("novelty"))
       .orderBy("doc_id")
   }
@@ -2398,13 +2395,13 @@ object LlmOps extends QueryPack {
     val d = fan(Tables(s, dir, "documents"))
       .select(col("source"),
         size(split(col("text"), " ")).cast("long").as("toks"),
-        floor(TextOps.qualityScore(col("text")) * 10000 + lit(0.5))
+        Det.fix(TextOps.qualityScore(col("text")), 4)
           .cast("long").as("q4"))
     val src = d.groupBy("source").agg(sum("toks").cast("long").as("tokens"),
       sum("q4").cast("long").as("q4sum"),
       count(lit(1)).cast("long").as("n_docs"))
     val tot = src.agg(sum("tokens").cast("long").as("t"))
-    val qr = floor(col("q4sum").cast("double") / col("n_docs") + lit(0.5))
+    val qr = Det.half(col("q4sum").cast("double") / col("n_docs"))
       .cast("long")
     val wOrd = Window.orderBy(qr.desc, col("source"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -2468,8 +2465,8 @@ object LlmOps extends QueryPack {
         greatest(col("sa"), col("sb")).as("source_b"), col("jaccard"))
     sp.groupBy("source_a", "source_b")
       .agg(count(lit(1)).cast("long").as("n_pairs"),
-        (floor(sum(Det.fix(col("jaccard"), 4)).cast("double") / count(lit(1))
-          + lit(0.5)).cast("double") / 10000).as("mean_jaccard"))
+        (Det.half(sum(Det.fix(col("jaccard"), 4)).cast("double") / count(lit(1))).cast("double") /
+          10000).as("mean_jaccard"))
       .orderBy("source_a", "source_b")
   }
 
@@ -2536,10 +2533,8 @@ object LlmOps extends QueryPack {
     w.groupBy("lang")
       .agg(count(lit(1)).cast("long").as("sentences"),
         sum("words").cast("long").as("words"),
-        (floor(sum("words").cast("double") / count(lit(1)).cast("double")
-          * 10000 + lit(0.5)).cast("double") / 10000).as("avg_words"),
-        (floor(sum("chars").cast("double") / count(lit(1)).cast("double")
-          * 10000 + lit(0.5)).cast("double") / 10000).as("avg_chars"))
+        Det.quant(sum("words").cast("double") / count(lit(1)).cast("double"), 4).as("avg_words"),
+        Det.quant(sum("chars").cast("double") / count(lit(1)).cast("double"), 4).as("avg_chars"))
       .orderBy("lang")
   }
 
@@ -2588,8 +2583,7 @@ object LlmOps extends QueryPack {
     sc.groupBy("source")
       .agg(count(lit(1)).cast("long").as("docs"),
         sum(isCode).cast("long").as("code_docs"),
-        (floor(sum(isCode).cast("double") / count(lit(1)).cast("double")
-          * 10000 + lit(0.5)).cast("double") / 10000).as("code_rate"),
+        Det.quant(sum(isCode).cast("double") / count(lit(1)).cast("double"), 4).as("code_rate"),
         sum("score").cast("long").as("total_markers"))
       .orderBy("source")
   }
@@ -2824,14 +2818,12 @@ object LlmOps extends QueryPack {
           expr("1000000 div rn"))), lit(0L)).as("rr6"),
         sum(when(col("rn") <= 5, col("rel")).otherwise(0)).as("rel5"),
         max("rel").as("hit"))
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
     pp.agg(count(lit(1)).cast("long").as("n_probes"),
-      (floor(d(sum("rr6")) / d(count(lit(1))) + lit(0.5)).cast("double")
+      (Det.half(sum("rr6").cast("double") / count(lit(1)).cast("double")).cast("double")
         / 1000000).as("mrr_at_10"),
-      (floor(d(sum("rel5")) / (lit(5) * d(count(lit(1)))) * 10000 + lit(0.5))
-        .cast("double") / 10000).as("precision_at_5"),
-      (floor(d(sum("hit")) / d(count(lit(1))) * 10000 + lit(0.5))
-        .cast("double") / 10000).as("hit_rate_at_10"))
+      Det.quant(sum("rel5").cast("double") / (lit(5) * count(lit(1)).cast("double")),
+        4).as("precision_at_5"),
+      Det.quant(sum("hit").cast("double") / count(lit(1)).cast("double"), 4).as("hit_rate_at_10"))
   }
 
   // Pointwise mutual information over within-document co-occurrence of
@@ -2970,8 +2962,7 @@ object LlmOps extends QueryPack {
       .agg(count(lit(1)).cast("long").as("docs"),
         min("n_chars").cast("long").as("min_chars"),
         max("n_chars").cast("long").as("max_chars"),
-        (floor(sum("n_chars").cast("double") / count(lit(1)).cast("double")
-          * 100 + lit(0.5)).cast("double") / 100).as("avg_chars"),
+        Det.quant(sum("n_chars").cast("double") / count(lit(1)).cast("double"), 2).as("avg_chars"),
         countDistinct("lang").cast("long").as("langs"))
       .orderBy("step")
   }
@@ -3037,8 +3028,7 @@ object LlmOps extends QueryPack {
     TextOps.cdcChunksMemo(Tables(s, dir, "documents"), "doc_id", "text")
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_chunks"),
-        (floor(sum("len").cast("double") / count(lit(1)) * 10000 + lit(0.5))
-          / 10000).as("avg_len"),
+        Det.quant(sum("len").cast("double") / count(lit(1)), 4).as("avg_len"),
         max("len").cast("long").as("max_len"))
       .orderBy("doc_id")
   }
@@ -3083,8 +3073,8 @@ object LlmOps extends QueryPack {
       .agg(count(lit(1)).cast("long").as("n_chunks"),
         sum(when(col("n_docs") > 1, 1L).otherwise(0L)).cast("long")
           .as("n_shared_chunks"),
-        (floor(sum(when(col("n_docs") > 1, col("len")).otherwise(0L))
-          .cast("double") / sum("len") * 10000 + lit(0.5)) / 10000)
+        Det.quant(sum(when(col("n_docs") > 1, col("len")).otherwise(0L))
+          .cast("double") / sum("len"), 4)
           .as("dup_char_frac"))
       .orderBy("doc_id")
   }
@@ -3120,8 +3110,8 @@ object LlmOps extends QueryPack {
           .as("kept_chunks"),
         sum(when(col("rn") === 1, col("len")).otherwise(0L)).cast("long")
           .as("kept_chars"),
-        (floor(sum(when(col("rn") === 1, col("len")).otherwise(0L))
-          .cast("double") / sum("len") * 10000 + lit(0.5)) / 10000)
+        Det.quant(sum(when(col("rn") === 1, col("len")).otherwise(0L))
+          .cast("double") / sum("len"), 4)
           .as("kept_frac"))
       .orderBy("doc_id")
   }
@@ -3160,13 +3150,12 @@ object LlmOps extends QueryPack {
       |                   / (n - 1)) * 1000000 + 0.5) / 1000000 END AS advantage
       |FROM r JOIN st ON r.group_id = st.group_id
       |ORDER BY 1, 2""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val r = Tables(s, dir, "events")
       .select(col("user_id").as("group_id"), col("event_id").as("sample_id"),
         Det.fix(col("value"), 6).cast("long").as("v6"))
     val st = r.groupBy("group_id")
-      .agg(count(lit(1)).as("n"), sum(col("v6").cast(dec38)).as("s"),
-        sum((col("v6") * col("v6")).cast(dec38)).as("s2"))
+      .agg(count(lit(1)).as("n"), sum(Det.wide(col("v6"))).as("s"),
+        sum(Det.wide(col("v6") * col("v6"))).as("s2"))
     val varNum = (col("s2").cast("double")
       - col("s").cast("double") * col("s").cast("double") / col("n"))
     val adv = (col("v6").cast("double") - col("s").cast("double") / col("n")) /
@@ -3176,7 +3165,7 @@ object LlmOps extends QueryPack {
         (col("v6").cast("double") / 1000000).as("reward"),
         col("n").cast("long").as("n_group"),
         when(col("n") < 2 || varNum <= 0, lit(0.0).cast("double"))
-          .otherwise(floor(adv * 1000000 + lit(0.5)) / 1000000).as("advantage"))
+          .otherwise(Det.quant(adv, 6)).as("advantage"))
       .orderBy("group_id", "sample_id")
   }
 
@@ -3341,7 +3330,7 @@ object LlmOps extends QueryPack {
     val scored = broadcast(p).crossJoin(c)
       .filter(col("probe_id") =!= col("vec_id"))
       .select(col("probe_id"), col("plabel"), col("vec_id"), col("label"),
-        floor(round(Sim.cosine(col("pe"), col("ce")), 4) * 10000 + lit(0.5))
+        Det.fix(round(Sim.cosine(col("pe"), col("ce")), 4), 4)
           .cast("long").as("su"))
     val wp = Window.partitionBy("probe_id")
     val pos = scored.filter(col("label") === col("plabel"))
@@ -3398,7 +3387,7 @@ object LlmOps extends QueryPack {
       .select(col("id_a"), col("id_b"))
     val tp = pred.join(truth, Seq("id_a", "id_b"), "left_semi")
     val q6 = (c: org.apache.spark.sql.Column) =>
-      floor(c * 1000000 + lit(0.5)).cast("double") / 1000000
+      Det.quant(c, 6)
     truth.agg(count(lit(1)).cast("long").as("n_truth"))
       .crossJoin(broadcast(pred.agg(count(lit(1)).cast("long").as("n_pred"))))
       .crossJoin(broadcast(tp.agg(count(lit(1)).cast("long").as("n_tp"))))
@@ -3447,14 +3436,12 @@ object LlmOps extends QueryPack {
       .groupBy("lim")
       .agg(sum(when(col("toks") <= col("lim"), 1L).otherwise(0L)).cast("long")
           .as("n_fit"),
-        (floor(sum(when(col("toks") <= col("lim"), 1L).otherwise(0L))
-          .cast("double") / max("n_docs").cast("double") * 1000000 + lit(0.5))
-          .cast("double") / 1000000).as("pct_fit"),
+        Det.quant(sum(when(col("toks") <= col("lim"), 1L).otherwise(0L))
+          .cast("double") / max("n_docs").cast("double"), 6).as("pct_fit"),
         sum(when(col("toks") > col("lim"), col("toks") - col("lim"))
           .otherwise(0L)).cast("long").as("tokens_lost"),
-        (floor(sum(when(col("toks") > col("lim"), col("toks") - col("lim"))
-          .otherwise(0L)).cast("double") / max("n_toks").cast("double")
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("pct_tokens_lost"))
+        Det.quant(sum(when(col("toks") > col("lim"), col("toks") - col("lim"))
+          .otherwise(0L)).cast("double") / max("n_toks").cast("double"), 6).as("pct_tokens_lost"))
       .select(col("lim").as("context_limit"), col("n_fit"), col("pct_fit"),
         col("tokens_lost"), col("pct_tokens_lost"))
       .orderBy("context_limit")
@@ -3491,11 +3478,10 @@ object LlmOps extends QueryPack {
       .agg(sum("cnt").cast("long").as("n_tokens"),
         count(lit(1)).cast("long").as("vocab"),
         sum(when(col("cnt") === 1, 1L).otherwise(0L)).cast("long").as("hapax"),
-        (floor(sum(when(col("cnt") === 1, 1L).otherwise(0L)).cast("double")
-          / count(lit(1)) * 1000000 + lit(0.5)).cast("double") / 1000000)
+        Det.quant(sum(when(col("cnt") === 1, 1L).otherwise(0L)).cast("double")
+          / count(lit(1)), 6)
           .as("hapax_ratio"),
-        (floor(count(lit(1)).cast("double") / sum("cnt").cast("double")
-          * 1000000 + lit(0.5)).cast("double") / 1000000)
+        Det.quant(count(lit(1)).cast("double") / sum("cnt").cast("double"), 6)
           .as("type_token_ratio"))
       .orderBy("source")
   }
@@ -3697,10 +3683,9 @@ object LlmOps extends QueryPack {
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum("words").cast("long").as("words"),
         sum("toks").cast("long").as("tokens"),
-        (floor(sum("toks").cast("double") / sum("words") * 1000000 + lit(0.5))
-          / 1000000).as("tokens_per_word"),
-        (floor(sum(col("chars").cast("long")).cast("double") / sum("toks")
-          * 1000000 + lit(0.5)) / 1000000).as("chars_per_token"))
+        Det.quant(sum("toks").cast("double") / sum("words"), 6).as("tokens_per_word"),
+        Det.quant(sum(col("chars").cast("long")).cast("double") / sum("toks"),
+          6).as("chars_per_token"))
       .orderBy("lang", "source")
   }
 
@@ -3759,8 +3744,8 @@ object LlmOps extends QueryPack {
       .join(broadcast(sz.select(col("source").as("src2"), col("n").as("nb"))), "src2")
       .select(col("src1"), col("src2"), col("inter").cast("long").as("inter"),
         (col("na") + col("nb") - col("inter")).cast("long").as("uni"),
-        (floor(col("inter").cast("double") / (col("na") + col("nb") - col("inter"))
-          * 1000000 + lit(0.5)) / 1000000).as("jaccard"))
+        Det.quant(col("inter").cast("double") / (col("na") + col("nb") - col("inter")),
+          6).as("jaccard"))
       .orderBy("src1", "src2")
   }
 
@@ -3847,7 +3832,6 @@ object LlmOps extends QueryPack {
       |  floor((SELECT MAX(abs(CAST(s AS DOUBLE))) FROM dims)
       |        / 1000000 / n * 1000000 + 0.5) / 1000000 AS max_dim_bias
       |FROM tot""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val e = Tables(s, dir, "embeddings")
       .select(col("vec_id"), Sim.asDouble(col("embedding")).as("v"))
     val nrm = e.withColumn("nv",
@@ -3855,21 +3839,19 @@ object LlmOps extends QueryPack {
     val qn = nrm.select(col("vec_id"), col("nv"),
         posexplode(col("v")).as(Seq("dim0", "x")))
       .select((col("dim0") + 1).as("dim"),
-        floor(col("x") / col("nv") * 1000000 + lit(0.5)).cast("long").as("q"))
+        Det.fix(col("x") / col("nv"), 6).cast("long").as("q"))
     val dims = qn.groupBy("dim")
-      .agg(sum("q").as("s"), sum(col("q").cast(dec38) * col("q")).as("t"))
+      .agg(sum("q").as("s"), sum(Det.wide(col("q")) * col("q")).as("t"))
       .transform(PlanMemo.pin)
     val tot = dims.groupBy()
-      .agg(sum(col("s").cast(dec38) * col("s")).as("p"), sum("t").as("t"))
+      .agg(sum(Det.wide(col("s")) * col("s")).as("p"), sum("t").as("t"))
     val n = e.groupBy().agg(count(lit(1)).as("n"))
     val mx = dims.groupBy().agg(max(abs(col("s").cast("double"))).as("ms"))
     tot.crossJoin(broadcast(n)).crossJoin(broadcast(mx))
       .select(col("n").cast("long").as("n"),
-        (floor((col("p").cast("double") - col("t").cast("double")) / 1e12
-          / (col("n").cast("double") * (col("n") - 1)) * 100000000 + lit(0.5))
-          / 100000000).as("mean_pairwise_cos"),
-        (floor(col("ms") / 1000000 / col("n") * 1000000 + lit(0.5))
-          / 1000000).as("max_dim_bias"))
+        Det.quant((col("p").cast("double") - col("t").cast("double")) / 1e12
+          / (col("n").cast("double") * (col("n") - 1)), 8).as("mean_pairwise_cos"),
+        Det.quant(col("ms") / 1000000 / col("n"), 6).as("max_dim_bias"))
   }
 
   // KL divergence between the natural source mix and its
@@ -3918,16 +3900,16 @@ object LlmOps extends QueryPack {
         exp((col("tau10").cast("double") / 10) * log(col("n").cast("double")))
           .as("w"))
     val z = pw.groupBy("tau10")
-      .agg(sum(floor(col("w") * 1000000 + lit(0.5)).cast("long")).as("zfix"))
+      .agg(sum(Det.fix(col("w"), 6).cast("long")).as("zfix"))
     val p = col("n").cast("double") / col("total")
-    val q = floor(col("w") * 1000000 + lit(0.5)) / col("zfix").cast("double")
+    val q = Det.fix(col("w"), 6) / col("zfix").cast("double")
     val terms = pw.join(broadcast(z), "tau10").crossJoin(broadcast(t))
       .select(col("tau10"),
-        floor(p * log(p / q) * 100000000 + lit(0.5)).cast("long").as("kfix"))
+        Det.fix(p * log(p / q), 8).cast("long").as("kfix"))
     terms.groupBy("tau10")
-      .agg((floor(sum("kfix").cast("double") / 100 + lit(0.5)) / 1000000)
+      .agg((Det.half(sum("kfix").cast("double") / 100) / 1000000)
         .as("kl_nats"))
-      .select((floor(col("tau10").cast("double") / 10 * 10 + lit(0.5)) / 10)
+      .select(Det.quant(col("tau10").cast("double") / 10, 1)
         .as("tau"), col("kl_nats"))
       .orderBy("tau")
   }
@@ -3973,7 +3955,7 @@ object LlmOps extends QueryPack {
       .select(when(col("vec_id") * 2 < col("cnt"), 0).otherwise(1).as("h"),
         posexplode(Sim.asDouble(col("embedding"))).as(Seq("dim0", "e")))
       .select(col("h"), (col("dim0") + 1).as("dim"),
-        floor(col("e") * 1000000 + lit(0.5)).cast("long").as("q"))
+        Det.fix(col("e"), 6).cast("long").as("q"))
     val m = half.groupBy("h", "dim")
       .agg(count(lit(1)).as("n"), sum("q").as("s"))
     val a = m.filter(col("h") === 0)
@@ -3984,15 +3966,14 @@ object LlmOps extends QueryPack {
       col("sa").cast("double") / 1000000 / col("na")
     val d = a.join(b, "dim").select(col("dim"), delta.as("delta"))
     val agg = d.groupBy().agg(
-      sum(floor(col("delta") * col("delta") * 1000000000000L + lit(0.5))
+      sum(Det.fix(col("delta") * col("delta"), 12)
         .cast("long")).as("ss"),
-      max(floor(abs(col("delta")) * 1000000 + lit(0.5)).cast("long")).as("mx"),
+      max(Det.fix(abs(col("delta")), 6).cast("long")).as("mx"),
       max_by(col("dim"),
-        floor(abs(col("delta")) * 1000000 + lit(0.5)).cast("long") * 1000
+        Det.fix(abs(col("delta")), 6).cast("long") * 1000
           - col("dim")).as("mxdim"))
     agg.select(
-      (floor(sqrt(col("ss").cast("double") / 1000000000000L) * 1000000
-        + lit(0.5)) / 1000000).as("centroid_shift"),
+      Det.quant(sqrt(col("ss").cast("double") / 1000000000000L), 6).as("centroid_shift"),
       (col("mx").cast("double") / 1000000).as("max_dim_shift"),
       col("mxdim").cast("int").as("max_shift_dim"))
   }
@@ -4029,8 +4010,8 @@ object LlmOps extends QueryPack {
     src.crossJoin(broadcast(t))
       .withColumn("epoch", explode(sequence(lit(0), lit(3))))
       .select(col("epoch").cast("long").as("epoch"), col("source"),
-        (floor(w * 1000000 + lit(0.5)) / 1000000).as("weight"),
-        floor(w * col("total") + lit(0.5)).cast("long").as("expected_docs"))
+        Det.quant(w, 6).as("weight"),
+        Det.half(w * col("total")).cast("long").as("expected_docs"))
       .orderBy("epoch", "source")
   }
 
@@ -4178,8 +4159,8 @@ object LlmOps extends QueryPack {
     rem.join(nt, "doc_id")
       .select(col("doc_id"), col("n_tokens"), col("removed_tokens"),
         col("n_intervals"),
-        (floor((col("n_tokens") - col("removed_tokens")).cast("double")
-          / col("n_tokens") * 1000000 + lit(0.5)) / 1000000).as("kept_ratio"))
+        Det.quant((col("n_tokens") - col("removed_tokens")).cast("double")
+          / col("n_tokens"), 6).as("kept_ratio"))
       .orderBy("doc_id")
   }
 
@@ -4354,18 +4335,16 @@ object LlmOps extends QueryPack {
         .otherwise(0L)).cast("long").as("s"),
         count(lit(1)).as("n"))
     val sq = ds.select(col("source"),
-      floor(col("s").cast("double") / col("n") * 1000000 + lit(0.5))
+      Det.fix(col("s").cast("double") / col("n"), 6)
         .cast("long").as("s6"),
       when(col("s") > 0, 1L).otherwise(0L).as("pos"),
       when(col("s") < 0, 1L).otherwise(0L).as("neg"))
     sq.groupBy("source")
       .agg(count(lit(1)).cast("long").as("n_docs"),
-        (floor(sum("s6").cast("double") / count(lit(1)) + lit(0.5))
+        (Det.half(sum("s6").cast("double") / count(lit(1)))
           / 1000000).as("mean_sentiment"),
-        (floor(sum("pos").cast("double") / count(lit(1)) * 1000000
-          + lit(0.5)) / 1000000).as("pos_frac"),
-        (floor(sum("neg").cast("double") / count(lit(1)) * 1000000
-          + lit(0.5)) / 1000000).as("neg_frac"))
+        Det.quant(sum("pos").cast("double") / count(lit(1)), 6).as("pos_frac"),
+        Det.quant(sum("neg").cast("double") / count(lit(1)), 6).as("neg_frac"))
       .orderBy("source")
   }
 
@@ -4399,22 +4378,19 @@ object LlmOps extends QueryPack {
       |    / (CAST(s AS DOUBLE) / n) * 1000000 + 0.5) AS DOUBLE) / 1000000
       |    AS fano
       |FROM a ORDER BY source""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val d = Tables(s, dir, "documents").select(col("source"),
       size(split(col("text"), " ")).cast("long").as("m"))
     val a = d.groupBy("source").agg(count(lit(1)).cast("long").as("n"),
-      sum("m").cast("decimal(38,0)").as("s"),
-      sum(dec(col("m")) * col("m")).as("q"))
-    val varNum = (dec(col("n")) * col("q") - col("s") * col("s"))
+      Det.wide(sum("m")).as("s"),
+      sum(Det.wide(col("m")) * col("m")).as("q"))
+    val varNum = (Det.wide(col("n")) * col("q") - col("s") * col("s"))
       .cast("double")
     val sd = sqrt(varNum) / col("n")
     val mu = col("s").cast("double") / col("n")
     a.select(col("source"), col("n"),
-      (floor(mu * 10000 + lit(0.5)).cast("double") / 10000).as("mean_tokens"),
-      (floor((sd - mu) / (sd + mu) * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("burstiness"),
-      (floor(varNum / col("n").cast("double") / col("n") / mu * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("fano"))
+      Det.quant(mu, 4).as("mean_tokens"),
+      Det.quant((sd - mu) / (sd + mu), 6).as("burstiness"),
+      Det.quant(varNum / col("n").cast("double") / col("n") / mu, 6).as("fano"))
       .orderBy("source")
   }
 
@@ -4455,15 +4431,11 @@ object LlmOps extends QueryPack {
       keep("[^A-Za-z]").as("latin"), keep("[^0-9]").as("digit"),
       keep("[^一-鿿]").as("cjk"), keep("[^ ]").as("space"))
     f.groupBy("source").agg(sum("total").cast("long").as("n_chars"),
-      (floor(sum("latin").cast("double") / sum("total") * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("latin_frac"),
-      (floor(sum("digit").cast("double") / sum("total") * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("digit_frac"),
-      (floor(sum("cjk").cast("double") / sum("total") * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("cjk_frac"),
-      (floor(sum(col("total") - col("latin") - col("digit") - col("cjk")
-        - col("space")).cast("double") / sum("total") * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("other_frac"))
+      Det.quant(sum("latin").cast("double") / sum("total"), 6).as("latin_frac"),
+      Det.quant(sum("digit").cast("double") / sum("total"), 6).as("digit_frac"),
+      Det.quant(sum("cjk").cast("double") / sum("total"), 6).as("cjk_frac"),
+      Det.quant(sum(col("total") - col("latin") - col("digit") - col("cjk")
+        - col("space")).cast("double") / sum("total"), 6).as("other_frac"))
       .orderBy("source")
   }
 
@@ -4530,7 +4502,7 @@ object LlmOps extends QueryPack {
     val scale = lit(127.0) / greatest(
       array_max(transform(vcol, y => abs(y))), lit(0.000000000001))
     val e = emb.select(col("vec_id"), vcol.as("v"),
-      transform(vcol, x => floor(x * scale + lit(0.5)).cast("long")).as("q"))
+      transform(vcol, x => Det.half(x * scale).cast("long")).as("q"))
       .localCheckpoint()
     val p = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"),
@@ -4555,8 +4527,7 @@ object LlmOps extends QueryPack {
       sum(when(col("re") <= 10 && col("rq") <= 10, 1L).otherwise(0L))
         .cast("long").as("n_overlap"))
       .select(col("probe_id"), col("n_overlap"),
-        (floor(col("n_overlap").cast("double") / 10 * 1000000 + lit(0.5))
-          .cast("double") / 1000000).as("recall_at_10"))
+        Det.quant(col("n_overlap").cast("double") / 10, 6).as("recall_at_10"))
       .orderBy("probe_id")
   }
 
@@ -4597,9 +4568,8 @@ object LlmOps extends QueryPack {
       sum("violent").cast("long").as("n_violent"),
       sum("contact").cast("long").as("n_contact"),
       sum("spam").cast("long").as("n_spam"),
-      (floor(sum(when(col("violent") + col("contact") + col("spam") > 0, 1L)
-        .otherwise(0L)).cast("double") / count(lit(1)) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("flag_rate"))
+      Det.quant(sum(when(col("violent") + col("contact") + col("spam") > 0, 1L)
+        .otherwise(0L)).cast("double") / count(lit(1)), 6).as("flag_rate"))
       .orderBy("source")
   }
 
@@ -4676,7 +4646,7 @@ object LlmOps extends QueryPack {
       row_number().over(Window.partitionBy("probe_id")
         .orderBy(col("cos").desc, col("vec_id"))).as("rn"))
     def w9(i: org.apache.spark.sql.Column) =
-      floor(lit(1000000000L) / log2((i + 1).cast("double")) + lit(0.5))
+      Det.half(lit(1000000000L) / log2((i + 1).cast("double")))
         .cast("long")
     val agg9 = rk.groupBy("probe_id").agg(
       sum("rel").cast("long").as("n_rel"),
@@ -4697,8 +4667,7 @@ object LlmOps extends QueryPack {
     ideal.select(col("probe_id"), col("n_rel"),
       (col("dcg9").cast("double") / 1000000000L).as("dcg10"),
       when(col("n_rel") === 0, lit(null).cast("double"))
-        .otherwise(floor(col("dcg9").cast("double") / col("idcg9") * 1000000
-          + lit(0.5)).cast("double") / 1000000).as("ndcg10"))
+        .otherwise(Det.quant(col("dcg9").cast("double") / col("idcg9"), 6)).as("ndcg10"))
       .orderBy("probe_id")
   }
 
@@ -4743,7 +4712,6 @@ object LlmOps extends QueryPack {
       |    / CAST(n * syy - sy * sy AS DOUBLE) * 1000000 + 0.5) AS DOUBLE)
       |    / 1000000 AS r2
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val pt = Tables(s, dir, "documents")
       .select(col("source"),
         explode(split(lower(col("text")), " ")).as("token"))
@@ -4751,25 +4719,23 @@ object LlmOps extends QueryPack {
       .agg(Det.lnFix(count(lit(1)), 9).as("x"),
         Det.lnFix(countDistinct(col("token")), 9).as("y"))
     val m = pt.agg(count(lit(1)).cast("long").as("n"),
-      sum("x").cast("decimal(38,0)").as("sx"),
-      sum("y").cast("decimal(38,0)").as("sy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("x")) * col("y")).as("sxy"),
-      sum(dec(col("y")) * col("y")).as("syy"))
-    val num = (dec(col("n")) * col("sxy") - col("sx") * col("sy"))
+      Det.wide(sum("x")).as("sx"),
+      Det.wide(sum("y")).as("sy"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"),
+      sum(Det.wide(col("x")) * col("y")).as("sxy"),
+      sum(Det.wide(col("y")) * col("y")).as("syy"))
+    val num = (Det.wide(col("n")) * col("sxy") - col("sx") * col("sy"))
       .cast("double")
-    val den = (dec(col("n")) * col("sxx") - col("sx") * col("sx"))
+    val den = (Det.wide(col("n")) * col("sxx") - col("sx") * col("sx"))
       .cast("double")
-    val deny = (dec(col("n")) * col("syy") - col("sy") * col("sy"))
+    val deny = (Det.wide(col("n")) * col("syy") - col("sy") * col("sy"))
       .cast("double")
     m.select(col("n").as("n_points"),
-      (floor(num / den * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(num / den, 6)
         .as("beta"),
-      (floor(exp((col("sy").cast("double") - num / den
-        * col("sx").cast("double")) / col("n") / 1000000000L) * 10000
-        + lit(0.5)).cast("double") / 10000).as("k_coef"),
-      (floor(num * num / den / deny * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("r2"))
+      Det.quant(exp((col("sy").cast("double") - num / den
+        * col("sx").cast("double")) / col("n") / 1000000000L), 4).as("k_coef"),
+      Det.quant(num * num / den / deny, 6).as("r2"))
   }
 
   // Prompt-prefix cache economics: how much of the corpus shares its
@@ -4807,8 +4773,7 @@ object LlmOps extends QueryPack {
       max("c").cast("long").as("max_group"),
       sum(when(col("c") === 1, 1L).otherwise(0L)).cast("long")
         .as("singletons"),
-      (floor((lit(1) - count(lit(1)).cast("double") / sum("c")) * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("cache_hit_rate"))
+      Det.quant(lit(1) - count(lit(1)).cast("double") / sum("c"), 6).as("cache_hit_rate"))
   }
 
   // Reciprocal-rank fusion of two retrieval rankings (cosine and raw
@@ -4880,8 +4845,7 @@ object LlmOps extends QueryPack {
       row_number().over(Window.partitionBy("probe_id")
         .orderBy(col("dot").desc, col("vec_id"))).as("rb"))
     val fused = rk.withColumn("rrf9",
-      floor((lit(1.0) / (col("ra") + 60) + lit(1.0) / (col("rb") + 60))
-        * 1000000000L + lit(0.5)).cast("long"))
+      Det.fix(lit(1.0) / (col("ra") + 60) + lit(1.0) / (col("rb") + 60), 9).cast("long"))
     fused.withColumn("rn", row_number().over(Window.partitionBy("probe_id")
         .orderBy(col("rrf9").desc, col("vec_id"))))
       .filter(col("rn") <= 10)
@@ -4972,7 +4936,6 @@ object LlmOps extends QueryPack {
        |  JOIN r3 ON s.source = r3.source
        |ORDER BY strength DESC, s.source""".stripMargin
   }) { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val docs = Tables(s, dir, "documents")
       .select(col("lang"), col("n_chars").cast("long").as("v"), col("source"))
     // ONE corpus-scale eager job: the (lang, value, source) histogram.
@@ -4995,7 +4958,7 @@ object LlmOps extends QueryPack {
       .join(cum.select(col("lang"), col("v"), col("source").as("j"),
         col("cb")), Seq("lang", "v"))
       .filter(col("i") =!= col("j"))
-      .groupBy("i", "j").agg(sum(dec(col("c")) * col("cb")).as("wij"))
+      .groupBy("i", "j").agg(sum(Det.wide(col("c")) * col("cb")).as("wij"))
     // The MM fixed point runs on the DRIVER (r9 ask #2, taken to its
     // conclusion): the win matrix is |S|²-bounded with |S| a CATALOG
     // dimension (sources), so after the one distributed reduction the fit
@@ -5088,19 +5051,16 @@ object LlmOps extends QueryPack {
       |    / CAST(SUM(cnt) AS DOUBLE) / (CAST(SUM(cnt) AS DOUBLE) - 1)
       |    * 1000000000 + 0.5) AS DOUBLE) / 1000000000 AS simpson_d
       |FROM c GROUP BY source ORDER BY source""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     // session-memoized (source, term, c) rollup — shared with text_source_kl
     val c = TextOps.srcTermCounts(s, dir)
       .select(col("source"), col("c").cast("long").as("cnt"))
-    val m2 = sum(dec(col("cnt")) * col("cnt")).cast("double")
+    val m2 = sum(Det.wide(col("cnt")) * col("cnt")).cast("double")
     val n = sum("cnt").cast("double")
     c.groupBy("source")
       .agg(sum("cnt").cast("long").as("n_tokens"),
         count(lit(1)).cast("long").as("vocab"),
-        (floor((m2 - n) / n / n * 10000 * 1000000 + lit(0.5))
-          .cast("double") / 1000000).as("yule_k"),
-        (floor((m2 - n) / n / (n - 1) * 1000000000L + lit(0.5))
-          .cast("double") / 1000000000L).as("simpson_d"))
+        Det.quant((m2 - n) / n / n * 10000, 6).as("yule_k"),
+        Det.quant((m2 - n) / n / (n - 1), 9).as("simpson_d"))
       .orderBy("source")
   }
 }

@@ -793,20 +793,18 @@ object QualityOps extends QueryPack {
       |    - CAST(slnn AS DOUBLE) / 100000000 / nt) * 10000 + 0.5) AS DOUBLE)
       |    / 10000 AS effective_classes
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val c = Tables(s, dir, "embeddings").groupBy("label")
       .agg(count(lit(1)).cast("long").as("n"))
     val m = c.agg(sum("n").cast("long").as("nt"),
       count(lit(1)).cast("long").as("n_classes"),
       max("n").cast("long").as("max_n"), min("n").cast("long").as("min_n"),
-      sum(dec(col("n")) * Det.lnFix(col("n"), 8)).as("slnn"))
+      sum(Det.wide(col("n")) * Det.lnFix(col("n"), 8)).as("slnn"))
     val h = (Det.lnFix(col("nt"), 8).cast("double") / 100000000L
       - col("slnn").cast("double") / 100000000L / col("nt"))
     m.select(col("nt").as("n_vectors"), col("n_classes"), col("max_n"),
       col("min_n"),
-      (floor(col("max_n").cast("double") / col("min_n") * 10000 + lit(0.5))
-        .cast("double") / 10000).as("imbalance_ratio"),
-      (floor(exp(h) * 10000 + lit(0.5)).cast("double") / 10000)
+      Det.quant(col("max_n").cast("double") / col("min_n"), 4).as("imbalance_ratio"),
+      Det.quant(exp(h), 4)
         .as("effective_classes"))
   }
 
@@ -831,10 +829,10 @@ object QualityOps extends QueryPack {
     val t = d.groupBy().agg(sum(col("cnt")).as("n"))
     d.crossJoin(broadcast(t))
       .select(col("digit"), col("cnt").cast("long").as("n_obs"),
-        (floor(col("cnt").cast("double") / col("n") * 10000 + lit(0.5)) / 10000)
+        Det.quant(col("cnt").cast("double") / col("n"), 4)
           .as("obs_frac"),
-        (floor(log10(lit(1) + lit(1) / col("digit").cast("int").cast("double"))
-          * 10000 + lit(0.5)) / 10000).as("exp_frac"))
+        Det.quant(log10(lit(1) + lit(1) / col("digit").cast("int").cast("double")),
+          4).as("exp_frac"))
       .orderBy("digit")
   }
 
@@ -1041,7 +1039,7 @@ object QualityOps extends QueryPack {
       .dims(Tables(s, dir, "embeddings").filter(col("vec_id") < 60),
         "vec_id", "embedding")
       .select(col("vec_id"), col("dim").as("j"),
-        floor(col("e") * 1000000 + lit(0.5)).cast("long").as("x6"))
+        Det.fix(col("e"), 6).cast("long").as("x6"))
     // sign = a HIGH bit of the mixed product: taking the low bit of
     // (odd*d + odd*j) degenerates to parity(d + j) — a stripe pattern,
     // not a random matrix (caught by the JL-concentration spec)
@@ -1070,8 +1068,8 @@ object QualityOps extends QueryPack {
         / col("do2").cast("double")).as("ratio"))
     r.groupBy(floor(col("ratio") * 10).cast("long").as("bucket"))
       .agg(count(lit(1)).cast("long").as("n_pairs"),
-        (floor(min("ratio") * 10000 + lit(0.5)) / 10000).as("min_ratio"),
-        (floor(max("ratio") * 10000 + lit(0.5)) / 10000).as("max_ratio"))
+        Det.quant(min("ratio"), 4).as("min_ratio"),
+        Det.quant(max("ratio"), 4).as("max_ratio"))
       .orderBy("bucket")
   }
 
@@ -1244,8 +1242,7 @@ object QualityOps extends QueryPack {
       .filter(col("rn") <= 2)
       .select(col("cid"), col("rn").cast("long").as("rank"), col("source"),
         col("n").cast("long").as("n_docs"),
-        (floor(col("n").cast("double") / col("cn") * 1000000 + lit(0.5))
-          / 1000000).as("share"))
+        Det.quant(col("n").cast("double") / col("cn"), 6).as("share"))
       .orderBy("cid", "rank")
   }
 
@@ -1272,12 +1269,11 @@ object QualityOps extends QueryPack {
       |      / sqrt((CAST(s2 AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n)
       |             / (n - 1)) > 2
       |ORDER BY vec_id""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val a = graft.ops.Linalg
       .kmeansAssign(Tables(s, dir, "embeddings"), "vec_id", "embedding", 8, 3)
     val st = a.groupBy("cid")
-      .agg(count(lit(1)).as("n"), sum(col("d2").cast(dec38)).as("s"),
-        sum((col("d2") * col("d2")).cast(dec38)).as("s2"))
+      .agg(count(lit(1)).as("n"), sum(Det.wide(col("d2"))).as("s"),
+        sum(Det.wide(col("d2") * col("d2"))).as("s2"))
     val z = (col("d2") - col("s").cast("double") / col("n")) /
       sqrt((col("s2").cast("double")
         - col("s").cast("double") * col("s").cast("double") / col("n"))
@@ -1286,7 +1282,7 @@ object QualityOps extends QueryPack {
       .filter(z > 2)
       .select(col("vec_id"), col("cid"),
         (col("d2").cast("double") / 100000000L).as("dist2"),
-        (floor(z * 10000 + lit(0.5)) / 10000).as("z"))
+        Det.quant(z, 4).as("z"))
       .orderBy("vec_id")
   }
 
@@ -1338,12 +1334,11 @@ object QualityOps extends QueryPack {
     val dims = graft.ops.Linalg.dims(emb, "vec_id", "embedding")
     val c3 = asg.select(col("vec_id"), col("cid")).join(dims, "vec_id")
       .groupBy("cid", "dim")
-      .agg((floor(sum(Det.fix(col("e"), 6)).cast("double")
-        / count(lit(1)) + lit(0.5)) / 1000000).as("m"))
+      .agg((Det.half(sum(Det.fix(col("e"), 6)).cast("double")
+        / count(lit(1))) / 1000000).as("m"))
     val a4 = dims.join(broadcast(c3.withColumnRenamed("cid", "acid")), "dim")
       .select(col("vec_id"), col("acid"),
-        floor((col("e") - col("m")) * (col("e") - col("m")) * 100000000L
-          + lit(0.5)).as("dd"))
+        Det.fix((col("e") - col("m")) * (col("e") - col("m")), 8).as("dd"))
       .groupBy("vec_id", "acid").agg(sum("dd").as("d2"))
     val ab = a4.join(asg.select(col("vec_id"), col("cid")), "vec_id")
       .groupBy("vec_id", "cid")
@@ -1351,14 +1346,13 @@ object QualityOps extends QueryPack {
         min(when(col("acid") =!= col("cid"), col("d2"))).as("b"))
     val sil = ab.select(col("cid"),
       when(greatest(col("a"), col("b")) === 0, lit(0L))
-        .otherwise(floor((sqrt(col("b").cast("double"))
+        .otherwise(Det.fix((sqrt(col("b").cast("double"))
           - sqrt(col("a").cast("double")))
           / greatest(sqrt(col("a").cast("double")),
-            sqrt(col("b").cast("double")))
-          * 1000000 + lit(0.5)).cast("long")).as("s6"))
+            sqrt(col("b").cast("double"))), 6).cast("long")).as("s6"))
     sil.groupBy("cid")
       .agg(count(lit(1)).cast("long").as("n"),
-        (floor(sum("s6").cast("double") / count(lit(1)) + lit(0.5))
+        (Det.half(sum("s6").cast("double") / count(lit(1)))
           / 1000000).as("mean_silhouette"))
       .orderBy("cid")
   }
@@ -1599,7 +1593,7 @@ object QualityOps extends QueryPack {
       .pcaTop(Tables(s, dir, "embeddings"), "vec_id", "embedding", 3)
     v.crossJoin(broadcast(lastNrm))
       .select(col("j").cast("int").as("dim"), col("v").as("loading"),
-        (floor(col("nrm") * lit(1000000L) + lit(0.5)) / lit(1000000L))
+        Det.quant(col("nrm"), 6)
           .as("eigenvalue"))
       .orderBy("dim")
   }
@@ -1645,7 +1639,7 @@ object QualityOps extends QueryPack {
       .pcaSecond(Tables(s, dir, "embeddings"), "vec_id", "embedding", 3)
     v2.crossJoin(broadcast(n2))
       .select(col("j").cast("int").as("dim"), col("v").as("loading"),
-        (floor(col("nrm") * lit(1000000L) + lit(0.5)) / lit(1000000L))
+        Det.quant(col("nrm"), 6)
           .as("eigenvalue2"))
       .orderBy("dim")
   }
@@ -1681,21 +1675,17 @@ object QualityOps extends QueryPack {
     val withV = dims.join(broadcast(v.select(col("j").as("dim"), col("v"))), "dim")
     val pr = withV
       .select(col("vec_id"),
-        floor(col("e") * col("v") * lit(1000000000000L) + lit(0.5)).as("t"))
+        Det.fix(col("e") * col("v"), 12).as("t"))
       .groupBy("vec_id")
-      .agg((floor(sum("t").cast("double") / lit(1000000000000L) * lit(1000000L)
-        + lit(0.5)) / lit(1000000L)).as("p"))
+      .agg(Det.quant(sum("t").cast("double") / lit(1000000000000L), 6).as("p"))
     withV.join(pr, "vec_id")
       .select(col("vec_id"), col("p"),
-        floor(col("e") * col("e") * lit(1000000000000L) + lit(0.5)).as("nb"),
-        floor((col("e") - col("p") * col("v")) * (col("e") - col("p") * col("v"))
-          * lit(1000000000000L) + lit(0.5)).as("na"))
+        Det.fix(col("e") * col("e"), 12).as("nb"),
+        Det.fix((col("e") - col("p") * col("v")) * (col("e") - col("p") * col("v")), 12).as("na"))
       .groupBy("vec_id", "p")
       .agg(
-        (floor(sqrt(sum("nb").cast("double") / lit(1000000000000L))
-          * lit(10000L) + lit(0.5)) / lit(10000L)).as("norm_before"),
-        (floor(sqrt(sum("na").cast("double") / lit(1000000000000L))
-          * lit(10000L) + lit(0.5)) / lit(10000L)).as("norm_after"))
+        Det.quant(sqrt(sum("nb").cast("double") / lit(1000000000000L)), 4).as("norm_before"),
+        Det.quant(sqrt(sum("na").cast("double") / lit(1000000000000L)), 4).as("norm_after"))
       .select(col("vec_id"), col("p").as("proj"),
         col("norm_before"), col("norm_after"))
       .orderBy("vec_id")
@@ -1743,7 +1733,6 @@ object QualityOps extends QueryPack {
       |    AS DOUBLE) / 1000000 > 0.1 THEN 1 ELSE 0 END AS INT) AS drifted
       |FROM sc WHERE rn = 1 AND tot1 > 0 AND tot2 > 0
       |ORDER BY event_type""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events")
     val mn = ev.agg(min("ts").as("t0"))
     val b = ev.crossJoin(broadcast(mn))
@@ -1760,10 +1749,9 @@ object QualityOps extends QueryPack {
       .withColumn("tot1", sum("c1").over(p))
       .withColumn("tot2", sum("c2").over(p))
       .withColumn("num",
-        abs(dec(col("cum1")) * col("tot2") - dec(col("cum2")) * col("tot1")))
-    val ksd = floor(col("num").cast("double")
-      / (col("tot1").cast("double") * col("tot2").cast("double"))
-      * 1000000 + lit(0.5)).cast("double") / 1000000
+        abs(Det.wide(col("cum1")) * col("tot2") - Det.wide(col("cum2")) * col("tot1")))
+    val ksd = Det.quant(col("num").cast("double")
+      / (col("tot1").cast("double") * col("tot2").cast("double")), 6)
     h2.withColumn("rn",
         row_number().over(p.orderBy(col("num").desc, col("v"))))
       // a type living entirely on one side of the split has no two-sample
@@ -1909,14 +1897,11 @@ object QualityOps extends QueryPack {
     g.agg(sum("k").cast("long").as("n_rows"),
         count(lit(1)).cast("long").as("n_groups"),
         min("k").cast("long").as("min_k"),
-        (floor(sum(when(col("k") < 5, col("k")).otherwise(0L)).cast("double")
-          / sum("k").cast("double") * 1000000 + lit(0.5)).cast("double")
-          / 1000000).as("pct_rows_k_lt5"),
-        (floor(sum(when(col("k") < 10, col("k")).otherwise(0L)).cast("double")
-          / sum("k").cast("double") * 1000000 + lit(0.5)).cast("double")
-          / 1000000).as("pct_rows_k_lt10"),
-        (floor(sum("k").cast("double") / count(lit(1)) * 10000 + lit(0.5))
-          .cast("double") / 10000).as("avg_k"))
+        Det.quant(sum(when(col("k") < 5, col("k")).otherwise(0L)).cast("double")
+          / sum("k").cast("double"), 6).as("pct_rows_k_lt5"),
+        Det.quant(sum(when(col("k") < 10, col("k")).otherwise(0L)).cast("double")
+          / sum("k").cast("double"), 6).as("pct_rows_k_lt10"),
+        Det.quant(sum("k").cast("double") / count(lit(1)), 4).as("avg_k"))
   }
 
   // l-diversity companion to the k-anonymity audit: within each
@@ -1951,8 +1936,7 @@ object QualityOps extends QueryPack {
         min("l").cast("long").as("min_l"),
         sum(when(col("l") < 2, 1L).otherwise(0L)).cast("long").as("groups_l_lt2"),
         sum(when(col("l") < 3, 1L).otherwise(0L)).cast("long").as("groups_l_lt3"),
-        (floor(sum("l").cast("double") / count(lit(1)) * 10000 + lit(0.5))
-          .cast("double") / 10000).as("avg_l"))
+        Det.quant(sum("l").cast("double") / count(lit(1)), 4).as("avg_l"))
   }
 
   // Cross-TABLE expectation rules — the consistency checks single-table
@@ -2067,22 +2051,20 @@ object QualityOps extends QueryPack {
     val v = Tables(s, dir, "embeddings")
       .select(col("label"), bucket.as("bucket"))
     val ct = v.groupBy("bucket", "label").agg(count(lit(1)).as("c"))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val s2 = ct.agg(
-      sum(dec(col("c")) * (col("c") - 1)).cast("double").as("s2"),
+      sum(Det.wide(col("c")) * (col("c") - 1)).cast("double").as("s2"),
       sum("c").cast("long").as("n"),
       countDistinct("bucket").cast("long").as("n_buckets"),
       countDistinct("label").cast("long").as("n_labels"))
     val a2 = ct.groupBy("bucket").agg(sum("c").as("a"))
-      .agg(sum(dec(col("a")) * (col("a") - 1)).cast("double").as("a2"))
+      .agg(sum(Det.wide(col("a")) * (col("a") - 1)).cast("double").as("a2"))
     val b2 = ct.groupBy("label").agg(sum("c").as("b"))
-      .agg(sum(dec(col("b")) * (col("b") - 1)).cast("double").as("b2"))
+      .agg(sum(Det.wide(col("b")) * (col("b") - 1)).cast("double").as("b2"))
     val t2 = col("n").cast("double") * (col("n") - 1)
     val exp = col("a2") * col("b2") / t2
     s2.crossJoin(broadcast(a2)).crossJoin(broadcast(b2))
       .select(col("n"), col("n_buckets"), col("n_labels"),
-        (floor((col("s2") - exp) / ((col("a2") + col("b2")) / 2 - exp)
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("ari"))
+        Det.quant((col("s2") - exp) / ((col("a2") + col("b2")) / 2 - exp), 6).as("ari"))
   }
 
   // Per-partition (per-day) incremental checksums — dq_checksum_table's
@@ -2103,16 +2085,15 @@ object QualityOps extends QueryPack {
       |    AS BIGINT) AS VARCHAR)), 1, 8)) AS BIGINT) AS HUGEINT))
       |    % 2305843009213693951 AS BIGINT) AS ck_value
       |FROM events GROUP BY 1 ORDER BY day""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     def h(c: org.apache.spark.sql.Column) =
       conv(substring(md5(c.cast("string").cast("binary")), 1, 8), 16, 10)
         .cast("long")
     Tables(s, dir, "events")
       .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
       .agg(count(lit(1)).cast("long").as("n_rows"),
-        (sum(h(col("event_id")).cast(dec38)) % lit(2305843009213693951L))
+        (sum(Det.wide(h(col("event_id")))) % lit(2305843009213693951L))
           .cast("long").as("ck_event"),
-        (sum(h(Det.cents(col("value")).cast("long")).cast(dec38))
+        (sum(Det.wide(h(Det.cents(col("value")).cast("long"))))
           % lit(2305843009213693951L)).cast("long").as("ck_value"))
       .orderBy("day")
   }
@@ -2200,7 +2181,6 @@ object QualityOps extends QueryPack {
       |    / 1000000 / SUM(cs12) * 10000 + 0.5) AS DOUBLE) / 10000 AS heldout_nll
       |FROM j GROUP BY source
       |ORDER BY source""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val t = fan(Tables(s, dir, "documents").select(col("source"), col("text")))
       .select(col("source"), TextOps.tokens(lower(col("text"))).as("tk"))
       .filter(size(col("tk")) >= 2)
@@ -2217,16 +2197,15 @@ object QualityOps extends QueryPack {
     val gw = sw.groupBy("hw").agg(sum("cs1").cast("long").as("c1g"))
     val v = t.select(explode(col("tk")).as("w"))
       .agg(countDistinct(xxhash64(col("w"))).as("v"))
-    val term = (col("cs12") * (Det.lnFix(col("c1g") - col("cs1") + col("v"), 6)
-      - Det.lnFix(col("c12g") - col("cs12") + 1, 6))).cast(dec38)
+    val term = Det.wide(col("cs12") * (Det.lnFix(col("c1g") - col("cs1") + col("v"), 6)
+      - Det.lnFix(col("c12g") - col("cs12") + 1, 6)))
     sb.join(gb, "hb")
       .join(sw, Seq("source", "hw"))
       .join(gw, "hw")
       .crossJoin(broadcast(v))
       .groupBy("source")
       .agg(sum("cs12").cast("long").as("n_bigrams"),
-        (floor(sum(term).cast("double") / 1000000 / sum("cs12") * 10000
-          + lit(0.5)).cast("double") / 10000).as("heldout_nll"))
+        Det.quant(sum(term).cast("double") / 1000000 / sum("cs12"), 4).as("heldout_nll"))
       .orderBy("source")
   }
 
@@ -2263,12 +2242,12 @@ object QualityOps extends QueryPack {
     val t = d.select(size(col("tk")).cast("long").as("n_tok"),
       size(array_distinct(col("tk"))).cast("long").as("n_types"),
       expr("size(tk) div 50").cast("long").as("bucket"),
-      floor(size(array_distinct(col("tk"))).cast("double") / size(col("tk"))
-        * 1000000 + lit(0.5)).cast("long").as("ttr6"))
+      Det.fix(size(array_distinct(col("tk"))).cast("double") / size(col("tk")),
+        6).cast("long").as("ttr6"))
     t.groupBy(col("bucket").as("len_bucket"))
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum("n_tok").cast("long").as("n_tokens"),
-        (floor(sum("ttr6").cast("double") / count(lit(1)) + lit(0.5))
+        (Det.half(sum("ttr6").cast("double") / count(lit(1)))
           / 1000000).as("avg_ttr"))
       .orderBy("len_bucket")
   }

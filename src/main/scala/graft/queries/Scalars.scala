@@ -641,8 +641,7 @@ object Scalars extends QueryPack {
     val b = n.select(col("n_nationkey").as("k2"), col("n_name").as("name2"))
     a.join(broadcast(b), col("k1") < col("k2"))
       .select(col("name1"), col("name2"),
-        (floor(call_function("graft_jw", col("name1"), col("name2"))
-          * 1000000 + lit(0.5)) / 1000000).as("jw"),
+        Det.quant(call_function("graft_jw", col("name1"), col("name2")), 6).as("jw"),
         levenshtein(col("name1"), col("name2")).cast("long").as("lev"))
       .orderBy(col("jw").desc, col("name1"), col("name2"))
       .limit(15)
@@ -695,7 +694,7 @@ object Scalars extends QueryPack {
         * sin(dlon) * sin(dlon)))
     a.join(broadcast(b), col("k1") < col("k2"))
       .select(col("k1"), col("name1"), col("k2"), col("name2"),
-        (floor(dist * 10 + lit(0.5)) / 10).as("dist_km"))
+        Det.quant(dist, 1).as("dist_km"))
       .orderBy(col("dist_km"), col("k1"), col("k2"))
       .limit(20)
   }
@@ -799,19 +798,13 @@ object Scalars extends QueryPack {
       |  CAST(factorial(p_size % 10) AS BIGINT) AS fact_size
       |FROM part ORDER BY p_partkey LIMIT 75""") { (s, dir) =>
     Tables(s, dir, "part").select(col("p_partkey"),
-      (floor(cbrt(col("p_retailprice")) * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("cbrt_price"),
-      (floor(log2(col("p_size").cast("double")) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("log2_size"),
-      (floor(log10(col("p_retailprice")) * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("log10_price"),
+      Det.quant(cbrt(col("p_retailprice")), 6).as("cbrt_price"),
+      Det.quant(log2(col("p_size").cast("double")), 6).as("log2_size"),
+      Det.quant(log10(col("p_retailprice")), 6).as("log10_price"),
       signum(col("p_size") - 25).cast("long").as("sign_size"),
-      (floor(radians(col("p_size").cast("double")) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("radians_size"),
-      (floor(degrees(col("p_retailprice") / 1000) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("degrees_kprice"),
-      (floor(pow(col("p_size").cast("double"), 1.5) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("size_pow15"),
+      Det.quant(radians(col("p_size").cast("double")), 6).as("radians_size"),
+      Det.quant(degrees(col("p_retailprice") / 1000), 6).as("degrees_kprice"),
+      Det.quant(pow(col("p_size").cast("double"), 1.5), 6).as("size_pow15"),
       factorial(col("p_size") % 10).cast("long").as("fact_size"))
       .orderBy("p_partkey").limit(75)
   }

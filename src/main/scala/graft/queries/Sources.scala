@@ -522,7 +522,7 @@ object Sources extends QueryPack {
           variant_get(col("v"), "$.k", "long").as("k"))
         .groupBy("tag")
         .agg(count(lit(1)).cast("long").as("n"),
-          sum(graft.engine.Det.cents(col("val"))).cast("long").as("cents"),
+          sum(Det.cents(col("val"))).cast("long").as("cents"),
           sum(col("k")).cast("long").as("sum_k"))
         .orderBy("tag")
         .transform(graft.ops.PlanMemo.pin)

@@ -63,14 +63,14 @@ object StatsOps extends QueryPack {
     val h2 = hist.withColumn("cum2", coalesce(sum("c2").over(w), lit(0L)))
     val a = h2.agg(
       sum("c1").as("n1"), sum("c2").as("n2"),
-      sum((col("c1").cast("decimal(38,0)") * (lit(2) * col("cum2") + col("c2"))))
+      sum((Det.wide(col("c1")) * (lit(2) * col("cum2") + col("c2"))))
         .as("two_u1"))
-    def d(c: String) = col(c).cast("double")
     a.select(col("n1"), col("n2"),
-      (d("two_u1") / 2).as("u1"),
-      (d("n1") * d("n2") - d("two_u1") / 2).as("u2"),
-      (floor((d("two_u1") / (d("n1") * d("n2")) - 1) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("rank_biserial"))
+      (col("two_u1").cast("double") / 2).as("u1"),
+      (col("n1").cast("double") * col("n2").cast("double")
+        - col("two_u1").cast("double") / 2).as("u2"),
+      Det.quant(col("two_u1").cast("double") /
+        (col("n1").cast("double") * col("n2").cast("double")) - 1, 6).as("rank_biserial"))
   }
 
   // Revenue concentration per event type: the minimum number of users
@@ -113,9 +113,8 @@ object StatsOps extends QueryPack {
         // row_number is INT — lift to BIGINT to match the oracle's cast
         min(when(lit(5) * col("cum") >= lit(4) * col("tot"), col("rn")))
           .cast("long").as("k80"),
-        (floor(sum(when(col("rn") <= 10, col("s")).otherwise(0L)).cast("double")
-          / max("tot").cast("double") * 1000000 + lit(0.5))
-          .cast("double") / 1000000).as("top10_share"))
+        Det.quant(sum(when(col("rn") <= 10, col("s")).otherwise(0L)).cast("double")
+          / max("tot").cast("double"), 6).as("top10_share"))
       .orderBy("event_type")
   }
 
@@ -236,9 +235,8 @@ object StatsOps extends QueryPack {
       .withColumn("hi",
         min(when(col("cc") >= expr("(9 * n + 9) div 10"), col("v"))).over(wst))
     h3.groupBy(col("st").as("o_orderstatus"), col("n"), col("lo"), col("hi"))
-      .agg((floor(sum(col("c") * least(greatest(col("v"), col("lo")), col("hi")))
-          .cast("double") / 100 / max("n") * 10000 + lit(0.5))
-        .cast("double") / 10000).as("wmean"))
+      .agg(Det.quant(sum(col("c") * least(greatest(col("v"), col("lo")), col("hi")))
+          .cast("double") / 100 / max("n"), 4).as("wmean"))
       .select(col("o_orderstatus"), col("n"),
         (col("lo").cast("double") / 100).as("p10"),
         (col("hi").cast("double") / 100).as("p90"), col("wmean"))
@@ -328,15 +326,13 @@ object StatsOps extends QueryPack {
     val pts = rk.select(col("lang"),
       Det.lnFix(col("r"), 8).cast("long").as("x"),
       Det.lnFix(col("f"), 8).cast("long").as("y"))
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val mom = pts.groupBy("lang").agg(count(lit(1)).as("n"),
-      sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("x")) * col("y")).as("sxy"))
+      sum(Det.wide(col("x"))).as("sx"), sum(Det.wide(col("y"))).as("sy"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"),
+      sum(Det.wide(col("x")) * col("y")).as("sxy"))
     mom.select(col("lang"), col("n").as("n_points"),
-        (floor((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-          / (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("zipf_slope"))
+        Det.quant((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
+          / (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"), 6).as("zipf_slope"))
       .orderBy("lang")
   }
 
@@ -391,26 +387,23 @@ object StatsOps extends QueryPack {
     val d = daily.crossJoin(broadcast(st))
       .select(col("day"), (col("x") - col("m")).as("dv"), col("n"))
     val wo = Window.orderBy("day")
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val lagged = d.select(col("n") +: (col("dv") +:
       (1 to 5).map(k => lag(col("dv"), k).over(wo).as(s"d$k"))): _*)
     val mom = lagged.groupBy("n").agg(
-      sum(dec(col("dv")) * col("dv")).as("c0"),
-      sum(dec(col("dv")) * col("d1")).as("c1"),
-      sum(dec(col("dv")) * col("d2")).as("c2"),
-      sum(dec(col("dv")) * col("d3")).as("c3"),
-      sum(dec(col("dv")) * col("d4")).as("c4"),
-      sum(dec(col("dv")) * col("d5")).as("c5"))
-    def rho(k: Int) = (floor(col(s"c$k").cast("double") / col("c0").cast("double")
-      * 100000000 + lit(0.5)).cast("double") / 100000000).as(s"r$k")
+      sum(Det.wide(col("dv")) * col("dv")).as("c0"),
+      sum(Det.wide(col("dv")) * col("d1")).as("c1"),
+      sum(Det.wide(col("dv")) * col("d2")).as("c2"),
+      sum(Det.wide(col("dv")) * col("d3")).as("c3"),
+      sum(Det.wide(col("dv")) * col("d4")).as("c4"),
+      sum(Det.wide(col("dv")) * col("d5")).as("c5"))
+    def rho(k: Int) = Det.quant(col(s"c$k").cast("double") / col("c0").cast("double"), 8).as(s"r$k")
     val r = mom.select(col("n") +: (1 to 5).map(rho): _*)
     val nd = col("n").cast("double")
     r.select(col("n").as("n_days"), col("r1"), col("r2"), col("r3"), col("r4"), col("r5"),
-      (floor(nd * (nd + 2)
+      Det.quant(nd * (nd + 2)
         * (col("r1") * col("r1") / (nd - 1) + col("r2") * col("r2") / (nd - 2)
           + col("r3") * col("r3") / (nd - 3) + col("r4") * col("r4") / (nd - 4)
-          + col("r5") * col("r5") / (nd - 5)) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("q_stat"))
+          + col("r5") * col("r5") / (nd - 5)), 6).as("q_stat"))
   }
 
   // 7-observation rolling exact median of each user's daily value — the
@@ -441,7 +434,7 @@ object StatsOps extends QueryPack {
       .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("cnt"))
       .select(col("user_id"), col("day"),
-        floor(Det.avgFix(col("s1"), 4, col("cnt")) * 10000 + lit(0.5))
+        Det.fix(Det.avgFix(col("s1"), 4, col("cnt")), 4)
           .cast("long").as("xi"))
     val w7 = Window.partitionBy("user_id").orderBy("day").rowsBetween(-6, 0)
     val wnd = daily.select(col("user_id"), col("day"),
@@ -492,9 +485,8 @@ object StatsOps extends QueryPack {
       Det.cents(col("value")).cast("long").as("v"))
     def cell(name: String, p: org.apache.spark.sql.Column) = Seq(
       sum(when(p, 1L).otherwise(0L)).as(s"n_$name"),
-      (floor(sum(when(p, col("v"))).cast("double") / 100
-        / sum(when(p, 1L).otherwise(0L)) * 10000 + lit(0.5))
-        .cast("double") / 10000).as(s"m_$name"))
+      Det.quant(sum(when(p, col("v"))).cast("double") / 100
+        / sum(when(p, 1L).otherwise(0L)), 4).as(s"m_$name"))
     val aggs = cell("tpre", col("treat") && !col("post")) ++
       cell("tpost", col("treat") && col("post")) ++
       cell("cpre", !col("treat") && !col("post")) ++
@@ -534,10 +526,8 @@ object StatsOps extends QueryPack {
       .filter(col("x7").isNotNull)
     f.groupBy("event_type")
       .agg(count(lit(1)).as("n_eval"),
-        (floor(sum(abs(col("x") - col("x7"))).cast("double") / 100 / count(lit(1))
-          * 10000 + lit(0.5)).cast("double") / 10000).as("mae"),
-        (floor(sum(col("x") - col("x7")).cast("double") / 100 / count(lit(1))
-          * 10000 + lit(0.5)).cast("double") / 10000).as("bias"))
+        Det.quant(sum(abs(col("x") - col("x7"))).cast("double") / 100 / count(lit(1)), 4).as("mae"),
+        Det.quant(sum(col("x") - col("x7")).cast("double") / 100 / count(lit(1)), 4).as("bias"))
       .orderBy("event_type")
   }
 
@@ -582,8 +572,7 @@ object StatsOps extends QueryPack {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"),
         sum(coalesce(col("hit"), lit(0L))).as("n_contaminated"),
-        (floor(sum(coalesce(col("hit"), lit(0L))).cast("double") / count(lit(1))
-          * 10000 + lit(0.5)).cast("double") / 10000).as("frac"))
+        Det.quant(sum(coalesce(col("hit"), lit(0L))).cast("double") / count(lit(1)), 4).as("frac"))
       .orderBy("doc_id")
   }
 
@@ -693,8 +682,7 @@ object StatsOps extends QueryPack {
     cum.join(cs, "cohort_week")
       .select(col("cohort_week"), col("week_offset"), col("n_users"),
         (col("cum_r").cast("double") / 100).as("cum_revenue"),
-        (floor(col("cum_r").cast("double") / 100 / col("n_users") * 10000
-          + lit(0.5)).cast("double") / 10000).as("ltv_per_user"))
+        Det.quant(col("cum_r").cast("double") / 100 / col("n_users"), 4).as("ltv_per_user"))
       .orderBy("cohort_week", "week_offset")
   }
 
@@ -738,16 +726,14 @@ object StatsOps extends QueryPack {
       expr("((datediff(day, date'2024-01-01') % 7) + 7) % 7"))
     val sm = dw.groupBy("et", "dow").agg(expr("sum(x) div count(*)").as("s"))
     val gm = dw.groupBy("et").agg(expr("sum(x) div count(*)").as("m"))
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val j = dw.join(sm, Seq("et", "dow")).join(gm, Seq("et"))
     val agg = j.groupBy("et").agg(count(lit(1)).as("n_days"),
-      sum(dec(col("x") - col("s")) * (col("x") - col("s"))).as("ssr"),
-      sum(dec(col("x") - col("m")) * (col("x") - col("m"))).as("sst"))
+      sum(Det.wide(col("x") - col("s")) * (col("x") - col("s"))).as("ssr"),
+      sum(Det.wide(col("x") - col("m")) * (col("x") - col("m"))).as("sst"))
     agg.select(col("et").as("event_type"), col("n_days"),
         when(col("sst") === 0, lit(null)).otherwise(
           greatest(lit(0.0),
-            floor((lit(1) - col("ssr").cast("double") / col("sst").cast("double"))
-              * 1000000 + lit(0.5)).cast("double") / 1000000))
+            Det.quant(lit(1) - col("ssr").cast("double") / col("sst").cast("double"), 6)))
           .as("seasonal_strength"))
       .orderBy("event_type")
   }
@@ -780,18 +766,16 @@ object StatsOps extends QueryPack {
     val o = Tables(s, dir, "orders")
     def side(cn: String) = {
       val counts = o.groupBy(cn).agg(count(lit(1)).as("c"))
-      val lnN = floor(log(sum("c").cast("double")) * 100000000 + lit(0.5))
-        .cast("double") / 100000000
-      val lnD = floor(log(count(lit(1)).cast("double")) * 100000000 + lit(0.5))
-        .cast("double") / 100000000
-      val sLn = sum(col("c").cast("decimal(38,0)") * Det.lnFix(col("c"), 8))
+      val lnN = Det.quant(log(sum("c").cast("double")), 8)
+      val lnD = Det.quant(log(count(lit(1)).cast("double")), 8)
+      val sLn = sum(Det.wide(col("c")) * Det.lnFix(col("c"), 8))
         .cast("double") / 100000000 / sum("c")
       counts.agg(
         sum("c").as("n"), count(lit(1)).as("n_distinct"),
-        (floor((lnN - sLn) * 1000000 + lit(0.5)).cast("double") / 1000000)
+        Det.quant(lnN - sLn, 6)
           .as("entropy"),
         when(count(lit(1)) === 1, lit(null)).otherwise(
-          floor((lnN - sLn) / lnD * 1000000 + lit(0.5)).cast("double") / 1000000)
+          Det.quant((lnN - sLn) / lnD, 6))
           .as("entropy_norm"))
         .select(lit(cn).as("column_name"), col("n"), col("n_distinct"),
           col("entropy"), col("entropy_norm"))
@@ -839,11 +823,10 @@ object StatsOps extends QueryPack {
       .join(broadcast(per.select(col("event_type").as("type_b"), col("n").as("n_b"))), "type_b")
       .crossJoin(broadcast(tot))
       .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"), col("n_both"),
-        (floor(col("n_both").cast("double") / (col("n_a") + col("n_b") - col("n_both"))
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("jaccard"),
-        (floor(col("n_both").cast("double") * col("nu")
-          / (col("n_a").cast("double") * col("n_b")) * 1000000 + lit(0.5))
-          .cast("double") / 1000000).as("lift"))
+        Det.quant(col("n_both").cast("double") / (col("n_a") + col("n_b") - col("n_both")),
+          6).as("jaccard"),
+        Det.quant(col("n_both").cast("double") * col("nu")
+          / (col("n_a").cast("double") * col("n_b")), 6).as("lift"))
       .orderBy("type_a", "type_b")
   }
 
@@ -873,8 +856,7 @@ object StatsOps extends QueryPack {
     sp.join(broadcast(lt), "lang")
       .groupBy("lang", "split")
       .agg(count(lit(1)).as("n_docs"),
-        (floor(count(lit(1)).cast("double") / max("n_lang") * 10000 + lit(0.5))
-          .cast("double") / 10000).as("frac_of_lang"))
+        Det.quant(count(lit(1)).cast("double") / max("n_lang"), 4).as("frac_of_lang"))
       .orderBy("lang", "split")
   }
 
@@ -1044,20 +1026,19 @@ object StatsOps extends QueryPack {
       |    CAST(s22 AS DOUBLE), CAST(s33 AS DOUBLE), CAST(s23 AS DOUBLE) FROM m
       |)
       |ORDER BY pair""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val v = Tables(s, dir, "lineitem").select(
       Det.fix(col("l_quantity"), 0).cast("long").as("x1"),
       Det.cents(col("l_extendedprice")).cast("long").as("x2"),
       Det.fix(col("l_discount"), 2).cast("long").as("x3"))
     val m = v.agg(count(lit(1)).as("n"),
-      sum(dec(col("x1"))).as("s1"), sum(dec(col("x2"))).as("s2"),
-      sum(dec(col("x3"))).as("s3"),
-      sum(dec(col("x1")) * col("x1")).as("s11"),
-      sum(dec(col("x2")) * col("x2")).as("s22"),
-      sum(dec(col("x3")) * col("x3")).as("s33"),
-      sum(dec(col("x1")) * col("x2")).as("s12"),
-      sum(dec(col("x1")) * col("x3")).as("s13"),
-      sum(dec(col("x2")) * col("x3")).as("s23"))
+      sum(Det.wide(col("x1"))).as("s1"), sum(Det.wide(col("x2"))).as("s2"),
+      sum(Det.wide(col("x3"))).as("s3"),
+      sum(Det.wide(col("x1")) * col("x1")).as("s11"),
+      sum(Det.wide(col("x2")) * col("x2")).as("s22"),
+      sum(Det.wide(col("x3")) * col("x3")).as("s33"),
+      sum(Det.wide(col("x1")) * col("x2")).as("s12"),
+      sum(Det.wide(col("x1")) * col("x3")).as("s13"),
+      sum(Det.wide(col("x2")) * col("x3")).as("s23"))
     val rows = m.select(
       expr("stack(3, " +
         "'quantity~price', CAST(s1 AS DOUBLE), CAST(s2 AS DOUBLE), CAST(s11 AS DOUBLE), CAST(s22 AS DOUBLE), CAST(s12 AS DOUBLE), " +
@@ -1066,10 +1047,9 @@ object StatsOps extends QueryPack {
         ") AS (pair, sx, sy, sxx, syy, sxy)"),
       col("n"))
     rows.select(col("pair"), col("n").cast("long").as("n"),
-        (floor((col("n").cast("double") * col("sxy") - col("sx") * col("sy"))
+        Det.quant((col("n").cast("double") * col("sxy") - col("sx") * col("sy"))
           / (sqrt(col("n").cast("double") * col("sxx") - col("sx") * col("sx"))
-            * sqrt(col("n").cast("double") * col("syy") - col("sy") * col("sy")))
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("corr"))
+            * sqrt(col("n").cast("double") * col("syy") - col("sy") * col("sy"))), 6).as("corr"))
       .orderBy("pair")
   }
 
@@ -1169,9 +1149,9 @@ object StatsOps extends QueryPack {
     val a = r.agg(count(lit(1)).as("n"),
       sum((col("rx") - col("ry")) * (col("rx") - col("ry"))).as("sd2"))
     a.select(col("n").cast("long").as("n_days"),
-      (floor((lit(1) - lit(6.0) * col("sd2")
-          / (col("n").cast("double") * (col("n").cast("double") * col("n") - 1)))
-        * 1000000 + lit(0.5)).cast("double") / 1000000).as("spearman_rho"))
+      Det.quant(lit(1) - lit(6.0) * col("sd2")
+          / (col("n").cast("double") * (col("n").cast("double") * col("n") - 1)),
+            6).as("spearman_rho"))
   }
 
   // Ingestion-freshness report per event type: last-landed timestamp, lag
@@ -1266,7 +1246,6 @@ object StatsOps extends QueryPack {
       |)
       |SELECT actual AS actual_lang, pred AS pred_lang, COUNT(*) AS n_docs
       |FROM pr WHERE rn = 1 GROUP BY 1, 2 ORDER BY 1, 2""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val d0 = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
       (substring(md5(col("doc_id").cast("string")), 1, 1) <= "7").as("is_train"))
     // per-doc token counts come from the session-shared TextOps
@@ -1292,14 +1271,14 @@ object StatsOps extends QueryPack {
     // condition degenerates to a trivially-true same-attribute predicate
     val mt = te.join(tt.withColumnRenamed("lang", "plang"), "token")
       .groupBy(col("doc_id"), col("plang"))
-      .agg(sum(dec(col("cdt")) * Det.lnFix(col("c") + 1, 8).cast("long")).as("s_match"))
+      .agg(sum(Det.wide(col("cdt")) * Det.lnFix(col("c") + 1, 8).cast("long")).as("s_match"))
       .withColumnRenamed("doc_id", "mdoc")
     val langs = broadcast(lt.join(ld, "lang").crossJoin(vv))
     val base = td.join(tn, "doc_id").crossJoin(langs)
       .join(mt, col("doc_id") === col("mdoc") && col("lang") === col("plang"), "left")
       .select(col("doc_id"), col("actual"), col("lang"),
-        (coalesce(col("s_match"), lit(0).cast("decimal(38,0)"))
-          - dec(col("n_d")) * Det.lnFix(col("t_l") + col("v"), 8).cast("long")
+        (coalesce(col("s_match"), Det.wide(lit(0)))
+          - Det.wide(col("n_d")) * Det.lnFix(col("t_l") + col("v"), 8).cast("long")
           + Det.lnFix(col("d_l"), 8).cast("long")).as("score"))
     val pr = base.withColumn("rn", row_number().over(
       Window.partitionBy("doc_id").orderBy(col("score").desc, col("lang"))))
@@ -1348,7 +1327,6 @@ object StatsOps extends QueryPack {
       |    AS DOUBLE) / 1000000 AS ks_d,
       |  CAST(v AS DOUBLE) / 100 AS at_value
       |FROM sc WHERE rn = 1""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events")
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_type"), Det.cents(col("value")).cast("long").as("v"))
@@ -1364,14 +1342,13 @@ object StatsOps extends QueryPack {
       .withColumn("tot1", sum("c1").over(wt))
       .withColumn("tot2", sum("c2").over(wt))
       .withColumn("num",
-        abs(dec(col("cum1")) * col("tot2") - dec(col("cum2")) * col("tot1")))
+        abs(Det.wide(col("cum1")) * col("tot2") - Det.wide(col("cum2")) * col("tot1")))
     h2.withColumn("rn",
         row_number().over(Window.orderBy(col("num").desc, col("v"))))
       .filter(col("rn") === 1)
       .select(col("tot1").as("n1"), col("tot2").as("n2"),
-        (floor(col("num").cast("double")
-          / (col("tot1").cast("double") * col("tot2").cast("double"))
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("ks_d"),
+        Det.quant(col("num").cast("double")
+          / (col("tot1").cast("double") * col("tot2").cast("double")), 6).as("ks_d"),
         (col("v").cast("double") / 100).as("at_value"))
   }
 
@@ -1429,7 +1406,6 @@ object StatsOps extends QueryPack {
       |  CAST(floor((1 - CAST(sse AS DOUBLE) / (syy - sy * sy / n))
       |    * 1000000 + 0.5) AS DOUBLE) / 1000000 AS r2
       |FROM d CROSS JOIN sse""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(
@@ -1439,15 +1415,15 @@ object StatsOps extends QueryPack {
           Det.cents(col("value")).cast("long")).otherwise(0L)).as("y"))
     val m = daily.agg(
       count(lit(1)).cast("double").as("n"),
-      sum(dec(col("x1"))).cast("double").as("s1"),
-      sum(dec(col("x2"))).cast("double").as("s2"),
-      sum(dec(col("y"))).cast("double").as("sy"),
-      sum(dec(col("x1")) * col("x1")).cast("double").as("s11"),
-      sum(dec(col("x1")) * col("x2")).cast("double").as("s12"),
-      sum(dec(col("x2")) * col("x2")).cast("double").as("s22"),
-      sum(dec(col("x1")) * col("y")).cast("double").as("s1y"),
-      sum(dec(col("x2")) * col("y")).cast("double").as("s2y"),
-      sum(dec(col("y")) * col("y")).cast("double").as("syy"))
+      sum(Det.wide(col("x1"))).cast("double").as("s1"),
+      sum(Det.wide(col("x2"))).cast("double").as("s2"),
+      sum(Det.wide(col("y"))).cast("double").as("sy"),
+      sum(Det.wide(col("x1")) * col("x1")).cast("double").as("s11"),
+      sum(Det.wide(col("x1")) * col("x2")).cast("double").as("s12"),
+      sum(Det.wide(col("x2")) * col("x2")).cast("double").as("s22"),
+      sum(Det.wide(col("x1")) * col("y")).cast("double").as("s1y"),
+      sum(Det.wide(col("x2")) * col("y")).cast("double").as("s2y"),
+      sum(Det.wide(col("y")) * col("y")).cast("double").as("syy"))
     val d = m
       .withColumn("det",
         col("s11") * (col("s22") * col("n") - col("s2") * col("s2"))
@@ -1481,19 +1457,14 @@ object StatsOps extends QueryPack {
       .select((col("y") - (col("deta") / col("det") * col("x1")
         + col("detb") / col("det") * col("x2")
         + col("detc") / col("det"))).as("e"))
-    val sse = r.agg(sum(floor(col("e") * col("e") + lit(0.5))
-      .cast("decimal(38,0)")).as("sse"))
+    val sse = r.agg(sum(Det.wide(Det.half(col("e") * col("e")))).as("sse"))
     d.crossJoin(broadcast(sse)).select(
       col("n").cast("long").as("n_days"),
-      (floor(col("deta") / col("det") * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("coef_clicks"),
-      (floor(col("detb") / col("det") * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("coef_users"),
-      (floor(col("detc") / col("det") * 100 + lit(0.5)).cast("double")
-        / 100).as("intercept"),
-      (floor((lit(1) - col("sse").cast("double")
-        / (col("syy") - col("sy") * col("sy") / col("n")))
-        * 1000000 + lit(0.5)).cast("double") / 1000000).as("r2"))
+      Det.quant(col("deta") / col("det"), 6).as("coef_clicks"),
+      Det.quant(col("detb") / col("det"), 6).as("coef_users"),
+      Det.quant(col("detc") / col("det"), 2).as("intercept"),
+      Det.quant(lit(1) - col("sse").cast("double")
+        / (col("syy") - col("sy") * col("sy") / col("n")), 6).as("r2"))
   }
 
   // Kruskal-Wallis H: the k-group generalization of the Mann-Whitney rank
@@ -1546,7 +1517,6 @@ object StatsOps extends QueryPack {
       |  CAST(floor(h_raw / corr * 1000000 + 0.5) AS DOUBLE) / 1000000
       |    AS h_tie_corrected
       |FROM f""") { (s, dir) =>
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val ev = Tables(s, dir, "events")
       .select(col("event_type"), Det.cents(col("value")).cast("long").as("v"))
     val hist = ev.groupBy("event_type", "v").agg(count(lit(1)).as("c"))
@@ -1556,28 +1526,28 @@ object StatsOps extends QueryPack {
     val rg = hist.join(vc, Seq("v"))
       .groupBy("event_type")
       .agg(sum("c").cast("long").as("n"),
-        sum(col("c").cast(dec) * (lit(2) * col("cb") + col("t") + 1)).as("r2"))
+        sum(Det.wide(col("c")) * (lit(2) * col("cb") + col("t") + 1)).as("r2"))
     val tot = rg.agg(sum("n").as("nn"))
-    val tie = vt.agg(sum(col("t").cast(dec) * col("t") * col("t") - col("t"))
+    val tie = vt.agg(sum(Det.wide(col("t")) * col("t") * col("t") - col("t"))
       .as("tq"))
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    val rb = d(col("r2")) / (lit(2) * d(col("n")))
-    val dev = rb - (d(col("nn")) + 1) / 2
+    val rb = col("r2").cast("double") / (lit(2) * col("n").cast("double"))
+    val dev = rb - (col("nn").cast("double") + 1) / 2
     val st = rg.crossJoin(broadcast(tot))
       .agg(count(lit(1)).cast("long").as("k"), max("nn").as("nn"),
-        sum(floor(d(col("n")) * dev * dev + lit(0.5)).cast(dec)).as("s4"))
+        sum(Det.wide(Det.half(col("n").cast("double") * dev * dev))).as("s4"))
     val f = st.crossJoin(broadcast(tie))
       .select(col("k"), col("nn").cast("long").as("n"),
-        (lit(12) * d(col("s4")) / (d(col("nn")) * (d(col("nn")) + 1)))
+        (lit(12) * col("s4").cast("double") /
+          (col("nn").cast("double") * (col("nn").cast("double") + 1)))
           .as("h_raw"),
-        (lit(1) - d(col("tq"))
-          / (d(col("nn")) * d(col("nn")) * d(col("nn")) - d(col("nn"))))
+        (lit(1) - col("tq").cast("double")
+          / (col("nn").cast("double") * col("nn").cast("double") * col("nn").cast("double") -
+            col("nn").cast("double")))
           .as("corr"))
     f.select(col("k"), col("n"),
-      (floor(col("h_raw") * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(col("h_raw"), 6)
         .as("h"),
-      (floor(col("h_raw") / col("corr") * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("h_tie_corrected"))
+      Det.quant(col("h_raw") / col("corr"), 6).as("h_tie_corrected"))
   }
 
   // Kendall tau-b trend test per event type: is the DAILY MEAN value
@@ -1612,13 +1582,12 @@ object StatsOps extends QueryPack {
       |    / sqrt(CAST(n0 AS DOUBLE) * (CAST(n0 AS DOUBLE) - CAST(tt AS DOUBLE)))
       |    * 1000000 + 0.5) AS DOUBLE) / 1000000 AS tau_b
       |FROM p ORDER BY event_type""") { (s, dir) =>
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val dd = Tables(s, dir, "events")
       .groupBy(col("event_type"), to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(sum(Det.cents(col("value")).cast("long")).as("s"),
         count(lit(1)).as("c"))
-    val bs = col("b.s").cast(dec) * col("a.c")
-    val as_ = col("a.s").cast(dec) * col("b.c")
+    val bs = Det.wide(col("b.s")) * col("a.c")
+    val as_ = Det.wide(col("a.s")) * col("b.c")
     val p = dd.as("a")
       .join(dd.as("b"),
         col("a.event_type") === col("b.event_type") && col("a.day") < col("b.day"))
@@ -1627,10 +1596,10 @@ object StatsOps extends QueryPack {
         sum(when(bs > as_, 1L).when(bs < as_, -1L).otherwise(0L))
           .cast("long").as("cd"),
         sum(when(bs === as_, 1L).otherwise(0L)).cast("long").as("tt"))
-    def d(c: String) = col(c).cast("double")
     p.select(col("event_type"), col("n0"), col("cd"),
-      (floor(d("cd") / sqrt(d("n0") * (d("n0") - d("tt"))) * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("tau_b"))
+      Det.quant(col("cd").cast("double") /
+        sqrt(col("n0").cast("double") * (col("n0").cast("double") - col("tt").cast("double"))),
+          6).as("tau_b"))
       .orderBy("event_type")
   }
 
@@ -1684,40 +1653,37 @@ object StatsOps extends QueryPack {
       |    * (CAST(snum AS DOUBLE) / CAST(sden AS DOUBLE))
       |    * 1000000 + 0.5) AS DOUBLE) / 1000000 AS w
       |FROM u""") { (s, dir) =>
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val ev = Tables(s, dir, "events")
       .select(col("event_type"), Det.cents(col("value")).cast("long").as("v"))
     val g = ev.groupBy("event_type")
       .agg(count(lit(1)).cast("long").as("n"), sum("v").as("s"))
     val z = ev.join(broadcast(g), Seq("event_type"))
       .select(col("event_type"),
-        abs((col("n") * col("v") - col("s")).cast(dec)).as("a"))
+        abs(Det.wide(col("n") * col("v") - col("s"))).as("a"))
     val zg = z.join(broadcast(g.select(col("event_type"), col("n"))),
         Seq("event_type"))
       .groupBy("event_type")
       .agg(max("n").as("n"), sum("a").as("sa"),
         sum(col("a") * col("a")).as("sb"))
     val q_ = zg.select(col("event_type"), col("n"), col("sa"),
-      (d(col("sa")) / (d(col("n")) * d(col("n")))).as("zb"),
-      (d(col("sb")) / (d(col("n")) * d(col("n")))
-        - d(col("sa")) * d(col("sa"))
-          / (d(col("n")) * d(col("n")) * d(col("n")))).as("wg"))
+      (col("sa").cast("double") / (col("n").cast("double") * col("n").cast("double"))).as("zb"),
+      (col("sb").cast("double") / (col("n").cast("double") * col("n").cast("double"))
+        - col("sa").cast("double") * col("sa").cast("double")
+          / (col("n").cast("double") * col("n").cast("double") * col("n").cast("double"))).as("wg"))
     val t = q_
       .agg(count(lit(1)).cast("long").as("k"), sum("n").cast("long").as("nn"),
-        sum(floor(d(col("sa")) / d(col("n")) * 10000 + lit(0.5)).cast(dec))
+        sum(Det.wide(Det.fix(col("sa").cast("double") / col("n").cast("double"), 4)))
           .as("szb"),
-        sum(floor(col("wg") * 10000 + lit(0.5)).cast(dec)).as("sden"))
+        sum(Det.wide(Det.fix(col("wg"), 4))).as("sden"))
     val m = t.select(col("k"), col("nn"), col("sden"),
-      (d(col("szb")) / 10000 / d(col("nn"))).as("zbar"))
+      (col("szb").cast("double") / 10000 / col("nn").cast("double")).as("zbar"))
     val u = q_.crossJoin(broadcast(m))
       .groupBy("k", "nn", "sden")
-      .agg(sum(floor(d(col("n")) * (col("zb") - col("zbar"))
-        * (col("zb") - col("zbar")) * 10000 + lit(0.5)).cast(dec)).as("snum"))
+      .agg(sum(Det.wide(Det.fix(col("n").cast("double") * (col("zb") - col("zbar"))
+        * (col("zb") - col("zbar")), 4))).as("snum"))
     u.select(col("k"), col("nn").as("n"),
-      (floor((d(col("nn")) - d(col("k"))) / (d(col("k")) - 1)
-        * (d(col("snum")) / d(col("sden")))
-        * 1000000 + lit(0.5)).cast("double") / 1000000).as("w"))
+      Det.quant((col("nn").cast("double") - col("k").cast("double")) / (col("k").cast("double") - 1)
+        * (col("snum").cast("double") / col("sden").cast("double")), 6).as("w"))
   }
 
   // Delta-method inference for a RATIO metric (revenue per event): the
@@ -1779,8 +1745,6 @@ object StatsOps extends QueryPack {
       |  CAST(floor((r1 - r0) / sqrt(se20 + se21) * 10000 + 0.5) AS DOUBLE)
       |    / 10000 AS z
       |FROM w""") { (s, dir) =>
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val u = Tables(s, dir, "events")
       .groupBy(col("user_id"), (col("user_id") % 2).as("arm"))
       .agg(sum(Det.cents(col("value")).cast("long")).as("x"),
@@ -1788,22 +1752,25 @@ object StatsOps extends QueryPack {
     val m = u.groupBy("arm")
       .agg(count(lit(1)).cast("long").as("n"),
         sum("x").as("sx"), sum("y").as("sy"),
-        sum(col("x").cast(dec) * col("x")).as("sxx"),
-        sum(col("y").cast(dec) * col("y")).as("syy"),
-        sum(col("x").cast(dec) * col("y")).as("sxy"))
+        sum(Det.wide(col("x")) * col("x")).as("sxx"),
+        sum(Det.wide(col("y")) * col("y")).as("syy"),
+        sum(Det.wide(col("x")) * col("y")).as("sxy"))
     val r = m.select(col("arm"), col("n"),
-      (d(col("sx")) / d(col("sy"))).as("ratio"),
-      (d(col("sy")) / d(col("n"))).as("ybar"),
-      ((d(col("sxx")) - d(col("sx")) * d(col("sx")) / d(col("n")))
-        / (d(col("n")) - 1)).as("vx"),
-      ((d(col("syy")) - d(col("sy")) * d(col("sy")) / d(col("n")))
-        / (d(col("n")) - 1)).as("vy"),
-      ((d(col("sxy")) - d(col("sx")) * d(col("sy")) / d(col("n")))
-        / (d(col("n")) - 1)).as("cxy"))
+      (col("sx").cast("double") / col("sy").cast("double")).as("ratio"),
+      (col("sy").cast("double") / col("n").cast("double")).as("ybar"),
+      ((col("sxx").cast("double") - col("sx").cast("double") * col("sx").cast("double") /
+        col("n").cast("double"))
+        / (col("n").cast("double") - 1)).as("vx"),
+      ((col("syy").cast("double") - col("sy").cast("double") * col("sy").cast("double") /
+        col("n").cast("double"))
+        / (col("n").cast("double") - 1)).as("vy"),
+      ((col("sxy").cast("double") - col("sx").cast("double") * col("sy").cast("double") /
+        col("n").cast("double"))
+        / (col("n").cast("double") - 1)).as("cxy"))
     val se = r.select(col("arm"), col("n"), col("ratio"),
       ((col("vx") - lit(2) * col("ratio") * col("cxy")
         + col("ratio") * col("ratio") * col("vy"))
-        / (d(col("n")) * col("ybar") * col("ybar"))).as("se2"))
+        / (col("n").cast("double") * col("ybar") * col("ybar"))).as("se2"))
     val w = se.agg(
       max(when(col("arm") === 0, col("ratio"))).as("r0"),
       max(when(col("arm") === 1, col("ratio"))).as("r1"),
@@ -1811,14 +1778,12 @@ object StatsOps extends QueryPack {
       max(when(col("arm") === 1, col("se2"))).as("se21"),
       sum("n").cast("long").as("n_users"))
     w.select(col("n_users"),
-      (floor(col("r0") / 100 * 10000 + lit(0.5)).cast("double") / 10000)
+      Det.quant(col("r0") / 100, 4)
         .as("ratio_control"),
-      (floor(col("r1") / 100 * 10000 + lit(0.5)).cast("double") / 10000)
+      Det.quant(col("r1") / 100, 4)
         .as("ratio_treat"),
-      (floor((col("r1") - col("r0")) / 100 * 10000 + lit(0.5)).cast("double")
-        / 10000).as("diff"),
-      (floor((col("r1") - col("r0")) / sqrt(col("se20") + col("se21"))
-        * 10000 + lit(0.5)).cast("double") / 10000).as("z"))
+      Det.quant((col("r1") - col("r0")) / 100, 4).as("diff"),
+      Det.quant((col("r1") - col("r0")) / sqrt(col("se20") + col("se21")), 4).as("z"))
   }
 
   // Per-segment uplift readout: treatment-vs-control mean post-period
@@ -1865,7 +1830,6 @@ object StatsOps extends QueryPack {
       |  CAST(floor((m1 - m0) / NULLIF(m0, 0) * 1000000 + 0.5) AS DOUBLE)
       |    / 1000000 AS rel_lift
       |FROM m ORDER BY segment""") { (s, dir) =>
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val ev = Tables(s, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         Det.cents(col("value")).cast("long").as("cents"))
@@ -1888,17 +1852,16 @@ object StatsOps extends QueryPack {
         sum(when(col("arm") === 1, col("y")).otherwise(0L)).as("s1"))
     // an empty arm (or a zero control mean) gives NULL, not an ANSI
     // DIVIDE_BY_ZERO: at sf0.001 segment 4 has no control users
-    val m0 = d(col("s0")) / nullif(col("n0"), lit(0L))
-    val m1 = d(col("s1")) / nullif(col("n1"), lit(0L))
+    val m0 = col("s0").cast("double") / nullif(col("n0"), lit(0L))
+    val m1 = col("s1").cast("double") / nullif(col("n1"), lit(0L))
     g.select(col("segment"), col("n0"), col("n1"),
-        (floor(m0 / 100 * 10000 + lit(0.5)).cast("double") / 10000)
+        Det.quant(m0 / 100, 4)
           .as("mean_control"),
-        (floor(m1 / 100 * 10000 + lit(0.5)).cast("double") / 10000)
+        Det.quant(m1 / 100, 4)
           .as("mean_treat"),
-        (floor((m1 - m0) / 100 * 10000 + lit(0.5)).cast("double") / 10000)
+        Det.quant((m1 - m0) / 100, 4)
           .as("uplift"),
-        (floor((m1 - m0) / nullif(m0, lit(0.0)) * 1000000 + lit(0.5))
-          .cast("double") / 1000000)
+        Det.quant((m1 - m0) / nullif(m0, lit(0.0)), 6)
           .as("rel_lift"))
       .orderBy("segment")
   }
@@ -1940,7 +1903,7 @@ object StatsOps extends QueryPack {
     val chi = ((col("n0") - col("n1")) * (col("n0") - col("n1"))).cast("double") /
       (col("n0") + col("n1")).cast("double")
     g.select(col("event_type"), col("n0"), col("n1"),
-        (floor(chi * 1000000 + lit(0.5)).cast("double") / 1000000).as("chi2"),
+        Det.quant(chi, 6).as("chi2"),
         (chi > lit(3.841)).as("srm_flag"))
       .orderBy("event_type")
   }
@@ -2084,8 +2047,6 @@ object StatsOps extends QueryPack {
       |  MIN(CASE WHEN rn = 95 THEN m END) AS ci_hi
       |FROM r CROSS JOIN pt GROUP BY pt.n, pt.mean""") { (s, dir) =>
     import s.implicits._
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val ev = Tables(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), Det.cents(col("value")).cast("long").as("cents"))
@@ -2100,16 +2061,14 @@ object StatsOps extends QueryPack {
           "WHEN b <= 75 THEN h3 ELSE h4 END, " +
           "((b - 1) % 25) + 1, 1))") - 1).as("w"))
     val rep = pb.groupBy("b")
-      .agg(sum((col("w") * col("cents")).cast(dec)).as("sw"),
-        sum(col("w").cast(dec)).as("tw"))
+      .agg(sum(Det.wide(col("w") * col("cents"))).as("sw"),
+        sum(Det.wide(col("w"))).as("tw"))
     val rm = rep.select(col("b"),
-      (floor(d(col("sw")) / d(col("tw")) / 100 * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("m"))
+      Det.quant(col("sw").cast("double") / col("tw").cast("double") / 100, 6).as("m"))
     val r = rm.select(col("m"),
       row_number().over(Window.orderBy(col("m"), col("b"))).as("rn"))
     val pt = ev.agg(count(lit(1)).cast("long").as("n"),
-      (floor(d(sum("cents")) / count(lit(1)) / 100 * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("mean"))
+      Det.quant(sum("cents").cast("double") / count(lit(1)) / 100, 6).as("mean"))
     r.crossJoin(broadcast(pt))
       .groupBy("n", "mean")
       .agg(min(when(col("rn") === 5, col("m"))).as("ci_lo"),
@@ -2176,8 +2135,6 @@ object StatsOps extends QueryPack {
       |FROM cmp CROSS JOIN obs o
       |GROUP BY o.s0, o.n0, o.s1, o.n1""") { (s, dir) =>
     import s.implicits._
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val ev = Tables(s, dir, "events")
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("event_type"),
@@ -2210,22 +2167,20 @@ object StatsOps extends QueryPack {
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n1"))
     val cmp = perm.as("p").crossJoin(broadcast(obs.as("o")))
       .select(col("p.b"),
-        when(abs(col("p.s0").cast(dec) * col("p.n1")
-            - col("p.s1").cast(dec) * col("p.n0"))
-            * col("o.n0").cast(dec) * col("o.n1")
-          >= abs(col("o.s0").cast(dec) * col("o.n1")
-            - col("o.s1").cast(dec) * col("o.n0"))
-            * col("p.n0").cast(dec) * col("p.n1"), 1L).otherwise(0L).as("ge"),
+        when(abs(Det.wide(col("p.s0")) * col("p.n1")
+            - Det.wide(col("p.s1")) * col("p.n0"))
+            * Det.wide(col("o.n0")) * col("o.n1")
+          >= abs(Det.wide(col("o.s0")) * col("o.n1")
+            - Det.wide(col("o.s1")) * col("o.n0"))
+            * Det.wide(col("p.n0")) * col("p.n1"), 1L).otherwise(0L).as("ge"),
         col("o.s0"), col("o.n0"), col("o.s1"), col("o.n1"))
     cmp.groupBy("s0", "n0", "s1", "n1")
       .agg(sum("ge").cast("long").as("n_extreme"))
       .select(lit(100L).as("n_perm"),
-        (floor((d(col("s0")) / 100 / col("n0")
-          - d(col("s1")) / 100 / col("n1")) * 10000 + lit(0.5)).cast("double")
-          / 10000).as("t_obs"),
+        Det.quant(col("s0").cast("double") / 100 / col("n0")
+          - col("s1").cast("double") / 100 / col("n1"), 4).as("t_obs"),
         col("n_extreme"),
-        (floor((d(col("n_extreme")) + 1) / 101 * 1000000 + lit(0.5))
-          .cast("double") / 1000000).as("p_value"))
+        Det.quant((col("n_extreme").cast("double") + 1) / 101, 6).as("p_value"))
   }
 
   // Experiment power analysis against the 'view' baseline: the minimum
@@ -2262,11 +2217,10 @@ object StatsOps extends QueryPack {
       |WHERE event_type <> 'view'
       |ORDER BY event_type""") { (s, dir) =>
     val f = Det.fix(col("value"), 4)
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val st = Tables(s, dir, "events")
       .groupBy("event_type")
-      .agg(count(lit(1)).cast("long").as("n"), sum(f.cast(dec38)).as("s1"),
-        sum((f * f).cast(dec38)).as("s2"))
+      .agg(count(lit(1)).cast("long").as("n"), sum(Det.wide(f)).as("s1"),
+        sum(Det.wide(f * f)).as("s2"))
     val m = st.select(col("event_type"), col("n"),
       (col("s1").cast("double") / 10000 / col("n")).as("mean"),
       ((col("s2").cast("double") / 100000000L
@@ -2278,10 +2232,9 @@ object StatsOps extends QueryPack {
     m.filter(col("event_type") =!= "view")
       .crossJoin(broadcast(base))
       .select(col("event_type"), col("n"),
-        (floor(lit(2.8) * se * 10000 + lit(0.5)).cast("double") / 10000)
+        Det.quant(lit(2.8) * se, 4)
           .as("mde_abs"),
-        (floor(lit(2.8) * se / col("mb") * 1000000 + lit(0.5)).cast("double")
-          / 1000000).as("mde_rel"),
+        Det.quant(lit(2.8) * se / col("mb"), 6).as("mde_rel"),
         ceil(lit(2.8) * lit(2.8) * (col("vr") + col("vb"))
           / ((lit(0.05) * col("mb")) * (lit(0.05) * col("mb"))))
           .cast("long").as("n_per_arm_5pct"))
@@ -2349,8 +2302,6 @@ object StatsOps extends QueryPack {
       |  CAST(floor((1 - (vy - 2 * theta * cxy + theta * theta * vx) / vy)
       |    * 1000000 + 0.5) AS DOUBLE) / 1000000 AS var_reduction
       |FROM f ORDER BY arm""") { (s, dir) =>
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val ev = Tables(s, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         Det.cents(col("value")).cast("long").as("cents"))
@@ -2361,38 +2312,40 @@ object StatsOps extends QueryPack {
         sum(when(col("us") >= col("mid"), col("cents")).otherwise(0L)).as("y"))
     val gm = u.agg(count(lit(1)).cast("long").as("n"),
       sum("x").as("sx"), sum("y").as("sy"),
-      sum(col("x").cast(dec) * col("y")).as("sxy"),
-      sum(col("x").cast(dec) * col("x")).as("sxx"))
-    val th = gm.select(col("n"), (d(col("sx")) / d(col("n"))).as("xbar"),
-      (d(col("n").cast(dec) * col("sxy") - col("sx").cast(dec) * col("sy"))
-        / d(col("n").cast(dec) * col("sxx") - col("sx").cast(dec) * col("sx")))
+      sum(Det.wide(col("x")) * col("y")).as("sxy"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"))
+    val th = gm.select(col("n"), (col("sx").cast("double") / col("n").cast("double")).as("xbar"),
+      ((Det.wide(col("n")) * col("sxy") - Det.wide(col("sx")) * col("sy")).cast("double")
+        / (Det.wide(col("n")) * col("sxx") - Det.wide(col("sx")) * col("sx")).cast("double"))
         .as("theta"))
     val am = u.groupBy("arm")
       .agg(count(lit(1)).cast("long").as("na"),
         sum("x").as("sxa"), sum("y").as("sya"),
-        sum(col("x").cast(dec) * col("y")).as("sxya"),
-        sum(col("x").cast(dec) * col("x")).as("sxxa"),
-        sum(col("y").cast(dec) * col("y")).as("syya"))
+        sum(Det.wide(col("x")) * col("y")).as("sxya"),
+        sum(Det.wide(col("x")) * col("x")).as("sxxa"),
+        sum(Det.wide(col("y")) * col("y")).as("syya"))
     val f = am.crossJoin(broadcast(th))
       .select(col("arm"), col("na"), col("theta"),
-        (d(col("sya")) / d(col("na"))).as("ybar"),
-        (d(col("sxa")) / d(col("na"))).as("xbara"), col("xbar"),
-        ((d(col("syya")) - d(col("sya")) * d(col("sya")) / d(col("na")))
-          / (d(col("na")) - 1)).as("vy"),
-        ((d(col("sxya")) - d(col("sxa")) * d(col("sya")) / d(col("na")))
-          / (d(col("na")) - 1)).as("cxy"),
-        ((d(col("sxxa")) - d(col("sxa")) * d(col("sxa")) / d(col("na")))
-          / (d(col("na")) - 1)).as("vx"))
+        (col("sya").cast("double") / col("na").cast("double")).as("ybar"),
+        (col("sxa").cast("double") / col("na").cast("double")).as("xbara"), col("xbar"),
+        ((col("syya").cast("double") - col("sya").cast("double") * col("sya").cast("double") /
+          col("na").cast("double"))
+          / (col("na").cast("double") - 1)).as("vy"),
+        ((col("sxya").cast("double") - col("sxa").cast("double") * col("sya").cast("double") /
+          col("na").cast("double"))
+          / (col("na").cast("double") - 1)).as("cxy"),
+        ((col("sxxa").cast("double") - col("sxa").cast("double") * col("sxa").cast("double") /
+          col("na").cast("double"))
+          / (col("na").cast("double") - 1)).as("vx"))
     f.select(col("arm"), col("na").as("n_users"),
-      (floor(col("ybar") / 100 * 10000 + lit(0.5)).cast("double") / 10000)
+      Det.quant(col("ybar") / 100, 4)
         .as("mean_y"),
-      (floor((col("ybar") - col("theta") * (col("xbara") - col("xbar")))
-        / 100 * 10000 + lit(0.5)).cast("double") / 10000).as("mean_y_cuped"),
-      (floor(col("theta") * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant((col("ybar") - col("theta") * (col("xbara") - col("xbar")))
+        / 100, 4).as("mean_y_cuped"),
+      Det.quant(col("theta"), 6)
         .as("theta"),
-      (floor((lit(1) - (col("vy") - lit(2) * col("theta") * col("cxy")
-        + col("theta") * col("theta") * col("vx")) / col("vy"))
-        * 1000000 + lit(0.5)).cast("double") / 1000000).as("var_reduction"))
+      Det.quant(lit(1) - (col("vy") - lit(2) * col("theta") * col("cxy")
+        + col("theta") * col("theta") * col("vx")) / col("vy"), 6).as("var_reduction"))
       .orderBy("arm")
   }
 
@@ -2483,9 +2436,8 @@ object StatsOps extends QueryPack {
       .groupBy("k")
       .agg(sum(when(col("days") >= col("k"), 1L).otherwise(0L)).cast("long")
           .as("users_ge"),
-        (floor(sum(when(col("days") >= col("k"), 1L).otherwise(0L))
-          .cast("double") / max("n_users").cast("double") * 1000000
-          + lit(0.5)).cast("double") / 1000000).as("pct"))
+        Det.quant(sum(when(col("days") >= col("k"), 1L).otherwise(0L))
+          .cast("double") / max("n_users").cast("double"), 6).as("pct"))
       .orderBy("k")
   }
 
@@ -2533,7 +2485,7 @@ object StatsOps extends QueryPack {
       / ((col("n") + 2).cast("double") * (col("n") + 2).cast("double")
         * (col("n") + 3).cast("double")))
     def q6(c: org.apache.spark.sql.Column) =
-      floor(c * 1000000 + lit(0.5)).cast("double") / 1000000
+      Det.quant(c, 6)
     m.select(col("arm"), col("n"), col("s"),
         q6(col("s").cast("double") / col("n").cast("double")).as("rate"),
         q6(pm).as("post_mean"),
@@ -2573,20 +2525,17 @@ object StatsOps extends QueryPack {
       .groupBy(col("event_type"),
         expr("(unix_timestamp(ts) % 86400) div 3600").as("hour"))
       .agg(count(lit(1)).cast("long").as("c"))
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val t = h.groupBy("event_type")
-      .agg(sum("c").as("n"), sum(dec(col("c")) * col("c")).as("ssq"))
+      .agg(sum("c").as("n"), sum(Det.wide(col("c")) * col("c")).as("ssq"))
     val pk = h.withColumn("rn", row_number().over(
         Window.partitionBy("event_type").orderBy(col("c").desc, col("hour"))))
       .filter(col("rn") === 1)
       .select(col("event_type"), col("hour").as("peak_hour"), col("c").as("peak_c"))
     t.join(pk, "event_type")
       .select(col("event_type"), col("peak_hour").cast("long").as("peak_hour"),
-        (floor(col("peak_c").cast("double") / col("n").cast("double") * 1000000
-          + lit(0.5)).cast("double") / 1000000).as("peak_share"),
-        (floor(col("ssq").cast("double")
-          / (col("n").cast("double") * col("n").cast("double")) * 1000000
-          + lit(0.5)).cast("double") / 1000000).as("hhi"))
+        Det.quant(col("peak_c").cast("double") / col("n").cast("double"), 6).as("peak_share"),
+        Det.quant(col("ssq").cast("double")
+          / (col("n").cast("double") * col("n").cast("double")), 6).as("hhi"))
       .orderBy("event_type")
   }
 
@@ -2647,11 +2596,10 @@ object StatsOps extends QueryPack {
     val cell = e.groupBy("event_type", "dow")
       .agg(count(lit(1)).as("n"), sum("v").as("s"))
     val g = e.agg(count(lit(1)).as("ng"), sum("v").as("sg"),
-      sum((col("v") * col("v")).cast("decimal(38,0)")).cast("double").as("sq"))
-    def d(c: String) = col(c).cast("double")
+      sum(Det.wide(col("v") * col("v"))).cast("double").as("sq"))
     val z = cell.crossJoin(broadcast(g))
-      .withColumn("zv", (d("s") / col("n") - d("sg") / col("ng"))
-        / sqrt((col("sq") - d("sg") * col("sg") / col("ng"))
+      .withColumn("zv", (col("s").cast("double") / col("n") - col("sg").cast("double") / col("ng"))
+        / sqrt((col("sq") - col("sg").cast("double") * col("sg") / col("ng"))
           / (col("ng") - 1) / col("n")))
     val p = z.withColumn("pv",
       when(col("zv") * col("zv") >= 1, lit(1.0) / (col("zv") * col("zv")))
@@ -2665,9 +2613,9 @@ object StatsOps extends QueryPack {
       max(when(col("pv") <= col("i").cast("double") * 0.1 / col("m"), col("i"))
         .otherwise(lit(0))).over(Window.partitionBy()))
     def q4(c: org.apache.spark.sql.Column) =
-      floor(c * 10000 + lit(0.5)).cast("double") / 10000
+      Det.quant(c, 4)
     def q6(c: org.apache.spark.sql.Column) =
-      floor(c * 1000000 + lit(0.5)).cast("double") / 1000000
+      Det.quant(c, 6)
     k.select(col("event_type"), col("dow").cast("long").as("dow"), col("n"),
         q4(col("zv")).as("z"), q6(col("pv")).as("p"),
         col("i").cast("long").as("p_rank"),
@@ -2738,18 +2686,17 @@ object StatsOps extends QueryPack {
     val cy = cxy.groupBy("y").agg(sum("c").as("cy"))
     val n = cxy.agg(sum("c").as("n"))
       .withColumn("l_n", Det.lnFix(col("n"), 6).cast("long"))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val minum = cxy.join(broadcast(cx), "x").join(broadcast(cy), "y")
       .crossJoin(broadcast(n))
-      .agg(sum(dec(col("c")) * (Det.lnFix(col("c"), 6).cast("long")
+      .agg(sum(Det.wide(col("c")) * (Det.lnFix(col("c"), 6).cast("long")
         + col("l_n") - Det.lnFix(col("cx"), 6).cast("long")
         - Det.lnFix(col("cy"), 6).cast("long"))).as("w"))
-    val hx = cx.agg(sum(dec(col("cx")) * Det.lnFix(col("cx"), 6).cast("long"))
+    val hx = cx.agg(sum(Det.wide(col("cx")) * Det.lnFix(col("cx"), 6).cast("long"))
       .as("w"))
-    val hy = cy.agg(sum(dec(col("cy")) * Det.lnFix(col("cy"), 6).cast("long"))
+    val hy = cy.agg(sum(Det.wide(col("cy")) * Det.lnFix(col("cy"), 6).cast("long"))
       .as("w"))
     def q6(c: org.apache.spark.sql.Column) =
-      floor(c * 1000000 + lit(0.5)).cast("double") / 1000000
+      Det.quant(c, 6)
     val fin = n.crossJoin(broadcast(minum))
       .crossJoin(broadcast(hx.select(col("w").as("wx"))))
       .crossJoin(broadcast(hy.select(col("w").as("wy"))))
@@ -2794,10 +2741,10 @@ object StatsOps extends QueryPack {
       .select(col("event_type"), Det.cents(col("value")).cast("long").as("x"))
     val a = e.groupBy("event_type").agg(
       count(lit(1)).as("n"), sum("x").as("s"),
-      sum(col("x").cast("decimal(38,0)") * Det.lnFix(col("x"), 6).cast("long"))
+      sum(Det.wide(col("x")) * Det.lnFix(col("x"), 6).cast("long"))
         .as("w"))
     def q6(c: org.apache.spark.sql.Column) =
-      floor(c * 1000000 + lit(0.5)).cast("double") / 1000000
+      Det.quant(c, 6)
     a.select(col("event_type"), col("n"),
         (col("s").cast("double") / 100).as("total_value"),
         q6(col("w").cast("double") / 1000000 / col("s")
@@ -2837,10 +2784,10 @@ object StatsOps extends QueryPack {
       .agg(count(lit(1)).as("c"))
     val a = d.groupBy("event_type").agg(
       count(lit(1)).as("k"), sum("c").as("s"),
-      sum(col("c").cast("decimal(38,0)") * col("c")).cast("double").as("sq"))
+      sum(Det.wide(col("c")) * col("c")).cast("double").as("sq"))
     def dd(c: String) = col(c).cast("double")
     def q4(c: org.apache.spark.sql.Column) =
-      floor(c * 10000 + lit(0.5)).cast("double") / 10000
+      Det.quant(c, 4)
     a.select(col("event_type"), col("k"), col("s"),
         q4(dd("s") / col("k")).as("mean_daily"),
         q4((col("sq") - dd("s") * col("s") / col("k")) / (col("k") - 1)
@@ -2895,14 +2842,14 @@ object StatsOps extends QueryPack {
       sum(when(!half, Det.cents(col("value")).cast("long"))).as("s2"),
       count(when(!half, lit(1))).as("k2"))
     val d = u.filter(col("k1") > 0 && col("k2") > 0)
-      .select(floor((col("s1").cast("double") / 100 / col("k1")
-        - col("s2").cast("double") / 100 / col("k2")) * 1000000 + lit(0.5))
+      .select(Det.fix(col("s1").cast("double") / 100 / col("k1")
+        - col("s2").cast("double") / 100 / col("k2"), 6)
         .cast("long").as("di"))
     val a = d.agg(count(lit(1)).as("n"), sum("di").as("sd"),
-      sum(col("di").cast("decimal(38,0)") * col("di")).cast("double").as("sq"))
+      sum(Det.wide(col("di")) * col("di")).cast("double").as("sq"))
     def dd(c: String) = col(c).cast("double")
     def q4(c: org.apache.spark.sql.Column) =
-      floor(c * 10000 + lit(0.5)).cast("double") / 10000
+      Det.quant(c, 4)
     a.select(col("n"),
       q4(dd("sd") / 1000000 / col("n")).as("mean_diff"),
       q4(dd("sd") / 1000000 / col("n")
@@ -3001,7 +2948,7 @@ object StatsOps extends QueryPack {
       .filter(col("tag") === 0)
       .select(col("event_type"), (col("v").cast("double") / 100).as("value"),
         col("c").as("n_rows"),
-        (floor(col("q") * 1000000 + lit(0.5)) / 1000000).as("quantile"),
+        Det.quant(col("q"), 6).as("quantile"),
         (col("tgt").cast("double") / 100).as("qn_value"))
       .orderBy("event_type", "value")
   }
@@ -3051,15 +2998,14 @@ object StatsOps extends QueryPack {
       |  floor(jb * 10000 + 0.5) / 10000 AS jb,
       |  CAST(jb > 5.991464547107979 AS INT) AS reject_5pct
       |FROM j ORDER BY event_type""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val v = Det.cents(col("value"))
     val st = Tables(s, dir, "events")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
-        sum(v.cast(dec38)).as("s1"),
-        sum((v * v).cast(dec38)).as("s2"),
-        sum(v.cast(dec38) * v * v).as("s3"),
-        sum(v.cast(dec38) * v * v * v).as("s4"))
+        sum(Det.wide(v)).as("s1"),
+        sum(Det.wide(v * v)).as("s2"),
+        sum(Det.wide(v) * v * v).as("s3"),
+        sum(Det.wide(v) * v * v * v).as("s4"))
     val m = st.select(col("event_type"), col("n"),
       (col("s1").cast("double") / col("n")).as("a1"),
       (col("s2").cast("double") / col("n")).as("a2"),
@@ -3078,7 +3024,7 @@ object StatsOps extends QueryPack {
       (col("n").cast("double") / 6
         * (skew * skew + kurt * kurt / 4)).as("jb"))
     j.select(col("event_type"), col("n").cast("long").as("n"),
-        (floor(col("jb") * 10000 + lit(0.5)) / 10000).as("jb"),
+        Det.quant(col("jb"), 4).as("jb"),
         (col("jb") > lit(5.991464547107979)).cast("int").as("reject_5pct"))
       .orderBy("event_type")
   }
@@ -3102,17 +3048,15 @@ object StatsOps extends QueryPack {
       |         - CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / n * 10000 + 0.5)
       |    / 10000 AS chi2
       |FROM t""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val cell = Tables(s, dir, "events")
       .groupBy("event_type").agg(count(lit(1)).as("o"))
     cell.groupBy()
       .agg(count(lit(1)).as("k"), sum(col("o")).cast("long").as("n"),
-        sum(col("o").cast(dec38) * col("o")).as("s2"))
+        sum(Det.wide(col("o")) * col("o")).as("s2"))
       .select(col("k").cast("long").as("k"), col("n"),
         (col("k") - 1).cast("long").as("dof"),
-        (floor((col("k").cast("double") * col("s2").cast("double")
-          - col("n").cast("double") * col("n").cast("double")) / col("n")
-          * 10000 + lit(0.5)) / 10000).as("chi2"))
+        Det.quant((col("k").cast("double") * col("s2").cast("double")
+          - col("n").cast("double") * col("n").cast("double")) / col("n"), 4).as("chi2"))
   }
 
   // Wilcoxon signed-rank test on per-user paired counts (clicks vs
@@ -3153,7 +3097,6 @@ object StatsOps extends QueryPack {
       |        / sqrt(CAST(n AS DOUBLE) * (n + 1) * (2 * n + 1) / 24)
       |        * 10000 + 0.5) / 10000 AS z
       |FROM a""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val u = Tables(s, dir, "events")
       .filter(col("event_type").isin("click", "purchase"))
       .groupBy("user_id")
@@ -3167,12 +3110,11 @@ object StatsOps extends QueryPack {
     val h2 = hist.withColumn("cum", coalesce(sum(col("c")).over(w), lit(0L)))
     val a = h2.groupBy()
       .agg(sum(col("c")).cast("long").as("n"),
-        sum(col("pos").cast(dec38) * (col("cum") * 2 + col("c") + 1)).as("two_w"))
+        sum(Det.wide(col("pos")) * (col("cum") * 2 + col("c") + 1)).as("two_w"))
     val nD = col("n").cast("double")
     a.select(col("n"), (col("two_w").cast("double") / 2).as("w_plus"),
-      (floor((col("two_w").cast("double") / 2 - nD * (col("n") + 1) / 4)
-        / sqrt(nD * (col("n") + 1) * (col("n") * 2 + 1) / 24)
-        * 10000 + lit(0.5)) / 10000).as("z"))
+      Det.quant((col("two_w").cast("double") / 2 - nD * (col("n") + 1) / 4)
+        / sqrt(nD * (col("n") + 1) * (col("n") * 2 + 1) / 24), 4).as("z"))
   }
 
   // Cramér's V effect size for the (weekday × event type) contingency —
@@ -3222,15 +3164,15 @@ object StatsOps extends QueryPack {
     val ex = col("r").cast("double") * col("c") / col("n")
     val fx = cell.join(broadcast(rt), "event_type").join(broadcast(ct), "dow")
       .crossJoin(broadcast(t))
-      .select(floor((col("o") - ex) * (col("o") - ex) / ex * 1000000 + lit(0.5))
+      .select(Det.fix((col("o") - ex) * (col("o") - ex) / ex, 6)
         .cast("long").as("term"))
     val sdf = fx.groupBy().agg((sum("term").cast("double") / 1000000).as("chi2"))
     sdf.crossJoin(broadcast(t))
       .select(col("n").cast("long").as("n"),
-        (floor(col("chi2") * 10000 + lit(0.5)) / 10000).as("chi2"),
+        Det.quant(col("chi2"), 4).as("chi2"),
         least(col("nr") - 1, col("nc") - 1).cast("long").as("dof_min"),
-        (floor(sqrt(col("chi2") / (col("n") * least(col("nr") - 1, col("nc") - 1)))
-          * 1000000 + lit(0.5)) / 1000000).as("cramers_v"))
+        Det.quant(sqrt(col("chi2") / (col("n") * least(col("nr") - 1, col("nc") - 1))),
+          6).as("cramers_v"))
   }
 
   // Per-user ML feature-vector assembly — the feature-store handoff: one
@@ -3367,17 +3309,17 @@ object StatsOps extends QueryPack {
       .select(col("v"), col("l1"), col("l0"), r1.as("r1"), r0.as("r0"),
         col("t1"), col("t0"), wg.as("wg"))
     val rk = g.withColumn("rn", row_number().over(
-      Window.orderBy(floor(col("wg") * 100000000 + lit(0.5)).cast("long"),
+      Window.orderBy(Det.fix(col("wg"), 8).cast("long"),
         col("v"))))
     rk.filter(col("rn") === 1)
       .select((col("v").cast("double") / 100).as("threshold"),
         col("l1").cast("long").as("left_pos"), col("l0").cast("long").as("left_neg"),
         col("r1").cast("long").as("right_pos"), col("r0").cast("long").as("right_neg"),
-        (floor((lit(1) - (col("t1").cast("double") * col("t1")
+        Det.quant(lit(1) - (col("t1").cast("double") * col("t1")
           + col("t0").cast("double") * col("t0"))
-          / ((col("t1") + col("t0")).cast("double") * (col("t1") + col("t0"))))
-          * 1000000 + lit(0.5)) / 1000000).as("gini_parent"),
-        (floor(col("wg") * 1000000 + lit(0.5)) / 1000000).as("gini_split"))
+          / ((col("t1") + col("t0")).cast("double") * (col("t1") + col("t0"))),
+            6).as("gini_parent"),
+        Det.quant(col("wg"), 6).as("gini_split"))
   }
 
   /** Unrolled-CTE oracle for ml_cox_ph (the logreg/BPE promote device):
@@ -3499,16 +3441,14 @@ object StatsOps extends QueryPack {
     val c = h.select(col("v"), col("n1"),
       sum("n1").over(wDesc).cast("long").as("tp"),
       sum("n0").over(wDesc).cast("long").as("fp"))
-    val term = floor(col("n1").cast("double") / col("t1")
-      * (col("tp").cast("double") / (col("tp") + col("fp")))
-      * 1000000000000L + lit(0.5)).cast("long")
+    val term = Det.fix(col("n1").cast("double") / col("t1")
+      * (col("tp").cast("double") / (col("tp") + col("fp"))), 12).cast("long")
     val terms = c.crossJoin(broadcast(t)).filter(col("n1") > 0)
-      .agg(sum(term).cast("decimal(38,0)").as("ap12"))
+      .agg(Det.wide(sum(term)).as("ap12"))
     terms.crossJoin(broadcast(t))
       .select(col("t1").as("n_pos"), col("t0").as("n_neg"),
-        (floor(col("t1").cast("double") / (col("t1") + col("t0")) * 1000000
-          + lit(0.5)) / 1000000).as("baseline_prec"),
-        (floor(col("ap12").cast("double") / 1000000 + lit(0.5)) / 1000000)
+        Det.quant(col("t1").cast("double") / (col("t1") + col("t0")), 6).as("baseline_prec"),
+        (Det.half(col("ap12").cast("double") / 1000000) / 1000000)
           .as("auc_pr"))
   }
 
@@ -3554,7 +3494,6 @@ object StatsOps extends QueryPack {
       |    / CAST(n * qt - st * st AS DOUBLE)) * 1000000 + 0.5) / 1000000
       |    AS cronbach_alpha
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     def item(et: String) =
       sum(when(col("event_type") === et, 1L).otherwise(0L)).cast("long")
     val u = Tables(s, dir, "events").groupBy("user_id")
@@ -3563,21 +3502,20 @@ object StatsOps extends QueryPack {
         item("error").as("i5"))
       .withColumn("it",
         col("i1") + col("i2") + col("i3") + col("i4") + col("i5"))
-    val m = u.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-      sum("i1").cast("decimal(38,0)").as("s1"), sum(dec(col("i1")) * col("i1")).as("q1"),
-      sum("i2").cast("decimal(38,0)").as("s2"), sum(dec(col("i2")) * col("i2")).as("q2"),
-      sum("i3").cast("decimal(38,0)").as("s3"), sum(dec(col("i3")) * col("i3")).as("q3"),
-      sum("i4").cast("decimal(38,0)").as("s4"), sum(dec(col("i4")) * col("i4")).as("q4"),
-      sum("i5").cast("decimal(38,0)").as("s5"), sum(dec(col("i5")) * col("i5")).as("q5"),
-      sum("it").cast("decimal(38,0)").as("st"), sum(dec(col("it")) * col("it")).as("qt"))
+    val m = u.agg(Det.wide(count(lit(1))).as("n"),
+      Det.wide(sum("i1")).as("s1"), sum(Det.wide(col("i1")) * col("i1")).as("q1"),
+      Det.wide(sum("i2")).as("s2"), sum(Det.wide(col("i2")) * col("i2")).as("q2"),
+      Det.wide(sum("i3")).as("s3"), sum(Det.wide(col("i3")) * col("i3")).as("q3"),
+      Det.wide(sum("i4")).as("s4"), sum(Det.wide(col("i4")) * col("i4")).as("q4"),
+      Det.wide(sum("i5")).as("s5"), sum(Det.wide(col("i5")) * col("i5")).as("q5"),
+      Det.wide(sum("it")).as("st"), sum(Det.wide(col("it")) * col("it")).as("qt"))
     def cv(q: String, sS: String) =
       (col("n") * col(q) - col(sS) * col(sS)).cast("double")
     val share = (cv("q1", "s1") + cv("q2", "s2") + cv("q3", "s3")
       + cv("q4", "s4") + cv("q5", "s5")) / cv("qt", "st")
     m.select(col("n").cast("long").as("n_users"),
-      (floor(share * 1000000 + lit(0.5)) / 1000000).as("item_var_share"),
-      (floor(lit(5.0) / lit(4.0) * (lit(1) - share) * 1000000 + lit(0.5))
-        / 1000000).as("cronbach_alpha"))
+      Det.quant(share, 6).as("item_var_share"),
+      Det.quant(lit(5.0) / lit(4.0) * (lit(1) - share), 6).as("cronbach_alpha"))
   }
 
   // Cochran-Mantel-Haenszel test of the arm × purchase association
@@ -3652,31 +3590,25 @@ object StatsOps extends QueryPack {
       (col("a") + col("b")).as("n1"), (col("c") + col("d")).as("n0"),
       (col("a") + col("c")).as("m1"), (col("b") + col("d")).as("m0"),
       (col("a") + col("b") + col("c") + col("d")).as("tt"))
-    val e12 = floor(col("n1").cast("double") * col("m1") / col("tt")
-      * 1000000000000L + lit(0.5)).cast("long")
-    val v12 = floor(col("n1").cast("double") * col("n0") * col("m1")
+    val e12 = Det.fix(col("n1").cast("double") * col("m1") / col("tt"), 12).cast("long")
+    val v12 = Det.fix(col("n1").cast("double") * col("n0") * col("m1")
       / col("tt") * col("m0")
-      / (col("tt").cast("double") * (col("tt") - 1))
-      * 1000000000000L + lit(0.5)).cast("long")
-    val ad6 = floor(col("a").cast("double") * col("d") / col("tt")
-      * 1000000 + lit(0.5)).cast("long")
-    val bc6 = floor(col("b").cast("double") * col("c") / col("tt")
-      * 1000000 + lit(0.5)).cast("long")
+      / (col("tt").cast("double") * (col("tt") - 1)), 12).cast("long")
+    val ad6 = Det.fix(col("a").cast("double") * col("d") / col("tt"), 6).cast("long")
+    val bc6 = Det.fix(col("b").cast("double") * col("c") / col("tt"), 6).cast("long")
     val sAgg = t.agg(count(lit(1)).cast("long").as("n_strata"),
       sum("a").cast("long").as("sum_a"),
-      sum(e12).cast("decimal(38,0)").as("e12"),
-      sum(v12).cast("decimal(38,0)").as("v12"),
-      sum(ad6).cast("decimal(38,0)").as("ad6"),
-      sum(bc6).cast("decimal(38,0)").as("bc6"))
+      Det.wide(sum(e12)).as("e12"),
+      Det.wide(sum(v12)).as("v12"),
+      Det.wide(sum(ad6)).as("ad6"),
+      Det.wide(sum(bc6)).as("bc6"))
     sAgg.select(col("n_strata"), col("sum_a"),
-      (floor(col("e12").cast("double") / 1000000 + lit(0.5)) / 1000000)
+      (Det.half(col("e12").cast("double") / 1000000) / 1000000)
         .as("expected_a"),
-      (floor((col("sum_a") - col("e12").cast("double") / 1000000000000L)
+      Det.quant((col("sum_a") - col("e12").cast("double") / 1000000000000L)
         * (col("sum_a") - col("e12").cast("double") / 1000000000000L)
-        / (col("v12").cast("double") / 1000000000000L) * 1000000 + lit(0.5))
-        / 1000000).as("cmh_chi2"),
-      (floor(col("ad6").cast("double") / col("bc6").cast("double")
-        * 1000000 + lit(0.5)) / 1000000).as("or_mh"))
+        / (col("v12").cast("double") / 1000000000000L), 6).as("cmh_chi2"),
+      Det.quant(col("ad6").cast("double") / col("bc6").cast("double"), 6).as("or_mh"))
   }
 
   // Breusch-Pagan heteroscedasticity test on the daily-revenue trend OLS
@@ -3734,18 +3666,17 @@ object StatsOps extends QueryPack {
       |          * CAST(n * see - se * se AS DOUBLE))) * 1000000 + 0.5)
       |    / 1000000 AS bp_lm
       |FROM a""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val d = Tables(s, dir, "events")
       .groupBy(datediff(to_date(date_trunc("day", col("ts"))),
         lit("2024-01-01").cast("date")).cast("long").as("x"))
       .agg(expr("sum(cast(floor(value * 100 + 0.5) as bigint)) div 100")
         .cast("long").as("y"))
       .localCheckpoint()
-    val m = d.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-      sum("x").cast("decimal(38,0)").as("sx"),
-      sum("y").cast("decimal(38,0)").as("sy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("x")) * col("y")).as("sxy"))
+    val m = d.agg(Det.wide(count(lit(1))).as("n"),
+      Det.wide(sum("x")).as("sx"),
+      Det.wide(sum("y")).as("sy"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"),
+      sum(Det.wide(col("x")) * col("y")).as("sxy"))
     val b1 = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
       (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
     val b0 = (col("sy").cast("double")
@@ -3756,20 +3687,20 @@ object StatsOps extends QueryPack {
     val resid = col("y").cast("double") - col("b0") - col("b1") * col("x")
     val e = d.crossJoin(broadcast(bFrame))
       .select(col("x"),
-        floor(resid * resid * 100 + lit(0.5)).cast("long").as("e2"))
-    val a = e.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-      sum("x").cast("decimal(38,0)").as("sx"),
-      sum("e2").cast("decimal(38,0)").as("se"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("x")) * col("e2")).as("sxe"),
-      sum(dec(col("e2")) * col("e2")).as("see"))
+        Det.fix(resid * resid, 2).cast("long").as("e2"))
+    val a = e.agg(Det.wide(count(lit(1))).as("n"),
+      Det.wide(sum("x")).as("sx"),
+      Det.wide(sum("e2")).as("se"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"),
+      sum(Det.wide(col("x")) * col("e2")).as("sxe"),
+      sum(Det.wide(col("e2")) * col("e2")).as("see"))
     val cxe = (col("n") * col("sxe") - col("sx") * col("se")).cast("double")
     val r2 = cxe * cxe /
       ((col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
         * (col("n") * col("see") - col("se") * col("se")).cast("double"))
     a.select(col("n").cast("long").as("n_days"),
-      (floor(r2 * 1000000 + lit(0.5)) / 1000000).as("r2_aux"),
-      (floor(col("n").cast("double") * r2 * 1000000 + lit(0.5)) / 1000000)
+      Det.quant(r2, 6).as("r2_aux"),
+      Det.quant(col("n").cast("double") * r2, 6)
         .as("bp_lm"))
   }
 
@@ -3814,11 +3745,9 @@ object StatsOps extends QueryPack {
       + z2 / (lit(4.0) * col("n") * col("n")))
     val den = lit(1) + z2 / col("n")
     a.select(col("arm"), col("n"), col("x"),
-        (floor(p * 1000000 + lit(0.5)) / 1000000).as("phat"),
-        (floor((p + z2 / (lit(2) * col("n")) - half) / den * 1000000
-          + lit(0.5)) / 1000000).as("wilson_lo"),
-        (floor((p + z2 / (lit(2) * col("n")) + half) / den * 1000000
-          + lit(0.5)) / 1000000).as("wilson_hi"))
+        Det.quant(p, 6).as("phat"),
+        Det.quant((p + z2 / (lit(2) * col("n")) - half) / den, 6).as("wilson_lo"),
+        Det.quant((p + z2 / (lit(2) * col("n")) + half) / den, 6).as("wilson_hi"))
       .orderBy("arm")
   }
 
@@ -3874,20 +3803,19 @@ object StatsOps extends QueryPack {
       .groupBy(hour(col("ts")).cast("long").as("hr"))
       .agg(count(lit(1)).cast("long").as("c"))
     val r = h.select(col("hr"), col("c"),
-      floor(sin(lit(2) * lit(math.Pi) * col("hr") / 24) * 1000000 + lit(0.5))
+      Det.fix(sin(lit(2) * lit(math.Pi) * col("hr") / 24), 6)
         .cast("long").as("s6"),
-      floor(cos(lit(2) * lit(math.Pi) * col("hr") / 24) * 1000000 + lit(0.5))
+      Det.fix(cos(lit(2) * lit(math.Pi) * col("hr") / 24), 6)
         .cast("long").as("k6"))
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-    val m = r.agg(count(lit(1)).cast("decimal(38,0)").as("m"),
-      sum("c").cast("decimal(38,0)").as("sy"),
-      sum("s6").cast("decimal(38,0)").as("su"),
-      sum("k6").cast("decimal(38,0)").as("sw"),
-      sum(dec(col("s6")) * col("s6")).as("suu"),
-      sum(dec(col("k6")) * col("k6")).as("sww"),
-      sum(dec(col("s6")) * col("k6")).as("suw"),
-      sum(dec(col("s6")) * col("c")).as("suy"),
-      sum(dec(col("k6")) * col("c")).as("swy"))
+    val m = r.agg(Det.wide(count(lit(1))).as("m"),
+      Det.wide(sum("c")).as("sy"),
+      Det.wide(sum("s6")).as("su"),
+      Det.wide(sum("k6")).as("sw"),
+      sum(Det.wide(col("s6")) * col("s6")).as("suu"),
+      sum(Det.wide(col("k6")) * col("k6")).as("sww"),
+      sum(Det.wide(col("s6")) * col("k6")).as("suw"),
+      sum(Det.wide(col("s6")) * col("c")).as("suy"),
+      sum(Det.wide(col("k6")) * col("c")).as("swy"))
     val cuu = col("m") * col("suu") - col("su") * col("su")
     val cww = col("m") * col("sww") - col("sw") * col("sw")
     val cuw = col("m") * col("suw") - col("su") * col("sw")
@@ -3897,13 +3825,12 @@ object StatsOps extends QueryPack {
     val b1 = (cuy * cww - cuw * cwy).cast("double") / det * 1000000
     val b2 = (cuu * cwy - cuw * cuy).cast("double") / det * 1000000
     m.select(col("m").cast("long").as("n_hours"),
-      (floor(col("sy").cast("double") / col("m") * 1000000 + lit(0.5))
-        / 1000000).as("mean_count"),
-      (floor(b1 * 1000000 + lit(0.5)) / 1000000).as("beta_sin"),
-      (floor(b2 * 1000000 + lit(0.5)) / 1000000).as("beta_cos"),
-      (floor(sqrt(b1 * b1 + b2 * b2) * 1000000 + lit(0.5)) / 1000000)
+      Det.quant(col("sy").cast("double") / col("m"), 6).as("mean_count"),
+      Det.quant(b1, 6).as("beta_sin"),
+      Det.quant(b2, 6).as("beta_cos"),
+      Det.quant(sqrt(b1 * b1 + b2 * b2), 6)
         .as("amplitude"),
-      (floor(atan2(b2, b1) * 1000000 + lit(0.5)) / 1000000).as("phase"))
+      Det.quant(atan2(b2, b1), 6).as("phase"))
   }
 
   // Poisson incidence-rate ratio between the user-parity arms — the
@@ -3953,14 +3880,11 @@ object StatsOps extends QueryPack {
     val rr = col("c1").cast("double") / col("n1") /
       (col("c0").cast("double") / col("n0"))
     w.select(col("n0"), col("n1"), col("c0"), col("c1"),
-      (floor(col("c0").cast("double") / col("n0") * 1000000 + lit(0.5))
-        / 1000000).as("rate0"),
-      (floor(col("c1").cast("double") / col("n1") * 1000000 + lit(0.5))
-        / 1000000).as("rate1"),
-      (floor(rr * 1000000 + lit(0.5)) / 1000000).as("rate_ratio"),
-      (floor(log(rr) * 1000000 + lit(0.5)) / 1000000).as("log_rr"),
-      (floor(log(rr) / sqrt(lit(1.0) / col("c0") + lit(1.0) / col("c1"))
-        * 1000000 + lit(0.5)) / 1000000).as("wald_z"))
+      Det.quant(col("c0").cast("double") / col("n0"), 6).as("rate0"),
+      Det.quant(col("c1").cast("double") / col("n1"), 6).as("rate1"),
+      Det.quant(rr, 6).as("rate_ratio"),
+      Det.quant(log(rr), 6).as("log_rr"),
+      Det.quant(log(rr) / sqrt(lit(1.0) / col("c0") + lit(1.0) / col("c1")), 6).as("wald_z"))
   }
 
   // Log-rank test between the two survival arms — completes the survival
@@ -4027,22 +3951,19 @@ object StatsOps extends QueryPack {
       .select(col("nl0").as("d0"), col("nl1").as("d1"),
         col("r0"), col("r1"), (col("r0") + col("r1")).as("r"),
         (col("nl0") + col("nl1")).as("d"))
-    val e12t = floor(col("d").cast("double") * col("r1") / col("r")
-      * 1000000000000L + lit(0.5)).cast("long")
-    val v12t = floor(col("d").cast("double") * col("r1") / col("r")
+    val e12t = Det.fix(col("d").cast("double") * col("r1") / col("r"), 12).cast("long")
+    val v12t = Det.fix(col("d").cast("double") * col("r1") / col("r")
       * (col("r0").cast("double") / col("r")) * (col("r") - col("d"))
-      / greatest(col("r") - 1, lit(1L))
-      * 1000000000000L + lit(0.5)).cast("long")
+      / greatest(col("r") - 1, lit(1L)), 12).cast("long")
     val terms = base.agg(sum("d1").cast("long").as("o1"),
-      sum(e12t).cast("decimal(38,0)").as("e12"),
-      sum(v12t).cast("decimal(38,0)").as("v12"))
+      Det.wide(sum(e12t)).as("e12"),
+      Det.wide(sum(v12t)).as("v12"))
     terms.select(col("o1").as("events_arm1"),
-      (floor(col("e12").cast("double") / 1000000 + lit(0.5)) / 1000000)
+      (Det.half(col("e12").cast("double") / 1000000) / 1000000)
         .as("expected_arm1"),
-      (floor((col("o1") - col("e12").cast("double") / 1000000000000L)
+      Det.quant((col("o1") - col("e12").cast("double") / 1000000000000L)
         * (col("o1") - col("e12").cast("double") / 1000000000000L)
-        / (col("v12").cast("double") / 1000000000000L) * 1000000 + lit(0.5))
-        / 1000000).as("logrank_chi2"))
+        / (col("v12").cast("double") / 1000000000000L), 6).as("logrank_chi2"))
   }
 
   // Cox proportional-hazards fit of the churn survival time against the
@@ -4225,7 +4146,7 @@ object StatsOps extends QueryPack {
       cands.crossJoin(broadcast(t))
         .filter(col("l1") + col("l0") > 0 && r1 + r0 > 0)
         .select(col("feat"), col("thr"), col("t1"), col("t0"), wg.as("wg"),
-          floor(wg * 100000000 + lit(0.5)).cast("long").as("wg8"))
+          Det.fix(wg, 8).cast("long").as("wg8"))
         .orderBy(col("wg8"), col("feat"), col("thr"))
         .limit(1)
     }
@@ -4301,11 +4222,10 @@ object StatsOps extends QueryPack {
       |WHERE event_type <> 'view'
       |ORDER BY event_type""") { (s, dir) =>
     val f = Det.fix(col("value"), 4)
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val st = Tables(s, dir, "events")
       .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(f.cast(dec38)).as("s1"),
-        sum((f * f).cast(dec38)).as("s2"))
+      .agg(count(lit(1)).as("n"), sum(Det.wide(f)).as("s1"),
+        sum(Det.wide(f * f)).as("s2"))
     val m = st.select(col("event_type"), col("n"),
       (col("s1").cast("double") / 10000 / col("n")).as("mean"),
       ((col("s2").cast("double") / 100000000L
@@ -4319,9 +4239,9 @@ object StatsOps extends QueryPack {
     m.filter(col("event_type") =!= "view")
       .crossJoin(broadcast(base))
       .select(col("event_type"), col("n").cast("long").as("n"),
-        (floor(d * 10000 + lit(0.5)) / 10000).as("d"),
-        (floor(d * (lit(1) - lit(3).cast("double")
-          / (lit(4) * (col("n") + col("nb")) - 9)) * 10000 + lit(0.5)) / 10000)
+        Det.quant(d, 4).as("d"),
+        Det.quant(d * (lit(1) - lit(3).cast("double")
+          / (lit(4) * (col("n") + col("nb")) - 9)), 4)
           .as("g"))
       .orderBy("event_type")
   }
@@ -4373,7 +4293,6 @@ object StatsOps extends QueryPack {
       |  CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
       |  CAST(n_bins AS BIGINT) AS n_bins
       |FROM t ORDER BY event_type""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val cv = Det.cents(col("value")).cast("long")
     val ev = Tables(s, dir, "events").select(col("event_type"),
       floor((cv.cast("double") / 500)).cast("long").as("b"),
@@ -4393,18 +4312,17 @@ object StatsOps extends QueryPack {
     // HUGEINT) — both engines then sum exact integers at any row count
     val mArg = (col("c1").cast("double") * col("n2")) +
       (col("c2").cast("double") * col("n1"))
-    val ta = sum(col("c1").cast(dec38)
-      * (lnf(lit(2.0) * col("c1") * col("n2")) - lnf(mArg)).cast(dec38))
+    val ta = sum(Det.wide(col("c1"))
+      * Det.wide(lnf(lit(2.0) * col("c1") * col("n2")) - lnf(mArg)))
       .cast("double") / max(col("n1"))
-    val tb = sum(col("c2").cast(dec38)
-      * (lnf(lit(2.0) * col("c2") * col("n1")) - lnf(mArg)).cast(dec38))
+    val tb = sum(Det.wide(col("c2"))
+      * Det.wide(lnf(lit(2.0) * col("c2") * col("n1")) - lnf(mArg)))
       .cast("double") / max(col("n2"))
     joined.groupBy("event_type")
       .agg(ta.as("ta"), tb.as("tb"), max(col("n1")).as("n1"),
         max(col("n2")).as("n2"), max(col("n_bins")).as("n_bins"))
       .select(col("event_type"),
-        (floor((col("ta") + col("tb")) / 2000000000000L * 1000000 + lit(0.5))
-          / 1000000).as("jsd_nats"),
+        Det.quant((col("ta") + col("tb")) / 2000000000000L, 6).as("jsd_nats"),
         col("n1").cast("long").as("n1"), col("n2").cast("long").as("n2"),
         col("n_bins").cast("long").as("n_bins"))
       .orderBy("event_type")
@@ -4475,10 +4393,9 @@ object StatsOps extends QueryPack {
       .crossJoin(broadcast(kk.select(col("k").cast("long").as("k"))))
       .select(col("n").as("n_blocks"), col("k").cast("int").as("k"),
         col("s2").as("sum_rank2_sq"),
-        (floor(((lit(3) * col("s2")).cast("double")
+        Det.quant((lit(3) * col("s2")).cast("double")
           / (col("n") * col("k") * (col("k") + 1)).cast("double")
-          - (lit(3) * col("n") * (col("k") + 1)).cast("double"))
-          * 1000000 + lit(0.5)) / 1000000).as("friedman_q"))
+          - (lit(3) * col("n") * (col("k") + 1)).cast("double"), 6).as("friedman_q"))
   }
 
   // Sequential probability ratio test (Wald SPRT) on the purchase
@@ -4532,7 +4449,6 @@ object StatsOps extends QueryPack {
       |     AND (cross_h1 IS NULL OR cross_h0 < cross_h1) THEN 'accept_h0'
       |    ELSE 'continue' END AS decision
       |FROM g ORDER BY arm""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val ev = Tables(s, dir, "events")
       .select((col("user_id") % 2).as("arm"), col("ts"), col("event_id"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("conv"))
@@ -4541,21 +4457,20 @@ object StatsOps extends QueryPack {
       Seq("arm"), Seq("ts", "event_id"), col("conv"), "s_cum")
     val l = cum.select(col("arm"), col("rn").cast("long").as("rn"),
       col("s_cum"),
-      (col("s_cum").cast(dec38) * lit(182321556794L)
-        + (col("rn").cast("long") - col("s_cum")).cast(dec38)
+      (Det.wide(col("s_cum")) * lit(182321556794L)
+        + Det.wide(col("rn").cast("long") - col("s_cum"))
           * lit(-22472855852L)).as("llr"))
     val g = l.groupBy("arm").agg(
       max("rn").cast("long").as("n_events"),
       max("s_cum").cast("long").as("n_conversions"),
       max_by(col("llr"), col("rn")).as("llr_final_fix"),
-      min(when(col("llr") >= lit(2944438979166L).cast(dec38), col("rn")))
+      min(when(col("llr") >= Det.wide(lit(2944438979166L)), col("rn")))
         .as("cross_h1"),
-      min(when(col("llr") <= lit(-2944438979166L).cast(dec38), col("rn")))
+      min(when(col("llr") <= Det.wide(lit(-2944438979166L)), col("rn")))
         .as("cross_h0"))
     g.select(col("arm").cast("long").as("arm"), col("n_events"),
         col("n_conversions"),
-        (floor(col("llr_final_fix").cast("double") / 1000000000000L
-          * 1000000 + lit(0.5)) / 1000000).as("llr_final"),
+        Det.quant(col("llr_final_fix").cast("double") / 1000000000000L, 6).as("llr_final"),
         col("cross_h1").cast("long").as("first_cross_h1"),
         col("cross_h0").cast("long").as("first_cross_h0"),
         when(col("cross_h1").isNotNull
@@ -4635,13 +4550,11 @@ object StatsOps extends QueryPack {
     val disc = col("n10") + col("n01")
     agg.select(col("n_pairs"), col("n10"), col("n01"),
       when(disc === 0, lit(null).cast("double"))
-        .otherwise(floor(((col("n10") - col("n01"))
-          * (col("n10") - col("n01"))).cast("double") / disc
-          * 1000000 + lit(0.5)) / 1000000).as("chi2"),
+        .otherwise(Det.quant(((col("n10") - col("n01"))
+          * (col("n10") - col("n01"))).cast("double") / disc, 6)).as("chi2"),
       when(disc === 0, lit(null).cast("double"))
-        .otherwise(floor(((abs(col("n10") - col("n01")) - 1)
-          * (abs(col("n10") - col("n01")) - 1)).cast("double") / disc
-          * 1000000 + lit(0.5)) / 1000000).as("chi2_cc"))
+        .otherwise(Det.quant(((abs(col("n10") - col("n01")) - 1)
+          * (abs(col("n10") - col("n01")) - 1)).cast("double") / disc, 6)).as("chi2_cc"))
   }
 
   // Cochran's Q test — "does within-week participation differ across the
@@ -4691,7 +4604,6 @@ object StatsOps extends QueryPack {
       |      / CAST(k * n - sr2 AS DOUBLE) * 1000000 + 0.5) / 1000000 END
       |    AS cochran_q
       |FROM agg""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events")
       .select(col("user_id"), date_trunc("week", col("ts")).as("wk"),
         col("event_type"))
@@ -4707,19 +4619,18 @@ object StatsOps extends QueryPack {
       .agg(sum("x").cast("long").as("r"))
     val colt = grid.groupBy("event_type").agg(sum("x").cast("long").as("c"))
     val aggR = rowt.agg(count(lit(1)).cast("long").as("n_blocks"),
-      sum("r").cast("decimal(38,0)").as("n"),
-      sum(col("r") * col("r")).cast("decimal(38,0)").as("sr2"))
-    val aggC = colt.agg(sum(dec(col("c")) * col("c")).as("sc2"))
+      Det.wide(sum("r")).as("n"),
+      Det.wide(sum(col("r") * col("r"))).as("sr2"))
+    val aggC = colt.agg(sum(Det.wide(col("c")) * col("c")).as("sc2"))
     aggR.crossJoin(broadcast(aggC)).crossJoin(broadcast(kk))
       .select(col("n_blocks"), col("k").cast("int").as("k"),
         col("sc2").cast("long").as("sum_col_sq"),
-        when(dec(col("k")) * col("n") - col("sr2") === 0,
+        when(Det.wide(col("k")) * col("n") - col("sr2") === 0,
           lit(null).cast("double"))
-          .otherwise(floor(((dec(col("k")) - 1)
-            * (dec(col("k")) * col("sc2") - col("n") * col("n")))
+          .otherwise(Det.quant(((Det.wide(col("k")) - 1)
+            * (Det.wide(col("k")) * col("sc2") - col("n") * col("n")))
             .cast("double")
-            / (dec(col("k")) * col("n") - col("sr2")).cast("double")
-            * 1000000 + lit(0.5)) / 1000000).as("cochran_q"))
+            / (Det.wide(col("k")) * col("n") - col("sr2")).cast("double"), 6)).as("cochran_q"))
   }
 
   // ROC AUC of `value` as a purchase-vs-view classifier score, by the
@@ -4760,7 +4671,6 @@ object StatsOps extends QueryPack {
       |    / (CAST(n1 AS DOUBLE) * CAST(n0 AS DOUBLE)) - 1) * 1000000 + 0.5)
       |    / 1000000 AS gini
       |FROM agg""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "view"))
       .select(Det.cents(col("value")).cast("long").as("v"),
@@ -4772,15 +4682,13 @@ object StatsOps extends QueryPack {
     val tot = hist.agg(sum("c1").cast("long").as("n1"),
       sum("c0").cast("long").as("n0"))
     val agg = cum.agg(
-      sum(dec(col("c1")) * (lit(2) * dec(col("cum0")) + col("c0"))).as("num"))
+      sum(Det.wide(col("c1")) * (lit(2) * Det.wide(col("cum0")) + col("c0"))).as("num"))
     agg.crossJoin(broadcast(tot))
       .select(col("n1").as("n_pos"), col("n0").as("n_neg"),
-        (floor(col("num").cast("double")
-          / (lit(2) * col("n1").cast("double") * col("n0").cast("double"))
-          * 1000000 + lit(0.5)) / 1000000).as("auc"),
-        (floor((col("num").cast("double")
-          / (col("n1").cast("double") * col("n0").cast("double")) - 1)
-          * 1000000 + lit(0.5)) / 1000000).as("gini"))
+        Det.quant(col("num").cast("double")
+          / (lit(2) * col("n1").cast("double") * col("n0").cast("double")), 6).as("auc"),
+        Det.quant(col("num").cast("double")
+          / (col("n1").cast("double") * col("n0").cast("double")) - 1, 6).as("gini"))
   }
 
   // Expected calibration error of the per-bucket empirical conversion
@@ -4835,7 +4743,6 @@ object StatsOps extends QueryPack {
       |    / 1000000 AS ece,
       |  CAST(maxgap8 AS DOUBLE) / 100000000 AS max_gap
       |FROM agg""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "view"))
       .select(Det.cents(col("value")).cast("long").as("v"),
@@ -4850,16 +4757,15 @@ object StatsOps extends QueryPack {
       .agg(sum("y").cast("long").as("n1e"), count(lit(1)).as("ne"))
     val j = te.join(tr, "bucket")
       .select(col("ne"),
-        floor(abs(col("n1e").cast("double") / col("ne")
-          - col("n1t").cast("double") / col("nt")) * 100000000 + lit(0.5))
+        Det.fix(abs(col("n1e").cast("double") / col("ne")
+          - col("n1t").cast("double") / col("nt")), 8)
           .cast("long").as("gap8"))
     j.agg(count(lit(1)).cast("long").as("n_buckets"),
         sum("ne").cast("long").as("n_test"),
-        sum(dec(col("ne")) * col("gap8")).as("wsum"),
+        sum(Det.wide(col("ne")) * col("gap8")).as("wsum"),
         max("gap8").as("maxgap8"))
       .select(col("n_buckets"), col("n_test"),
-        (floor(col("wsum").cast("double") / col("n_test") / 100000000
-          * 1000000 + lit(0.5)) / 1000000).as("ece"),
+        Det.quant(col("wsum").cast("double") / col("n_test") / 100000000, 6).as("ece"),
         (col("maxgap8").cast("double") / 100000000).as("max_gap"))
   }
 
@@ -4917,19 +4823,18 @@ object StatsOps extends QueryPack {
       |  floor(sqrt(CAST(sq AS DOUBLE) / n_test) * 100 + 0.5) / 10000 AS rmse
       |FROM r JOIN co ON r.fold = co.fold
       |ORDER BY fold""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val li = Tables(s, dir, "lineitem")
       .select(col("l_quantity").cast("long").as("x"),
         Det.cents(col("l_extendedprice")).cast("long").as("y"),
         ((col("l_orderkey") + col("l_linenumber")) % 5).as("fold"))
-    val g = li.agg(count(lit(1)).cast("decimal(38,0)").as("gn"),
-      sum(dec(col("x"))).as("gsx"), sum(dec(col("y"))).as("gsy"),
-      sum(dec(col("x")) * col("x")).as("gsxx"),
-      sum(dec(col("x")) * col("y")).as("gsxy"))
-    val f = li.groupBy("fold").agg(count(lit(1)).cast("decimal(38,0)").as("fn"),
-      sum(dec(col("x"))).as("fsx"), sum(dec(col("y"))).as("fsy"),
-      sum(dec(col("x")) * col("x")).as("fsxx"),
-      sum(dec(col("x")) * col("y")).as("fsxy"))
+    val g = li.agg(Det.wide(count(lit(1))).as("gn"),
+      sum(Det.wide(col("x"))).as("gsx"), sum(Det.wide(col("y"))).as("gsy"),
+      sum(Det.wide(col("x")) * col("x")).as("gsxx"),
+      sum(Det.wide(col("x")) * col("y")).as("gsxy"))
+    val f = li.groupBy("fold").agg(Det.wide(count(lit(1))).as("fn"),
+      sum(Det.wide(col("x"))).as("fsx"), sum(Det.wide(col("y"))).as("fsy"),
+      sum(Det.wide(col("x")) * col("x")).as("fsxx"),
+      sum(Det.wide(col("x")) * col("y")).as("fsxy"))
     val co = f.crossJoin(broadcast(g)).select(col("fold"),
       (col("gn") - col("fn")).as("n_train"),
       ((col("gn") - col("fn")) * (col("gsxx") - col("fsxx"))
@@ -4940,21 +4845,17 @@ object StatsOps extends QueryPack {
         - (col("gsx") - col("fsx")) * (col("gsxy") - col("fsxy"))).as("an"))
     val e = li.join(broadcast(co), "fold")
       .select(col("fold"),
-        floor(col("y").cast("double")
+        Det.half(col("y").cast("double")
           - col("an").cast("double") / col("d").cast("double")
-          - col("bn").cast("double") / col("d").cast("double") * col("x")
-          + lit(0.5)).cast("long").as("ef"))
+          - col("bn").cast("double") / col("d").cast("double") * col("x")).cast("long").as("ef"))
     val r = e.groupBy("fold").agg(count(lit(1)).cast("long").as("n_test"),
-      sum(dec(col("ef")) * col("ef")).as("sq"))
+      sum(Det.wide(col("ef")) * col("ef")).as("sq"))
     r.join(broadcast(co), "fold")
       .select(col("fold"), col("n_train").cast("long").as("n_train"),
         col("n_test"),
-        (floor(col("bn").cast("double") / col("d").cast("double") / 100
-          * 1000000 + lit(0.5)) / 1000000).as("slope"),
-        (floor(col("an").cast("double") / col("d").cast("double") / 100
-          * 10000 + lit(0.5)) / 10000).as("intercept"),
-        (floor(sqrt(col("sq").cast("double") / col("n_test")) * 100
-          + lit(0.5)) / 10000).as("rmse"))
+        Det.quant(col("bn").cast("double") / col("d").cast("double") / 100, 6).as("slope"),
+        Det.quant(col("an").cast("double") / col("d").cast("double") / 100, 4).as("intercept"),
+        (Det.fix(sqrt(col("sq").cast("double") / col("n_test")), 2) / 10000).as("rmse"))
       .orderBy("fold")
   }
 
@@ -5013,16 +4914,15 @@ object StatsOps extends QueryPack {
           .cast("long").as("tn"))
     def ratio(num: org.apache.spark.sql.Column, den: org.apache.spark.sql.Column) =
       when(den === 0, lit(0.0)).otherwise(
-        floor(num.cast("double") / den * 1000000 + lit(0.5)) / 1000000)
+        Det.quant(num.cast("double") / den, 6))
     cm.select(col("thr").cast("long").as("thr_cents"),
         col("tp"), col("fp"), col("fn"), col("tn"),
         ratio(col("tp"), col("tp") + col("fp")).as("prec"),
         ratio(col("tp"), col("tp") + col("fn")).as("rec"),
         ratio(lit(2) * col("tp"), lit(2) * col("tp") + col("fp") + col("fn"))
           .as("f1"),
-        (floor((col("tp") + col("tn")).cast("double")
-          / (col("tp") + col("fp") + col("fn") + col("tn")) * 1000000
-          + lit(0.5)) / 1000000).as("acc"))
+        Det.quant((col("tp") + col("tn")).cast("double")
+          / (col("tp") + col("fp") + col("fn") + col("tn")), 6).as("acc"))
       .orderBy("thr_cents")
   }
 
@@ -5070,21 +4970,20 @@ object StatsOps extends QueryPack {
       |  floor((rxy - rxz * ryz) / sqrt((1 - rxz * rxz) * (1 - ryz * ryz))
       |    * 1000000 + 0.5) / 1000000 AS r_xy_given_z
       |FROM r""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val li = Tables(s, dir, "lineitem")
       .select(col("l_quantity").cast("long").as("x"),
         Det.cents(col("l_extendedprice")).cast("long").as("y"),
         Det.cents(col("l_discount")).cast("long").as("z"))
-    val m = li.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-      sum("x").cast("decimal(38,0)").as("sx"),
-      sum("y").cast("decimal(38,0)").as("sy"),
-      sum("z").cast("decimal(38,0)").as("sz"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("y")) * col("y")).as("syy"),
-      sum(dec(col("z")) * col("z")).as("szz"),
-      sum(dec(col("x")) * col("y")).as("sxy"),
-      sum(dec(col("x")) * col("z")).as("sxz"),
-      sum(dec(col("y")) * col("z")).as("syz"))
+    val m = li.agg(Det.wide(count(lit(1))).as("n"),
+      Det.wide(sum("x")).as("sx"),
+      Det.wide(sum("y")).as("sy"),
+      Det.wide(sum("z")).as("sz"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"),
+      sum(Det.wide(col("y")) * col("y")).as("syy"),
+      sum(Det.wide(col("z")) * col("z")).as("szz"),
+      sum(Det.wide(col("x")) * col("y")).as("sxy"),
+      sum(Det.wide(col("x")) * col("z")).as("sxz"),
+      sum(Det.wide(col("y")) * col("z")).as("syz"))
     val rxy = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
       sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
         * (col("n") * col("syy") - col("sy") * col("sy")).cast("double"))
@@ -5095,12 +4994,11 @@ object StatsOps extends QueryPack {
       sqrt((col("n") * col("syy") - col("sy") * col("sy")).cast("double")
         * (col("n") * col("szz") - col("sz") * col("sz")).cast("double"))
     m.select(col("n").cast("long").as("n"),
-      (floor(rxy * 1000000 + lit(0.5)) / 1000000).as("r_xy"),
-      (floor(rxz * 1000000 + lit(0.5)) / 1000000).as("r_xz"),
-      (floor(ryz * 1000000 + lit(0.5)) / 1000000).as("r_yz"),
-      (floor((rxy - rxz * ryz)
-        / sqrt((lit(1) - rxz * rxz) * (lit(1) - ryz * ryz))
-        * 1000000 + lit(0.5)) / 1000000).as("r_xy_given_z"))
+      Det.quant(rxy, 6).as("r_xy"),
+      Det.quant(rxz, 6).as("r_xz"),
+      Det.quant(ryz, 6).as("r_yz"),
+      Det.quant((rxy - rxz * ryz)
+        / sqrt((lit(1) - rxz * rxz) * (lit(1) - ryz * ryz)), 6).as("r_xy_given_z"))
   }
 
   // Cumulative gains / lift table by score decile — the campaign-targeting
@@ -5164,11 +5062,9 @@ object StatsOps extends QueryPack {
       sum("n_pos").over(Window.orderBy("decile")).cast("long").as("cum_pos"))
     g.crossJoin(broadcast(t))
       .select(col("decile"), col("n_rows"), col("n_pos"),
-        (floor(col("cum_pos").cast("double") / col("tot1") * 1000000
-          + lit(0.5)) / 1000000).as("capture"),
-        (floor(col("n_pos").cast("double") / col("n_rows")
-          / (col("tot1").cast("double") / col("totn")) * 1000000 + lit(0.5))
-          / 1000000).as("lift"))
+        Det.quant(col("cum_pos").cast("double") / col("tot1"), 6).as("capture"),
+        Det.quant(col("n_pos").cast("double") / col("n_rows")
+          / (col("tot1").cast("double") / col("totn")), 6).as("lift"))
       .orderBy("decile")
   }
 
@@ -5222,15 +5118,14 @@ object StatsOps extends QueryPack {
       |      / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) * 1000000 + 0.5)
       |      / 1000000 FROM o3
       |) ORDER BY round""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val d0 = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(sum(Det.cents(col("value")).cast("long")).cast("long").as("x"))
       .localCheckpoint()
     def pick(d: org.apache.spark.sql.DataFrame) = {
-      val m = d.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-        sum("x").cast("decimal(38,0)").as("sx"),
-        sum(dec(col("x")) * col("x")).as("sxx"))
+      val m = d.agg(Det.wide(count(lit(1))).as("n"),
+        Det.wide(sum("x")).as("sx"),
+        sum(Det.wide(col("x")) * col("x")).as("sxx"))
       d.crossJoin(broadcast(m))
         .select(col("day"), col("x"), col("n"), col("sx"), col("sxx"),
           abs(col("n") * col("x") - col("sx")).as("adev"))
@@ -5239,9 +5134,8 @@ object StatsOps extends QueryPack {
     def row(o: org.apache.spark.sql.DataFrame, r: Int) =
       o.select(lit(r).cast("int").as("round"), col("day"),
         col("x").cast("long").as("day_cents"),
-        (floor(col("adev").cast("double")
-          / sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-          * 1000000 + lit(0.5)) / 1000000).as("esd_r"))
+        Det.quant(col("adev").cast("double")
+          / sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double")), 6).as("esd_r"))
     val o1 = pick(d0).localCheckpoint()
     val d1 = d0.join(o1.select(col("day")), Seq("day"), "left_anti")
     val o2 = pick(d1).localCheckpoint()
@@ -5278,22 +5172,20 @@ object StatsOps extends QueryPack {
       |  floor(CAST(adev AS DOUBLE) / sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
       |    * 1000000 + 0.5) / 1000000 AS grubbs_g
       |FROM dev, m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val d = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(sum(Det.cents(col("value")).cast("long")).cast("long").as("x"))
-    val m = d.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-      sum("x").cast("decimal(38,0)").as("sx"),
-      sum(dec(col("x")) * col("x")).as("sxx"))
+    val m = d.agg(Det.wide(count(lit(1))).as("n"),
+      Det.wide(sum("x")).as("sx"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"))
     val dev = d.crossJoin(broadcast(m))
       .select(col("day"), col("x"), col("n"), col("sx"), col("sxx"),
         abs(col("n") * col("x") - col("sx")).as("adev"))
       .orderBy(col("adev").desc, col("day")).limit(1)
     dev.select(col("n").cast("long").as("n_days"),
       col("day").as("outlier_day"), col("x").cast("long").as("outlier_cents"),
-      (floor(col("adev").cast("double")
-        / sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-        * 1000000 + lit(0.5)) / 1000000).as("grubbs_g"))
+      Det.quant(col("adev").cast("double")
+        / sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double")), 6).as("grubbs_g"))
   }
 
   /** Unrolled-CTE oracle for ml_logreg_newton (the BPE/k-means promote
@@ -5432,9 +5324,8 @@ object StatsOps extends QueryPack {
     val fit = mn.groupBy("i").agg(max("m").as("iso"))
     bk.join(fit, col("i") === col("b"))
       .select(col("b").as("bucket"), col("nt"), col("n1"),
-        (floor(col("n1").cast("double") / col("nt") * 1000000 + lit(0.5))
-          / 1000000).as("raw_rate"),
-        (floor(col("iso") * 1000000 + lit(0.5)) / 1000000).as("iso_rate"))
+        Det.quant(col("n1").cast("double") / col("nt"), 6).as("raw_rate"),
+        Det.quant(col("iso"), 6).as("iso_rate"))
       .orderBy("bucket")
   }
 
@@ -5482,24 +5373,23 @@ object StatsOps extends QueryPack {
       |      / 1000000
       |  END AS nb_p
       |FROM m ORDER BY event_type""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val uc = Tables(s, dir, "events")
       .groupBy("event_type", "user_id").agg(count(lit(1)).cast("long").as("c"))
     val m = uc.groupBy("event_type")
-      .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-        sum("c").cast("decimal(38,0)").as("s"),
-        sum(dec(col("c")) * col("c")).as("s2"))
+      .agg(Det.wide(count(lit(1))).as("n"),
+        Det.wide(sum("c")).as("s"),
+        sum(Det.wide(col("c")) * col("c")).as("s2"))
     val mean = col("s").cast("double") / col("n").cast("double")
     val vr = (col("n") * col("s2") - col("s") * col("s")).cast("double") /
       (col("n").cast("double") * col("n").cast("double"))
     m.select(col("event_type"), col("n").cast("long").as("n_users"),
-        (floor(mean * 1000000 + lit(0.5)) / 1000000).as("mean_count"),
-        (floor(vr * 1000000 + lit(0.5)) / 1000000).as("var_count"),
+        Det.quant(mean, 6).as("mean_count"),
+        Det.quant(vr, 6).as("var_count"),
         when(vr <= mean, lit(0.0)).otherwise(
-          floor(mean * mean / (vr - mean) * 1000000 + lit(0.5)) / 1000000)
+          Det.quant(mean * mean / (vr - mean), 6))
           .as("nb_r"),
         when(vr <= mean, lit(1.0)).otherwise(
-          floor(mean / vr * 1000000 + lit(0.5)) / 1000000).as("nb_p"))
+          Det.quant(mean / vr, 6)).as("nb_p"))
       .orderBy("event_type")
   }
 
@@ -5563,19 +5453,18 @@ object StatsOps extends QueryPack {
       |            / CAST(n * (n * sxx - sx * sx) AS DOUBLE))))
       |    * 1000000 + 0.5) / 1000000 AS cooks_d
       |FROM d, f ORDER BY day""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val d = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"),
         datediff(to_date(date_trunc("day", col("ts"))),
           lit("2024-01-01").cast("date")).cast("long").as("x"))
       .agg(expr("sum(cast(floor(value * 100 + 0.5) as bigint)) div 100")
         .cast("long").as("y"))
-    val m = d.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-      sum("x").cast("decimal(38,0)").as("sx"),
-      sum("y").cast("decimal(38,0)").as("sy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("x")) * col("y")).as("sxy"),
-      sum(dec(col("y")) * col("y")).as("syy"))
+    val m = d.agg(Det.wide(count(lit(1))).as("n"),
+      Det.wide(sum("x")).as("sx"),
+      Det.wide(sum("y")).as("sy"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"),
+      sum(Det.wide(col("x")) * col("y")).as("sxy"),
+      sum(Det.wide(col("y")) * col("y")).as("syy"))
     val b1 = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
       (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
     val b0 = (col("sy").cast("double") - b1 * col("sx").cast("double")) /
@@ -5590,10 +5479,9 @@ object StatsOps extends QueryPack {
     d.crossJoin(broadcast(m))
       .select(col("day"), col("x").cast("long").as("day_idx"),
         col("y").as("revenue_dollars"),
-        (floor(e * 10000 + lit(0.5)) / 10000).as("residual"),
-        (floor(h * 1000000 + lit(0.5)) / 1000000).as("leverage"),
-        (floor(e * e * h / (lit(2) * s2 * (lit(1) - h) * (lit(1) - h))
-          * 1000000 + lit(0.5)) / 1000000).as("cooks_d"))
+        Det.quant(e, 4).as("residual"),
+        Det.quant(h, 6).as("leverage"),
+        Det.quant(e * e * h / (lit(2) * s2 * (lit(1) - h) * (lit(1) - h)), 6).as("cooks_d"))
       .orderBy("day")
   }
 
@@ -5865,7 +5753,6 @@ object StatsOps extends QueryPack {
       |      / ((deta0 / det0) * (deta0 / det0) + (detb0 / det0) * (detb0 / det0)))
       |    * 1000000 + 0.5) AS DOUBLE) / 1000000 AS shrink_ratio
       |FROM d""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(
@@ -5875,16 +5762,16 @@ object StatsOps extends QueryPack {
           Det.cents(col("value")).cast("long")).otherwise(0L)).as("y"))
     val m = daily.agg(
       count(lit(1)).cast("double").as("n"),
-      sum(dec(col("x1"))).cast("double").as("s1"),
-      sum(dec(col("x2"))).cast("double").as("s2"),
-      sum(dec(col("y"))).cast("double").as("sy"),
-      (sum(dec(col("x1")) * col("x1")).cast("double") + lit(1000.0)).as("u"),
-      sum(dec(col("x1")) * col("x1")).cast("double").as("s11"),
-      sum(dec(col("x1")) * col("x2")).cast("double").as("s12"),
-      (sum(dec(col("x2")) * col("x2")).cast("double") + lit(1000.0)).as("v"),
-      sum(dec(col("x2")) * col("x2")).cast("double").as("s22"),
-      sum(dec(col("x1")) * col("y")).cast("double").as("s1y"),
-      sum(dec(col("x2")) * col("y")).cast("double").as("s2y"))
+      sum(Det.wide(col("x1"))).cast("double").as("s1"),
+      sum(Det.wide(col("x2"))).cast("double").as("s2"),
+      sum(Det.wide(col("y"))).cast("double").as("sy"),
+      (sum(Det.wide(col("x1")) * col("x1")).cast("double") + lit(1000.0)).as("u"),
+      sum(Det.wide(col("x1")) * col("x1")).cast("double").as("s11"),
+      sum(Det.wide(col("x1")) * col("x2")).cast("double").as("s12"),
+      (sum(Det.wide(col("x2")) * col("x2")).cast("double") + lit(1000.0)).as("v"),
+      sum(Det.wide(col("x2")) * col("x2")).cast("double").as("s22"),
+      sum(Det.wide(col("x1")) * col("y")).cast("double").as("s1y"),
+      sum(Det.wide(col("x2")) * col("y")).cast("double").as("s2y"))
     def cramer(a11: String, a22: String) = Seq(
       (col(a11) * (col(a22) * col("n") - col("s2") * col("s2"))
         - col("s12") * (col("s12") * col("n") - col("s2") * col("s1"))
@@ -5909,14 +5796,13 @@ object StatsOps extends QueryPack {
     val ao = col("deta0") / col("det0")
     val bo = col("detb0") / col("det0")
     d.select(col("n").cast("long").as("n_days"), lit(1000.0).as("lambda"),
-      (floor(ar * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(ar, 6)
         .as("coef_clicks"),
-      (floor(br * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(br, 6)
         .as("coef_users"),
-      (floor(col("detc") / col("det") * 100 + lit(0.5)).cast("double") / 100)
+      Det.quant(col("detc") / col("det"), 2)
         .as("intercept"),
-      (floor(sqrt((ar * ar + br * br) / (ao * ao + bo * bo)) * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("shrink_ratio"))
+      Det.quant(sqrt((ar * ar + br * br) / (ao * ao + bo * bo)), 6).as("shrink_ratio"))
   }
 
   // Bartlett's test of variance homogeneity of event value across the
@@ -5968,32 +5854,31 @@ object StatsOps extends QueryPack {
       |       / (3.0 * (k - 1))) * 1000000 + 0.5) AS DOUBLE) / 1000000
       |    AS chi2_bartlett
       |FROM a""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val v = Det.cents(col("value")).cast("long")
     val g = Tables(s, dir, "events").groupBy("event_type")
       .agg(count(lit(1)).cast("long").as("n"),
-        sum(v).cast("decimal(38,0)").as("s"),
-        sum(dec(v) * v).as("q"))
+        Det.wide(sum(v)).as("s"),
+        sum(Det.wide(v) * v).as("q"))
     val f = g.select(col("n"),
-      floor((dec(col("n")) * col("q") - col("s") * col("s")).cast("double")
-        / col("n") / (col("n") - 1) * 1000000 + lit(0.5)).cast("long")
+      Det.fix((Det.wide(col("n")) * col("q") - col("s") * col("s")).cast("double")
+        / col("n") / (col("n") - 1), 6).cast("long")
         .as("s2fix"),
-      floor(lit(1.0) / (col("n") - 1) * 1000000000000L + lit(0.5))
+      Det.fix(lit(1.0) / (col("n") - 1), 12)
         .cast("long").as("invfix"))
     val a = f.agg(count(lit(1)).cast("long").as("k"),
       sum("n").cast("long").as("nt"),
-      sum(dec(col("n") - 1) * col("s2fix")).as("pooled"),
-      sum(dec(col("n") - 1) * Det.lnFix(col("s2fix"), 9)).as("slns"),
+      sum(Det.wide(col("n") - 1) * col("s2fix")).as("pooled"),
+      sum(Det.wide(col("n") - 1) * Det.lnFix(col("s2fix"), 9)).as("slns"),
       sum("invfix").cast("long").as("sinv"))
     val corrC = lit(1.0) + (col("sinv").cast("double") / 1000000000000L
       - lit(1.0) / (col("nt") - col("k"))) / (lit(3.0) * (col("k") - 1))
-    val t9 = (dec(col("nt") - col("k"))
+    val t9 = (Det.wide(col("nt") - col("k"))
       * (Det.lnFix(col("pooled"), 9) - Det.lnFix(col("nt") - col("k"), 9))
       - col("slns")).cast("double") / 1000000000L
     a.select(col("nt").as("n_total"), col("k").as("k_groups"),
-      (floor(corrC * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(corrC, 6)
         .as("corr_c"),
-      (floor(t9 / corrC * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(t9 / corrC, 6)
         .as("chi2_bartlett"))
   }
 
@@ -6104,9 +5989,8 @@ object StatsOps extends QueryPack {
       .join(lfAt(lit(0L), "lf8"),
         col("r0") - col("c1") + col("k") === col("lf8_m"))
       .withColumn("pfix",
-        floor(exp((col("constc") - col("lfk") - col("lf6") - col("lf7")
-          - col("lf8")).cast("double") / 1000000000L)
-          * 1000000000000L + lit(0.5)).cast("long"))
+        Det.fix(exp((col("constc") - col("lfk") - col("lf6") - col("lf7")
+          - col("lf8")).cast("double") / 1000000000L), 12).cast("long"))
     val pobs = sup.filter(col("k") === col("a"))
       .select(col("pfix").as("pobsfix"))
     sup.crossJoin(broadcast(pobs))
@@ -6121,9 +6005,8 @@ object StatsOps extends QueryPack {
         (col("ptwo").cast("double") / 1000000000000L).as("p_two_sided"),
         (col("pgt").cast("double") / 1000000000000L).as("p_greater"),
         when(col("b") * col("c") === 0, lit(null).cast("double"))
-          .otherwise(floor(col("a").cast("double") * col("d")
-            / (col("b").cast("double") * col("c")) * 1000000 + lit(0.5))
-            .cast("double") / 1000000).as("odds_ratio"))
+          .otherwise(Det.quant(col("a").cast("double") * col("d")
+            / (col("b").cast("double") * col("c")), 6)).as("odds_ratio"))
   }
 
   // Theil's uncertainty coefficient U(event_type | dow) — the asymmetric
@@ -6174,28 +6057,24 @@ object StatsOps extends QueryPack {
       |    / CAST(nlnn - sy AS DOUBLE) * 1000000 + 0.5) AS DOUBLE) / 1000000
       |    AS u_y_given_x
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events").select(col("event_type").as("x"),
       (((datediff(to_date(date_trunc("day", col("ts"))),
         lit("2024-01-01").cast("date")) % 7) + 7) % 7).cast("long").as("y"))
     val j = ev.groupBy("x", "y").agg(count(lit(1)).cast("long").as("c"))
       .localCheckpoint()
     val ax = j.groupBy("x").agg(sum("c").as("cx"))
-      .agg(sum(dec(col("cx")) * Det.lnFix(col("cx"), 8)).as("sx"))
+      .agg(sum(Det.wide(col("cx")) * Det.lnFix(col("cx"), 8)).as("sx"))
     val ay = j.groupBy("y").agg(sum("c").as("cy"))
-      .agg(sum(dec(col("cy")) * Det.lnFix(col("cy"), 8)).as("sy"))
+      .agg(sum(Det.wide(col("cy")) * Det.lnFix(col("cy"), 8)).as("sy"))
     val aj = j.agg(sum("c").cast("long").as("n"),
-      sum(dec(col("c")) * Det.lnFix(col("c"), 8)).as("sxy"))
+      sum(Det.wide(col("c")) * Det.lnFix(col("c"), 8)).as("sxy"))
     val m = aj.crossJoin(broadcast(ax)).crossJoin(broadcast(ay))
-      .withColumn("nlnn", dec(col("n")) * Det.lnFix(col("n"), 8))
+      .withColumn("nlnn", Det.wide(col("n")) * Det.lnFix(col("n"), 8))
     val mi = (col("sxy") + col("nlnn") - col("sx") - col("sy")).cast("double")
     m.select(col("n").as("n_events"),
-      (floor(mi / 100000000L / col("n") * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("mi_nats"),
-      (floor(mi / (col("nlnn") - col("sx")).cast("double") * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("u_x_given_y"),
-      (floor(mi / (col("nlnn") - col("sy")).cast("double") * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("u_y_given_x"))
+      Det.quant(mi / 100000000L / col("n"), 6).as("mi_nats"),
+      Det.quant(mi / (col("nlnn") - col("sx")).cast("double"), 6).as("u_x_given_y"),
+      Det.quant(mi / (col("nlnn") - col("sy")).cast("double"), 6).as("u_y_given_x"))
   }
 
   // Paired sign test: on how many days did purchase revenue beat click
@@ -6237,9 +6116,8 @@ object StatsOps extends QueryPack {
       count(lit(1)).cast("long").as("n_days"))
     t.select(col("n_days"), col("n").as("n_untied"),
       col("k").as("n_purchase_wins"),
-      (floor((lit(2.0) * col("k") - col("n"))
-        / sqrt(col("n").cast("double")) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("sign_z"))
+      Det.quant((lit(2.0) * col("k") - col("n"))
+        / sqrt(col("n").cast("double")), 6).as("sign_z"))
   }
 
   // Mix-shift decomposition of the average event value between the
@@ -6294,7 +6172,7 @@ object StatsOps extends QueryPack {
       Det.cents(col("value")).cast("long").as("v"))
     val g = ev.groupBy("event_type", "period")
       .agg(count(lit(1)).cast("long").as("n"),
-        sum("v").cast("decimal(38,0)").as("s"))
+        Det.wide(sum("v")).as("s"))
     val tot = g.groupBy("period").agg(sum("n").cast("long").as("nt"))
     val j = g.join(broadcast(tot), Seq("period"))
     val f = j.groupBy("event_type").agg(
@@ -6307,18 +6185,16 @@ object StatsOps extends QueryPack {
       max(when(col("period") === 2,
         col("s").cast("double") / col("n") / 100)).as("m2"))
     f.select(col("event_type"),
-      (floor(col("w1") * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(col("w1"), 6)
         .as("w1"),
-      (floor(col("w2") * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(col("w2"), 6)
         .as("w2"),
-      (floor(col("m1") * 10000 + lit(0.5)).cast("double") / 10000)
+      Det.quant(col("m1"), 4)
         .as("m1_usd"),
-      (floor(col("m2") * 10000 + lit(0.5)).cast("double") / 10000)
+      Det.quant(col("m2"), 4)
         .as("m2_usd"),
-      (floor((col("w2") - col("w1")) * col("m1") * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("mix_effect_usd"),
-      (floor(col("w2") * (col("m2") - col("m1")) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("rate_effect_usd"))
+      Det.quant((col("w2") - col("w1")) * col("m1"), 6).as("mix_effect_usd"),
+      Det.quant(col("w2") * (col("m2") - col("m1")), 6).as("rate_effect_usd"))
       .orderBy("event_type")
   }
 
@@ -6360,34 +6236,30 @@ object StatsOps extends QueryPack {
       |    / CAST(n * syy - sy * sy AS DOUBLE) * 1000000 + 0.5) AS DOUBLE)
       |    / 1000000 AS r2
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val li = Tables(s, dir, "lineitem")
       .filter(col("l_quantity") > 0 && col("l_extendedprice") > 0)
       .select(
-        Det.lnFix(floor(col("l_extendedprice") / col("l_quantity") * 100
-          + lit(0.5)).cast("long"), 9).as("x"),
-        Det.lnFix(floor(col("l_quantity") + lit(0.5)).cast("long"), 9)
+        Det.lnFix(Det.fix(col("l_extendedprice") / col("l_quantity"), 2).cast("long"), 9).as("x"),
+        Det.lnFix(Det.half(col("l_quantity")).cast("long"), 9)
           .as("y"))
     val m = li.agg(count(lit(1)).cast("long").as("n"),
-      sum("x").cast("decimal(38,0)").as("sx"),
-      sum("y").cast("decimal(38,0)").as("sy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("x")) * col("y")).as("sxy"),
-      sum(dec(col("y")) * col("y")).as("syy"))
-    val num = (dec(col("n")) * col("sxy") - col("sx") * col("sy"))
+      Det.wide(sum("x")).as("sx"),
+      Det.wide(sum("y")).as("sy"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"),
+      sum(Det.wide(col("x")) * col("y")).as("sxy"),
+      sum(Det.wide(col("y")) * col("y")).as("syy"))
+    val num = (Det.wide(col("n")) * col("sxy") - col("sx") * col("sy"))
       .cast("double")
-    val den = (dec(col("n")) * col("sxx") - col("sx") * col("sx"))
+    val den = (Det.wide(col("n")) * col("sxx") - col("sx") * col("sx"))
       .cast("double")
-    val deny = (dec(col("n")) * col("syy") - col("sy") * col("sy"))
+    val deny = (Det.wide(col("n")) * col("syy") - col("sy") * col("sy"))
       .cast("double")
     m.select(col("n").as("n_lines"),
-      (floor(num / den * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(num / den, 6)
         .as("elasticity"),
-      (floor((col("sy").cast("double") - num / den
-        * col("sx").cast("double")) / col("n") / 1000000000L * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("intercept_ln"),
-      (floor(num * num / den / deny * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("r2"))
+      Det.quant((col("sy").cast("double") - num / den
+        * col("sx").cast("double")) / col("n") / 1000000000L, 6).as("intercept_ln"),
+      Det.quant(num * num / den / deny, 6).as("r2"))
   }
 
   // Mood's median test between the two arms on purchase value — the
@@ -6428,7 +6300,6 @@ object StatsOps extends QueryPack {
       |    / CAST(CAST(a + b AS HUGEINT) * (c + d) * (a + c) * (b + d)
       |      AS DOUBLE) * 1000000 + 0.5) AS DOUBLE) / 1000000 AS chi2
       |FROM t""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select((col("user_id") % 2).cast("long").as("arm"),
@@ -6452,16 +6323,15 @@ object StatsOps extends QueryPack {
       sum(when(col("arm") === 0 && col("v") < col("m"), 1L).otherwise(0L))
         .cast("long").as("d"),
       max("m").as("m"))
-    val diff = (dec(col("a")) * col("d") - dec(col("b")) * col("c"))
+    val diff = (Det.wide(col("a")) * col("d") - Det.wide(col("b")) * col("c"))
       .cast("double")
     t.select((col("m").cast("double") / 100).as("median_usd"),
       col("a").as("n1_above"), col("b").as("n1_below"),
       col("c").as("n0_above"), col("d").as("n0_below"),
-      (floor((col("a") + col("b") + col("c") + col("d")).cast("double")
+      Det.quant((col("a") + col("b") + col("c") + col("d")).cast("double")
         * (diff * diff)
-        / (dec(col("a") + col("b")) * (col("c") + col("d"))
-          * (col("a") + col("c")) * (col("b") + col("d"))).cast("double")
-        * 1000000 + lit(0.5)).cast("double") / 1000000).as("chi2"))
+        / (Det.wide(col("a") + col("b")) * (col("c") + col("d"))
+          * (col("a") + col("c")) * (col("b") + col("d"))).cast("double"), 6).as("chi2"))
   }
 
   // Capture-recapture (Lincoln-Petersen + Chapman) estimate of the total
@@ -6496,22 +6366,20 @@ object StatsOps extends QueryPack {
       |    / (overlap + 1) - 1) / actual_users * 1000000 + 0.5) AS DOUBLE)
       |    / 1000000 AS coverage_ratio
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val u = Tables(s, dir, "events").groupBy("user_id").agg(
       max(when(col("event_type") === "click", 1L).otherwise(0L)).as("s1"),
       max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("s2"))
     val m = u.agg(count(lit(1)).cast("long").as("actual_users"),
       sum("s1").cast("long").as("n1"), sum("s2").cast("long").as("n2"),
       sum(col("s1") * col("s2")).cast("long").as("overlap"))
-    val chap = ((dec(col("n1") + 1) * (col("n2") + 1)).cast("double")
+    val chap = ((Det.wide(col("n1") + 1) * (col("n2") + 1)).cast("double")
       / (col("overlap") + 1) - 1)
     m.select(col("n1"), col("n2"), col("overlap"), col("actual_users"),
-      (floor((dec(col("n1")) * col("n2")).cast("double") / col("overlap")
-        * 100 + lit(0.5)).cast("double") / 100).as("lp_estimate"),
-      (floor(chap * 100 + lit(0.5)).cast("double") / 100)
+      Det.quant((Det.wide(col("n1")) * col("n2")).cast("double") / col("overlap"),
+        2).as("lp_estimate"),
+      Det.quant(chap, 2)
         .as("chapman_estimate"),
-      (floor(chap / col("actual_users") * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("coverage_ratio"))
+      Det.quant(chap / col("actual_users"), 6).as("coverage_ratio"))
   }
 
   // Bhattacharyya coefficient / distance and Hellinger distance between
@@ -6551,7 +6419,6 @@ object StatsOps extends QueryPack {
       |    / sqrt(CAST(CAST(n1 AS HUGEINT) * n0 AS DOUBLE))) * 1000000 + 0.5)
       |    AS DOUBLE) / 1000000 AS hellinger
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
       .select(expr("CAST(floor(value * 100 + 0.5) AS BIGINT) div 500")
@@ -6562,16 +6429,15 @@ object StatsOps extends QueryPack {
     val m = h.agg(sum("c1").cast("long").as("n1"),
       sum("c0").cast("long").as("n0"),
       count(lit(1)).cast("long").as("n_buckets"),
-      sum(floor(sqrt((dec(col("c1")) * col("c0")).cast("double")) * 1000000
-        + lit(0.5)).cast("long")).cast("decimal(38,0)").as("sbc"))
+      Det.wide(sum(Det.fix(sqrt((Det.wide(col("c1")) * col("c0")).cast("double")),
+        6).cast("long"))).as("sbc"))
     val bc = col("sbc").cast("double") / 1000000L /
-      sqrt((dec(col("n1")) * col("n0")).cast("double"))
+      sqrt((Det.wide(col("n1")) * col("n0")).cast("double"))
     m.select(col("n1"), col("n0"), col("n_buckets"),
-      (floor(bc * 1000000 + lit(0.5)).cast("double") / 1000000).as("bc_coef"),
-      (floor(-log(bc) * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(bc, 6).as("bc_coef"),
+      Det.quant(-log(bc), 6)
         .as("bhattacharyya_d"),
-      (floor(sqrt(lit(1) - bc) * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("hellinger"))
+      Det.quant(sqrt(lit(1) - bc), 6).as("hellinger"))
   }
 
   /** Unrolled-CTE oracle for ml_adaboost_stumps: each boosting round is
@@ -6718,10 +6584,8 @@ object StatsOps extends QueryPack {
         (col("dir") === 1 && col("v") < col("theta"))
       val alpha = col("al9").cast("double") / 1000000000L
       val nextW = w.crossJoin(broadcast(best)).select(col("v"),
-        floor(col("wp") * exp(when(predPos, -alpha).otherwise(alpha))
-          + lit(0.5)).cast("long").as("wp"),
-        floor(col("wn") * exp(when(predPos, alpha).otherwise(-alpha))
-          + lit(0.5)).cast("long").as("wn"))
+        Det.half(col("wp") * exp(when(predPos, -alpha).otherwise(alpha))).cast("long").as("wp"),
+        Det.half(col("wn") * exp(when(predPos, alpha).otherwise(-alpha))).cast("long").as("wn"))
       (best, nextW)
     }
     val (b1, w1) = boostRound(w0)
@@ -6741,14 +6605,11 @@ object StatsOps extends QueryPack {
     def roundCols(nn: String, idx: Int) = Seq(
       col(s"${nn}_theta").cast("long").as(s"r${idx}_theta_cents"),
       when(col(s"${nn}_dir") === 0, "ge").otherwise("lt").as(s"r${idx}_dir"),
-      (floor(col(s"${nn}_err").cast("double") / col(s"${nn}_wt") * 1000000
-        + lit(0.5)).cast("double") / 1000000).as(s"r${idx}_eps"),
-      (floor(col(s"${nn}_al9").cast("double") / 1000000000L * 1000000
-        + lit(0.5)).cast("double") / 1000000).as(s"r${idx}_alpha"))
+      Det.quant(col(s"${nn}_err").cast("double") / col(s"${nn}_wt"), 6).as(s"r${idx}_eps"),
+      Det.quant(col(s"${nn}_al9").cast("double") / 1000000000L, 6).as(s"r${idx}_alpha"))
     t.crossJoin(tagged(b1, "b1")).crossJoin(tagged(b2, "b2"))
       .select(col("n") +: (roundCols("b1", 1) ++ roundCols("b2", 2)
-        :+ ((floor(col("correct").cast("double") / col("n") * 1000000
-          + lit(0.5)).cast("double") / 1000000).as("train_acc"))): _*)
+        :+ (Det.quant(col("correct").cast("double") / col("n"), 6).as("train_acc"))): _*)
   }
 
   // Benjamini–Hochberg FDR correction — the multiple-testing control a
@@ -6843,12 +6704,11 @@ object StatsOps extends QueryPack {
     val e = col("rt").cast("double") * col("ct") / col("n")
     val chi = mg.groupBy("event_type", "hbin")
       .agg(sum(when(col("rt") > 0 && col("ct") > 0,
-        floor((col("o").cast("double") - e) * (col("o").cast("double") - e)
-          / e * 1000000000L + lit(0.5)).cast("long")).otherwise(0L))
+        Det.fix((col("o").cast("double") - e) * (col("o").cast("double") - e)
+          / e, 9).cast("long")).otherwise(0L))
         .cast("long").as("chi9"))
     val p = chi.select(col("event_type"), col("hbin"), col("chi9"),
-      floor(exp(-(col("chi9").cast("double") / 1000000000L) / 2)
-        * 1000000000L + lit(0.5)).cast("long").as("p9"))
+      Det.fix(exp(-(col("chi9").cast("double") / 1000000000L) / 2), 9).cast("long").as("p9"))
     val rk = p.withColumn("rnk",
         row_number().over(Window.orderBy("p9", "event_type", "hbin")))
       .withColumn("m", count(lit(1)).over(
@@ -6860,8 +6720,7 @@ object StatsOps extends QueryPack {
       col("rnk"))), lit(0)).as("k"))
     rk.crossJoin(broadcast(kstar))
       .select(col("event_type"), col("hbin").cast("int").as("hbin"),
-        (floor(col("chi9").cast("double") / 1000000000L * 1000000 + lit(0.5))
-          / 1000000).as("chi2"),
+        Det.quant(col("chi9").cast("double") / 1000000000L, 6).as("chi2"),
         (col("p9").cast("double") / 1000000000L).as("p_value"),
         col("rnk").cast("long").as("p_rank"),
         (col("rnk") <= col("k")).as("rejected"))
@@ -7054,7 +6913,7 @@ object StatsOps extends QueryPack {
       sum("y").as("sy"), sum(col("y") * col("y")).as("sy2"))
       .localCheckpoint()
     val base = hist.agg(sum("nh").cast("long").as("n"),
-      floor(sum("sy").cast("double") / sum("nh").cast("long") + lit(0.5))
+      Det.half(sum("sy").cast("double") / sum("nh").cast("long"))
         .cast("long").as("m0"))
     val h0 = hist.crossJoin(broadcast(base)).select(col("h"), col("nh"),
       (col("sy") - col("nh") * col("m0")).as("s"),
@@ -7078,11 +6937,11 @@ object StatsOps extends QueryPack {
             / (col("nt") - col("nl"))))
       val best = cum.filter(col("nt") - col("nl") > 0)
         .select(col("h").as("theta"),
-          floor(col("sl").cast("double") / col("nl") + lit(0.5))
+          Det.half(col("sl").cast("double") / col("nl"))
             .cast("long").as("lc"),
-          floor((col("st") - col("sl")).cast("double")
-            / (col("nt") - col("nl")) + lit(0.5)).cast("long").as("rc"),
-          floor(sse * 100 + lit(0.5)).cast("long").as("rank"))
+          Det.half((col("st") - col("sl")).cast("double")
+            / (col("nt") - col("nl"))).cast("long").as("rc"),
+          Det.fix(sse, 2).cast("long").as("rank"))
         .orderBy("rank", "theta").limit(1)
         .select("theta", "lc", "rc")
         .localCheckpoint()
@@ -7155,17 +7014,16 @@ object StatsOps extends QueryPack {
       |  (mu1 - mu0 + 50) / sqrt(se1 + se0) > 1.6449
       |    AND (mu1 - mu0 - 50) / sqrt(se1 + se0) < -1.6449 AS equivalent
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select((col("user_id") % 2).cast("long").as("arm"),
         Det.cents(col("value")).cast("long").as("v"))
     val g = ev.groupBy("arm").agg(count(lit(1)).cast("long").as("n"),
-      sum("v").cast("decimal(38,0)").as("s"),
-      sum(dec(col("v")) * col("v")).as("q"))
+      Det.wide(sum("v")).as("s"),
+      sum(Det.wide(col("v")) * col("v")).as("q"))
     def pick(arm: Int, e: org.apache.spark.sql.Column) =
       max(when(col("arm") === arm, e))
-    val seTerm = (dec(col("n")) * col("q") - col("s") * col("s"))
+    val seTerm = (Det.wide(col("n")) * col("q") - col("s") * col("s"))
       .cast("double") / col("n") / (col("n") - 1) / col("n")
     val m = g.agg(
       pick(1, col("n")).as("n1"), pick(0, col("n")).as("n0"),
@@ -7175,13 +7033,13 @@ object StatsOps extends QueryPack {
     val se = sqrt(col("se1") + col("se0"))
     val dmu = col("mu1") - col("mu0")
     m.select(col("n1"), col("n0"),
-      (floor(dmu / 100 * 10000 + lit(0.5)).cast("double") / 10000)
+      Det.quant(dmu / 100, 4)
         .as("diff_usd"),
-      (floor(se / 100 * 10000 + lit(0.5)).cast("double") / 10000)
+      Det.quant(se / 100, 4)
         .as("se_usd"),
-      (floor((dmu + 50) / se * 10000 + lit(0.5)).cast("double") / 10000)
+      Det.quant((dmu + 50) / se, 4)
         .as("t_lower"),
-      (floor((dmu - 50) / se * 10000 + lit(0.5)).cast("double") / 10000)
+      Det.quant((dmu - 50) / se, 4)
         .as("t_upper"),
       ((dmu + 50) / se > 1.6449 && (dmu - 50) / se < -1.6449)
         .as("equivalent"))
@@ -7248,13 +7106,12 @@ object StatsOps extends QueryPack {
        |    AS DOUBLE) / 1000000 AS a2_star
        |FROM t GROUP BY n""".stripMargin
   }) { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(sum(Det.cents(col("value")).cast("long")).as("x"))
     val m = daily.agg(count(lit(1)).cast("long").as("n"),
-      sum("x").cast("decimal(38,0)").as("s"),
-      sum(dec(col("x")) * col("x")).as("q"))
+      Det.wide(sum("x")).as("s"),
+      sum(Det.wide(col("x")) * col("x")).as("q"))
     def phiOf(z: org.apache.spark.sql.Column) = {
       // left-associated exactly as the oracle spells it:
       // ((0.3989…· exp)·E) / t, E = ((((b5/t − b4)/t + b3)/t − b2)/t + b1)
@@ -7268,20 +7125,19 @@ object StatsOps extends QueryPack {
     val zf = daily.crossJoin(broadcast(m)).select(col("n"),
       row_number().over(Window.orderBy("x", "day")).as("i"),
       ((col("x") - col("s").cast("double") / col("n"))
-        / sqrt((dec(col("n")) * col("q") - col("s") * col("s")).cast("double")
+        / sqrt((Det.wide(col("n")) * col("q") - col("s") * col("s")).cast("double")
           / col("n") / (col("n") - 1))).as("zv"))
     val t = zf.select(col("n"),
-      floor(((lit(2) * col("i") - 1) * log(phiOf(col("zv")))
+      Det.fix((lit(2) * col("i") - 1) * log(phiOf(col("zv")))
         + (lit(2) * (col("n") - col("i")) + 1)
-          * log(lit(1) - phiOf(col("zv")))) * 1000000000L + lit(0.5))
+          * log(lit(1) - phiOf(col("zv"))), 9)
         .cast("long").as("term"))
     val a2 = (-col("n").cast("double")
       - sum("term").cast("double") / 1000000000L / col("n"))
     t.groupBy("n").agg(
-      (floor(a2 * 1000000 + lit(0.5)).cast("double") / 1000000).as("a2"),
-      (floor(a2 * (lit(1) + lit(0.75) / col("n")
-        + lit(2.25) / (col("n").cast("double") * col("n"))) * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("a2_star"))
+      Det.quant(a2, 6).as("a2"),
+      Det.quant(a2 * (lit(1) + lit(0.75) / col("n")
+        + lit(2.25) / (col("n").cast("double") * col("n"))), 6).as("a2_star"))
       .select(col("n").as("n_days"), col("a2"), col("a2_star"))
   }
 
@@ -7347,7 +7203,6 @@ object StatsOps extends QueryPack {
       |  CAST(floor(ln((-cc * mm) / (a / mm)) / (a / mm + (-cc * mm))
       |    * 10000 + 0.5) AS DOUBLE) / 10000 AS peak_t
       |FROM root""") { (s, dir) =>
-    val dec38 = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val d = Tables(s, dir, "events")
       .filter(col("event_type") === "signup")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
@@ -7356,14 +7211,14 @@ object StatsOps extends QueryPack {
       coalesce(sum("nt").over(Window.orderBy("day")
         .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("cum"))
     val m = c.agg(count(lit(1)).cast("double").as("n"),
-      sum(dec38(col("cum"))).cast("double").as("s1"),
-      sum(dec38(col("cum")) * col("cum")).cast("double").as("s2"),
-      sum(dec38(col("nt"))).cast("double").as("sy"),
-      sum(dec38(col("cum")) * col("cum") * col("cum")).cast("double").as("s3"),
-      sum(dec38(col("cum")) * col("cum") * col("cum") * col("cum"))
+      sum(Det.wide(col("cum"))).cast("double").as("s1"),
+      sum(Det.wide(col("cum")) * col("cum")).cast("double").as("s2"),
+      sum(Det.wide(col("nt"))).cast("double").as("sy"),
+      sum(Det.wide(col("cum")) * col("cum") * col("cum")).cast("double").as("s3"),
+      sum(Det.wide(col("cum")) * col("cum") * col("cum") * col("cum"))
         .cast("double").as("s4"),
-      sum(dec38(col("cum")) * col("nt")).cast("double").as("s1y"),
-      sum(dec38(col("cum")) * col("cum") * col("nt")).cast("double").as("s2y"))
+      sum(Det.wide(col("cum")) * col("nt")).cast("double").as("s1y"),
+      sum(Det.wide(col("cum")) * col("cum") * col("nt")).cast("double").as("s2y"))
     val f = m.select(
       (col("s2") * (col("s4") * col("n") - col("s2") * col("s2"))
         - col("s3") * (col("s3") * col("n") - col("s2") * col("s1"))
@@ -7390,17 +7245,16 @@ object StatsOps extends QueryPack {
     val p = col("a") / col("mm")
     val q6 = -col("cc") * col("mm")
     root.select(
-      (floor(col("a") * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(col("a"), 6)
         .as("coef_a"),
-      (floor(col("b") * 1000000 + lit(0.5)).cast("double") / 1000000)
+      Det.quant(col("b"), 6)
         .as("coef_b"),
-      (floor(col("cc") * 1000000000L + lit(0.5)).cast("double") / 1000000000L)
+      Det.quant(col("cc"), 9)
         .as("coef_c"),
-      (floor(col("mm") * 100 + lit(0.5)).cast("double") / 100).as("market_m"),
-      (floor(p * 1000000 + lit(0.5)).cast("double") / 1000000).as("p_innov"),
-      (floor(q6 * 1000000 + lit(0.5)).cast("double") / 1000000).as("q_imit"),
-      (floor(log(q6 / p) / (p + q6) * 10000 + lit(0.5)).cast("double")
-        / 10000).as("peak_t"))
+      Det.quant(col("mm"), 2).as("market_m"),
+      Det.quant(p, 6).as("p_innov"),
+      Det.quant(q6, 6).as("q_imit"),
+      Det.quant(log(q6 / p) / (p + q6), 4).as("peak_t"))
   }
 
   // Gamma distribution fit (method of moments) of purchase values — the
@@ -7434,25 +7288,22 @@ object StatsOps extends QueryPack {
       |    / CAST(s AS DOUBLE) / 100 * 1000000 + 0.5) AS DOUBLE) / 1000000
       |    AS scale_usd
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val v = Tables(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(Det.cents(col("value")).cast("long").as("v"))
       .filter(col("v") > 0)
     val m = v.agg(count(lit(1)).cast("long").as("n"),
-      sum("v").cast("decimal(38,0)").as("s"),
-      sum(dec(col("v")) * col("v")).as("q"))
-    val varNum = (dec(col("n")) * col("q") - col("s") * col("s"))
+      Det.wide(sum("v")).as("s"),
+      sum(Det.wide(col("v")) * col("v")).as("q"))
+    val varNum = (Det.wide(col("n")) * col("q") - col("s") * col("s"))
       .cast("double")
     m.select(col("n"),
-      (floor(col("s").cast("double") / col("n") / 100 * 10000 + lit(0.5))
-        .cast("double") / 10000).as("mean_usd"),
-      (floor(varNum / col("n").cast("double") / col("n").cast("double")
-        / 10000 * 10000 + lit(0.5)).cast("double") / 10000).as("var_usd2"),
-      (floor(col("s").cast("double") * col("s") / varNum * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("shape"),
-      (floor(varNum / col("n").cast("double") / col("s").cast("double")
-        / 100 * 1000000 + lit(0.5)).cast("double") / 1000000).as("scale_usd"))
+      Det.quant(col("s").cast("double") / col("n") / 100, 4).as("mean_usd"),
+      Det.quant(varNum / col("n").cast("double") / col("n").cast("double")
+        / 10000, 4).as("var_usd2"),
+      Det.quant(col("s").cast("double") * col("s") / varNum, 6).as("shape"),
+      Det.quant(varNum / col("n").cast("double") / col("s").cast("double")
+        / 100, 6).as("scale_usd"))
   }
 
   // Cohen's kappa between two heuristic document-quality raters — the
@@ -7489,7 +7340,6 @@ object StatsOps extends QueryPack {
       |        + CAST(n01 + n00 AS HUGEINT) * (n10 + n00) AS DOUBLE) / n / n)
       |    * 1000000 + 0.5) AS DOUBLE) / 1000000 AS kappa
       |FROM t""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val r = Tables(s, dir, "documents").select(
       when(col("n_chars") > 500, 1L).otherwise(0L).as("ra"),
       when(size(split(col("text"), " ")) > 80, 1L).otherwise(0L).as("rb"))
@@ -7499,14 +7349,13 @@ object StatsOps extends QueryPack {
       sum((lit(1) - col("ra")) * col("rb")).cast("long").as("n01"),
       sum((lit(1) - col("ra")) * (lit(1) - col("rb"))).cast("long").as("n00"))
     val pObs = (col("n11") + col("n00")).cast("double") / col("n")
-    val pExp = (dec(col("n11") + col("n10")) * (col("n11") + col("n01"))
-      + dec(col("n01") + col("n00")) * (col("n10") + col("n00")))
+    val pExp = (Det.wide(col("n11") + col("n10")) * (col("n11") + col("n01"))
+      + Det.wide(col("n01") + col("n00")) * (col("n10") + col("n00")))
       .cast("double") / col("n") / col("n")
     t.select(col("n").as("n_docs"), col("n11"), col("n10"), col("n01"),
       col("n00"),
-      (floor(pObs * 1000000 + lit(0.5)).cast("double") / 1000000).as("p_obs"),
-      (floor(pExp * 1000000 + lit(0.5)).cast("double") / 1000000).as("p_exp"),
-      (floor((pObs - pExp) / (lit(1.0) - pExp) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("kappa"))
+      Det.quant(pObs, 6).as("p_obs"),
+      Det.quant(pExp, 6).as("p_exp"),
+      Det.quant((pObs - pExp) / (lit(1.0) - pExp), 6).as("kappa"))
   }
 }

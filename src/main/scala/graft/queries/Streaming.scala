@@ -564,7 +564,6 @@ object Streaming extends QueryPack {
       |    AS DOUBLE) / 10000 AS entropy_rate
       |FROM h JOIN cs ON h.src = cs.src CROSS JOIN tot
       |ORDER BY h.src""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val tr = Tables(s, dir, "events")
       .select(col("event_type").as("src"),
@@ -574,16 +573,14 @@ object Streaming extends QueryPack {
     val cs = c.groupBy("src").agg(sum("cst").as("c_s"))
     val h = c.join(cs, "src")
       .select(col("src"),
-        (dec(col("cst")) * (Det.lnFix(col("c_s"), 6).cast("long")
+        (Det.wide(col("cst")) * (Det.lnFix(col("c_s"), 6).cast("long")
           - Det.lnFix(col("cst"), 6).cast("long"))).as("t6"))
       .groupBy("src").agg(sum("t6").as("h6"))
     val tot = h.join(cs, "src").agg(sum("h6").as("h6_tot"), sum("c_s").as("n"))
     h.join(cs, "src").crossJoin(broadcast(tot))
       .select(col("src"), col("c_s").cast("long").as("n_out"),
-        (floor(col("h6").cast("double") / col("c_s") / 1000000 * 10000
-          + lit(0.5)).cast("double") / 10000).as("h_cond"),
-        (floor(col("h6_tot").cast("double") / col("n") / 1000000 * 10000
-          + lit(0.5)).cast("double") / 10000).as("entropy_rate"))
+        Det.quant(col("h6").cast("double") / col("c_s") / 1000000, 4).as("h_cond"),
+        Det.quant(col("h6_tot").cast("double") / col("n") / 1000000, 4).as("entropy_rate"))
       .orderBy("src")
   }
 

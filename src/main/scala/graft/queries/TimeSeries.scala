@@ -3,6 +3,7 @@ package graft.queries
 import graft.ops.PlanMemo
 import graft.engine.{Det, QueryPack, Tables}
 import graft.ops.BlockWindow
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,10 +17,19 @@ import org.apache.spark.sql.functions._
   * aggregation boundary is integer fixed-point (`Det.fix`/`Det.cents` —
   * BIGINT sums are order-independent and exact in both engines); derived
   * statistics are computed per-row in double with IDENTICAL expression
-  * trees on the Spark and DuckDB sides and quantized to 4 dp via the
-  * floor(x·10⁴+0.5) form (never `round` — P12).
+  * trees on the Spark and DuckDB sides and quantized to 4 dp by
+  * `Det.quant` (floor(x·10⁴+0.5), never `round` — P12).
   */
 object TimeSeriesOps extends QueryPack {
+
+  /** Each user's daily mean of `value`, one row per (user_id, day): the
+    * 4-dp fixed-point day sum averaged by [[Det.avgFix]] into `x`
+    * (`daily_xi` in tools/formula_audit.py re-derives the same series). */
+  private def dailyMean(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "events")
+      .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
+      .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("n"))
+      .select(col("user_id"), col("day"), Det.avgFix(col("s1"), 4, col("n")).as("x"))
 
   // Resample each user's event stream onto a daily calendar grid and
   // forward-fill the last observed value across gap days — the standard
@@ -140,11 +150,11 @@ object TimeSeriesOps extends QueryPack {
         last(obsDay, ignoreNulls = true).over(wp).as("pd"),
         first(col("v"), ignoreNulls = true).over(wf).as("nv"),
         first(obsDay, ignoreNulls = true).over(wf).as("nd"))
-    val interp = floor(
+    val interp = Det.quant(
       (col("pv").cast("double")
         + ((col("nv").cast("double") - col("pv").cast("double"))
            * datediff(col("day"), col("pd")) / datediff(col("nd"), col("pd"))))
-        / 100 * 10000 + lit(0.5)) / 10000
+        / 100, 4)
     n.select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
         when(col("v").isNotNull, col("v").cast("double") / 100)
           .otherwise(interp).as("v"),
@@ -183,11 +193,7 @@ object TimeSeriesOps extends QueryPack {
       |  floor(ew * 10000 + 0.5) / 10000 AS ewma
       |FROM r
       |ORDER BY user_id, day""") { (s, dir) =>
-    val daily = Tables(s, dir, "events")
-      .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
-      .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("n"))
-      .select(col("user_id"), col("day"),
-        Det.avgFix(col("s1"), 4, col("n")).as("x"))
+    val daily = dailyMean(s, dir)
     val folded = daily
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("day"), col("x")))).as("xs"))
@@ -201,7 +207,7 @@ object TimeSeriesOps extends QueryPack {
       .select(col("user_id"),
         date_format(col("col.day"), "yyyy-MM-dd").as("day"),
         col("col.x").as("x"),
-        (floor(element_at(col("ews"), col("pos") + 1) * 10000 + lit(0.5)) / 10000)
+        Det.quant(element_at(col("ews"), col("pos") + 1), 4)
           .as("ewma"))
       .orderBy("user_id", "day")
   }
@@ -257,7 +263,7 @@ object TimeSeriesOps extends QueryPack {
     val b = Tables(s, dir, "lineitem")
       .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
         date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship"),
-        floor(col("l_quantity") + lit(0.5)).as("x"),
+        Det.half(col("l_quantity")).as("x"),
         Det.cents(col("l_extendedprice")).as("y"))
     val w = b.select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
       col("ship"), col("x"), col("y"),
@@ -273,8 +279,7 @@ object TimeSeriesOps extends QueryPack {
         col("ship"), col("x"), col("y"),
         col("n").cast("long").as("n"),
         when(vx === 0 || vy === 0, lit(null))
-          .otherwise(floor(num / sqrt(vx.cast("double") * vy.cast("double"))
-            * 10000 + lit(0.5)) / 10000).as("r"))
+          .otherwise(Det.quant(num / sqrt(vx.cast("double") * vy.cast("double")), 4)).as("r"))
       .orderBy(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
         col("ship"), col("x"), col("y"), col("r").asc_nulls_first)
   }
@@ -317,11 +322,10 @@ object TimeSeriesOps extends QueryPack {
       |WHERE event_type <> 'view'
       |ORDER BY event_type""") { (s, dir) =>
     val f = Det.fix(col("value"), 4)
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val st = Tables(s, dir, "events")
       .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(f.cast(dec38)).as("s1"),
-        sum((f * f).cast(dec38)).as("s2"))
+      .agg(count(lit(1)).as("n"), sum(Det.wide(f)).as("s1"),
+        sum(Det.wide(f * f)).as("s2"))
     val m = st.select(col("event_type"), col("n"), col("s1"), col("s2"),
       (col("s1").cast("double") / 10000 / col("n")).as("mean"),
       ((col("s2").cast("double") / 100000000L
@@ -333,13 +337,12 @@ object TimeSeriesOps extends QueryPack {
     m.filter(col("event_type") =!= "view")
       .crossJoin(broadcast(base))
       .select(col("event_type"), col("n").cast("long").as("n"),
-        (floor(col("mean") * 10000 + lit(0.5)) / 10000).as("mean"),
-        (floor((col("mean") - col("mb")) / sqrt(u) * 10000 + lit(0.5)) / 10000)
+        Det.quant(col("mean"), 4).as("mean"),
+        Det.quant((col("mean") - col("mb")) / sqrt(u), 4)
           .as("t"),
-        (floor(u * u
+        Det.quant(u * u
           / ((col("vr") / col("n")) * (col("vr") / col("n")) / (col("n") - 1)
-            + (col("vb") / col("nb")) * (col("vb") / col("nb")) / (col("nb") - 1))
-          * 10 + lit(0.5)) / 10).as("df"))
+            + (col("vb") / col("nb")) * (col("vb") / col("nb")) / (col("nb") - 1)), 1).as("df"))
       .orderBy("event_type")
   }
 
@@ -450,14 +453,9 @@ object TimeSeriesOps extends QueryPack {
       |       AS INT) AS alarm
       |FROM r
       |ORDER BY user_id, day""") { (s, dir) =>
-    val daily = Tables(s, dir, "events")
-      .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
-      .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("n"))
-      .select(col("user_id"), col("day"),
-        Det.avgFix(col("s1"), 4, col("n")).as("x"))
+    val daily = dailyMean(s, dir)
     val mu = daily.groupBy("user_id")
-      .agg((floor(sum(Det.fix(col("x"), 4)).cast("double") / count(lit(1))
-        + lit(0.5)) / 10000).as("mu"))
+      .agg((Det.half(sum(Det.fix(col("x"), 4)).cast("double") / count(lit(1))) / 10000).as("mu"))
     val folded = daily.join(mu, "user_id")
       .groupBy("user_id", "mu")
       .agg(array_sort(collect_list(struct(col("day"), col("x")))).as("xs"))
@@ -466,7 +464,7 @@ object TimeSeriesOps extends QueryPack {
           "array_append(acc, greatest(CAST(0 AS DOUBLE), " +
           "CASE WHEN size(acc) = 0 THEN CAST(0 AS DOUBLE) " +
           "ELSE element_at(acc, -1) END + (e.x - mu - CAST(1 AS DOUBLE)))))"))
-    val cusum4 = floor(element_at(col("ss"), col("pos") + 1) * 10000 + lit(0.5)) / 10000
+    val cusum4 = Det.quant(element_at(col("ss"), col("pos") + 1), 4)
     folded
       .select(col("user_id"), col("ss"), posexplode(col("xs")))
       .select(col("user_id"),
@@ -509,11 +507,7 @@ object TimeSeriesOps extends QueryPack {
       |  floor((l + b) * 10000 + 0.5) / 10000 AS forecast
       |FROM r
       |ORDER BY user_id, day""") { (s, dir) =>
-    val daily = Tables(s, dir, "events")
-      .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
-      .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("n"))
-      .select(col("user_id"), col("day"),
-        Det.avgFix(col("s1"), 4, col("n")).as("x"))
+    val daily = dailyMean(s, dir)
     val folded = daily
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("day"), col("x")))).as("xs"))
@@ -534,9 +528,9 @@ object TimeSeriesOps extends QueryPack {
       .select(col("user_id"),
         date_format(col("col.day"), "yyyy-MM-dd").as("day"),
         col("col.x").as("x"),
-        (floor(st.getField("l") * 10000 + lit(0.5)) / 10000).as("level"),
-        (floor(st.getField("b") * 10000 + lit(0.5)) / 10000).as("trend"),
-        (floor((st.getField("l") + st.getField("b")) * 10000 + lit(0.5)) / 10000)
+        Det.quant(st.getField("l"), 4).as("level"),
+        Det.quant(st.getField("b"), 4).as("trend"),
+        Det.quant(st.getField("l") + st.getField("b"), 4)
           .as("forecast"))
       .orderBy("user_id", "day")
   }
@@ -586,11 +580,7 @@ object TimeSeriesOps extends QueryPack {
       |  floor((l + b + seas[1]) * 10000 + 0.5) / 10000 AS forecast
       |FROM r
       |ORDER BY user_id, day""") { (s, dir) =>
-    val daily = Tables(s, dir, "events")
-      .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
-      .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("n"))
-      .select(col("user_id"), col("day"),
-        Det.avgFix(col("s1"), 4, col("n")).as("x"))
+    val daily = dailyMean(s, dir)
     val prev = "element_at(acc, -1)"
     val s1 = s"element_at($prev.seas, 1)"
     val lnew = s"CAST(0.4 AS DOUBLE) * (e.x - $s1)" +
@@ -618,12 +608,12 @@ object TimeSeriesOps extends QueryPack {
       .select(col("user_id"),
         date_format(col("col.day"), "yyyy-MM-dd").as("day"),
         col("col.x").as("x"),
-        (floor(sti.getField("l") * 10000 + lit(0.5)) / 10000).as("level"),
-        (floor(sti.getField("b") * 10000 + lit(0.5)) / 10000).as("trend"),
-        (floor(element_at(sti.getField("seas"), 7) * 10000 + lit(0.5)) / 10000)
+        Det.quant(sti.getField("l"), 4).as("level"),
+        Det.quant(sti.getField("b"), 4).as("trend"),
+        Det.quant(element_at(sti.getField("seas"), 7), 4)
           .as("seasonal"),
-        (floor((sti.getField("l") + sti.getField("b")
-          + element_at(sti.getField("seas"), 1)) * 10000 + lit(0.5)) / 10000)
+        Det.quant(sti.getField("l") + sti.getField("b")
+          + element_at(sti.getField("seas"), 1), 4)
           .as("forecast"))
       .orderBy("user_id", "day")
   }
@@ -657,11 +647,8 @@ object TimeSeriesOps extends QueryPack {
       |                  * 10000 + 0.5) / 10000 END AS r
       |FROM g
       |ORDER BY user_id""") { (s, dir) =>
-    val daily = Tables(s, dir, "events")
-      .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
-      .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("n"))
-      .select(col("user_id"), col("day"),
-        floor(Det.avgFix(col("s1"), 4, col("n")) * 10000 + lit(0.5)).as("xi"))
+    val daily = dailyMean(s, dir)
+      .select(col("user_id"), col("day"), Det.fix(col("x"), 4).as("xi"))
     val wl = Window.partitionBy("user_id").orderBy("day")
     val p = daily.select(col("user_id"), col("xi").as("a"),
         lag(col("xi"), 1).over(wl).as("b"))
@@ -676,8 +663,7 @@ object TimeSeriesOps extends QueryPack {
     val num = (col("n") * col("sab") - col("sa") * col("sb")).cast("double")
     g.select(col("user_id"), col("n").cast("long").as("n_pairs"),
         when(va === 0 || vb === 0, lit(null))
-          .otherwise(floor(num / sqrt(va.cast("double") * vb.cast("double"))
-            * 10000 + lit(0.5)) / 10000).as("r"))
+          .otherwise(Det.quant(num / sqrt(va.cast("double") * vb.cast("double")), 4)).as("r"))
       .orderBy("user_id")
   }
 
@@ -721,10 +707,9 @@ object TimeSeriesOps extends QueryPack {
       .agg(sum("c").as("tc"), sum("s").as("ts"))
     d.join(broadcast(t), "event_type")
       .select(col("event_type"), col("dow"), col("c").cast("long").as("n"),
-        (floor(col("s").cast("double") / 100 / col("c") * 10000 + lit(0.5))
-          / 10000).as("avg_v"),
-        (floor((col("s").cast("double") / col("c"))
-          / (col("ts").cast("double") / col("tc")) * 10000 + lit(0.5)) / 10000)
+        Det.quant(col("s").cast("double") / 100 / col("c"), 4).as("avg_v"),
+        Det.quant((col("s").cast("double") / col("c"))
+          / (col("ts").cast("double") / col("tc")), 4)
           .as("season_idx"))
       .orderBy("event_type", "dow")
   }
@@ -766,8 +751,8 @@ object TimeSeriesOps extends QueryPack {
     cell.join(broadcast(rt), "event_type").join(broadcast(ct), "dow")
       .crossJoin(broadcast(t))
       .select(col("event_type"), col("dow"), col("o").cast("long").as("observed"),
-        (floor(ex * 10000 + lit(0.5)) / 10000).as("expected"),
-        (floor((col("o") - ex) * (col("o") - ex) / ex * 10000 + lit(0.5)) / 10000)
+        Det.quant(ex, 4).as("expected"),
+        Det.quant((col("o") - ex) * (col("o") - ex) / ex, 4)
           .as("chi2_term"))
       .orderBy("event_type", "dow")
   }
@@ -814,7 +799,7 @@ object TimeSeriesOps extends QueryPack {
           lit("2024-01-01").cast("date")) % 7) + 7) % 7).cast("int").as("dow"),
         Det.cents(col("value")).as("v"))
     val m = e.groupBy("event_type", "dow")
-      .agg(floor(sum("v").cast("double") / count(lit(1)) + lit(0.5)).as("mc"))
+      .agg(Det.half(sum("v").cast("double") / count(lit(1))).as("mc"))
     val r = e.join(broadcast(m), Seq("event_type", "dow"))
       .select(col("event_id"), col("event_type"), col("dow"), col("v"),
         (col("v") - col("mc")).as("res"))
@@ -829,7 +814,7 @@ object TimeSeriesOps extends QueryPack {
       .filter(abs(z) > 3)
       .select(col("event_id"), col("event_type"), col("dow"),
         (col("v").cast("double") / 100).as("v"),
-        (floor(z * 10000 + lit(0.5)) / 10000).as("z"))
+        Det.quant(z, 4).as("z"))
       .orderBy("event_id")
   }
 
@@ -874,11 +859,8 @@ object TimeSeriesOps extends QueryPack {
       |       ELSE CAST(0 AS DOUBLE) END AS z
       |FROM n JOIN s ON n.user_id = s.user_id JOIN ties ON n.user_id = ties.user_id
       |ORDER BY n.user_id""") { (sp, dir) =>
-    val daily = Tables(sp, dir, "events")
-      .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
-      .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("n"))
-      .select(col("user_id"), col("day"),
-        floor(Det.avgFix(col("s1"), 4, col("n")) * 10000 + lit(0.5)).as("xi"))
+    val daily = dailyMean(sp, dir)
+      .select(col("user_id"), col("day"), Det.fix(col("x"), 4).as("xi"))
     val a = daily.select(col("user_id"), col("day").as("da"), col("xi").as("xa"))
     val b = daily.select(col("user_id"), col("day").as("db"), col("xi").as("xb"))
     val s = a.join(b, Seq("user_id")).filter(col("da") < col("db"))
@@ -897,9 +879,9 @@ object TimeSeriesOps extends QueryPack {
         col("mks").cast("long").as("s"),
         when(col("nd") < 2 || varNum === 0, lit(null))
           .when(col("mks") > 0,
-            floor((col("mks") - 1) / sd * 10000 + lit(0.5)) / 10000)
+            Det.quant((col("mks") - 1) / sd, 4))
           .when(col("mks") < 0,
-            floor((col("mks") + 1) / sd * 10000 + lit(0.5)) / 10000)
+            Det.quant((col("mks") + 1) / sd, 4))
           .otherwise(lit(0.0)).as("z"))
       .orderBy("user_id")
   }
@@ -937,11 +919,8 @@ object TimeSeriesOps extends QueryPack {
       |WHERE rn = (c + 1) // 2 OR rn = (c + 2) // 2
       |GROUP BY user_id
       |ORDER BY user_id""") { (sp, dir) =>
-    val daily = Tables(sp, dir, "events")
-      .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
-      .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("n"))
-      .select(col("user_id"), col("day"),
-        floor(Det.avgFix(col("s1"), 4, col("n")) * 10000 + lit(0.5)).as("xi"))
+    val daily = dailyMean(sp, dir)
+      .select(col("user_id"), col("day"), Det.fix(col("x"), 4).as("xi"))
     val a = daily.select(col("user_id"), col("day").as("da"), col("xi").as("xa"))
     val b = daily.select(col("user_id"), col("day").as("db"), col("xi").as("xb"))
     val sl = a.join(b, Seq("user_id")).filter(col("da") < col("db"))
@@ -956,7 +935,7 @@ object TimeSeriesOps extends QueryPack {
         col("rn") === expr("(c + 2) div 2"))
       .groupBy("user_id")
       .agg(max("c").cast("long").as("n_pairs"),
-        (floor(avg("slope") / 10000 * 10000 + lit(0.5)) / 10000)
+        Det.quant(avg("slope") / 10000, 4)
           .as("slope_per_day"))
       .orderBy("user_id")
   }
@@ -1028,8 +1007,7 @@ object TimeSeriesOps extends QueryPack {
       .select(col("wk").as("cohort_week"),
         col("n_signups").cast("long").as("n_signups"),
         col("n_conv").cast("long").as("n_conv"),
-        (floor(col("n_conv").cast("double") / col("n_signups") * 10000
-          + lit(0.5)) / 10000).as("conv_rate"),
+        Det.quant(col("n_conv").cast("double") / col("n_signups"), 4).as("conv_rate"),
         col("med").as("med_latency_s"), col("p90").as("p90_latency_s"))
       .orderBy("cohort_week")
   }
@@ -1260,7 +1238,7 @@ object TimeSeriesOps extends QueryPack {
         lit("2024-01-01").cast("date")).as("day"))
       .agg(sum(Det.cents(col("value"))).as("v"))
     val m = daily.agg(
-      floor(sum("v").cast("double") / count(lit(1)) + lit(0.5)).cast("long").as("mu"))
+      Det.half(sum("v").cast("double") / count(lit(1))).cast("long").as("mu"))
     val w = Window.orderBy("day")
     val d = daily.crossJoin(broadcast(m))
       .select(col("day"), (col("v") - col("mu")).as("dv"),
@@ -1285,14 +1263,13 @@ object TimeSeriesOps extends QueryPack {
       (col("r1") - (col("r2") - col("r1") * col("r1"))
         / (lit(1) - col("r1") * col("r1")) * col("r1")).as("phi21"))
     p.select(
-      (floor(col("r1") * 10000 + lit(0.5)) / 10000).as("r1"),
-      (floor(col("r2") * 10000 + lit(0.5)) / 10000).as("r2"),
-      (floor(col("r3") * 10000 + lit(0.5)) / 10000).as("r3"),
-      (floor(col("phi11") * 10000 + lit(0.5)) / 10000).as("pacf1"),
-      (floor(col("phi22") * 10000 + lit(0.5)) / 10000).as("pacf2"),
-      (floor((col("r3") - col("phi21") * col("r2") - col("phi22") * col("r1"))
-        / (lit(1) - col("phi21") * col("r1") - col("phi22") * col("r2"))
-        * 10000 + lit(0.5)) / 10000).as("pacf3"))
+      Det.quant(col("r1"), 4).as("r1"),
+      Det.quant(col("r2"), 4).as("r2"),
+      Det.quant(col("r3"), 4).as("r3"),
+      Det.quant(col("phi11"), 4).as("pacf1"),
+      Det.quant(col("phi22"), 4).as("pacf2"),
+      Det.quant((col("r3") - col("phi21") * col("r2") - col("phi22") * col("r1"))
+        / (lit(1) - col("phi21") * col("r1") - col("phi22") * col("r2")), 4).as("pacf3"))
   }
 
   // Single change-point per event_type over the daily-total series, by the
@@ -1337,25 +1314,24 @@ object TimeSeriesOps extends QueryPack {
       |    > 2 * sqrt((CAST(qw AS DOUBLE) - CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE) / nw) / nw)
       |    THEN 1 ELSE 0 END AS INT) AS breakout
       |FROM w ORDER BY user_id, day""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("cnt"))
       .select(col("user_id"), col("day"),
-        floor(col("s1").cast("double") / 10000 / col("cnt") * 10000 + lit(0.5))
+        Det.fix(col("s1").cast("double") / 10000 / col("cnt"), 4)
           .cast("long").as("v4"))
     val fr = Window.partitionBy("user_id").orderBy("day").rowsBetween(-6, 0)
     val w = daily
       .withColumn("sw", sum("v4").over(fr))
-      .withColumn("qw", sum(dec(col("v4")) * col("v4")).over(fr))
+      .withColumn("qw", sum(Det.wide(col("v4")) * col("v4")).over(fr))
       .withColumn("nw", count(lit(1)).over(fr))
     val mean = col("sw").cast("double") / col("nw")
     val sig = sqrt((col("qw").cast("double")
       - col("sw").cast("double") * col("sw").cast("double") / col("nw")) / col("nw"))
     w.select(col("user_id"), date_format(col("day"), "yyyy-MM-dd").as("day"),
         (col("v4").cast("double") / 10000).as("x"),
-        (floor(mean + lit(0.5)).cast("double") / 10000).as("mid"),
-        (floor(mean + lit(2) * sig + lit(0.5)).cast("double") / 10000).as("upper_band"),
+        (Det.half(mean).cast("double") / 10000).as("mid"),
+        (Det.half(mean + lit(2) * sig).cast("double") / 10000).as("upper_band"),
         when(abs(col("v4").cast("double") - mean) > lit(2) * sig, 1)
           .otherwise(0).cast("int").as("breakout"))
       .orderBy("user_id", "day")
@@ -1407,7 +1383,6 @@ object TimeSeriesOps extends QueryPack {
       |    AS DOUBLE) / 10000 AS f_stat,
       |  CAST(floor(ssb / sst * 10000 + 0.5) AS DOUBLE) / 10000 AS eta_sq
       |FROM f""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"),
         ((datediff(to_date(date_trunc("day", col("ts"))),
@@ -1415,12 +1390,12 @@ object TimeSeriesOps extends QueryPack {
       .agg(sum(Det.cents(col("value")).cast("long")).as("v"))
     def ng(g: Int) = sum(when(col("dow") === g, 1L).otherwise(0L))
       .cast("double").as(s"n$g")
-    def sg(g: Int) = sum(when(col("dow") === g, dec(col("v")))
-      .otherwise(lit(0).cast("decimal(38,0)"))).cast("double").as(s"s$g")
+    def sg(g: Int) = sum(when(col("dow") === g, Det.wide(col("v")))
+      .otherwise(Det.wide(lit(0)))).cast("double").as(s"s$g")
     val m = daily.agg(
       count(lit(1)).cast("double").as("n"),
-      sum(dec(col("v"))).cast("double").as("s"),
-      sum(dec(col("v")) * col("v")).cast("double").as("q"),
+      sum(Det.wide(col("v"))).cast("double").as("s"),
+      sum(Det.wide(col("v")) * col("v")).cast("double").as("q"),
       ng(0), ng(1), ng(2), ng(3), ng(4), ng(5), ng(6),
       sg(0), sg(1), sg(2), sg(3), sg(4), sg(5), sg(6))
     val f = m.select(col("n"), col("q"), col("s"),
@@ -1431,10 +1406,8 @@ object TimeSeriesOps extends QueryPack {
         - col("s") * col("s") / col("n")).as("ssb"),
       (col("q") - col("s") * col("s") / col("n")).as("sst"))
     f.select(col("n").cast("long").as("n_days"),
-      (floor((col("ssb") / 6) / ((col("sst") - col("ssb")) / (col("n") - 7))
-        * 10000 + lit(0.5)).cast("double") / 10000).as("f_stat"),
-      (floor(col("ssb") / col("sst") * 10000 + lit(0.5)).cast("double")
-        / 10000).as("eta_sq"))
+      Det.quant((col("ssb") / 6) / ((col("sst") - col("ssb")) / (col("n") - 7)), 4).as("f_stat"),
+      Det.quant(col("ssb") / col("sst"), 4).as("eta_sq"))
   }
 
   q("ts_changepoint",
@@ -1469,7 +1442,6 @@ object TimeSeriesOps extends QueryPack {
       |  END AS mean_shift
       |FROM sc WHERE rn = 1
       |ORDER BY event_type""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(col("event_type"), to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(sum(Det.cents(col("value")).cast("long")).as("s"))
@@ -1481,19 +1453,17 @@ object TimeSeriesOps extends QueryPack {
         sum("s").over(wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("n", count(lit(1)).over(wp))
       .withColumn("tot", sum("s").over(wp))
-      .withColumn("score", abs(dec(col("n")) * col("cum") - dec(col("t")) * col("tot")))
+      .withColumn("score", abs(Det.wide(col("n")) * col("cum") - Det.wide(col("t")) * col("tot")))
     w.withColumn("rn",
         row_number().over(wp.orderBy(col("score").desc, col("day"))))
       .filter(col("rn") === 1)
       .select(col("event_type"), col("n").cast("long").as("n_days"),
         date_format(col("day"), "yyyy-MM-dd").as("cp_day"),
-        (floor(col("score").cast("double")
-          / (col("n").cast("double") * col("tot").cast("double"))
-          * 1000000 + lit(0.5)).cast("double") / 1000000).as("cusum_stat"),
+        Det.quant(col("score").cast("double")
+          / (col("n").cast("double") * col("tot").cast("double")), 6).as("cusum_stat"),
         when(col("t") < col("n"),
-          floor(((col("tot") - col("cum")).cast("double") / (col("n") - col("t"))
-            - col("cum").cast("double") / col("t")) / 100 * 10000 + lit(0.5))
-            .cast("double") / 10000).as("mean_shift"))
+          Det.quant(((col("tot") - col("cum")).cast("double") / (col("n") - col("t"))
+            - col("cum").cast("double") / col("t")) / 100, 4)).as("mean_shift"))
       .orderBy("event_type")
   }
 
@@ -1539,9 +1509,8 @@ object TimeSeriesOps extends QueryPack {
       .filter(col("nw") === 14)
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
         when(col("sg") + col("sl") === 0, lit(50.0))
-          .otherwise(floor(col("sg").cast("double") * 100
-            / (col("sg") + col("sl")).cast("double") * 10000 + lit(0.5))
-            .cast("double") / 10000).as("rsi14"))
+          .otherwise(Det.quant(col("sg").cast("double") * 100
+            / (col("sg") + col("sl")).cast("double"), 4)).as("rsi14"))
       .orderBy("day")
   }
 
@@ -1586,8 +1555,7 @@ object TimeSeriesOps extends QueryPack {
       .withColumn("pk", max("v").over(
         wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("dd6",
-        floor((col("pk") - col("v")).cast("double") / col("pk").cast("double")
-          * 1000000 + lit(0.5)).cast("long"))
+        Det.fix((col("pk") - col("v")).cast("double") / col("pk").cast("double"), 6).cast("long"))
     val trough = dd
       .withColumn("rn", row_number().over(Window.orderBy(col("dd6").desc, col("day"))))
       .filter(col("rn") === 1)
@@ -1663,8 +1631,6 @@ object TimeSeriesOps extends QueryPack {
       |  CAST(floor((rssp - rss12) / 2 / (rss12 / (nn - 4)) * 10000 + 0.5)
       |    AS DOUBLE) / 10000 AS f_stat
       |FROM fl CROSS JOIN rp""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val daily = Tables(s, dir, "orders")
       .groupBy(to_date(date_trunc("day", col("o_orderdate"))).as("day"))
       .agg(sum(Det.cents(col("o_totalprice")).cast("long")).as("y"))
@@ -1677,35 +1643,31 @@ object TimeSeriesOps extends QueryPack {
     def moments(g: org.apache.spark.sql.RelationalGroupedDataset) =
       g.agg(count(lit(1)).cast("long").as("n"),
         sum("t").as("sx"), sum("y").as("sy"),
-        sum(dec(col("t")) * col("y")).as("sxy"),
-        sum(dec(col("t")) * col("t")).as("sxx"),
-        sum(dec(col("y")) * col("y")).as("syy"))
+        sum(Det.wide(col("t")) * col("y")).as("sxy"),
+        sum(Det.wide(col("t")) * col("t")).as("sxx"),
+        sum(Det.wide(col("y")) * col("y")).as("syy"))
     val m = moments(sg.groupBy("seg"))
     val p = moments(sg.groupBy())
+    // centered co-moment from the raw sums: s_ab − s_a·s_b / n
+    def co(a: String, b: String) = col(s"s$a$b").cast("double") -
+      col(s"s$a").cast("double") * col(s"s$b").cast("double") / col("n")
     val r = m.select(col("seg"), col("n"),
-      (d(col("sxy")) - d(col("sx")) * d(col("sy")) / col("n")).as("cxy"),
-      (d(col("sxx")) - d(col("sx")) * d(col("sx")) / col("n")).as("cxx"),
-      (d(col("syy")) - d(col("sy")) * d(col("sy")) / col("n")).as("cyy"))
+      co("x", "y").as("cxy"), co("x", "x").as("cxx"), co("y", "y").as("cyy"))
     val rk = r.select(col("seg"), col("n"),
       (col("cxy") / col("cxx")).as("slope"),
       (col("cyy") - col("cxy") * col("cxy") / col("cxx")).as("rss"))
-    val cxyP = d(col("sxy")) - d(col("sx")) * d(col("sy")) / col("n")
-    val rp = p.select(
-      ((d(col("syy")) - d(col("sy")) * d(col("sy")) / col("n"))
-        - cxyP * cxyP
-          / (d(col("sxx")) - d(col("sx")) * d(col("sx")) / col("n"))).as("rssp"))
+    val cxyP = co("x", "y")
+    val rp = p.select((co("y", "y") - cxyP * cxyP / co("x", "x")).as("rssp"))
     val fl = rk.agg(
       sum(when(col("seg") === 0, col("slope"))).as("slope_pre"),
       sum(when(col("seg") === 1, col("slope"))).as("slope_post"),
       sum("rss").as("rss12"), sum("n").as("nn"))
     fl.crossJoin(broadcast(rp))
       .select(col("nn").cast("long").as("n_days"),
-        (floor(col("slope_pre") / 100 * 1000000 + lit(0.5)).cast("double")
-          / 1000000).as("slope_pre"),
-        (floor(col("slope_post") / 100 * 1000000 + lit(0.5)).cast("double")
-          / 1000000).as("slope_post"),
-        (floor((col("rssp") - col("rss12")) / 2 / (col("rss12") / (col("nn") - 4))
-          * 10000 + lit(0.5)).cast("double") / 10000).as("f_stat"))
+        Det.quant(col("slope_pre") / 100, 6).as("slope_pre"),
+        Det.quant(col("slope_post") / 100, 6).as("slope_post"),
+        Det.quant((col("rssp") - col("rss12")) / 2 / (col("rss12") / (col("nn") - 4)),
+          4).as("f_stat"))
   }
 
   // Per-user exponential time-decay engagement score with half-life =
@@ -1743,10 +1705,9 @@ object TimeSeriesOps extends QueryPack {
         (col("cents") * expr("shiftleft(1L, cast(40 - least(ref_day - day_id, 40) as int))"))
           .as("contrib"))
       .groupBy("user_id")
-      .agg(sum(col("contrib").cast("decimal(38,0)")).as("sc"))
+      .agg(sum(Det.wide(col("contrib"))).as("sc"))
       .select(col("user_id"),
-        (floor(col("sc").cast("double") / 1099511627776L / 100 * 10000 + lit(0.5))
-          .cast("double") / 10000).as("decay_score"))
+        Det.quant(col("sc").cast("double") / 1099511627776L / 100, 4).as("decay_score"))
       .orderBy("user_id")
   }
 
@@ -1859,7 +1820,7 @@ object TimeSeriesOps extends QueryPack {
       .groupBy(to_date(date_trunc("day", col("o_orderdate"))).as("day"))
       .agg(sum(Det.cents(col("o_totalprice")).cast("long")).as("y"))
     val fr = Window.orderBy("day").rowsBetween(-3, 3)
-    val t7 = floor(col("s7").cast("double") / 7 + lit(0.5)).cast("long")
+    val t7 = Det.half(col("s7").cast("double") / 7).cast("long")
     val t = daily
       .withColumn("s7", sum("y").over(fr))
       .withColumn("n7", count(lit(1)).over(fr))
@@ -1867,7 +1828,7 @@ object TimeSeriesOps extends QueryPack {
       .select(col("day"), col("y"), t7.as("t7"), (col("y") - t7).as("detr"),
         expr("((datediff(day, date'2024-01-01') % 7) + 7) % 7").as("dow"))
     val sm = t.groupBy("dow")
-      .agg(floor(sum("detr").cast("double") / count(lit(1)) + lit(0.5))
+      .agg(Det.half(sum("detr").cast("double") / count(lit(1)))
         .cast("long").as("sdow"))
     t.join(broadcast(sm), "dow")
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
@@ -1905,8 +1866,7 @@ object TimeSeriesOps extends QueryPack {
     val w = Window.orderBy("day")
     def pct(l: org.apache.spark.sql.Column) =
       when(l.isNull, lit(null)).otherwise(
-        floor((col("v").cast("double") - l.cast("double")) / l.cast("double")
-          * 1000000 + lit(0.5)).cast("double") / 1000000)
+        Det.quant((col("v").cast("double") - l.cast("double")) / l.cast("double"), 6))
     daily
       .withColumn("l1", lag("v", 1).over(w))
       .withColumn("l7", lag("v", 7).over(w))
@@ -1985,8 +1945,8 @@ object TimeSeriesOps extends QueryPack {
     sig.select(col("event_type"),
         date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("x").as("revenue"),
-        (floor(col("f") * 10000 + lit(0.5)) / 10000).as("ewma_fast"),
-        (floor(col("sl") * 10000 + lit(0.5)) / 10000).as("ewma_slow"),
+        Det.quant(col("f"), 4).as("ewma_fast"),
+        Det.quant(col("sl"), 4).as("ewma_slow"),
         when(col("pup").isNull, 0L)
           .when(col("up") && !col("pup"), 1L)
           .when(!col("up") && col("pup"), -1L)
@@ -2034,7 +1994,6 @@ object TimeSeriesOps extends QueryPack {
       |            - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
       |    * 1000000 + 0.5) / 1000000 AS r
       |FROM st ORDER BY lag""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val d = Tables(s, dir, "events")
       .filter(col("event_type").isin("view", "purchase"))
       .groupBy(datediff(to_date(date_trunc("day", col("ts"))),
@@ -2047,9 +2006,9 @@ object TimeSeriesOps extends QueryPack {
       .join(y, col("yday") === col("day") + col("lag"))
     val st = p.groupBy("lag").agg(count(lit(1)).as("n"),
       sum("xv").cast("long").as("sx"), sum("yv").cast("long").as("sy"),
-      sum(col("xv").cast(dec38) * col("yv")).as("sxy"),
-      sum(col("xv").cast(dec38) * col("xv")).as("sxx"),
-      sum(col("yv").cast(dec38) * col("yv")).as("syy"))
+      sum(Det.wide(col("xv")) * col("yv")).as("sxy"),
+      sum(Det.wide(col("xv")) * col("xv")).as("sxx"),
+      sum(Det.wide(col("yv")) * col("yv")).as("syy"))
     val nD = col("n").cast("double")
     val num = nD * col("sxy").cast("double") - col("sx").cast("double") * col("sy").cast("double")
     val den = sqrt((nD * col("sxx").cast("double")
@@ -2057,7 +2016,7 @@ object TimeSeriesOps extends QueryPack {
       * (nD * col("syy").cast("double")
         - col("sy").cast("double") * col("sy").cast("double")))
     st.select(col("lag").cast("long").as("lag"), col("n").cast("long").as("n"),
-        (floor(num / den * 1000000 + lit(0.5)) / 1000000).as("r"))
+        Det.quant(num / den, 6).as("r"))
       .orderBy("lag")
   }
 
@@ -2115,18 +2074,17 @@ object TimeSeriesOps extends QueryPack {
       % col("p"))) / col("p")
     val terms = dm.withColumn("p", explode(sequence(lit(2), lit(14))))
       .select(col("p"),
-        floor(col("dm") * cos(ang) * 100 + lit(0.5)).cast("long").as("tc"),
-        floor(col("dm") * sin(ang) * 100 + lit(0.5)).cast("long").as("tsn"),
-        floor(col("dm") * col("dm") * 100 + lit(0.5)).cast("long").as("q"))
+        Det.fix(col("dm") * cos(ang), 2).cast("long").as("tc"),
+        Det.fix(col("dm") * sin(ang), 2).cast("long").as("tsn"),
+        Det.fix(col("dm") * col("dm"), 2).cast("long").as("q"))
     val st = terms.groupBy("p").agg(count(lit(1)).as("n"),
       sum("tc").cast("long").as("sc"), sum("tsn").cast("long").as("ss"),
       sum("q").cast("long").as("sq"))
     st.select(col("p").cast("long").as("period"),
         col("n").cast("long").as("n_days"),
-        (floor(((col("sc").cast("double") / 100) * (col("sc").cast("double") / 100)
+        Det.quant(((col("sc").cast("double") / 100) * (col("sc").cast("double") / 100)
           + (col("ss").cast("double") / 100) * (col("ss").cast("double") / 100))
-          / (col("n") * (col("sq").cast("double") / 100)) * 1000000 + lit(0.5))
-          / 1000000).as("norm_power"))
+          / (col("n") * (col("sq").cast("double") / 100)), 6).as("norm_power"))
       .orderBy("period")
   }
 
@@ -2176,8 +2134,7 @@ object TimeSeriesOps extends QueryPack {
         && (col("x") - hi) * 20 >= col("x"))
       .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
         (col("x").cast("double") / 100).as("revenue"),
-        (floor((col("x").cast("double") - hi) / col("x") * 1000000 + lit(0.5))
-          / 1000000).as("prominence"))
+        Det.quant((col("x").cast("double") - hi) / col("x"), 6).as("prominence"))
       .orderBy("day")
   }
 
@@ -2217,12 +2174,9 @@ object TimeSeriesOps extends QueryPack {
       .withColumn("e7", sum("errs").over(w))
     r.select(col("day"), col("n").cast("long").as("n_events"),
         col("errs").cast("long").as("n_errors"),
-        (floor(col("errs").cast("double") / col("n") * 1000000 + lit(0.5))
-          / 1000000).as("error_rate"),
-        (floor(col("errs").cast("double") / col("n") / 0.01 * 10000 + lit(0.5))
-          / 10000).as("burn_1d"),
-        (floor(col("e7").cast("double") / col("n7") / 0.01 * 10000 + lit(0.5))
-          / 10000).as("burn_7d"))
+        Det.quant(col("errs").cast("double") / col("n"), 6).as("error_rate"),
+        Det.quant(col("errs").cast("double") / col("n") / 0.01, 4).as("burn_1d"),
+        Det.quant(col("e7").cast("double") / col("n7") / 0.01, 4).as("burn_7d"))
       .orderBy("day")
   }
 
@@ -2281,21 +2235,20 @@ object TimeSeriesOps extends QueryPack {
     val mc = col("scc").cast("double") / 100 / col("nc")
     val d = st.filter(col("nt") > 0 && col("nc") > 0)
       .select(col("dow"), col("nt"), col("nc"), mt.as("mt"), mc.as("mc"),
-        floor((mt - mc) * (col("nt") + col("nc")) * 10000 + lit(0.5))
+        Det.fix((mt - mc) * (col("nt") + col("nc")), 4)
           .cast("long").as("wdfix"))
     val tot = d.groupBy().agg(sum(col("nt") + col("nc")).cast("long").as("n"),
       sum("wdfix").as("wsum"))
     val per = d.select(col("dow").cast("long").as("stratum"),
       col("nt").cast("long").as("n_treat"), col("nc").cast("long").as("n_control"),
-      (floor(col("mt") * 10000 + lit(0.5)) / 10000).as("mean_treat"),
-      (floor(col("mc") * 10000 + lit(0.5)) / 10000).as("mean_control"),
-      (floor((col("mt") - col("mc")) * 10000 + lit(0.5)) / 10000).as("diff"))
+      Det.quant(col("mt"), 4).as("mean_treat"),
+      Det.quant(col("mc"), 4).as("mean_control"),
+      Det.quant(col("mt") - col("mc"), 4).as("diff"))
     val overall = tot.select(lit(-1L).as("stratum"),
       lit(null).cast("long").as("n_treat"), lit(null).cast("long").as("n_control"),
       lit(null).cast("double").as("mean_treat"),
       lit(null).cast("double").as("mean_control"),
-      (floor(col("wsum").cast("double") / 10000 / col("n") * 10000 + lit(0.5))
-        / 10000).as("diff"))
+      Det.quant(col("wsum").cast("double") / 10000 / col("n"), 4).as("diff"))
     per.unionAll(overall).orderBy("stratum")
   }
 
@@ -2326,8 +2279,7 @@ object TimeSeriesOps extends QueryPack {
     val dt = cell.groupBy("dow").agg(sum("n").as("dn"))
     cell.join(broadcast(dt), "dow")
       .select(col("dow"), col("hour"), col("n").cast("long").as("n_events"),
-        (floor(col("n").cast("double") / col("dn") * 1000000 + lit(0.5))
-          / 1000000).as("share_of_dow"))
+        Det.quant(col("n").cast("double") / col("dn"), 6).as("share_of_dow"))
       .orderBy("dow", "hour")
   }
 
@@ -2362,8 +2314,8 @@ object TimeSeriesOps extends QueryPack {
         sum(when(col("c") > 1, 1L).otherwise(0L)).cast("long").as("n_dup_keys"),
         sum(when(col("c") > 1, col("c") - 1).otherwise(0L)).cast("long")
           .as("n_redundant_rows"),
-        (floor(sum(when(col("c") > 1, col("c") - 1).otherwise(0L)).cast("double")
-          / sum("c") * 1000000 + lit(0.5)) / 1000000).as("dup_rate"))
+        Det.quant(sum(when(col("c") > 1, col("c") - 1).otherwise(0L)).cast("double")
+          / sum("c"), 6).as("dup_rate"))
   }
 
   // Cart-abandonment funnel by day: of the users who clicked that day,
@@ -2402,8 +2354,7 @@ object TimeSeriesOps extends QueryPack {
     j.groupBy("day")
       .agg(count(lit(1)).cast("long").as("n_clickers"),
         sum("abandoned").cast("long").as("n_abandoned"),
-        (floor(sum("abandoned").cast("double") / count(lit(1)) * 1000000
-          + lit(0.5)) / 1000000).as("abandonment_rate"))
+        Det.quant(sum("abandoned").cast("double") / count(lit(1)), 6).as("abandonment_rate"))
       .orderBy("day")
   }
 
@@ -2454,7 +2405,6 @@ object TimeSeriesOps extends QueryPack {
       |    ELSE floor(CAST(0.6931471805599453 AS DOUBLE) / (-slope) * 10000 + 0.5)
       |         / 10000 END AS half_life_weeks
       |FROM f""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events")
     val first = ev.groupBy("user_id")
       .agg(date_trunc("week", min(col("ts"))).as("cohort"))
@@ -2474,20 +2424,19 @@ object TimeSeriesOps extends QueryPack {
         (Det.lnFix(col("active").cast("double"), 6)
           - Det.lnFix(col("size").cast("double"), 6)).as("y"))
     val m = pts.agg(count(lit(1)).as("n"),
-      sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("x")) * col("y")).as("sxy"))
-    val slope = (m("n").cast("decimal(38,0)") * col("sxy") - col("sx") * col("sy"))
+      sum(Det.wide(col("x"))).as("sx"), sum(Det.wide(col("y"))).as("sy"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"),
+      sum(Det.wide(col("x")) * col("y")).as("sxy"))
+    val slope = (Det.wide(m("n")) * col("sxy") - col("sx") * col("sy"))
       .cast("double") /
-      (m("n").cast("decimal(38,0)") * col("sxx") - col("sx") * col("sx"))
+      (Det.wide(m("n")) * col("sxx") - col("sx") * col("sx"))
         .cast("double") / 1000000
     m.select(col("n").cast("long").as("n_points"),
         slope.as("slope"))
       .select(col("n_points"),
-        (floor(col("slope") * 1000000 + lit(0.5)) / 1000000).as("decay_per_week"),
+        Det.quant(col("slope"), 6).as("decay_per_week"),
         when(col("slope") >= 0, lit(null).cast("double"))
-          .otherwise(floor(lit(0.6931471805599453) / -col("slope") * 10000
-            + lit(0.5)) / 10000).as("half_life_weeks"))
+          .otherwise(Det.quant(lit(0.6931471805599453) / -col("slope"), 4)).as("half_life_weeks"))
   }
 
   // Lo–MacKinlay variance-ratio test (q=5) on the daily revenue series —
@@ -2532,7 +2481,6 @@ object TimeSeriesOps extends QueryPack {
       |    * sqrt(CAST(n1 AS DOUBLE) * 3 * 5 / (2 * (2 * 5 - 1) * (5 - 1)))
       |    * 10000 + 0.5) / 10000 AS z
       |FROM vr""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "orders")
       .groupBy(to_date(date_trunc("day", col("o_orderdate"))).as("day"))
       .agg(sum(Det.cents(col("o_totalprice")).cast("long")).as("v"))
@@ -2542,11 +2490,11 @@ object TimeSeriesOps extends QueryPack {
       (col("v") - lag("v", 5).over(wo)).as("d5"))
       .transform(PlanMemo.pin)
     val m1 = lagd.filter(col("d1").isNotNull).agg(
-      count(col("d1")).as("n1"), sum(dec(col("d1"))).as("s1"),
-      sum(dec(col("d1")) * col("d1")).as("q1"))
+      count(col("d1")).as("n1"), sum(Det.wide(col("d1"))).as("s1"),
+      sum(Det.wide(col("d1")) * col("d1")).as("q1"))
     val m5 = lagd.filter(col("d5").isNotNull).agg(
-      count(col("d5")).as("n5"), sum(dec(col("d5"))).as("s5"),
-      sum(dec(col("d5")) * col("d5")).as("q5"))
+      count(col("d5")).as("n5"), sum(Det.wide(col("d5"))).as("s5"),
+      sum(Det.wide(col("d5")) * col("d5")).as("q5"))
     val vRatio = ((col("q5").cast("double")
       - col("s5").cast("double") * col("s5").cast("double") / col("n5"))
       / col("n5") / 5) /
@@ -2555,10 +2503,9 @@ object TimeSeriesOps extends QueryPack {
         / col("n1"))
     m1.crossJoin(broadcast(m5))
       .select(col("n1").cast("long").as("n_increments"),
-        (floor(vRatio * 1000000 + lit(0.5)) / 1000000).as("vr5"),
-        (floor((vRatio - 1)
-          * sqrt(col("n1").cast("double") * 3 * 5 / (2 * (2 * 5 - 1) * (5 - 1)))
-          * 10000 + lit(0.5)) / 10000).as("z"))
+        Det.quant(vRatio, 6).as("vr5"),
+        Det.quant((vRatio - 1)
+          * sqrt(col("n1").cast("double") * 3 * 5 / (2 * (2 * 5 - 1) * (5 - 1))), 4).as("z"))
   }
 
   // Wald–Wolfowitz runs test on the daily revenue series against its
@@ -2626,12 +2573,11 @@ object TimeSeriesOps extends QueryPack {
     val n = col("n1") + col("n2")
     val er = lit(2.0) * col("n1") * col("n2") / n + 1
     agg.select(col("n1"), col("n2"), col("r"),
-      (floor(er * 10000 + lit(0.5)) / 10000).as("expected_runs"),
-      (floor((col("r") - er)
+      Det.quant(er, 4).as("expected_runs"),
+      Det.quant((col("r") - er)
         / sqrt(lit(2.0) * col("n1") * col("n2")
           * (lit(2.0) * col("n1") * col("n2") - col("n1") - col("n2"))
-          / (n.cast("double") * n * (n - 1)))
-        * 10000 + lit(0.5)) / 10000).as("z"))
+          / (n.cast("double") * n * (n - 1))), 4).as("z"))
   }
 
   // Granger-style lead-lag test: do yesterday's CLICKS help predict
@@ -2697,7 +2643,6 @@ object TimeSeriesOps extends QueryPack {
       |    / (CAST(sse_u AS DOUBLE) / (n - 3)) * 10000 + 0.5) AS DOUBLE) / 10000
       |    AS f_stat
       |FROM cr CROSS JOIN sse""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(
@@ -2711,14 +2656,14 @@ object TimeSeriesOps extends QueryPack {
       .transform(PlanMemo.pin)
     val m = lf.agg(
       count(lit(1)).cast("double").as("n"),
-      sum(dec(col("y1"))).cast("double").as("s1"),
-      sum(dec(col("x1"))).cast("double").as("s2"),
-      sum(dec(col("y"))).cast("double").as("sy"),
-      sum(dec(col("y1")) * col("y1")).cast("double").as("s11"),
-      sum(dec(col("y1")) * col("x1")).cast("double").as("s12"),
-      sum(dec(col("x1")) * col("x1")).cast("double").as("s22"),
-      sum(dec(col("y1")) * col("y")).cast("double").as("s1y"),
-      sum(dec(col("x1")) * col("y")).cast("double").as("s2y"))
+      sum(Det.wide(col("y1"))).cast("double").as("s1"),
+      sum(Det.wide(col("x1"))).cast("double").as("s2"),
+      sum(Det.wide(col("y"))).cast("double").as("sy"),
+      sum(Det.wide(col("y1")) * col("y1")).cast("double").as("s11"),
+      sum(Det.wide(col("y1")) * col("x1")).cast("double").as("s12"),
+      sum(Det.wide(col("x1")) * col("x1")).cast("double").as("s22"),
+      sum(Det.wide(col("y1")) * col("y")).cast("double").as("s1y"),
+      sum(Det.wide(col("x1")) * col("y")).cast("double").as("s2y"))
     val br = (col("n") * col("s1y") - col("s1") * col("sy")) /
       (col("n") * col("s11") - col("s1") * col("s1"))
     val cr = m.select(col("*"),
@@ -2740,17 +2685,14 @@ object TimeSeriesOps extends QueryPack {
     val eu = col("y") - (col("deta") / col("det") * col("y1")
       + col("detb") / col("det") * col("x1") + col("detc") / col("det"))
     val sse = lf.crossJoin(broadcast(cr)).agg(
-      sum(dec(floor(er * er + lit(0.5)))).as("sse_r"),
-      sum(dec(floor(eu * eu + lit(0.5)))).as("sse_u"))
+      sum(Det.wide(Det.half(er * er))).as("sse_r"),
+      sum(Det.wide(Det.half(eu * eu))).as("sse_u"))
     cr.crossJoin(broadcast(sse))
       .select(col("n").cast("long").as("n_days"),
-        (floor(col("deta") / col("det") * 1000000 + lit(0.5)).cast("double")
-          / 1000000).as("coef_ylag"),
-        (floor(col("detb") / col("det") * 1000000 + lit(0.5)).cast("double")
-          / 1000000).as("coef_xlag"),
-        (floor((col("sse_r").cast("double") - col("sse_u").cast("double"))
-          / (col("sse_u").cast("double") / (col("n") - 3)) * 10000
-          + lit(0.5)).cast("double") / 10000).as("f_stat"))
+        Det.quant(col("deta") / col("det"), 6).as("coef_ylag"),
+        Det.quant(col("detb") / col("det"), 6).as("coef_xlag"),
+        Det.quant((col("sse_r").cast("double") - col("sse_u").cast("double"))
+          / (col("sse_u").cast("double") / (col("n") - 3)), 4).as("f_stat"))
   }
 
   // AR(2) fit by Yule-Walker on the daily revenue series — the
@@ -2802,7 +2744,6 @@ object TimeSeriesOps extends QueryPack {
       |      - ((r2 - r1 * r1) / (1 - r1 * r1)) * r2) * 1000000 + 0.5)
       |      / 1000000 END AS noise_ratio
       |FROM r""") { (s, dir) =>
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val daily = Tables(s, dir, "orders")
       .groupBy(to_date(date_trunc("day", col("o_orderdate"))).as("day"))
       .agg(sum(Det.cents(col("o_totalprice")).cast("long")).as("v"))
@@ -2814,11 +2755,11 @@ object TimeSeriesOps extends QueryPack {
     val lagged = z.select(col("z"), col("n"),
       lag("z", 1).over(wo).as("z1"), lag("z", 2).over(wo).as("z2"))
     val c = lagged.agg(
-      sum(col("z").cast(dec38) * col("z")).cast("double").as("c0"),
-      sum(when(col("z1").isNull, lit(0).cast(dec38))
-        .otherwise(col("z").cast(dec38) * col("z1"))).cast("double").as("c1"),
-      sum(when(col("z2").isNull, lit(0).cast(dec38))
-        .otherwise(col("z").cast(dec38) * col("z2"))).cast("double").as("c2"),
+      sum(Det.wide(col("z")) * col("z")).cast("double").as("c0"),
+      sum(when(col("z1").isNull, Det.wide(lit(0)))
+        .otherwise(Det.wide(col("z")) * col("z1"))).cast("double").as("c1"),
+      sum(when(col("z2").isNull, Det.wide(lit(0)))
+        .otherwise(Det.wide(col("z")) * col("z2"))).cast("double").as("c2"),
       max(col("n")).as("n"))
     val r1 = col("c1") / col("c0")
     val r2 = col("c2") / col("c0")
@@ -2826,7 +2767,7 @@ object TimeSeriesOps extends QueryPack {
     val phi1 = r1 * (lit(1) - r2) / den
     val phi2 = (r2 - r1 * r1) / den
     def q6(x: org.apache.spark.sql.Column) =
-      floor(x * 1000000 + lit(0.5)) / 1000000
+      Det.quant(x, 6)
     c.select(col("n").cast("long").as("n_days"),
       q6(r1).as("r1"), q6(r2).as("r2"),
       when(den === 0, lit(null)).otherwise(q6(phi1)).as("phi1"),
@@ -2870,7 +2811,6 @@ object TimeSeriesOps extends QueryPack {
       |  floor((1 - CAST(num AS DOUBLE) / CAST(den AS DOUBLE) / 2) * 1000000
       |    + 0.5) / 1000000 AS rho_lag1
       |FROM agg""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "orders")
       .groupBy(to_date(date_trunc("day", col("o_orderdate"))).as("day"))
       .agg(sum(Det.cents(col("o_totalprice")).cast("long")).as("v"))
@@ -2880,14 +2820,13 @@ object TimeSeriesOps extends QueryPack {
       .select(col("day"), (col("n") * col("v") - col("s")).as("u"))
     val d = u.select(col("u"),
       (col("u") - lag("u", 1).over(Window.orderBy("day"))).as("du"))
-    val agg = d.agg(sum(dec(col("u")) * col("u")).as("den"),
-      sum(dec(col("du")) * col("du")).as("num"))
+    val agg = d.agg(sum(Det.wide(col("u")) * col("u")).as("den"),
+      sum(Det.wide(col("du")) * col("du")).as("num"))
     agg.crossJoin(broadcast(tot))
       .select(col("n").as("n_days"),
-        (floor(col("num").cast("double") / col("den").cast("double")
-          * 1000000 + lit(0.5)) / 1000000).as("dw"),
-        (floor((lit(1) - col("num").cast("double") / col("den").cast("double")
-          / 2) * 1000000 + lit(0.5)) / 1000000).as("rho_lag1"))
+        Det.quant(col("num").cast("double") / col("den").cast("double"), 6).as("dw"),
+        Det.quant(lit(1) - col("num").cast("double") / col("den").cast("double")
+          / 2, 6).as("rho_lag1"))
   }
 
   // Hurst exponent of the daily revenue series by classical rescaled-range
@@ -2955,7 +2894,6 @@ object TimeSeriesOps extends QueryPack {
       |    / CAST(n * sxx - sx * sx AS DOUBLE) * 1000000 + 0.5) / 1000000
       |    AS hurst
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "orders")
       .groupBy(to_date(date_trunc("day", col("o_orderdate"))).as("day"))
       .agg(sum(Det.cents(col("o_totalprice")).cast("long")).as("v"))
@@ -2977,26 +2915,25 @@ object TimeSeriesOps extends QueryPack {
       sum("u").over(Window.partitionBy("w", "chunk").orderBy("t"))
         .cast("long").as("cu"))
     val pc = cum.groupBy("w", "chunk")
-      .agg((max("cu") - min("cu")).as("rw"), sum(dec(col("u")) * col("u")).as("q"))
+      .agg((max("cu") - min("cu")).as("rw"), sum(Det.wide(col("u")) * col("u")).as("q"))
     val rs = pc.filter(col("q") > 0)
       .select(col("w"),
-        floor(col("rw").cast("double") * sqrt(col("w").cast("double"))
-          / sqrt(col("q").cast("double")) * 1000000 + lit(0.5))
+        Det.fix(col("rw").cast("double") * sqrt(col("w").cast("double"))
+          / sqrt(col("q").cast("double")), 6)
           .cast("long").as("q6"))
     val pts = rs.groupBy("w")
       .agg(sum("q6").as("sq"), count(lit(1)).as("cnt"))
       .select(Det.lnFix(col("w"), 12).cast("long").as("x"),
         (Det.lnFix(col("sq"), 12) - Det.lnFix(col("cnt"), 12)
           - lit(13815510557964L)).cast("long").as("y"))
-    val m = pts.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-      sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("x")) * col("y")).as("sxy"))
+    val m = pts.agg(Det.wide(count(lit(1))).as("n"),
+      sum(Det.wide(col("x"))).as("sx"), sum(Det.wide(col("y"))).as("sy"),
+      sum(Det.wide(col("x")) * col("x")).as("sxx"),
+      sum(Det.wide(col("x")) * col("y")).as("sxy"))
     m.crossJoin(broadcast(nDays))
       .select(col("n_days"), col("n").cast("long").as("n_scales"),
-        (floor((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-          / (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-          * 1000000 + lit(0.5)) / 1000000).as("hurst"))
+        Det.quant((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
+          / (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"), 6).as("hurst"))
   }
 
   // Local-level Kalman filter over each user's daily mean value — the
@@ -3041,11 +2978,7 @@ object TimeSeriesOps extends QueryPack {
       |    * 1000000 + 0.5) / 1000000 AS next_gain
       |FROM r
       |ORDER BY user_id, day""") { (s, dir) =>
-    val daily = Tables(s, dir, "events")
-      .groupBy(col("user_id"), to_date(date_trunc("day", col("ts"))).as("day"))
-      .agg(sum(Det.fix(col("value"), 4)).as("s1"), count(lit(1)).as("n"))
-      .select(col("user_id"), col("day"),
-        Det.avgFix(col("s1"), 4, col("n")).as("x"))
+    val daily = dailyMean(s, dir)
     val folded = daily
       .groupBy("user_id")
       .agg(array_sort(collect_list(struct(col("day"), col("x")))).as("xs"))
@@ -3068,10 +3001,9 @@ object TimeSeriesOps extends QueryPack {
       .select(col("user_id"),
         date_format(col("col.day"), "yyyy-MM-dd").as("day"),
         col("col.x").as("x"),
-        (floor(st.getField("l") * 10000 + lit(0.5)) / 10000).as("level"),
-        (floor((st.getField("p") + lit(25.0))
-          / ((st.getField("p") + lit(25.0)) + lit(400.0))
-          * 1000000 + lit(0.5)) / 1000000).as("next_gain"))
+        Det.quant(st.getField("l"), 4).as("level"),
+        Det.quant((st.getField("p") + lit(25.0))
+          / ((st.getField("p") + lit(25.0)) + lit(400.0)), 6).as("next_gain"))
       .orderBy("user_id", "day")
   }
 
@@ -3141,7 +3073,6 @@ object TimeSeriesOps extends QueryPack {
       |  floor(g / sqrt(s2 * mm * invuu) * 1000000 + 0.5) / 1000000
       |    AS adf_t
       |FROM t""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val d = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(expr("sum(cast(floor(value * 100 + 0.5) as bigint)) div 100")
@@ -3152,16 +3083,16 @@ object TimeSeriesOps extends QueryPack {
     val o = l.filter(col("x2").isNotNull)
       .select((col("x") - col("x1")).as("y"), col("x1").as("u"),
         (col("x1") - col("x2")).as("w"))
-    val m = o.agg(count(lit(1)).cast("decimal(38,0)").as("m"),
-      sum("y").cast("decimal(38,0)").as("sy"),
-      sum("u").cast("decimal(38,0)").as("su"),
-      sum("w").cast("decimal(38,0)").as("sw"),
-      sum(dec(col("y")) * col("y")).as("syy"),
-      sum(dec(col("u")) * col("u")).as("suu"),
-      sum(dec(col("w")) * col("w")).as("sww"),
-      sum(dec(col("u")) * col("y")).as("suy"),
-      sum(dec(col("w")) * col("y")).as("swy"),
-      sum(dec(col("u")) * col("w")).as("suw"))
+    val m = o.agg(Det.wide(count(lit(1))).as("m"),
+      Det.wide(sum("y")).as("sy"),
+      Det.wide(sum("u")).as("su"),
+      Det.wide(sum("w")).as("sw"),
+      sum(Det.wide(col("y")) * col("y")).as("syy"),
+      sum(Det.wide(col("u")) * col("u")).as("suu"),
+      sum(Det.wide(col("w")) * col("w")).as("sww"),
+      sum(Det.wide(col("u")) * col("y")).as("suy"),
+      sum(Det.wide(col("w")) * col("y")).as("swy"),
+      sum(Det.wide(col("u")) * col("w")).as("suw"))
     val cuu = col("m") * col("suu") - col("su") * col("su")
     val cww = col("m") * col("sww") - col("sw") * col("sw")
     val cuw = col("m") * col("suw") - col("su") * col("sw")
@@ -3179,10 +3110,9 @@ object TimeSeriesOps extends QueryPack {
       (col("m").cast("double") - 3)
     val invuu = cww.cast("double") / det
     m.select(col("m").cast("long").as("n_obs"),
-      (floor(g * 1000000 + lit(0.5)) / 1000000).as("gamma"),
-      (floor(phi * 1000000 + lit(0.5)) / 1000000).as("phi"),
-      (floor(g / sqrt(s2 * col("m").cast("double") * invuu) * 1000000
-        + lit(0.5)) / 1000000).as("adf_t"))
+      Det.quant(g, 6).as("gamma"),
+      Det.quant(phi, 6).as("phi"),
+      Det.quant(g / sqrt(s2 * col("m").cast("double") * invuu), 6).as("adf_t"))
   }
 
   // KPSS level-stationarity test on the daily-revenue series — the
@@ -3228,7 +3158,6 @@ object TimeSeriesOps extends QueryPack {
       |       * CAST(5 * g0 + 2 * (4 * g1 + 3 * g2 + 2 * g3 + g4) AS DOUBLE))
       |    * 1000000 + 0.5) AS DOUBLE) / 1000000 AS kpss_stat
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(sum(Det.cents(col("value")).cast("long")).as("x"))
@@ -3241,19 +3170,18 @@ object TimeSeriesOps extends QueryPack {
         Window.currentRow)).as("s"),
       lag(col("e"), 1).over(wo).as("e1"), lag(col("e"), 2).over(wo).as("e2"),
       lag(col("e"), 3).over(wo).as("e3"), lag(col("e"), 4).over(wo).as("e4"))
-    val m = c.groupBy("n").agg(sum(dec(col("s")) * col("s")).as("ss"),
-      sum(dec(col("e")) * col("e")).as("g0"),
-      sum(dec(col("e")) * col("e1")).as("g1"),
-      sum(dec(col("e")) * col("e2")).as("g2"),
-      sum(dec(col("e")) * col("e3")).as("g3"),
-      sum(dec(col("e")) * col("e4")).as("g4"))
+    val m = c.groupBy("n").agg(sum(Det.wide(col("s")) * col("s")).as("ss"),
+      sum(Det.wide(col("e")) * col("e")).as("g0"),
+      sum(Det.wide(col("e")) * col("e1")).as("g1"),
+      sum(Det.wide(col("e")) * col("e2")).as("g2"),
+      sum(Det.wide(col("e")) * col("e3")).as("g3"),
+      sum(Det.wide(col("e")) * col("e4")).as("g4"))
     val lam = (lit(5) * col("g0")
       + lit(2) * (lit(4) * col("g1") + lit(3) * col("g2")
         + lit(2) * col("g3") + col("g4"))).cast("double")
     m.select(col("n").as("n_days"),
-      (floor(lit(5.0) * col("ss").cast("double")
-        / (col("n").cast("double") * lam) * 1000000 + lit(0.5))
-        .cast("double") / 1000000).as("kpss_stat"))
+      Det.quant(lit(5.0) * col("ss").cast("double")
+        / (col("n").cast("double") * lam), 6).as("kpss_stat"))
   }
 
   // Attribution-window sensitivity: what fraction of purchases has a
@@ -3315,8 +3243,7 @@ object TimeSeriesOps extends QueryPack {
       lit(h).as("window_h"), col(c).as("attributed"))
     row(1, "w1h").unionByName(row(6, "w6h")).unionByName(row(24, "w24h"))
       .select(col("window_h"), col("attributed"),
-        (floor(col("attributed").cast("double") / col("n_purchases")
-          * 1000000 + lit(0.5)).cast("double") / 1000000)
+        Det.quant(col("attributed").cast("double") / col("n_purchases"), 6)
           .as("conversion_rate"))
       .orderBy("window_h")
   }
@@ -3379,7 +3306,6 @@ object TimeSeriesOps extends QueryPack {
       |    / CAST(w * syy - sy * sy AS DOUBLE) * 1000000 + 0.5) AS DOUBLE)
       |    / 1000000 AS r2
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val g = Tables(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(expr("(unix_micros(ts) - unix_micros(lag(ts) OVER " +
@@ -3393,32 +3319,30 @@ object TimeSeriesOps extends QueryPack {
         .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("cb"))
     val xy = r.select(col("c"),
       Det.lnFix(col("t"), 9).as("x"),
-      floor(log(-log(lit(1) - (col("cb").cast("double")
+      Det.fix(log(-log(lit(1) - (col("cb").cast("double")
         + (col("c") + 1) / lit(2.0) - 0.3)
-        / (col("n").cast("double") + 0.4))) * 100000000L + lit(0.5))
+        / (col("n").cast("double") + 0.4))), 8)
         .cast("long").as("y"))
     val m = xy.agg(sum("c").cast("long").as("w"),
-      sum(dec(col("c")) * col("x")).as("sx"),
-      sum(dec(col("c")) * col("y")).as("sy"),
-      sum(dec(col("c")) * col("x") * col("x")).as("sxx"),
-      sum(dec(col("c")) * col("x") * col("y")).as("sxy"),
-      sum(dec(col("c")) * col("y") * col("y")).as("syy"))
-    val num = (dec(col("w")) * col("sxy") - col("sx") * col("sy"))
+      sum(Det.wide(col("c")) * col("x")).as("sx"),
+      sum(Det.wide(col("c")) * col("y")).as("sy"),
+      sum(Det.wide(col("c")) * col("x") * col("x")).as("sxx"),
+      sum(Det.wide(col("c")) * col("x") * col("y")).as("sxy"),
+      sum(Det.wide(col("c")) * col("y") * col("y")).as("syy"))
+    val num = (Det.wide(col("w")) * col("sxy") - col("sx") * col("sy"))
       .cast("double")
-    val den = (dec(col("w")) * col("sxx") - col("sx") * col("sx"))
+    val den = (Det.wide(col("w")) * col("sxx") - col("sx") * col("sx"))
       .cast("double")
-    val deny = (dec(col("w")) * col("syy") - col("sy") * col("sy"))
+    val deny = (Det.wide(col("w")) * col("syy") - col("sy") * col("sy"))
       .cast("double")
     // x is at 1e-9 scale and y at 1e-8, so the raw slope carries a
     // factor 10 — the * 10 restores the unit slope, same as the oracle
     val k = num / den * 10
     m.select(col("w").as("n_gaps"),
-      (floor(k * 1000000 + lit(0.5)).cast("double") / 1000000).as("shape_k"),
-      (floor(exp(-((col("sy").cast("double") / 100000000L
-        - k * (col("sx").cast("double") / 1000000000L)) / col("w")) / k)
-        * 10 + lit(0.5)).cast("double") / 10).as("scale_sec"),
-      (floor(num * num / den / deny * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("r2"))
+      Det.quant(k, 6).as("shape_k"),
+      Det.quant(exp(-((col("sy").cast("double") / 100000000L
+        - k * (col("sx").cast("double") / 1000000000L)) / col("w")) / k), 1).as("scale_sec"),
+      Det.quant(num * num / den / deny, 6).as("r2"))
   }
 
   // Session-count sensitivity sweep: how many sessions would the corpus
@@ -3471,8 +3395,8 @@ object TimeSeriesOps extends QueryPack {
     sweep.crossJoin(broadcast(u))
       .select(col("threshold_min"),
         (col("n_users") + col("exceed")).cast("long").as("n_sessions"),
-        (floor((col("n_users") + col("exceed")).cast("double")
-          / col("n_users") * 10000 + lit(0.5)).cast("double") / 10000)
+        Det.quant((col("n_users") + col("exceed")).cast("double")
+          / col("n_users"), 4)
           .as("sessions_per_user"))
       .orderBy("threshold_min")
   }
@@ -3512,8 +3436,7 @@ object TimeSeriesOps extends QueryPack {
           Window.unboundedPreceding, Window.currentRow)).as("cum"))
       .select(date_format(col("d"), "yyyy-MM-dd").as("day"),
         col("new_users"), col("cum").cast("long").as("cum_users"),
-        (floor(col("cum").cast("double") / col("total") * 1000000
-          + lit(0.5)).cast("double") / 1000000).as("frac_of_total"))
+        Det.quant(col("cum").cast("double") / col("total"), 6).as("frac_of_total"))
       .orderBy("day")
   }
 
@@ -3568,8 +3491,7 @@ object TimeSeriesOps extends QueryPack {
     st.groupBy("dirn").agg(count(lit(1)).cast("long").as("n_streaks"),
       max("len").cast("long").as("longest"),
       sum("len").cast("long").as("n_days"),
-      (floor(sum("len").cast("double") / count(lit(1)) * 10000 + lit(0.5))
-        .cast("double") / 10000).as("mean_len"))
+      Det.quant(sum("len").cast("double") / count(lit(1)), 4).as("mean_len"))
       .select(col("dirn").as("dir"), col("n_streaks"), col("longest"),
         col("n_days"), col("mean_len"))
       .orderBy("dir")
@@ -3628,7 +3550,6 @@ object TimeSeriesOps extends QueryPack {
       |  CAST(floor(CAST(sae * n_d AS DOUBLE) / CAST(n_eval * sd AS DOUBLE)
       |    * 1000000 + 0.5) AS DOUBLE) / 1000000 AS mase
       |FROM e ORDER BY event_type""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(col("event_type"),
         to_date(date_trunc("day", col("ts"))).as("day"))
@@ -3639,33 +3560,27 @@ object TimeSeriesOps extends QueryPack {
     val ae = abs(col("x") - col("x7"))
     val e = lagged.groupBy("event_type").agg(
       count(col("x7")).cast("long").as("n_eval"),
-      sum(ae).cast("decimal(38,0)").as("sae"),
-      sum(dec(col("x") - col("x7")) * (col("x") - col("x7"))).as("sse"),
+      Det.wide(sum(ae)).as("sae"),
+      sum(Det.wide(col("x") - col("x7")) * (col("x") - col("x7"))).as("sse"),
       sum(when(col("x7").isNotNull && col("x") > 0, 1L).otherwise(0L))
         .cast("long").as("n_pos"),
-      sum(when(col("x7").isNotNull && col("x") > 0,
-        floor(ae.cast("double") / col("x") * 100000000L + lit(0.5))
-          .cast("long")).otherwise(0L)).cast("decimal(38,0)").as("sape"),
-      sum(when(col("x7").isNotNull && col("x") + col("x7") > 0,
-        floor(lit(2) * ae.cast("double") / (col("x") + col("x7"))
-          * 100000000L + lit(0.5)).cast("long")).otherwise(0L))
-        .cast("decimal(38,0)").as("ssmape"),
+      Det.wide(sum(when(col("x7").isNotNull && col("x") > 0,
+        Det.fix(ae.cast("double") / col("x"), 8)
+          .cast("long")).otherwise(0L))).as("sape"),
+      Det.wide(sum(when(col("x7").isNotNull && col("x") + col("x7") > 0,
+        Det.fix(lit(2) * ae.cast("double") / (col("x") + col("x7")),
+          8).cast("long")).otherwise(0L))).as("ssmape"),
       sum(when(col("x7").isNotNull && col("x") + col("x7") > 0, 1L)
         .otherwise(0L)).cast("long").as("n_sm"),
       count(col("x1")).cast("long").as("n_d"),
-      sum(abs(col("x") - col("x1"))).cast("decimal(38,0)").as("sd"))
+      Det.wide(sum(abs(col("x") - col("x1")))).as("sd"))
     e.select(col("event_type"), col("n_eval"),
-      (floor(col("sae").cast("double") / col("n_eval") / 100 * 10000
-        + lit(0.5)).cast("double") / 10000).as("mae_usd"),
-      (floor(sqrt(col("sse").cast("double") / col("n_eval")) / 100 * 10000
-        + lit(0.5)).cast("double") / 10000).as("rmse_usd"),
-      (floor(col("sape").cast("double") / 100000000L / col("n_pos")
-        * 1000000 + lit(0.5)).cast("double") / 1000000).as("mape"),
-      (floor(col("ssmape").cast("double") / 100000000L / col("n_sm")
-        * 1000000 + lit(0.5)).cast("double") / 1000000).as("smape"),
-      (floor((col("sae") * col("n_d")).cast("double")
-        / (dec(col("n_eval")) * col("sd")).cast("double") * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("mase"))
+      Det.quant(col("sae").cast("double") / col("n_eval") / 100, 4).as("mae_usd"),
+      Det.quant(sqrt(col("sse").cast("double") / col("n_eval")) / 100, 4).as("rmse_usd"),
+      Det.quant(col("sape").cast("double") / 100000000L / col("n_pos"), 6).as("mape"),
+      Det.quant(col("ssmape").cast("double") / 100000000L / col("n_sm"), 6).as("smape"),
+      Det.quant((col("sae") * col("n_d")).cast("double")
+        / (Det.wide(col("n_eval")) * col("sd")).cast("double"), 6).as("mase"))
       .orderBy("event_type")
   }
 
@@ -3726,7 +3641,6 @@ object TimeSeriesOps extends QueryPack {
       |      AS DOUBLE) / 1000000000 * 1000000 + 0.5) AS DOUBLE) / 1000000
       |    END AS sampen
       |FROM tol, b2, a3""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val hourly = Tables(s, dir, "events")
       .groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(sum(Det.cents(col("value")).cast("long")).as("x"))
@@ -3734,10 +3648,10 @@ object TimeSeriesOps extends QueryPack {
       row_number().over(Window.orderBy("h")).cast("long").as("i"), col("x"))
       .localCheckpoint()
     val mo = idx.agg(count(lit(1)).cast("long").as("n"),
-      sum("x").cast("decimal(38,0)").as("s"),
-      sum(dec(col("x")) * col("x")).as("q"))
+      Det.wide(sum("x")).as("s"),
+      sum(Det.wide(col("x")) * col("x")).as("q"))
     val tol = mo.select(col("n"),
-      floor(lit(0.2) * sqrt((dec(col("n")) * col("q") - col("s") * col("s"))
+      floor(lit(0.2) * sqrt((Det.wide(col("n")) * col("q") - col("s") * col("s"))
         .cast("double") / col("n") / (col("n") - 1))).cast("long").as("r"))
     val wo = Window.orderBy("i")
     val t = idx.select(col("i"), col("x"),
@@ -3762,9 +3676,8 @@ object TimeSeriesOps extends QueryPack {
       .select(col("n").as("n_periods"), col("r").as("r_cents"),
         col("b").as("b_count"), col("a").as("a_count"),
         when(col("a") === 0 || col("b") === 0, lit(null).cast("double"))
-          .otherwise(floor((Det.lnFix(col("b"), 9) - Det.lnFix(col("a"), 9))
-            .cast("double") / 1000000000L * 1000000 + lit(0.5))
-            .cast("double") / 1000000).as("sampen"))
+          .otherwise(Det.quant((Det.lnFix(col("b"), 9) - Det.lnFix(col("a"), 9))
+            .cast("double") / 1000000000L, 6)).as("sampen"))
   }
 
   // Croston's method for intermittent demand plus the Syntetos-Boylan
@@ -3831,7 +3744,6 @@ object TimeSeriesOps extends QueryPack {
       |    WHEN CAST(n_periods AS DOUBLE) / n_demand < 1.32 THEN 'erratic'
       |    ELSE 'lumpy' END AS sbc_class
       |FROM st, last""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val ev = Tables(s, dir, "events")
     val spine = ev.groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("c")).select("h")
@@ -3872,18 +3784,17 @@ object TimeSeriesOps extends QueryPack {
             "'prev', CAST(e.rn AS DOUBLE)) END).p AS p"))
     val nTot = g.agg(count(lit(1)).cast("long").as("n_periods"))
     val st = nz.agg(count(lit(1)).cast("long").as("n_demand"),
-      sum("q").cast("decimal(38,0)").as("s"),
-      sum(dec(col("q")) * col("q")).as("qq"))
+      Det.wide(sum("q")).as("s"),
+      sum(Det.wide(col("q")) * col("q")).as("qq"))
       .crossJoin(broadcast(nTot))
-    val cv2 = (dec(col("n_demand")) * col("qq") - col("s") * col("s"))
+    val cv2 = (Det.wide(col("n_demand")) * col("qq") - col("s") * col("s"))
       .cast("double") / col("s").cast("double") / col("s").cast("double")
     val adi = col("n_periods").cast("double") / col("n_demand")
     st.crossJoin(broadcast(folded)).select(
       col("n_periods"), col("n_demand"),
-      (floor(adi * 10000 + lit(0.5)).cast("double") / 10000).as("adi"),
-      (floor(cv2 * 1000000 + lit(0.5)).cast("double") / 1000000).as("cv2"),
-      (floor(col("z") / col("p") / 100 * 10000 + lit(0.5)).cast("double")
-        / 10000).as("croston_forecast_usd"),
+      Det.quant(adi, 4).as("adi"),
+      Det.quant(cv2, 6).as("cv2"),
+      Det.quant(col("z") / col("p") / 100, 4).as("croston_forecast_usd"),
       when(adi < 1.32 && cv2 < 0.49, "smooth")
         .when(cv2 < 0.49, "intermittent")
         .when(adi < 1.32, "erratic")
@@ -3944,7 +3855,6 @@ object TimeSeriesOps extends QueryPack {
       |  CAST(floor(CAST(e2s AS DOUBLE) / CAST(te AS DOUBLE) * 1000000 + 0.5)
       |    AS DOUBLE) / 1000000 AS share
       |FROM e, t ORDER BY level""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(sum(Det.cents(col("value")).cast("long")).as("x"))
@@ -3964,16 +3874,15 @@ object TimeSeriesOps extends QueryPack {
     val l3 = fold(l2)
     def energy(lvl: Int, df: org.apache.spark.sql.DataFrame) =
       df.agg(count(lit(1)).cast("long").as("n_pairs"),
-        (sum(dec(col("d")) * col("d")) * lit(1L << (3 - lvl))).as("e2s"))
+        (sum(Det.wide(col("d")) * col("d")) * lit(1L << (3 - lvl))).as("e2s"))
         .select(lit(lvl).as("level"), col("n_pairs"), col("e2s"))
     val e = energy(1, l1).unionByName(energy(2, l2)).unionByName(energy(3, l3))
       .localCheckpoint()
     val t = e.agg(sum("e2s").as("te"))
     e.crossJoin(broadcast(t)).select(col("level"), col("n_pairs"),
-      (floor(col("e2s").cast("double") / 8 + lit(0.5)).cast("double")
+      (Det.half(col("e2s").cast("double") / 8).cast("double")
         / 10000).as("energy_usd2"),
-      (floor(col("e2s").cast("double") / col("te").cast("double") * 1000000
-        + lit(0.5)).cast("double") / 1000000).as("share"))
+      Det.quant(col("e2s").cast("double") / col("te").cast("double"), 6).as("share"))
       .orderBy("level")
   }
 
@@ -4026,7 +3935,6 @@ object TimeSeriesOps extends QueryPack {
       |      - CAST(slnc AS DOUBLE) / 100000000 / n) / 1.79175947 * 1000000
       |    + 0.5) AS DOUBLE) / 1000000 AS pe_norm
       |FROM m""") { (s, dir) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val daily = Tables(s, dir, "events")
       .groupBy(to_date(date_trunc("day", col("ts"))).as("day"))
       .agg(sum(Det.cents(col("value")).cast("long")).as("x"))
@@ -4045,12 +3953,11 @@ object TimeSeriesOps extends QueryPack {
     val pc = pat.groupBy("p").agg(count(lit(1)).cast("long").as("c"))
     val m = pc.agg(sum("c").cast("long").as("n"),
       count(lit(1)).cast("long").as("n_patterns"),
-      sum(dec(col("c")) * Det.lnFix(col("c"), 8)).as("slnc"))
+      sum(Det.wide(col("c")) * Det.lnFix(col("c"), 8)).as("slnc"))
     val h = (Det.lnFix(col("n"), 8).cast("double") / 100000000L
       - col("slnc").cast("double") / 100000000L / col("n"))
     m.select(col("n").as("n_triples"), col("n_patterns"),
-      (floor(h * 1000000 + lit(0.5)).cast("double") / 1000000).as("h_perm"),
-      (floor(h / lit(1.79175947) * 1000000 + lit(0.5)).cast("double")
-        / 1000000).as("pe_norm"))
+      Det.quant(h, 6).as("h_perm"),
+      Det.quant(h / lit(1.79175947), 6).as("pe_norm"))
   }
 }

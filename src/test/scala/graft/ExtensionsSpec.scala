@@ -152,4 +152,15 @@ class ExtensionsSpec extends SparkSpec {
       "src/main/scala/graft/streaming/Streams.scala" -> 1,
       "src/main/scala/graft/engine/Tables.scala" -> 1))
   }
+
+  test("one rounding rule and one 128-bit cast: lit(0.5), decimal(38,0) " +
+    "and DecimalType(38, 0) are written only in engine.Det") {
+    val det = "src/main/scala/graft/engine/Det.scala"
+    // llm_quality_gate's clamp(0.5 + z/4) score keeps its two 0.5 weights:
+    // they are coefficients, not roundings
+    assert(matches("src/main", """lit\(0\.5\)""".r) == Map(det -> 1,
+      "src/main/scala/graft/queries/Quality.scala" -> 2))
+    assert(matches("src/main", """cast\("decimal\(38,0\)"\)""".r).keySet == Set(det))
+    assert(matches("src/main", """DecimalType\(38, ?0\)""".r).keySet -- Set(det) == Set())
+  }
 }
