@@ -34,15 +34,17 @@ object Dev {
   }
 
   /** `explain("formatted")` of each named query to
-    * <outDir>/<query>_<tag>.txt — the plan evidence an optimization change
-    * commits for each query it touches. */
+    * <outDir>/<query>_<tag>.txt, through [[normalizePlan]] — the plan
+    * evidence an optimization change commits for each query it touches,
+    * diffable across runs and checkouts. */
   private def plans(spark: SparkSession, sfDir: String, outDir: String,
                     tag: String, keys: Set[String]): Unit = {
     new java.io.File(outDir).mkdirs()
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if keys.contains(name)) {
       try {
-        val txt = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+        val txt = normalizePlan(
+          fn(spark, sfDir).queryExecution.explainString(FormattedMode))
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"),
           txt.getBytes("UTF-8"))
@@ -52,6 +54,33 @@ object Dev {
       }
     }
   }
+
+  /** Run-position text replaced by placeholders — the parts of a plan's
+    * text that change between two runs of the same code, or when a source
+    * line moves: the working directory, expression ids (`#12`), RDD ids
+    * and the `<File>.scala:<line>` call site an RDD names (a
+    * `localCheckpoint`), lambda variable counters (`lambda x_3`), JVM
+    * lambda class names, `@<hex>` object hashes, Spark ML's random
+    * `<prefix>_<12 hex>` column uids, and codegen, query-stage and
+    * exchange `plan_id`s (a cached frame shows its final adaptive plan,
+    * whose ids depend on what ran before it). */
+  private[graft] def normalizePlan(txt: String): String =
+    Seq(
+      "#\\d+" -> "#_",
+      "(RDD\\[)\\d+\\]" -> "$1_]",
+      " at [\\w$]+\\.scala:\\d+" -> " at _",
+      "(lambda [A-Za-z]+)_\\d+" -> "$1_N",
+      "Lambda\\$?\\d*/0x[0-9a-f]+" -> "Lambda_",
+      "@[0-9a-f]{4,}\\b" -> "@_",
+      "(\\[codegen id : )\\d+" -> "$1_",
+      "\\*\\(\\d+\\)" -> "*(_)",
+      "(QueryStage )\\d+" -> "$1_",
+      "(QueryStage\\n(?:Output[^\\n]*\\n)?Arguments: )\\d+" -> "$1_",
+      "plan_id=\\d+" -> "plan_id=_",
+      "(?<=_)[0-9a-f]{12}\\b" -> "<uid>")
+      .foldLeft(txt.replace(System.getProperty("user.dir"), "<cwd>")) {
+        case (t, (re, to)) => t.replaceAll(re, to)
+      }
 
   /** The initial formatted plan of one query, then its final adaptive plan
     * after running it. */

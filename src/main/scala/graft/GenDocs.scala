@@ -4,26 +4,7 @@ package graft
   * against SURVEY §2 line by line. Run: sbt "runMain graft.GenDocs" */
 object GenDocs {
   def main(args: Array[String]): Unit = {
-    import graft.{queries => qp}
-    val packs: Seq[(String, graft.engine.QueryPack)] = Seq(
-      "Sources (§2.1)" -> qp.Sources,
-      "Projection / filter (§2.2)" -> qp.Relational,
-      "Joins (§2.3)" -> qp.Joins,
-      "Aggregations (§2.4)" -> qp.AggCore,
-      "Aggregations (§2.4)" -> qp.Aggregates,
-      "Windows (§2.5)" -> qp.Windows,
-      "Sort / limit / top-k (§2.6)" -> qp.SortLimit,
-      "Set operations (§2.7)" -> qp.SetOps,
-      "Scalar functions (§2.8)" -> qp.Scalars,
-      "LLM data pipeline (§2.9)" -> qp.LlmOps,
-      "Streaming (§2.10)" -> qp.Streaming,
-      "UDF / UDTF / custom expr (§2.11)" -> qp.Extensibility,
-      "Extras (beyond §2)" -> qp.Extras,
-      "Graph analytics (§2.9 extension)" -> qp.GraphOps,
-      "Corpus quality / data management (§2.9 extension)" -> qp.QualityOps,
-      "Time series / experimentation (§2.9 extension)" -> qp.TimeSeriesOps,
-      "Stats / dataset management (§2.9 extension)" -> qp.StatsOps,
-      "Subqueries / SQL surface (§4 decorrelation)" -> qp.Subqueries)
+    val packs = SparkEntry.packs
     val sb = new StringBuilder
     sb.append("# OPERATORS — declared query inventory (generated by graft.GenDocs)\n\n")
     sb.append("| query key | category | oracle |\n| --- | --- | --- |\n")
@@ -169,8 +150,8 @@ object GenDocs {
     headline.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, sf)
       sb.append(s"\n## `$name` — $why\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).trim)
+      sb.append(Dev.normalizePlan(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)).trim)
       sb.append("\n```\n")
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), sb.toString)

@@ -344,35 +344,6 @@ object ScaleStress {
       require(r >= 0.7, f"ivfpq recall@10 under the r12 floor at 10x: $r%.2f")
       f"$r%.2f"
     }
-    // r13 trained coarse quantizer, measured honestly at 10×: training
-    // does NOT let this fixture drop the cell COUNT at scale (coarser
-    // cells inflate residuals and the ADC shortlist pays — measured 0.63
-    // at 200 trained cells vs 0.76 at 800 stride cells) — what it buys
-    // is the PROBE side: the recall-vs-nProbe curve flattens, so a
-    // trained index holds recall at a quarter of the probed cells. At
-    // nProbe=12 (matched candidate budget): seed 0.50 → trained 0.67;
-    // the stride path needs nProbe=48 (4× the probe-routing scan and 4×
-    // the ADC candidate volume) to reach 0.76. The build cost is 2 extra
-    // corpus×cells argmin scans — one-off, amortized over every query.
-    time("ivfpq 10x TRAINED coarse nProbe=12 build+query (vs nProbe=48 seed)")(
-      ops.Sim.ivfPqTopK(pr10, e10, 10, nProbe = 12, coarseIters = 2).count())
-    time("ivfpq recall@10 10x nProbe=12: trained vs seed (4x fewer probes)") {
-      def topkSet(df: DataFrame): Set[(Long, Long)] =
-        df.select(col("probe_id").cast("long"), col("vec_id").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val brute = topkSet(ops.Sim.cosineTopK(pr10, e10, k = 10))
-      def recallAt(ci: Int): Double = {
-        val pq = topkSet(ops.Sim.ivfPqTopK(pr10, e10, 10, nProbe = 12,
-          coarseIters = ci))
-        (pq & brute).size.toDouble / brute.size
-      }
-      val seed = recallAt(0)
-      val tr = recallAt(2)
-      require(tr >= 0.6, f"trained-coarse recall@10 under 0.6 at 10x: $tr%.2f")
-      require(tr > seed, f"training did not lift nProbe=12 recall: $tr%.2f vs $seed%.2f")
-      f"seed=$seed%.2f trained=$tr%.2f"
-    }
-
     // round-6 resampling family: the ×100 digest-bit expand must scale
     // LINEARLY in rows (the expand collapses map-side; only B×moment
     // integers shuffle). 10× events → 10× wall is the pass criterion.

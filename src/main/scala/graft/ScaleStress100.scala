@@ -118,69 +118,8 @@ object ScaleStress100 {
       e.unpersist()
     }
 
-    // ---- 3. two-level coarse assignment at 100× (r13) -------------------
-    // The linear-scan caveat's closer: the flat encode argmins every
-    // vector against all 8 000 cells (200k × 8k); the hierarchy routes
-    // through |cells|/30 supers then argmins only the ~4×30 cells in the
-    // probed supers — ~16× less per-vector work. Approximation cost is
-    // MEASURED as end recall (a mis-assigned vector's residual is still
-    // small — its landed cell is a near-tie), floor `require`d in-run.
-    {
-      val e = embX(100).persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      val probes = e.filter(col("vec_id") < 10)
-      // each pipeline runs ONCE: the timed block collects the top-k set
-      // it just built, and the recall row reuses those sets (re-running
-      // the two pipelines would double the section's wall clock — r13
-      // review finding)
-      def topkSet(df: DataFrame): Set[(Long, Long)] =
-        df.select(col("probe_id").cast("long"), col("vec_id").cast("long"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      var flat: Set[(Long, Long)] = Set.empty
-      var hier: Set[(Long, Long)] = Set.empty
-      time("ivfpq 100x FLAT encode+query (200k x 8000-cell argmin)") {
-        flat = topkSet(ops.Sim.ivfPqTopK(probes, e, 10, nProbe = 48))
-        flat.size
-      }
-      time("ivfpq 100x HIER encode+query (superFactor=30, probeSuper=6, trained supers)") {
-        // r14 frontier (measured at 100x, deterministic fixture): stride
-        // supers plateau at 0.66/0.69/0.69 recall for probeSuper 4/6/8
-        // and cellDup=2 moves nothing — the loss is super PLACEMENT, not
-        // boundary ownership. Two Lloyd iterations of the super layer on
-        // the cells (catalog-sized: |cells| x |supers|) + probeSuper=6
-        // reach 0.70 vs flat 0.71 at equal assignment cost.
-        hier = topkSet(ops.Sim.ivfPqTopK(probes, e, 10, nProbe = 48,
-          hierFactor = 30, hierProbe = 6, hierSuperIters = 2))
-        hier.size
-      }
-      // r13 tag was "flat vs hier assignment" while timing only the
-      // brute-force scan + set overlap (the two pipelines are timed in
-      // their own rows above) — renamed so cross-round BENCH ratios on
-      // this row aren't read as an IVF-PQ pipeline timing (r13 advice)
-      time("ivfpq 100x recall@10 (brute-force scan + overlap only)") {
-        // the recall row REUSES the sets the two timed blocks built; a
-        // SPARK_GRAFT_STRESS_ONLY filter that selects only this tag must
-        // fail loudly, not report a vacuous 0.00/0.00 (r13 review) —
-        // recomputing here instead was measured to OOM the driver heap
-        // (three 100× pipelines in one filtered session)
-        require(flat.nonEmpty && hier.nonEmpty,
-          "recall@10 needs the FLAT/HIER encode blocks in the same run — " +
-            "widen SPARK_GRAFT_STRESS_ONLY to include 'ivfpq'")
-        val brute = topkSet(ops.Sim.cosineTopK(probes, e, k = 10))
-        val rF = (flat & brute).size.toDouble / brute.size
-        val rH = (hier & brute).size.toDouble / brute.size
-        // r14 floors (up from rF - 0.10): trained supers measured 0.70
-        // absolute vs flat 0.71 — hold both the absolute line and the
-        // flat-relative gap
-        require(rH >= 0.70,
-          f"hier recall@10 under the r14 floor at 100x: $rH%.2f")
-        require(rH >= rF - 0.05,
-          f"hier assignment cost too much recall: $rH%.2f vs flat $rF%.2f")
-        f"flat=$rF%.2f hier=$rH%.2f"
-      }
-      e.unpersist()
-    }
+    // §4-§6 keep their numbers: SCALE.md, SURVEY.md and Sources.scala
+    // cite them.
 
     // ---- 4. graph BSP loops at 100× (r13 phase 2) -----------------------
     // The iterative-BSP family (PageRank's integer fixed point, min-label

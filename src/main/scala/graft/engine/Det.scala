@@ -33,7 +33,8 @@ import org.apache.spark.sql.functions._
   * both engines round the identical double to the identical result.
   *
   * Two rules are written only here; query code calls these four helpers
-  * and never spells either rule out:
+  * (`half`/`fix`/`quant` also take a driver-side Double) and never spells
+  * either rule out:
   *
   *  - P12, rounding: [[half]] is `floor(x + 0.5)`, never `round()`;
   *    [[fix]] scales by 10^s first, and [[quant]] divides back to the 4- or
@@ -68,6 +69,18 @@ object Det {
     * form of a statistic. */
   def quant(x: Column, s: Int): Column =
     fix(x, s).cast("double") / math.pow(10, s)
+
+  /** [[half]] on a driver-side double (an iterative solver's state, a
+    * collected statistic): the same IEEE `floor(x + 0.5)`. */
+  def half(x: Double): Double = math.floor(x + 0.5)
+
+  /** [[fix]] on a driver-side double: x scaled by 10^s, as a Long. */
+  def fix(x: Double, s: Int): Long = half(x * math.pow(10, s)).toLong
+
+  /** [[quant]] on a driver-side double. Divides the floored double, not
+    * the Long, so NaN stays NaN. */
+  def quant(x: Double, s: Int): Double =
+    half(x * math.pow(10, s)) / math.pow(10, s)
 
   /** P16: widen to DECIMAL(38,0) before a product or sum that could pass
     * int64. */

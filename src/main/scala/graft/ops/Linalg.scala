@@ -170,21 +170,21 @@ object Linalg {
       var ci = 0
       while (ci < cells.length) {
         val (i, j, c) = cells(ci)
-        sw(i) += math.floor(c * v(j) * 1000000000000L + 0.5).toLong
+        sw(i) += Det.fix(c * v(j), 12)
         ci += 1
       }
       var q = 0L
       var i = 1
       while (i <= dimsN) {
         val wi = sw(i).toDouble / 1000000000000L
-        q += math.floor(wi * wi * 100000000000000L + 0.5).toLong
+        q += Det.fix(wi * wi, 14)
         i += 1
       }
       nrm = math.sqrt(q.toDouble / 100000000000000L)
       i = 1
       while (i <= dimsN) {
         val wi = sw(i).toDouble / 1000000000000L
-        v(i) = math.floor(wi / nrm * 1000000L + 0.5) / 1000000L
+        v(i) = Det.quant(wi / nrm, 6)
         i += 1
       }
     }
@@ -259,12 +259,11 @@ object Linalg {
       val (v1, nrm1) = PlanMemo.byPlan(emb, "Linalg.eig1", (idCol, vecCol, iters)) {
         powerRoundsLocal(cells, dimsN, iters)
       }
-      val l = math.floor(nrm1 * 1000000L + 0.5) / 1000000L
+      val l = Det.quant(nrm1, 6)
       val v1a = new Array[Double](dimsN + 1)
       v1.foreach { case (j, x) => v1a(j) = x }
       val deflated = cells.map { case (i, j, c) =>
-        (i, j, c - math.floor(l * v1a(i) * v1a(j) * 100000000L + 0.5)
-          / 100000000L)
+        (i, j, c - Det.quant(l * v1a(i) * v1a(j), 8))
       }
       powerRoundsLocal(deflated, dimsN, iters)
     }

@@ -138,8 +138,7 @@ object Sim {
     val nrm = es.map(a => math.sqrt(dotL(a, a)))
     val pij = Array.tabulate(n, n)((i, j) =>
       if (i == j) 0L
-      else math.floor(round4(dotL(es(i), es(j)) / (nrm(i) * nrm(j)))
-        * 10000 + 0.5).toLong)
+      else Det.fix(round4(dotL(es(i), es(j)) / (nrm(i) * nrm(j))), 4))
     // greedy MMR: round 1 takes the top-su candidate (pool is rn-sorted)
     val picked = scala.collection.mutable.ArrayBuffer((1, ids(0), su(0), su(0)))
     val inSel = scala.collection.mutable.Set(0)
@@ -360,21 +359,6 @@ object Sim {
       .filter(col("sim") >= tau)
   }
 
-  /** Random-hyperplane LSH bucket id (nBits sign bits packed into a long)
-    * — a single-band signature from the shared native expression. Column
-    * functions can't sample the data, so dim stays a caller parameter
-    * here; the default is the legacy table width. */
-  def lshBucket(emb: Column, nBits: Int,
-                dim: Int = graft.functions.LshBands.defaultDim): Column =
-    element_at(lshSignature(emb, 1, nBits, dim), 1)
-
-  /** IVF-style ANN: a deterministic coarse quantizer (every `stride`-th
-    * corpus vector is a centroid), corpus vectors assigned to their
-    * nearest centroid, probes scored only against their `nProbe` nearest
-    * centroid cells. The classic inverted-file layout: centroid id is the
-    * join key, per-cell work is corpus/centroids on average. Fully
-    * deterministic (no trained state) — swap the sampled centroids for a
-    * k-means codebook at scale without touching the query shape. */
   /** Coarse-quantizer cell assignment: each vector's `n` nearest centroids
     * (squared-Euclidean argmin, centroid id tiebreak). Shared by the IVF
     * and IVF-PQ paths — one definition so their candidate sets can never
@@ -404,153 +388,17 @@ object Sim {
     corpus.filter(col("vec_id") % stride === 0)
       .select(col("vec_id").as("cent_id"), asDouble(col("embedding")).as("cent"))
 
-  /** Trained coarse centroids (r13, the r12 verdict's "piece a production
-    * index replaces"): Lloyd refinement of the stride seeds on the FULL
-    * vectors — the same quantized-integer-mean scheme as
-    * [[pqEncode]]'s sub-codebook training, applied to the coarse layer.
-    * Each round is one corpus×cells argmin plus one (cell, dim)
-    * integer-mean shuffle; per-round localCheckpoint cuts the loop
-    * lineage exactly as in the PQ trainer. What training buys, measured
-    * (ScaleStress/SimBlockedSpec): the recall-vs-nProbe curve flattens —
-    * at 10× the trained index holds recall 0.67 at nProbe=12 where the
-    * stride seeds crater to 0.50 and need nProbe=48 for 0.76, i.e. 4×
-    * less probe-routing scan and ADC candidate volume at a small recall
-    * concession; at small corpora it also lets 4× fewer cells BEAT the
-    * full stride codebook (0.90 vs 0.72 at sf0.01). What it does NOT buy
-    * on this fixture: dropping the cell count at scale — coarser cells
-    * inflate the PQ residuals and the ADC shortlist pays (measured 0.63
-    * at 200 trained vs 0.76 at 800 stride cells at 10×). Centroid ids persist
-    * across rounds (a cell keeps its seed's id); a cell emptied by a
-    * round drops out. `iters = 0` returns the seeds untouched — the
-    * graded path, bit-stable by construction. Deterministic end to end:
-    * seeds are id-selected, argmin tiebreaks on cent_id, means are
-    * 1e-6-fixed integer sums. */
-  /** Deterministic integer-mean centroids of `assigned` (`key`, `vec`)
-    * groups — the shared Lloyd update step for the coarse layer
-    * ([[coarseCentroids]]) and the super layer ([[nearestCellsHier]]):
-    * per-dim fixed-point (1e-6) sums, HALF_UP integer mean, dims
-    * reassembled in order, lineage cut per call (r14 review: the two
-    * sites had copy-pasted this pipeline — a rounding-scheme change
-    * must hit both or the layers silently diverge). */
-  private def meanCentroids(assigned: DataFrame, key: String,
-                            vec: String): DataFrame =
-    assigned
-      .select(col(key), posexplode(col(vec)).as(Seq("dim", "x")))
-      .groupBy(key, "dim")
-      .agg((Det.half(sum(Det.fix(col("x"), 6)).cast("double")
-        / count(lit(1))) / 1000000).as("cm"))
-      .groupBy(key)
-      .agg(transform(
-        sort_array(collect_list(struct(col("dim"), col("cm")))),
-        x => x.getField("cm")).as("cent"))
-      .localCheckpoint()
-
-  private[graft] def coarseCentroids(corpus: DataFrame, stride: Int,
-                                     iters: Int): DataFrame = {
-    val seeds = strideCentroids(corpus, stride)
-    if (iters <= 0) seeds
-    else {
-      val c = fan(corpus)
-        .select(col("vec_id"), asDouble(col("embedding")).as("ce"))
-      var cents = seeds
-      for (_ <- 1 to iters) {
-        val assign = nearestCellsOf(cents)(c, "ce", 1, "cell")
-        cents = meanCentroids(assign, "cell", "e")
-          .select(col("cell").as("cent_id"), col("cent"))
-      }
-      cents
-    }
-  }
-
-  /** Two-level coarse assignment (r13, closing SCALE.md's "the one-off
-    * coarse-assignment scan is linear" caveat): the flat argmin scans
-    * corpus × |cells|; the hierarchy first routes each vector to its
-    * `probeSuper` nearest SUPER-centroids (every `superFactor`-th
-    * centroid — |cells|/superFactor of them), then argmins only over the
-    * cells belonging to those supers. Per-vector work drops from |cells|
-    * to |cells|/superFactor + probeSuper · (avg cells/super) — at
-    * superFactor ≈ √|cells| that is O(√|cells|), the standard two-level
-    * IVF trick. The cell→super map is a one-off |cells| × |supers| join
-    * (catalog-sized). APPROXIMATE: a vector whose true nearest cell
-    * lives in an unprobed super lands in a near-tie neighbor instead —
-    * residuals stay small (the landed cell is still close), so the
-    * downstream recall cost is measured, not assumed (ScaleStress100).
-    * Same (vid, e, out) contract as [[nearestCellsOf]] at n = 1. */
-  private[graft] def nearestCellsHier(cents: DataFrame)(
-      df: DataFrame, embCol: String, out: String,
-      superFactor: Int, probeSuper: Int, cellDup: Int = 1,
-      superIters: Int = 0): DataFrame = {
-    val ranked = cents.withColumn("rk",
-      row_number().over(Window.orderBy("cent_id")))
-    val seeds = ranked.filter((col("rk") - 1) % superFactor === 0)
-      .select(col("cent_id").as("sup_id"), col("cent").as("sup"))
-    // superIters > 0 Lloyd-refines the super layer ON THE CELLS (r14):
-    // stride supers are arbitrary cells, so routing quality is whatever
-    // sampling luck gave; refined supers are integer-mean centroids of
-    // their member cells — the same fixed-point scheme as
-    // [[coarseCentroids]], catalog-sized here (|cells| × |supers|)
-    val supers = if (superIters <= 0) seeds else {
-      var sc = seeds
-      for (_ <- 1 to superIters) {
-        val sn = sc.select(col("sup_id"), col("sup"),
-          dot(col("sup"), col("sup")).as("n2"))
-        val assign = cents.crossJoin(broadcast(sn))
-          .select(col("cent_id"), col("cent"), col("sup_id"),
-            (col("n2") - lit(2.0) * dot(col("cent"), col("sup"))).as("d"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("cent_id").orderBy(col("d").asc, col("sup_id"))))
-          .filter(col("rn") === 1)
-        sc = meanCentroids(assign, "sup_id", "cent")
-          .select(col("sup_id"), col("cent").as("sup"))
-      }
-      sc
-    }
-    val supN2 = supers.select(col("sup_id"), col("sup"),
-      dot(col("sup"), col("sup")).as("sn2"))
-    // one-off cell → nearest-super map (|cells| × |supers|, catalog-sized)
-    val cellSup = cents.crossJoin(broadcast(supN2))
-      .select(col("cent_id"), col("cent"), col("sup_id"),
-        (col("sn2") - lit(2.0) * dot(col("cent"), col("sup"))).as("d"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("cent_id").orderBy(col("d").asc, col("sup_id"))))
-      // cellDup > 1 lists each cell under its cellDup nearest supers
-      // (r14): a BOUNDARY cell owned by exactly one super is invisible
-      // to vectors probing only its neighbor super — the residual
-      // recall loss probeSuper sweeps cannot recover (measured flat at
-      // 0.69 for probe 6 and 8 at 100x). Duplication multiplies the
-      // second-level candidate rows by ~cellDup, not the corpus scan.
-      .filter(col("rn") <= cellDup)
-      .select(col("sup_id"), col("cent_id"),  col("cent"),
-        dot(col("cent"), col("cent")).as("cn2"))
-    // memory discipline (the first cut OOMed the 100× point): the
-    // corpus×supers frame is windowed WITHOUT the embedding payload —
-    // distances only, ~24 bytes/row instead of the ~1 KB array — and `e`
-    // re-joins by vid afterward; the second level argmins with a
-    // partial-aggregating min-on-struct (one partial per partition, no
-    // sort window at all)
-    val v = df.select(col("vec_id").as("vid"), col(embCol).as("e"))
-    val vSup = v.crossJoin(broadcast(supN2))
-      .select(col("vid"), col("sup_id"),
-        (col("sn2") - lit(2.0) * dot(col("e"), col("sup"))).as("d"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vid").orderBy(col("d").asc, col("sup_id"))))
-      .filter(col("rn") <= probeSuper)
-      .select(col("vid"), col("sup_id"))
-    val best = vSup.join(v, "vid")
-      .join(maybeBroadcast(cellSup), "sup_id")
-      .select(col("vid"), col("cent_id"),
-        (col("cn2") - lit(2.0) * dot(col("e"), col("cent"))).as("d"))
-      .groupBy("vid")
-      .agg(min(struct(col("d"), col("cent_id"))).as("best"))
-      .select(col("vid"), col("best.cent_id").as(out))
-    best.join(v, "vid").select(col("vid"), col("e"), col(out))
-  }
-
+  /** IVF-style ANN: a deterministic coarse quantizer (every `stride`-th
+    * corpus vector is a centroid), corpus vectors assigned to their
+    * nearest centroid, probes scored only against their `nProbe` nearest
+    * centroid cells. The classic inverted-file layout: centroid id is the
+    * join key, per-cell work is corpus/centroids on average. Fully
+    * deterministic (no trained state) — swap the sampled centroids for a
+    * k-means codebook at scale without touching the query shape. */
   def ivfTopK(probes: DataFrame, corpus: DataFrame, k: Int,
-              stride: Int = 25, nProbe: Int = 8,
-              coarseIters: Int = 0): DataFrame = {
+              stride: Int = 25, nProbe: Int = 8): DataFrame = {
     graft.GraftSession.install(corpus.sparkSession)
-    val cents = coarseCentroids(corpus, stride, coarseIters)
+    val cents = strideCentroids(corpus, stride)
     val nearestCells = nearestCellsOf(cents) _
     val corpusCells = nearestCells(
       corpus.select(col("vec_id"), asDouble(col("embedding")).as("ce")), "ce", 1, "cell")
@@ -607,28 +455,19 @@ object Sim {
                      sub: Int)
 
   def pqEncode(corpus: DataFrame, m: Int, nCentroids: Int,
-               stride: Int = 25, trainIters: Int = 0,
-               coarseIters: Int = 0, hierFactor: Int = 0,
-               hierProbe: Int = 4, hierDup: Int = 1,
-               hierSuperIters: Int = 0): PqModel = {
+               stride: Int = 25): PqModel = {
     graft.GraftSession.install(corpus.sparkSession)
     val d = inferDim(corpus)
     require(d % m == 0, s"dim $d not divisible into $m subspaces")
     val sub = d / m
     val subIdx = explode(sequence(lit(0), lit(m - 1)))
-    val cents = coarseCentroids(corpus, stride, coarseIters)
+    val cents = strideCentroids(corpus, stride)
     val c = fan(corpus).select(col("vec_id"), asDouble(col("embedding")).as("ce"))
       .transform(PlanMemo.pin)
     // coarse cell per corpus vector + residual against its centroid —
-    // elementwise subtraction is the same IEEE op in both engines.
-    // hierFactor > 0 swaps the linear corpus×cells argmin for the
-    // two-level scheme (graded paths stay 0, bit-stable)
-    val assigned =
-      if (hierFactor > 0)
-        nearestCellsHier(cents)(c.select(col("vec_id"), col("ce")), "ce",
-          "cell", hierFactor, hierProbe, hierDup, hierSuperIters)
-      else nearestCellsOf(cents)(c.select(col("vec_id"), col("ce")), "ce",
-        1, "cell")
+    // elementwise subtraction is the same IEEE op in both engines
+    val assigned = nearestCellsOf(cents)(c.select(col("vec_id"), col("ce")), "ce",
+      1, "cell")
     val resid = assigned
       .join(broadcast(cents.select(col("cent_id").as("cell"), col("cent"))), "cell")
       .select(col("vid").as("vec_id"), col("cell"),
@@ -637,53 +476,10 @@ object Sim {
     val seeds = resid
       .orderBy("vec_id").limit(nCentroids)
       .withColumn("code", row_number().over(Window.orderBy("vec_id")))
-    val codebook0 = seeds
+    val codebook = seeds
       .withColumn("subq", subIdx)
       .select(col("code"), col("subq"),
         slice(col("re"), col("subq") * sub + 1, lit(sub)).as("cv"))
-    // optional Lloyd refinement of the seed sub-codebooks on the residual
-    // sub-vectors (trainIters > 0): the quantized-integer-mean scheme of
-    // Linalg.pqTrainKmeans applied in place, so downstream (codes / ADC /
-    // stored norms) is codebook-agnostic. Graded queries keep
-    // trainIters = 0 (bit-stable outputs); the trained path is pinned by
-    // SimBlockedSpec (distortion non-increasing, recall floor held) and
-    // measured in SCALE.md. Each round: one broadcast join of the
-    // m·k·sub-row codebook + a per-(vec, subq) argmin + a (subq, code,
-    // dim) mean shuffle — corpus-scale-safe by the same argument as the
-    // encode itself. A code emptied by a round drops out (inner join).
-    val codebook = if (trainIters <= 0) codebook0 else {
-      val rsub = resid.withColumn("subq", subIdx)
-        .select(col("vec_id"), col("subq"),
-          slice(col("re"), col("subq") * sub + 1, lit(sub)).as("ev"))
-        .transform(PlanMemo.pin)
-      var cb = codebook0
-      for (_ <- 1 to trainIters) {
-        val cbN2i = cb.select(col("code"), col("subq"), col("cv"),
-          dot(col("cv"), col("cv")).as("cv_n2"))
-        val assign = rsub.join(broadcast(cbN2i), "subq")
-          .select(col("vec_id"), col("subq"), col("code"),
-            (col("cv_n2") - lit(2.0) * dot(col("ev"), col("cv"))).as("dist"))
-          .groupBy("vec_id", "subq")
-          .agg(min(struct(col("dist"), col("code"))).as("best"))
-          .select(col("vec_id"), col("subq"), col("best.code").as("code"))
-        cb = assign.join(rsub, Seq("vec_id", "subq"))
-          .select(col("subq"), col("code"),
-            posexplode(col("ev")).as(Seq("dim", "e")))
-          .groupBy("subq", "code", "dim")
-          .agg((Det.half(sum(Det.fix(col("e"), 6)).cast("double")
-            / count(lit(1))) / 1000000).as("cm"))
-          .groupBy("subq", "code")
-          .agg(transform(
-            sort_array(collect_list(struct(col("dim"), col("cm")))),
-            x => x.getField("cm")).as("cv"))
-          .localCheckpoint()
-      }
-      // rsub has no consumers once the codebook is built (each round's
-      // localCheckpoint is eager, so cb no longer reads it) — release the
-      // corpus×m-row cache now instead of with its owner
-      PlanMemo.unpin(rsub)
-      cb
-    }
     // |cv|² hoisted per CODEBOOK ENTRY (m·nCentroids rows) before the
     // argmin join — the identical fold, evaluated 1k× instead of
     // corpus·m·nCentroids× (the encode join is the op's hot stage)
@@ -749,8 +545,8 @@ object Sim {
     * codes to the broadcast codebook — never more than O(corpus × m)
     * rows. */
   def pqDistortion(corpus: DataFrame, m: Int = 8,
-                   nCentroids: Int = 128, trainIters: Int = 0): DataFrame = {
-    val pq = pqEncode(corpus, m, nCentroids, trainIters = trainIters)
+                   nCentroids: Int = 128): DataFrame = {
+    val pq = pqEncode(corpus, m, nCentroids)
     val (codebook, codes, sub) = (pq.codebook, pq.codes, pq.sub)
     val diff = zip_with(col("ev"), col("cv"), (a, b) => a - b)
     // error is measured on the RESIDUAL (what the codebook actually
@@ -793,12 +589,8 @@ object Sim {
 
   def ivfPqTopK(probes: DataFrame, corpus: DataFrame, k: Int,
                 stride: Int = 25, nProbe: Int = 8,
-                m: Int = 8, nCentroids: Int = 128,
-                trainIters: Int = 0, coarseIters: Int = 0,
-                hierFactor: Int = 0, hierProbe: Int = 4,
-                hierDup: Int = 1, hierSuperIters: Int = 0): DataFrame = {
-    val pq = pqEncode(corpus, m, nCentroids, stride, trainIters, coarseIters,
-      hierFactor, hierProbe, hierDup, hierSuperIters)
+                m: Int = 8, nCentroids: Int = 128): DataFrame = {
+    val pq = pqEncode(corpus, m, nCentroids, stride)
     val (codebook, codes, c, sub) = (pq.codebook, pq.codes, pq.c, pq.sub)
     // probe ADC look-up table: fixed-point subspace dot products against
     // the RESIDUAL codebook — dot(p, x) = dot(p, cent) + dot(p, r), and

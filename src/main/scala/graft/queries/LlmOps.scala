@@ -1343,7 +1343,7 @@ object LlmOps extends QueryPack {
           }
         }
         (src, nDocs, total, bins, (total + C - 1) / C,
-          math.floor(total.toDouble / (bins * C) * 1000000 + 0.5) / 1000000)
+          Det.quant(total.toDouble / (bins * C), 6))
     }
     import s.implicits._
     out.sortBy(_._1)
@@ -3386,18 +3386,16 @@ object LlmOps extends QueryPack {
         k = 3, numHashes = 32, bands = 8, tau = 0.3)
       .select(col("id_a"), col("id_b"))
     val tp = pred.join(truth, Seq("id_a", "id_b"), "left_semi")
-    val q6 = (c: org.apache.spark.sql.Column) =>
-      Det.quant(c, 6)
     truth.agg(count(lit(1)).cast("long").as("n_truth"))
       .crossJoin(broadcast(pred.agg(count(lit(1)).cast("long").as("n_pred"))))
       .crossJoin(broadcast(tp.agg(count(lit(1)).cast("long").as("n_tp"))))
       .select(col("n_truth"), col("n_pred"), col("n_tp"),
-        q6(col("n_tp").cast("double") / col("n_pred").cast("double"))
+        Det.quant(col("n_tp").cast("double") / col("n_pred").cast("double"), 6)
           .as("precision"),
-        q6(col("n_tp").cast("double") / col("n_truth").cast("double"))
+        Det.quant(col("n_tp").cast("double") / col("n_truth").cast("double"), 6)
           .as("recall"),
-        q6(lit(2) * col("n_tp").cast("double")
-          / (col("n_pred") + col("n_truth")).cast("double")).as("f1"))
+        Det.quant(lit(2) * col("n_tp").cast("double")
+          / (col("n_pred") + col("n_truth")).cast("double"), 6).as("f1"))
   }
 
   // Context-window fit report: for each candidate sequence length, how
@@ -4998,14 +4996,13 @@ object LlmOps extends QueryPack {
       // Math.floor then a narrowing to long — replicated exactly
       val den: Map[String, BigInt] = pairKeys
         .map { case (i, j) =>
-          i -> BigInt(math.floor(
-            d(nijOf(i, j)) / (p(i) + p(j)) * 1000000000000L + 0.5).toLong)
+          i -> BigInt(Det.fix(d(nijOf(i, j)) / (p(i) + p(j)), 12))
         }
         .groupBy(_._1).map { case (i, ts) => i -> ts.map(_._2).sum }
       val pfx: Map[String, BigInt] = srcList.map { i =>
         i -> (for { dn <- den.get(i); w0 <- wi.get(i) } yield
-          BigInt(math.floor(d(w0) * 1000000000000L / d(dn) * 1000000000000L
-            + 0.5).toLong)).getOrElse(BigInt(0))
+          BigInt(Det.fix(d(w0) * 1000000000000L / d(dn), 12)))
+          .getOrElse(BigInt(0))
       }.toMap
       val tot = pfx.values.sum
       p = srcList.map(i => i -> d(pfx(i)) / d(tot)).toMap
@@ -5013,7 +5010,7 @@ object LlmOps extends QueryPack {
     val outRows = srcList.map { i =>
       (i, gamesOf.getOrElse(i, BigInt(0)).toLong,
         wi.getOrElse(i, BigInt(0)).toLong,
-        math.floor(p(i) * 1000000 + 0.5) / 1000000)
+        Det.quant(p(i), 6))
     }
     import s.implicits._
     outRows.toSeq.toDF("source", "games", "wins", "strength")

@@ -2484,13 +2484,11 @@ object StatsOps extends QueryPack {
       * (col("n") - col("s") + 1).cast("double")
       / ((col("n") + 2).cast("double") * (col("n") + 2).cast("double")
         * (col("n") + 3).cast("double")))
-    def q6(c: org.apache.spark.sql.Column) =
-      Det.quant(c, 6)
     m.select(col("arm"), col("n"), col("s"),
-        q6(col("s").cast("double") / col("n").cast("double")).as("rate"),
-        q6(pm).as("post_mean"),
-        q6(pm - sd).as("ci_lo"),
-        q6(pm + sd).as("ci_hi"))
+        Det.quant(col("s").cast("double") / col("n").cast("double"), 6).as("rate"),
+        Det.quant(pm, 6).as("post_mean"),
+        Det.quant(pm - sd, 6).as("ci_lo"),
+        Det.quant(pm + sd, 6).as("ci_hi"))
       .orderBy("arm")
   }
 
@@ -2612,12 +2610,8 @@ object StatsOps extends QueryPack {
     val k = r.withColumn("imax",
       max(when(col("pv") <= col("i").cast("double") * 0.1 / col("m"), col("i"))
         .otherwise(lit(0))).over(Window.partitionBy()))
-    def q4(c: org.apache.spark.sql.Column) =
-      Det.quant(c, 4)
-    def q6(c: org.apache.spark.sql.Column) =
-      Det.quant(c, 6)
     k.select(col("event_type"), col("dow").cast("long").as("dow"), col("n"),
-        q4(col("zv")).as("z"), q6(col("pv")).as("p"),
+        Det.quant(col("zv"), 4).as("z"), Det.quant(col("pv"), 6).as("p"),
         col("i").cast("long").as("p_rank"),
         when(col("i") <= col("imax"), 1L).otherwise(0L).as("bh_reject"),
         when(col("pv") <= lit(0.1) / col("m"), 1L).otherwise(0L)
@@ -2695,8 +2689,6 @@ object StatsOps extends QueryPack {
       .as("w"))
     val hy = cy.agg(sum(Det.wide(col("cy")) * Det.lnFix(col("cy"), 6).cast("long"))
       .as("w"))
-    def q6(c: org.apache.spark.sql.Column) =
-      Det.quant(c, 6)
     val fin = n.crossJoin(broadcast(minum))
       .crossJoin(broadcast(hx.select(col("w").as("wx"))))
       .crossJoin(broadcast(hy.select(col("w").as("wy"))))
@@ -2706,9 +2698,9 @@ object StatsOps extends QueryPack {
           - col("wx").cast("double") / 1000000 / col("n")).as("h_x"),
         (col("l_n").cast("double") / 1000000
           - col("wy").cast("double") / 1000000 / col("n")).as("h_y"))
-    fin.select(col("n"), q6(col("mi")).as("mi"), q6(col("h_x")).as("h_x"),
-      q6(col("h_y")).as("h_y"),
-      q6(col("mi") / sqrt(col("h_x") * col("h_y"))).as("nmi"))
+    fin.select(col("n"), Det.quant(col("mi"), 6).as("mi"),
+      Det.quant(col("h_x"), 6).as("h_x"), Det.quant(col("h_y"), 6).as("h_y"),
+      Det.quant(col("mi") / sqrt(col("h_x") * col("h_y")), 6).as("nmi"))
   }
 
   // Theil T inequality index of spend per event type — the decomposable
@@ -2743,13 +2735,11 @@ object StatsOps extends QueryPack {
       count(lit(1)).as("n"), sum("x").as("s"),
       sum(Det.wide(col("x")) * Det.lnFix(col("x"), 6).cast("long"))
         .as("w"))
-    def q6(c: org.apache.spark.sql.Column) =
-      Det.quant(c, 6)
     a.select(col("event_type"), col("n"),
         (col("s").cast("double") / 100).as("total_value"),
-        q6(col("w").cast("double") / 1000000 / col("s")
+        Det.quant(col("w").cast("double") / 1000000 / col("s")
           - (Det.lnFix(col("s"), 6).cast("double")
-            - Det.lnFix(col("n"), 6).cast("double")) / 1000000).as("theil_t"))
+            - Det.lnFix(col("n"), 6).cast("double")) / 1000000, 6).as("theil_t"))
       .orderBy("event_type")
   }
 
@@ -2786,14 +2776,12 @@ object StatsOps extends QueryPack {
       count(lit(1)).as("k"), sum("c").as("s"),
       sum(Det.wide(col("c")) * col("c")).cast("double").as("sq"))
     def dd(c: String) = col(c).cast("double")
-    def q4(c: org.apache.spark.sql.Column) =
-      Det.quant(c, 4)
     a.select(col("event_type"), col("k"), col("s"),
-        q4(dd("s") / col("k")).as("mean_daily"),
-        q4((col("sq") - dd("s") * col("s") / col("k")) / (col("k") - 1)
-          / (dd("s") / col("k"))).as("dispersion"),
-        q4((col("sq") - dd("s") * col("s") / col("k"))
-          / (dd("s") / col("k"))).as("chi2"))
+        Det.quant(dd("s") / col("k"), 4).as("mean_daily"),
+        Det.quant((col("sq") - dd("s") * col("s") / col("k")) / (col("k") - 1)
+          / (dd("s") / col("k")), 4).as("dispersion"),
+        Det.quant((col("sq") - dd("s") * col("s") / col("k"))
+          / (dd("s") / col("k")), 4).as("chi2"))
       .orderBy("event_type")
   }
 
@@ -2848,13 +2836,11 @@ object StatsOps extends QueryPack {
     val a = d.agg(count(lit(1)).as("n"), sum("di").as("sd"),
       sum(Det.wide(col("di")) * col("di")).cast("double").as("sq"))
     def dd(c: String) = col(c).cast("double")
-    def q4(c: org.apache.spark.sql.Column) =
-      Det.quant(c, 4)
     a.select(col("n"),
-      q4(dd("sd") / 1000000 / col("n")).as("mean_diff"),
-      q4(dd("sd") / 1000000 / col("n")
+      Det.quant(dd("sd") / 1000000 / col("n"), 4).as("mean_diff"),
+      Det.quant(dd("sd") / 1000000 / col("n")
         / sqrt(((col("sq") - dd("sd") * col("sd") / col("n")) / (col("n") - 1))
-          / 1000000 / 1000000 / col("n"))).as("t"),
+          / 1000000 / 1000000 / col("n")), 4).as("t"),
       (col("n") - 1).as("df"))
   }
 
@@ -3996,26 +3982,23 @@ object StatsOps extends QueryPack {
     val base = rows.reverse.map { case (t, nl0, nl1) =>
       cr0 += nl0; cr1 += nl1; (t, nl0, nl1, cr0, cr1)
     }.reverse.filter(_._1 < maxDay)
-    def quant9(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
     var b = 0.0
     for (_ <- 1 to 3) {
       val eb = math.exp(b)
       var u = BigInt(0)
       var i = BigInt(0)
       for ((_, d0, d1, r0, r1) <- base) {
-        u += math.floor((d1 - (d0 + d1) * (r1 * eb) / (r0 + r1 * eb))
-          * 1e12 + 0.5).toLong
-        i += math.floor((d0 + d1) * (r0 * (r1 * eb))
-          / ((r0 + r1 * eb) * (r0 + r1 * eb)) * 1e12 + 0.5).toLong
+        u += Det.fix(d1 - (d0 + d1) * (r1 * eb) / (r0 + r1 * eb), 12)
+        i += Det.fix((d0 + d1) * (r0 * (r1 * eb))
+          / ((r0 + r1 * eb) * (r0 + r1 * eb)), 12)
       }
-      b = quant9(b + u.toDouble / i.toDouble)
+      b = Det.quant(b + u.toDouble / i.toDouble, 9)
     }
     val nUsers = rows.map(r => r._2 + r._3).sum
     val ev0 = base.map(_._2).sum
     val ev1 = base.map(_._3).sum
-    val q6 = (x: Double) => math.floor(x * 1e6 + 0.5) / 1e6
     import s.implicits._
-    Seq((nUsers, ev0, ev1, q6(b), q6(math.exp(b))))
+    Seq((nUsers, ev0, ev1, Det.quant(b, 6), Det.quant(math.exp(b), 6)))
       .toDF("n_users", "events_arm0", "events_arm1", "beta", "hazard_ratio")
   }
 
@@ -4171,7 +4154,7 @@ object StatsOps extends QueryPack {
     def out(name: String, r: Row): (String, String, Long, Long, Long, Double) =
       (name, r.getAs[String]("feat"), r.getAs[Long]("thr"),
         r.getAs[Long]("t1") + r.getAs[Long]("t0"), r.getAs[Long]("t1"),
-        math.floor(r.getAs[Double]("wg") * 1000000 + 0.5) / 1000000)
+        Det.quant(r.getAs[Double]("wg"), 6))
     val rows = pick(h2, "root") match {
       case None => Seq.empty[(String, String, Long, Long, Long, Double)]
       case Some(root) =>
@@ -5600,7 +5583,6 @@ object StatsOps extends QueryPack {
       .agg(count(lit(1)).cast("long").as("c"))
     val hist = graft.ops.BoundedCollect.rows(histDf, "gmm cents histogram")
       .map(r => (r.getLong(0), r.getLong(1)))
-    def quant9(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
     val n = hist.map(_._2).sum
     val sN = BigInt(n)
     val sS = hist.map { case (v, c) => BigInt(c * v) }.sum
@@ -5609,18 +5591,17 @@ object StatsOps extends QueryPack {
     val sd = math.sqrt((sN * sS2 - sS * sS).toDouble
       / (sN.toDouble * sN.toDouble) / 1e8)
     var w1 = 0.5
-    var mu1 = quant9(mean - sd)
-    var mu2 = quant9(mean + sd)
-    var v1 = math.max(quant9(sd * sd), 1e-8)
-    var v2 = math.max(quant9(sd * sd), 1e-8)
+    var mu1 = Det.quant(mean - sd, 9)
+    var mu2 = Det.quant(mean + sd, 9)
+    var v1 = math.max(Det.quant(sd * sd, 9), 1e-8)
+    var v2 = math.max(Det.quant(sd * sd, 9), 1e-8)
     for (_ <- 1 to 3) {
       var rr1, rr2, m1, m2, q1, q2 = BigInt(0)
       for ((v, c) <- hist) {
         val x = v / 10000.0
         val l1 = w1 * math.exp(-((x - mu1) * (x - mu1)) / (2 * v1)) / math.sqrt(v1)
         val l2 = (1 - w1) * math.exp(-((x - mu2) * (x - mu2)) / (2 * v2)) / math.sqrt(v2)
-        val r6 = math.floor(
-          (if (l1 + l2 > 0) l1 / (l1 + l2) else 0.5) * 1e6 + 0.5).toLong
+        val r6 = Det.fix(if (l1 + l2 > 0) l1 / (l1 + l2) else 0.5, 6)
         rr1 += c * r6
         rr2 += c * (1000000L - r6)
         m1 += BigInt(c * r6) * v
@@ -5628,15 +5609,15 @@ object StatsOps extends QueryPack {
         q1 += BigInt(c * r6) * v * v
         q2 += BigInt(c * (1000000L - r6)) * v * v
       }
-      w1 = quant9(rr1.toDouble / 1e6 / n)
-      mu1 = quant9(m1.toDouble / rr1.toDouble / 10000.0)
-      mu2 = quant9(m2.toDouble / rr2.toDouble / 10000.0)
-      v1 = math.max(quant9(q1.toDouble / rr1.toDouble / 1e8 - mu1 * mu1), 1e-8)
-      v2 = math.max(quant9(q2.toDouble / rr2.toDouble / 1e8 - mu2 * mu2), 1e-8)
+      w1 = Det.quant(rr1.toDouble / 1e6 / n, 9)
+      mu1 = Det.quant(m1.toDouble / rr1.toDouble / 10000.0, 9)
+      mu2 = Det.quant(m2.toDouble / rr2.toDouble / 10000.0, 9)
+      v1 = math.max(Det.quant(q1.toDouble / rr1.toDouble / 1e8 - mu1 * mu1, 9), 1e-8)
+      v2 = math.max(Det.quant(q2.toDouble / rr2.toDouble / 1e8 - mu2 * mu2, 9), 1e-8)
     }
-    val q6 = (x: Double) => math.floor(x * 1e6 + 0.5) / 1e6
     import s.implicits._
-    Seq((n, q6(w1), q6(mu1), q6(v1), q6(mu2), q6(v2)))
+    Seq((n, Det.quant(w1, 6), Det.quant(mu1, 6), Det.quant(v1, 6),
+        Det.quant(mu2, 6), Det.quant(v2, 6)))
       .toDF("n", "w1", "mu1", "var1", "mu2", "var2")
   }
 
@@ -5663,14 +5644,13 @@ object StatsOps extends QueryPack {
           .cast("long").as("n0"))
     val hist = graft.ops.BoundedCollect.rows(histDf, "logreg cents histogram")
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    def quant9(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
     var b0 = 0.0
     var b1 = 0.0
     for (_ <- 1 to 3) {
       var g0, g1, h00, h01, h11 = BigInt(0)
       for ((v, n1, n0) <- hist) {
         val z = b0 + b1 * (v / 10000.0)
-        val p4 = math.floor(10000.0 / (1.0 + math.exp(-z)) + 0.5).toLong
+        val p4 = Det.half(10000.0 / (1.0 + math.exp(-z))).toLong
         val w8 = p4 * (10000L - p4)
         val gc = n1 * (10000L - p4) - n0 * p4
         g0 += gc
@@ -5680,16 +5660,15 @@ object StatsOps extends QueryPack {
         h11 += BigInt(v) * v * (n1 + n0) * w8
       }
       val det = (h00 * h11 - h01 * h01).toDouble
-      b0 = quant9(b0 + (h11 * g0 - h01 * g1).toDouble / det * 10000.0)
-      b1 = quant9(b1 + (h00 * g1 - h01 * g0).toDouble / det * 100000000.0)
+      b0 = Det.quant(b0 + (h11 * g0 - h01 * g1).toDouble / det * 10000.0, 9)
+      b1 = Det.quant(b1 + (h00 * g1 - h01 * g0).toDouble / det * 100000000.0, 9)
     }
     val n = hist.map { case (_, n1, n0) => n1 + n0 }.sum
     val correct = hist.map { case (v, n1, n0) =>
       if (b0 + b1 * (v / 10000.0) > 0) n1 else n0
     }.sum
-    val q6 = (x: Double) => math.floor(x * 1e6 + 0.5) / 1e6
     import s.implicits._
-    Seq((n, q6(b0), q6(b1), q6(correct.toDouble / n)))
+    Seq((n, Det.quant(b0, 6), Det.quant(b1, 6), Det.quant(correct.toDouble / n, 6)))
       .toDF("n", "b0", "b1", "train_acc")
   }
 

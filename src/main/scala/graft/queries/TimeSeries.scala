@@ -2766,14 +2766,12 @@ object TimeSeriesOps extends QueryPack {
     val den = lit(1) - r1 * r1
     val phi1 = r1 * (lit(1) - r2) / den
     val phi2 = (r2 - r1 * r1) / den
-    def q6(x: org.apache.spark.sql.Column) =
-      Det.quant(x, 6)
     c.select(col("n").cast("long").as("n_days"),
-      q6(r1).as("r1"), q6(r2).as("r2"),
-      when(den === 0, lit(null)).otherwise(q6(phi1)).as("phi1"),
-      when(den === 0, lit(null)).otherwise(q6(phi2)).as("phi2"),
+      Det.quant(r1, 6).as("r1"), Det.quant(r2, 6).as("r2"),
+      when(den === 0, lit(null)).otherwise(Det.quant(phi1, 6)).as("phi1"),
+      when(den === 0, lit(null)).otherwise(Det.quant(phi2, 6)).as("phi2"),
       when(den === 0, lit(null))
-        .otherwise(q6(lit(1) - phi1 * r1 - phi2 * r2)).as("noise_ratio"))
+        .otherwise(Det.quant(lit(1) - phi1 * r1 - phi2 * r2, 6)).as("noise_ratio"))
   }
 
   // Durbin–Watson statistic on the mean-detrended daily revenue series —

@@ -4,10 +4,9 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** Per-user running counters keyed by a SECONDARY dimension — MapState,
-  * the State API v2 primitive the other tws ops don't touch (TwsFunnel:
-  * ValueState, TwsSessions: ValueState+timer, TwsIntervalJoin:
-  * ListState×2+timer). One map entry per (user, event_type) seen, read
-  * and updated POINT-WISE: a batch touching one type pays one key lookup,
+  * the State API v2 primitive the other tws ops don't touch (TwsSeeded:
+  * ValueState, TwsIntervalJoin: ListState×2+timer). One map entry per
+  * (user, event_type) seen, read and updated POINT-WISE: a batch touching one type pays one key lookup,
   * not a full-profile deserialize — the reason MapState exists instead
   * of a ValueState[Map[...]], and at production state sizes the
   * difference between an O(1) RocksDB get and rewriting a user's whole

@@ -5,9 +5,9 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
 
 /** Stream-stream INTERVAL join as a transformWithState composition —
   * the multi-state + timer shape the r12 verdict named as the API's
-  * next unexercised surface (beyond TwsFunnel's single ValueState and
-  * TwsSessions' single timer): TWO ListState buffers (left and right
-  * rows awaiting partners) plus an event-time timer that prunes both.
+  * next unexercised surface (beyond TwsSeeded's single ValueState): TWO
+  * ListState buffers (left and right rows awaiting partners) plus an
+  * event-time timer that prunes both.
   *
   * Semantics (matching the engine-native `stream_stream_join` interval
   * condition): emit (l, r) when l and r share the key and

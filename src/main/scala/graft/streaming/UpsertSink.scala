@@ -116,10 +116,6 @@ object UpsertSink {
     true
   }
 
-  /** The committed batchId the manifest names, if any. */
-  def currentVersion(table: String): Option[Long] =
-    readManifest(table).map(_.batchId)
-
   def readManifest(table: String): Option[Manifest] = {
     val p = Paths.get(s"$table/_manifest")
     if (!Files.exists(p)) None

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** `Det.half`/`Det.quant` are the only spelling of the P12 rounding rule
   * in main code: they must give the values of the hand-written
-  * `floor(x·10^s + 0.5)` forms they replaced, and for a double argument
-  * the same optimized plan. */
+  * `floor(x·10^s + 0.5)` forms they replaced (as Columns and as driver-side
+  * Doubles), and for a double Column the same optimized plan. */
 class DetSpec extends SparkSpec {
   import spark.implicits._
 
@@ -34,6 +34,17 @@ class DetSpec extends SparkSpec {
     same(df, Det.quant(x, 4), floor(x * 10000 + lit(0.5)).cast("double") / 10000)
     same(df, Det.quant(x, 6), floor(x * 1000000 + lit(0.5)) / 1000000)
     same(df, Det.wide(Det.half(x)), floor(x + lit(0.5)).cast("decimal(38,0)"))
+
+    // the driver-side Double overloads, over the same inputs
+    def sameD(a: Double, b: Double, x: Double): Unit =
+      assert(java.lang.Double.compare(a, b) == 0, s"x=$x: helper $a vs hand-written $b")
+    for (x <- xs.flatten) {
+      sameD(Det.half(x), math.floor(x + 0.5), x)
+      assert(Det.fix(x, 4) == math.floor(x * 10000 + 0.5).toLong, s"x=$x")
+      sameD(Det.quant(x, 4), math.floor(x * 10000 + 0.5) / 10000, x)
+      sameD(Det.quant(x, 6), math.floor(x * 1e6 + 0.5) / 1e6, x)
+      sameD(Det.quant(x, 9), math.floor(x * 1e9 + 0.5) / 1e9, x)
+    }
   }
 
   test("quant(x, 4) on a double x plans as floor(x*10000 + 0.5) / 10000") {

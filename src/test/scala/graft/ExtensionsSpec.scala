@@ -163,4 +163,13 @@ class ExtensionsSpec extends SparkSpec {
     assert(matches("src/main", """cast\("decimal\(38,0\)"\)""".r).keySet == Set(det))
     assert(matches("src/main", """DecimalType\(38, ?0\)""".r).keySet -- Set(det) == Set())
   }
+
+  test("driver-side roundings go through engine.Det: no math.floor( in " +
+    "queries/ or ops/") {
+    val floor = """math\.floor\(""".r
+    assert(matches("src/main/scala/graft/queries", floor).isEmpty)
+    assert(matches("src/main/scala/graft/ops", floor).isEmpty)
+    assert(matches("src/main/scala/graft/engine", floor).keySet ==
+      Set("src/main/scala/graft/engine/Det.scala"))
+  }
 }

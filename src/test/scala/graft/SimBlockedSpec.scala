@@ -183,100 +183,4 @@ class SimBlockedSpec extends SparkSpec {
     // path's 0.74 ceiling (r11 plain-x encode: 0.66). Floor at 0.65.
     assert(recall >= 0.65, f"IVF-PQ recall@5 $recall%.2f < 0.65")
   }
-
-  test("trained PQ sub-codebooks: distortion non-increasing per subspace, " +
-    "recall floor held") {
-    val dir = "/root/testdata/sf0.01"
-    val emb = engine.Tables(spark, dir, "embeddings")
-    // k = 16 so the seed codebook is coarse enough for training to have
-    // headroom (at k = 128 over 2 000 residuals the seeds are already
-    // near-saturating). Lloyd from the seed start can only lower the
-    // min-distance distortion; the 6-dp mean quantization perturbs at
-    // ~1e-6, hence the epsilon.
-    def mse(trainIters: Int): Map[Int, Double] =
-      ops.Sim.pqDistortion(emb, m = 8, nCentroids = 16, trainIters = trainIters)
-        .collect().map(r => r.getInt(0) -> r.getAs[Double]("mse")).toMap
-    val seed = mse(0)
-    val trained = mse(2)
-    assert(seed.keySet == trained.keySet)
-    seed.foreach { case (sq, s) =>
-      assert(trained(sq) <= s + 1e-4,
-        f"subspace $sq: trained mse ${trained(sq)}%.6f > seed $s%.6f")
-    }
-    val lift = seed.values.sum / trained.values.sum
-    info(f"total distortion seed/trained = $lift%.3f (>1 is a win)")
-    assert(lift >= 1.0 - 1e-6)
-
-    // the trained encode feeds the SAME ADC/stored-norm scoring — recall
-    // must hold the untrained floor
-    val probes = emb.filter(col("vec_id") < 10)
-    def topkSet(df: DataFrame): Set[(Long, Long)] =
-      df.select(col("probe_id").cast("long"), col("vec_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = topkSet(ops.Sim.cosineTopK(probes, emb, k = 5))
-    val pqT = topkSet(ops.Sim.ivfPqTopK(probes, emb, k = 5, trainIters = 2))
-    val recallT = (pqT & brute).size.toDouble / brute.size
-    info(f"recall@5 with trained codebooks: $recallT%.2f")
-    assert(recallT >= 0.65, f"trained-codebook recall@5 $recallT%.2f < 0.65")
-  }
-
-  test("trained coarse quantizer: a 4x-smaller trained cell set holds the " +
-    "stride recall floor (r13)") {
-    // The assignment scan is corpus × |cells| — the linear piece SCALE.md's
-    // 100× row names as what a production index replaces with a TRAINED
-    // coarse quantizer. The claim being pinned: Lloyd-refined cells are
-    // good enough that a 4×-smaller codebook (stride 100 → 20 seed cells
-    // vs the default 80) keeps recall at the graded floor, cutting every
-    // later assignment (corpus encode and probe routing alike) 4×.
-    // nProbe stays 8, so the probe now scans 8-of-20 cells — a HARDER
-    // pruning setting than 8-of-80 in candidate volume terms is easier,
-    // but each cell is 4× larger, so the ADC stage does the same work.
-    val dir = "/root/testdata/sf0.01"
-    val emb = engine.Tables(spark, dir, "embeddings")
-    val probes = emb.filter(col("vec_id") < 10)
-    def topkSet(df: DataFrame): Set[(Long, Long)] =
-      df.select(col("probe_id").cast("long"), col("vec_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = topkSet(ops.Sim.cosineTopK(probes, emb, k = 5))
-    val seeded = topkSet(
-      ops.Sim.ivfPqTopK(probes, emb, k = 5, stride = 100))
-    val trained = topkSet(
-      ops.Sim.ivfPqTopK(probes, emb, k = 5, stride = 100, coarseIters = 2))
-    val rSeed = (seeded & brute).size.toDouble / brute.size
-    val rTrained = (trained & brute).size.toDouble / brute.size
-    info(f"recall@5 at 20 cells: seed=$rSeed%.2f trained=$rTrained%.2f")
-    // measured (deterministic pipeline): seed 0.76, trained 0.90 — the
-    // trained 20-cell codebook BEATS the default 80-cell stride path
-    // (0.72) at a quarter of the assignment cost. Floors leave headroom
-    // only for fixture regeneration, not for noise (there is none).
-    assert(rTrained >= 0.80,
-      f"trained-coarse recall@5 $rTrained%.2f < 0.80 at 1/4 the cells")
-    // training must not LOSE recall vs the same-size untrained codebook
-    assert(rTrained >= rSeed,
-      f"training dropped recall: $rTrained%.2f vs seed $rSeed%.2f")
-  }
-
-  test("hierarchical coarse assignment holds the end recall floor (r13)") {
-    // the two-level argmin (route via supers, argmin only the probed
-    // supers' cells) is approximate — a vector whose true cell sits in
-    // an unprobed super lands in a near-tie neighbor. The honest gauge
-    // is END recall through the full IVF-PQ stack, not assignment
-    // agreement: mis-assignments with small residual deltas are
-    // harmless by construction.
-    val dir = "/root/testdata/sf0.01"
-    val emb = engine.Tables(spark, dir, "embeddings")
-    val probes = emb.filter(col("vec_id") < 10)
-    def topkSet(df: DataFrame): Set[(Long, Long)] =
-      df.select(col("probe_id").cast("long"), col("vec_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = topkSet(ops.Sim.cosineTopK(probes, emb, k = 5))
-    val flat = topkSet(ops.Sim.ivfPqTopK(probes, emb, k = 5))
-    val hier = topkSet(ops.Sim.ivfPqTopK(probes, emb, k = 5, hierFactor = 8))
-    val rFlat = (flat & brute).size.toDouble / brute.size
-    val rHier = (hier & brute).size.toDouble / brute.size
-    info(f"recall@5: flat=$rFlat%.2f hier=$rHier%.2f (80 cells, 10 supers)")
-    assert(rHier >= rFlat - 0.10,
-      f"hier assignment cost too much recall: $rHier%.2f vs $rFlat%.2f")
-    assert(rHier >= 0.60, f"hier recall@5 $rHier%.2f < 0.60")
-  }
 }

@@ -115,62 +115,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState funnel matches flatMapGroupsWithState semantics") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Funnel.Ev]
-    val q = graft.streaming.TwsFunnel.conversions(in.toDS())
-      .writeStream.format("memory").queryName("tws_funnel_test")
-      .outputMode("append").start()
-    try {
-      in.addData(Funnel.Ev(1L, 100L, "signup"), Funnel.Ev(2L, 10L, "signup"))
-      q.processAllAvailable()
-      assert(spark.table("tws_funnel_test").count() == 0)
-      in.addData(Funnel.Ev(1L, 200L, "purchase"), Funnel.Ev(2L, 5L, "purchase"))
-      q.processAllAvailable()
-      val rows = spark.table("tws_funnel_test").as[Funnel.Conversion].collect()
-      // user 2's purchase (ts 5) precedes its signup (ts 10) → no conversion
-      assert(rows.toSeq == Seq(Funnel.Conversion(1L, 100L, 200L)))
-      in.addData(Funnel.Ev(1L, 300L, "purchase"))
-      q.processAllAvailable()
-      assert(spark.table("tws_funnel_test").count() == 1) // exactly-once emission
-    } finally q.stop()
-  }
-
-  test("timer-based sessions close on watermark, not on batch arrival") {
-    import graft.streaming.TwsSessions
-    import graft.streaming.TwsSessions.{SessEv, SessionOut}
-    implicit val sqlCtx = spark.sqlContext
-    def ev(u: Long, min: Int) = SessEv(u, new java.sql.Timestamp(min * 60000L))
-    val in = MemoryStream[SessEv]
-    val sess = TwsSessions.sessions(
-      in.toDS().withWatermark("ts", "0 seconds"), gapMs = 30 * 60000L)
-    val q = sess.writeStream.format("memory").queryName("tws_sessions")
-      .outputMode("append").start()
-    try {
-      // t=1 not t=0: a row at exactly the initial watermark would be late
-      // user 1: events at t=1 and t=11 (one session); user 2: t=6
-      in.addData(ev(1, 1), ev(1, 11), ev(2, 6))
-      q.processAllAvailable()
-      // watermark is still at t=11 → no session may close yet
-      assert(spark.table("tws_sessions").count() == 0)
-      // an event at t=120 pushes the watermark past both sessions' gaps;
-      // it also opens a NEW session for user 1 that must stay open
-      in.addData(ev(1, 120))
-      q.processAllAvailable()
-      in.addData(ev(2, 125)) // advance watermark again → still < 120+30
-      q.processAllAvailable()
-      val rows = spark.table("tws_sessions").as[SessionOut].collect().toSet
-      assert(rows == Set(SessionOut(1L, 60000000L, 2L), SessionOut(2L, 6L * 60000000L, 1L)),
-        s"got $rows")
-      // push watermark past everything → the two open sessions close
-      in.addData(ev(3, 300))
-      q.processAllAvailable()
-      val fin = spark.table("tws_sessions").as[SessionOut].collect().toSet
-      assert(fin.contains(SessionOut(1L, 120L * 60000000L, 1L)), s"got $fin")
-      assert(fin.contains(SessionOut(2L, 125L * 60000000L, 1L)), s"got $fin")
-    } finally q.stop()
-  }
-
   test("two-stream interval join equals the batch-graded form") {
     val clicks = Streams.eventsStream(spark, sf)
       .filter($"event_type" === "click")
@@ -727,45 +671,6 @@ class StreamingSpec extends SparkSpec {
       // user 9 is seeded but never streamed — no emission, state waits
       assert(!last.contains(9L))
     } finally q.stop()
-  }
-
-  test("TwsFunnel native TTLConfig: wide TTL converts, expired signup is forgotten") {
-    import graft.streaming.{Funnel, TwsFunnel}
-    implicit val sqlCtx = spark.sqlContext
-    // wide TTL (1 h): cross-batch signup→purchase still converts — parity
-    // with the TTL-less run inside the window
-    val in1 = MemoryStream[Funnel.Ev]
-    val q1 = TwsFunnel.conversions(in1.toDS(), ttlMs = 3600L * 1000L)
-      .writeStream.format("memory").queryName("tws_ttl_wide")
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("100 milliseconds")).start()
-    try {
-      in1.addData(Funnel.Ev(1L, 100L, "signup"))
-      Thread.sleep(400L)
-      in1.addData(Funnel.Ev(1L, 200L, "purchase"))
-      awaitRows("tws_ttl_wide", 1)
-      val rows = spark.table("tws_ttl_wide").as[Funnel.Conversion].collect()
-      assert(rows.toSeq == Seq(Funnel.Conversion(1L, 100L, 200L)))
-    } finally q1.stop()
-    // short TTL (500 ms): the signup expires during the idle window, so a
-    // later purchase finds no state — the documented session-funnel trade
-    val in2 = MemoryStream[Funnel.Ev]
-    val q2 = TwsFunnel.conversions(in2.toDS(), ttlMs = 500L)
-      .writeStream.format("memory").queryName("tws_ttl_short")
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("100 milliseconds")).start()
-    try {
-      in2.addData(Funnel.Ev(2L, 100L, "signup"))
-      Thread.sleep(2000L) // > ttl: the store expires the signup value
-      in2.addData(Funnel.Ev(2L, 200L, "purchase"),
-        Funnel.Ev(3L, 10L, "signup"), Funnel.Ev(3L, 20L, "purchase"))
-      // user 3's same-batch pair converts (proves the batch processed)...
-      awaitRows("tws_ttl_short", 1)
-      Thread.sleep(500L) // grace for any late user-2 row (must not appear)
-      val got = spark.table("tws_ttl_short").as[Funnel.Conversion].collect()
-      assert(got.toSeq == Seq(Funnel.Conversion(3L, 10L, 20L)),
-        s"expired signup still converted: ${got.toSeq}")
-    } finally q2.stop()
   }
 
   test("stream_near_dedup anchors are consistent with verified minhash pairs") {
