@@ -100,7 +100,7 @@ object ScaleStress {
     time("minhash pairs 10x")(ops.Dedup.minhashPairs(d10, "text", "doc_id", 3, 32, 8, 0.3).count())
     // ingest-side near-dedup (stream_near_dedup's batch path): work =
     // banding (the minhash signature pass) + ONE shuffle on the 8-byte
-    // (band, bucket) key into flatMapGroupsWithState; state is one long
+    // (band, bucket) key into streaming.KeyedState; state is one long
     // per non-empty bucket, so the printed bucket count IS the state-store
     // size a streaming deployment carries
     def nearDedupFlags(d: DataFrame) = {

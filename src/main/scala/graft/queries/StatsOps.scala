@@ -3145,8 +3145,11 @@ object StatsOps extends QueryPack {
     val cell = e.groupBy("event_type", "dow").agg(count(lit(1)).as("o"))
     val rt = cell.groupBy("event_type").agg(sum("o").as("r"))
     val ct = cell.groupBy("dow").agg(sum("o").as("c"))
-    val t = cell.groupBy().agg(sum("o").as("n"),
-      countDistinct("event_type").as("nr"), countDistinct("dow").as("nc"))
+    // one distinct column per aggregate: two distinct columns in one
+    // aggregate plan an Expand whose key order follows expression ids,
+    // so the plan text would depend on what the session ran before
+    val t = cell.groupBy().agg(sum("o").as("n"), countDistinct("event_type").as("nr"))
+      .crossJoin(cell.groupBy().agg(countDistinct("dow").as("nc")))
     val ex = col("r").cast("double") * col("c") / col("n")
     val fx = cell.join(broadcast(rt), "event_type").join(broadcast(ct), "dow")
       .crossJoin(broadcast(t))

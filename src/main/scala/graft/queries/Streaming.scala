@@ -1005,7 +1005,7 @@ object Streaming extends QueryPack {
   }
 
   // The SAME edge detection as a keyed state machine
-  // (streaming/Crossings.scala, flatMapGroupsWithState): one long of state
+  // (streaming/Crossings.scala, on streaming/KeyedState.scala): one long of state
   // per user, emits per-crossing rows; batch invocation is the graded
   // path, StreamingSpec drives it incrementally across micro-batches.
   q("stream_threshold_alert",
@@ -1034,7 +1034,7 @@ object Streaming extends QueryPack {
       .orderBy("user_id", "event_id")
   }
 
-  // the token bucket through the STREAMING tier — flatMapGroupsWithState
+  // the token bucket through the STREAMING tier — keyed
   // state machine (streaming/RateLimit.scala), graded in batch mode
   // against the identical recursive-CTE oracle as events_rate_limit; the
   // micro-batch state carry is exercised in StreamingSpec
@@ -1261,7 +1261,7 @@ object Streaming extends QueryPack {
   // changelog on per-user profile rows ('error' ops are deletes, all
   // others upserts), resolved last-writer-wins by EVENT time (ts,
   // event_id), not arrival order, via the keyed state machine in
-  // streaming/CdcUpsert.scala (flatMapGroupsWithState; state = one
+  // streaming/CdcUpsert.scala (streaming/KeyedState.scala; state = one
   // 4-field winner per key). Deleted keys surface with a tombstone flag,
   // the changelog-complete shape a downstream MERGE consumes. The winner
   // is a MAX, so micro-batch boundaries cannot change the result —
@@ -1392,7 +1392,7 @@ object Streaming extends QueryPack {
   // anchored by a smaller id — the drop/flag-at-ingest decision a
   // streaming corpus pipeline makes BEFORE offline verification (the
   // batch family's llm_dedup_minhash holds the verified-pair contract).
-  // flatMapGroupsWithState (NearDedup.bucketHits) runs the same operator
+  // KeyedState (NearDedup.bucketHits) runs the same operator
   // in batch (graded here: anchor = bucket min, a pure corpus function)
   // and in streaming (state across micro-batches; in-order parity pinned
   // by StreamingSpec). Scale: state is one long per non-empty bucket,

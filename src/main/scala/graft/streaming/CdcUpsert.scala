@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Keyed CDC upsert (last-writer-wins by EVENT TIME) as a state machine:
   * every op is an upsert or a delete of the key's profile row, and the
@@ -10,26 +9,26 @@ import org.apache.spark.sql.streaming.{GroupState, OutputMode}
   * keys stay in the output with a tombstone flag (the changelog-complete
   * convention downstream MERGE consumers need).
   *
-  * flatMapGroupsWithState so the SAME operator runs in batch (one group
+  * [[KeyedState]] so the SAME operator runs in batch (one group
   * invocation — the graded, oracle-backed path) and in Structured
   * Streaming (winner carried in state across micro-batches; each batch
   * emits the key's current winner, so the LAST emission per key equals
   * the batch row — pinned by StreamingSpec). State is one 4-field record
   * per key: O(keys) memory, shuffle only on the key.
   *
-  * `ttlMs > 0` bounds state to keys active within one TTL window
-  * (ProcessingTimeTimeout eviction). Consequence: last-writer-wins is
+  * `Ttl.ProcessingTime` bounds state to keys active within one TTL
+  * window (wall-clock eviction). Consequence: last-writer-wins is
   * then guaranteed only within the TTL horizon — an op arriving more
   * than TTL after its key's last activity finds no winner to compare
   * against and is applied as if first (a STALE op could re-win). Size
-  * the TTL at the maximum expected event lateness; ttlMs = 0 (the graded
+  * the TTL at the maximum expected event lateness; `Ttl.Off` (the graded
   * batch path) keeps exact global LWW and unbounded state.
-  * `eventTtlMs > 0` (r13) is the same horizon on the EVENT-TIME clock:
+  * `Ttl.EventTime` (r13) is the same horizon on the EVENT-TIME clock:
   * eviction when the watermark passes the key's last op time + horizon
-  * ([[StateTtl]]) — the deployable form, because replay/backfill then
+  * ([[Ttl]]) — the deployable form, because replay/backfill then
   * reproduce the live run's evictions (wall-clock TTLs fire differently
-  * at replay speed). Stronger still (StreamingSpec-pinned): with
-  * EventTimeTimeout the engine DROPS rows behind the watermark before
+  * at replay speed). Stronger still (StreamingSpec-pinned): with an
+  * event-time timeout the engine DROPS rows behind the watermark before
   * the state fn sees them, so the one horizon governs eviction AND
   * lateness — a stale op can never be applied as if first against an
   * evicted key, closing the re-win hazard the processing-time TTL
@@ -43,39 +42,25 @@ object CdcUpsert {
   case class Winner(ts_us: Long, event_id: Long, cents: Long, del: Boolean)
   case class Upsert(user_id: Long, ts_us: Long, cents: Long, deleted: Int)
 
-  private[graft] def upsertFn(ttlMs: Long, eventTtlMs: Long = 0L)(
-      user: Long, it: Iterator[Op],
-      state: GroupState[Winner]): Iterator[Upsert] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      var cur = state.getOption
+  /** The key's winner: max by (ts, event_id) — order-free, no sort
+    * needed — armed at the latest op time seen. */
+  private val fold: KeyedState.Fold[Long, Op, Winner, Upsert] = {
+    (user, it, prev) =>
+      var cur = prev
       var maxTsUs = Long.MinValue
-      // max by (ts, event_id) — order-free, no sort needed
       it.foreach { o =>
         if (o.ts_us > maxTsUs) maxTsUs = o.ts_us
         if (cur.forall(s => o.ts_us > s.ts_us
             || (o.ts_us == s.ts_us && o.event_id > s.event_id)))
           cur = Some(Winner(o.ts_us, o.event_id, o.cents, o.del))
       }
-      cur match {
-        case Some(w) =>
-          state.update(w)
-          StateTtl.arm(state, ttlMs, eventTtlMs, math.max(maxTsUs, w.ts_us))
-          Iterator(Upsert(user, w.ts_us, w.cents, if (w.del) 1 else 0))
-        case None => Iterator.empty
-      }
-    }
+      (cur,
+        cur.iterator.map(w => Upsert(user, w.ts_us, w.cents, if (w.del) 1 else 0)),
+        cur.fold(maxTsUs)(w => math.max(maxTsUs, w.ts_us)))
   }
 
-  def upserts(ops: Dataset[Op], ttlMs: Long = 0L,
-              eventTtlMs: Long = 0L): Dataset[Upsert] = {
-    implicit val inEnc = Encoders.product[Op]
-    implicit val stEnc = Encoders.product[Winner]
-    implicit val outEnc = Encoders.product[Upsert]
-    implicit val keyEnc = Encoders.scalaLong
-    ops.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Winner, Upsert](
-        OutputMode.Append, StateTtl.conf(ttlMs, eventTtlMs))(
-        upsertFn(ttlMs, eventTtlMs))
-  }
+  private[graft] def stateFn(ttl: Ttl) = KeyedState.fn(ttl)(fold)
+
+  def upserts(ops: Dataset[Op], ttl: Ttl = Ttl.Off): Dataset[Upsert] =
+    KeyedState.run(ops, (o: Op) => o.user_id, ttl)(fold)
 }

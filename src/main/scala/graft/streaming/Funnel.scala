@@ -1,28 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Custom per-user state machine: signup → first purchase at-or-after it
   * (SURVEY §2.10 stream_stateful_funnel).
   *
-  * Implemented with flatMapGroupsWithState so the SAME operator runs in
-  * batch (state invoked once per group — the graded, oracle-backed path)
-  * and in Structured Streaming (incremental state across micro-batches —
+  * Implemented on [[KeyedState]] so the SAME operator runs in batch
+  * (state invoked once per group — the graded, oracle-backed path) and in
+  * Structured Streaming (incremental state across micro-batches —
   * exercised in the test suite). State is two optional microsecond stamps
   * per user: O(users) memory, shuffle only on user_id — the standard
   * keyed-state layout that scales horizontally with executors.
   *
-  * `ttlMs > 0` evicts users idle longer than the TTL
-  * (ProcessingTimeTimeout) — the funnel becomes a SESSION funnel: a
-  * signup more than TTL before the purchase is forgotten (missed
-  * conversion), and a converted user inactive >TTL restarts the funnel
-  * (a later signup+purchase pair emits again — "exactly once" holds only
-  * within the TTL horizon). ttlMs = 0 (the graded batch path) keeps
-  * lifetime state — outputs unchanged. `eventTtlMs > 0` (r13) keys the
-  * same session-funnel semantics to the WATERMARK ([[StateTtl]]): the
-  * conversion window is then a property of the data (signup-to-purchase
-  * gap ≤ horizon), identical on live run and backfill. */
+  * `Ttl.ProcessingTime` evicts users idle longer than the TTL — the
+  * funnel becomes a SESSION funnel: a signup more than TTL before the
+  * purchase is forgotten (missed conversion), and a converted user
+  * inactive >TTL restarts the funnel (a later signup+purchase pair
+  * emits again — "exactly once" holds only within the TTL horizon).
+  * `Ttl.Off` (the graded batch path) keeps lifetime state — outputs
+  * unchanged. `Ttl.EventTime` (r13) keys the same session-funnel
+  * semantics to the WATERMARK ([[Ttl]]): the conversion window is then a
+  * property of the data (signup-to-purchase gap ≤ horizon), identical on
+  * live run and backfill. */
 object Funnel {
 
   case class Ev(user_id: Long, ts_us: Long, event_type: String)
@@ -33,12 +32,11 @@ object Funnel {
   case class FunnelState(signupUs: Option[Long], emitted: Boolean)
   case class Conversion(user_id: Long, signup_us: Long, purchase_us: Long)
 
-  private[graft] def funnelFn(ttlMs: Long, eventTtlMs: Long = 0L)(
-      user: Long, it: Iterator[Ev],
-      state: GroupState[FunnelState]): Iterator[Conversion] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      var st = state.getOption.getOrElse(FunnelState(None, emitted = false))
+  /** Signup then first purchase at-or-after it, per user; the state is
+    * always stored, armed at the user's last event time. */
+  private val fold: KeyedState.Fold[Long, Ev, FunnelState, Conversion] = {
+    (user, it, prev) =>
+      var st = prev.getOrElse(FunnelState(None, emitted = false))
       val out = scala.collection.mutable.ArrayBuffer.empty[Conversion]
       // signup sorts before purchase at EQUAL ts so a same-instant
       // signup→purchase pair converts (oracle uses ts >= signup_ts)
@@ -55,25 +53,14 @@ object Funnel {
           }
         }
       }
-      state.update(st)
-      StateTtl.arm(state, ttlMs, eventTtlMs,
-        if (sorted.nonEmpty) sorted.last.ts_us else 0L)
-      out.iterator
-    }
+      (Some(st), out.iterator, if (sorted.nonEmpty) sorted.last.ts_us else 0L)
   }
+
+  private[graft] def stateFn(ttl: Ttl) = KeyedState.fn(ttl)(fold)
 
   /** Emits one Conversion per user: earliest signup, then earliest
     * purchase at-or-after it. Events within a group are sorted by
     * (ts, arrival) before folding, so batch results are deterministic. */
-  def conversions(events: Dataset[Ev], ttlMs: Long = 0L,
-                  eventTtlMs: Long = 0L): Dataset[Conversion] = {
-    implicit val evEnc = Encoders.product[Ev]
-    implicit val stEnc = Encoders.product[FunnelState]
-    implicit val outEnc = Encoders.product[Conversion]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, Conversion](
-        OutputMode.Append, StateTtl.conf(ttlMs, eventTtlMs))(
-        funnelFn(ttlMs, eventTtlMs))
-  }
+  def conversions(events: Dataset[Ev], ttl: Ttl = Ttl.Off): Dataset[Conversion] =
+    KeyedState.run(events, (e: Ev) => e.user_id, ttl)(fold)
 }

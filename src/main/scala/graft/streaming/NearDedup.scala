@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Ingest-side near-duplicate detection: MinHash band buckets
   * (Dedup.minhashBands) keyed into a state store, each bucket remembering
@@ -11,7 +10,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ingest (drop/flag now, verify offline), as opposed to the batch
   * family's verified pairs.
   *
-  * flatMapGroupsWithState so the SAME operator runs in batch (one group
+  * [[KeyedState]] so the SAME operator runs in batch (one group
   * invocation per bucket — the graded, oracle-backed path: anchor = the
   * bucket min, so the result is a pure function of the corpus) and in
   * Structured Streaming (anchor carried in state across micro-batches;
@@ -23,7 +22,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * not O(corpus), but on an infinite ingest stream "distinct buckets seen
   * ever" still grows without bound (measured ~2.8 live buckets/doc on the
   * sf0.1 fixture). `ttlMs > 0` bounds it: a bucket idle longer than the
-  * TTL is evicted (ProcessingTimeTimeout), capping state at the buckets
+  * TTL is evicted (`Ttl.ProcessingTime`), capping state at the buckets
   * touched within one TTL window. The trade is ONE-SIDED recall loss —
   * an evicted anchor means a near-dup arriving >TTL after its bucket's
   * last activity is NOT flagged (it becomes the bucket's new anchor);
@@ -32,7 +31,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * forever — outputs unchanged from pre-TTL rounds.
   *
   * [[bucketHitsEventTtl]] (r13) is the same eviction on the EVENT-TIME
-  * clock ([[StateTtl]]): buckets die when the watermark passes their
+  * clock (`Ttl.EventTime`): buckets die when the watermark passes their
   * last activity + horizon, so replay/backfill reproduce the live run's
   * state bound exactly (a wall-clock TTL fires differently at replay
   * speed). It takes [[TsBandRow]] — band rows stamped with the
@@ -46,70 +45,42 @@ object NearDedup {
   case class Anchor(min_id: Long)
   case class Hit(doc_id: Long, band: Int, anchor: Long)
 
-  /** The per-(band, bucket) state fold, named so StreamingSpec can drive
-    * it directly through TestGroupState (timeout paths are untestable
-    * through a real stream without clock control). */
-  private[graft] def hitsFn(ttlMs: Long)(
-      key: (Int, Long), it: Iterator[BandRow],
-      state: GroupState[Anchor]): Iterator[Hit] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val docs = it.map(_.doc_id).toArray
-      val anchor = math.min(
-        state.getOption.map(_.min_id).getOrElse(Long.MaxValue),
-        docs.min)
-      state.update(Anchor(anchor))
-      if (ttlMs > 0L) state.setTimeoutDuration(ttlMs)
-      docs.iterator.map(d => Hit(d, key._1, anchor))
-    }
+  /** The per-(band, bucket) anchor fold: emit every doc with the
+    * bucket's anchor (smallest id seen so far, including this batch),
+    * armed at the bucket's max event time (`tsUs` of each row). One fold
+    * serves both row shapes; [[BandRow]] carries no event time, and only
+    * an event-time TTL reads it. */
+  private def fold[V](docId: V => Long, tsUs: V => Long)
+      : KeyedState.Fold[(Int, Long), V, Anchor, Hit] = { (key, it, prev) =>
+    val rows = it.toVector
+    val anchor = (prev.map(_.min_id) ++ rows.map(docId)).min
+    (Some(Anchor(anchor)), rows.iterator.map(r => Hit(docId(r), key._1, anchor)),
+      rows.iterator.map(tsUs).max)
   }
 
-  /** [[hitsFn]] on event-time-stamped rows: same anchor fold, timeout
-    * armed at (bucket's max event time + horizon) instead of a
-    * wall-clock duration. */
-  private[graft] def hitsTsFn(eventTtlMs: Long)(
-      key: (Int, Long), it: Iterator[TsBandRow],
-      state: GroupState[Anchor]): Iterator[Hit] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val rows = it.toArray
-      val anchor = math.min(
-        state.getOption.map(_.min_id).getOrElse(Long.MaxValue),
-        rows.iterator.map(_.doc_id).min)
-      state.update(Anchor(anchor))
-      StateTtl.arm(state, 0L, eventTtlMs, rows.iterator.map(_.ts_us).max)
-      rows.iterator.map(r => Hit(r.doc_id, key._1, anchor))
-    }
-  }
+  private val bandFold = fold[BandRow](_.doc_id, _ => 0L)
+  private val tsBandFold = fold[TsBandRow](_.doc_id, _.ts_us)
+
+  /** The state functions of [[bucketHits]] and [[bucketHitsEventTtl]],
+    * named so StreamingSpec can drive them through TestGroupState
+    * (timeout paths are untestable through a real stream without clock
+    * control). */
+  private[graft] def stateFn(ttl: Ttl) = KeyedState.fn(ttl)(bandFold)
+  private[graft] def tsStateFn(ttl: Ttl) = KeyedState.fn(ttl)(tsBandFold)
 
   /** Event-time-TTL'd [[bucketHits]]: callers declare the watermark on
     * the ingest timestamp upstream (`withWatermark`), and bucket state
     * is evicted when that watermark passes the bucket's last activity
     * plus `eventTtlMs`. */
   def bucketHitsEventTtl(rows: Dataset[TsBandRow],
-                         eventTtlMs: Long): Dataset[Hit] = {
-    require(eventTtlMs > 0L, "eventTtlMs must be positive")
-    implicit val inEnc = Encoders.product[TsBandRow]
-    implicit val stEnc = Encoders.product[Anchor]
-    implicit val outEnc = Encoders.product[Hit]
-    implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
-    rows.groupByKey(r => (r.band, r.bucket))
-      .flatMapGroupsWithState[Anchor, Hit](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        hitsTsFn(eventTtlMs))
-  }
+                         eventTtlMs: Long): Dataset[Hit] =
+    KeyedState.run(rows, (r: TsBandRow) => (r.band, r.bucket),
+      Ttl.EventTime(eventTtlMs))(tsBandFold)
 
   /** Per (band, bucket): emit every doc with the bucket's anchor
-    * (smallest id seen so far, including this batch). */
-  def bucketHits(rows: Dataset[BandRow], ttlMs: Long = 0L): Dataset[Hit] = {
-    implicit val inEnc = Encoders.product[BandRow]
-    implicit val stEnc = Encoders.product[Anchor]
-    implicit val outEnc = Encoders.product[Hit]
-    implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
-    val timeout = if (ttlMs > 0L) GroupStateTimeout.ProcessingTimeTimeout
-                  else GroupStateTimeout.NoTimeout
-    rows.groupByKey(r => (r.band, r.bucket))
-      .flatMapGroupsWithState[Anchor, Hit](
-        OutputMode.Append, timeout)(hitsFn(ttlMs))
-  }
+    * (smallest id seen so far, including this batch); `ttlMs > 0` is a
+    * processing-time TTL. */
+  def bucketHits(rows: Dataset[BandRow], ttlMs: Long = 0L): Dataset[Hit] =
+    KeyedState.run(rows, (r: BandRow) => (r.band, r.bucket),
+      if (ttlMs > 0L) Ttl.ProcessingTime(ttlMs) else Ttl.Off)(bandFold)
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Per-user token-bucket rate limiter (cap 5 tokens, refill 1 per 100 s,
   * cost 1 per event) as a keyed state machine — the streaming twin of the
@@ -9,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, OutputMode}
   * refilled = min(cap, tok + Δus div 10^8); admit = refilled ≥ 1;
   * tok' = refilled − admit.
   *
-  * flatMapGroupsWithState so the SAME operator runs in batch (state
+  * [[KeyedState]] so the SAME operator runs in batch (state
   * invoked once per group — the graded, oracle-backed path) and in
   * Structured Streaming (bucket carried across micro-batches —
   * StreamingSpec). State is TWO longs per user: O(users) memory, shuffle
@@ -17,17 +16,17 @@ import org.apache.spark.sql.streaming.{GroupState, OutputMode}
   * late-arriving streamed event clamps its refill at 0 rather than
   * minting tokens from the past.
   *
-  * `ttlMs > 0` evicts users idle longer than the TTL
-  * (ProcessingTimeTimeout); an evicted user's next event sees a FULL
-  * bucket. Uniquely among the stateful ops this can be LOSSLESS: a
-  * bucket idle ≥ Cap·RefillUs/1000 ms refills to the cap anyway, so any
-  * TTL ≥ Cap·(RefillUs/1000) = 500 s yields decisions IDENTICAL to the
-  * unbounded run whenever processing time tracks event time (the
-  * steady-state of a live limiter). Shorter TTLs under-limit only
+  * `Ttl.ProcessingTime` evicts users idle longer than the TTL; an
+  * evicted user's next event sees a FULL bucket. Uniquely among the
+  * stateful ops this can be LOSSLESS: a bucket idle ≥ Cap·RefillUs/1000
+  * ms refills to the cap anyway, so any TTL ≥ Cap·(RefillUs/1000) =
+  * 500 s yields decisions IDENTICAL to the unbounded run whenever
+  * processing time tracks event time (the steady-state of a live
+  * limiter). Shorter TTLs under-limit only
   * (admit where the unbounded run would deny) — never over-deny.
-  * ttlMs = 0 (the graded batch path) keeps state forever.
-  * `eventTtlMs > 0` (r13): the same eviction on the EVENT-TIME clock
-  * ([[StateTtl]]) — and here the lossless bound becomes UNCONDITIONAL:
+  * `Ttl.Off` (the graded batch path) keeps state forever.
+  * `Ttl.EventTime` (r13): the same eviction on the EVENT-TIME clock
+  * ([[Ttl]]) — and here the lossless bound becomes UNCONDITIONAL:
   * any horizon ≥ Cap·RefillUs/1000 ms is exactly lossless by the
   * refill arithmetic itself (an evicted bucket would have refilled to
   * the cap by the time of the event that would next read it), with no
@@ -43,12 +42,11 @@ object RateLimit {
   val Cap = 5L
   val RefillUs = 100000000L // one token per 100 s
 
-  private[graft] def decideFn(ttlMs: Long, eventTtlMs: Long = 0L)(
-      user: Long, it: Iterator[Ev],
-      state: GroupState[Bucket]): Iterator[Decision] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      var st: Option[Bucket] = state.getOption
+  /** The token-bucket recurrence over the user's events in (ts, event_id)
+    * order; the bucket is armed at its last refill time. */
+  private val fold: KeyedState.Fold[Long, Ev, Bucket, Decision] = {
+    (user, it, prev) =>
+      var st: Option[Bucket] = prev
       val out = scala.collection.mutable.ArrayBuffer.empty[Decision]
       // (ts, event_id) is the recursive CTE's total order — batch
       // results are deterministic regardless of arrival order
@@ -63,23 +61,11 @@ object RateLimit {
         out += Decision(user, e.event_id, admit, tok)
         st = Some(Bucket(tok, e.ts_us))
       }
-      st.foreach { b =>
-        state.update(b)
-        StateTtl.arm(state, ttlMs, eventTtlMs, b.last_us)
-      }
-      out.iterator
-    }
+      (st, out.iterator, st.fold(0L)(_.last_us))
   }
 
-  def decide(evs: Dataset[Ev], ttlMs: Long = 0L,
-             eventTtlMs: Long = 0L): Dataset[Decision] = {
-    implicit val inEnc = Encoders.product[Ev]
-    implicit val stEnc = Encoders.product[Bucket]
-    implicit val outEnc = Encoders.product[Decision]
-    implicit val keyEnc = Encoders.scalaLong
-    evs.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Bucket, Decision](
-        OutputMode.Append, StateTtl.conf(ttlMs, eventTtlMs))(
-        decideFn(ttlMs, eventTtlMs))
-  }
+  private[graft] def stateFn(ttl: Ttl) = KeyedState.fn(ttl)(fold)
+
+  def decide(evs: Dataset[Ev], ttl: Ttl = Ttl.Off): Dataset[Decision] =
+    KeyedState.run(evs, (e: Ev) => e.user_id, ttl)(fold)
 }

@@ -172,4 +172,13 @@ class ExtensionsSpec extends SparkSpec {
     assert(matches("src/main/scala/graft/engine", floor).keySet ==
       Set("src/main/scala/graft/engine/Det.scala"))
   }
+
+  test("one keyed-state path: timeout handling and flatMapGroupsWithState " +
+    "are written only in streaming/KeyedState") {
+    val keyed = "src/main/scala/graft/streaming/KeyedState.scala"
+    Seq("hasTimedOut", "GroupStateTimeout\\.", "setTimeoutDuration",
+        "setTimeoutTimestamp", "flatMapGroupsWithState").foreach { name =>
+      assert(matches("src/main", name.r).keySet == Set(keyed), name)
+    }
+  }
 }

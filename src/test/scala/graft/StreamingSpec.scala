@@ -60,7 +60,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("cdc upsert resolves last-writer-wins by event time across micro-batches") {
-    import graft.streaming.CdcUpsert
+    import graft.streaming.{CdcUpsert, Ttl}
     import graft.streaming.CdcUpsert.{Op, Upsert}
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Op]
@@ -306,43 +306,53 @@ class StreamingSpec extends SparkSpec {
       1000L, Optional.empty(), true)
     import graft.streaming._
     val s1 = timedOut(NearDedup.Anchor(7L))
-    assert(NearDedup.hitsFn(60000L)((0, 1L), Iterator.empty, s1).isEmpty)
+    assert(NearDedup.stateFn(Ttl.ProcessingTime(60000L))((0, 1L), Iterator.empty, s1).isEmpty)
     assert(s1.isRemoved, "near-dedup anchor not evicted on timeout")
     val s2 = timedOut(CdcUpsert.Winner(1L, 1L, 1L, del = false))
-    assert(CdcUpsert.upsertFn(60000L)(1L, Iterator.empty, s2).isEmpty)
+    assert(CdcUpsert.stateFn(Ttl.ProcessingTime(60000L))(1L, Iterator.empty, s2).isEmpty)
     assert(s2.isRemoved)
     val s3 = timedOut(Crossings.PrevState(50L))
-    assert(Crossings.crossFn(100L, 60000L)(1L, Iterator.empty, s3).isEmpty)
+    assert(Crossings.stateFn(100L, Ttl.ProcessingTime(60000L))(1L, Iterator.empty, s3).isEmpty)
     assert(s3.isRemoved)
     val s4 = timedOut(Funnel.FunnelState(Some(10L), emitted = false))
-    assert(Funnel.funnelFn(60000L)(1L, Iterator.empty, s4).isEmpty)
+    assert(Funnel.stateFn(Ttl.ProcessingTime(60000L))(1L, Iterator.empty, s4).isEmpty)
     assert(s4.isRemoved)
     val s5 = timedOut(RateLimit.Bucket(3L, 100L))
-    assert(RateLimit.decideFn(60000L)(1L, Iterator.empty, s5).isEmpty)
+    assert(RateLimit.stateFn(Ttl.ProcessingTime(60000L))(1L, Iterator.empty, s5).isEmpty)
     assert(s5.isRemoved)
   }
 
   test("TTL: a live update arms the processing-time timeout; ttl=0 does not") {
     import org.apache.spark.api.java.Optional
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    import graft.streaming.NearDedup
+    import graft.streaming.{NearDedup, Ttl}
     val armed = TestGroupState.create[NearDedup.Anchor](
       Optional.empty(), GroupStateTimeout.ProcessingTimeTimeout,
       5000L, Optional.empty(), false)
-    val hits = NearDedup.hitsFn(60000L)((0, 1L),
+    val hits = NearDedup.stateFn(Ttl.ProcessingTime(60000L))((0, 1L),
       Iterator(NearDedup.BandRow(42L, 0, 1L)), armed).toSeq
     assert(hits == Seq(NearDedup.Hit(42L, 0, 42L)))
     assert(armed.getTimeoutTimestampMs.get() == 65000L,
       "timeout must arm at batchProcessingTime + ttl")
-    // ttl=0 routes through NoTimeout and must never call setTimeoutDuration
+    // Ttl.Off routes through NoTimeout and must never call setTimeoutDuration
     // (which would throw under NoTimeout) — the graded batch path
     val plain = TestGroupState.create[NearDedup.Anchor](
       Optional.empty(), GroupStateTimeout.NoTimeout,
       5000L, Optional.empty(), false)
-    val hits0 = NearDedup.hitsFn(0L)((0, 1L),
+    val hits0 = NearDedup.stateFn(Ttl.Off)((0, 1L),
       Iterator(NearDedup.BandRow(42L, 0, 1L)), plain).toSeq
     assert(hits0 == Seq(NearDedup.Hit(42L, 0, 42L)))
     assert(!plain.getTimeoutTimestampMs.isPresent)
+  }
+
+  test("TTL: a non-positive Ttl duration is rejected when built, naming it") {
+    import graft.streaming.Ttl
+    val zero = intercept[IllegalArgumentException](Ttl.ProcessingTime(0L))
+    assert(zero.getMessage.contains("Ttl.ProcessingTime") &&
+      zero.getMessage.contains("got 0 ms"), zero.getMessage)
+    val negative = intercept[IllegalArgumentException](Ttl.EventTime(-1L))
+    assert(negative.getMessage.contains("Ttl.EventTime") &&
+      negative.getMessage.contains("got -1 ms"), negative.getMessage)
   }
 
   // A ProcessingTimeTimeout query NEVER reaches noNewData (the state op
@@ -430,37 +440,37 @@ class StreamingSpec extends SparkSpec {
     val h = 60000L // horizon
     // max event time 7 s → timeout at 7 000 + 60 000 = 67 000 ms
     val s1 = st[CdcUpsert.Winner](5000L)
-    CdcUpsert.upsertFn(0L, h)(1L,
+    CdcUpsert.stateFn(Ttl.EventTime(h))(1L,
       Iterator(CdcUpsert.Op(1L, 7000000L, 1L, 100L, del = false)), s1)
     assert(s1.getTimeoutTimestampMs.get() == 67000L)
     val s2 = st[Crossings.PrevState](5000L)
-    Crossings.crossFn(100L, 0L, h)(1L,
+    Crossings.stateFn(100L, Ttl.EventTime(h))(1L,
       Iterator(Crossings.Sample(1L, 7000000L, 1L, 50L)), s2)
     assert(s2.getTimeoutTimestampMs.get() == 67000L)
     val s3 = st[Funnel.FunnelState](5000L)
-    Funnel.funnelFn(0L, h)(1L,
+    Funnel.stateFn(Ttl.EventTime(h))(1L,
       Iterator(Funnel.Ev(1L, 7000000L, "signup")), s3)
     assert(s3.getTimeoutTimestampMs.get() == 67000L)
     val s4 = st[RateLimit.Bucket](5000L)
-    RateLimit.decideFn(0L, h)(1L,
+    RateLimit.stateFn(Ttl.EventTime(h))(1L,
       Iterator(RateLimit.Ev(1L, 7000000L, 1L)), s4)
     assert(s4.getTimeoutTimestampMs.get() == 67000L)
     val s5 = st[NearDedup.Anchor](5000L)
-    NearDedup.hitsTsFn(h)((0, 1L),
+    NearDedup.tsStateFn(Ttl.EventTime(h))((0, 1L),
       Iterator(NearDedup.TsBandRow(42L, 0, 1L, 7000000L)), s5)
     assert(s5.getTimeoutTimestampMs.get() == 67000L)
     // a key whose whole horizon is already behind the watermark cannot
     // arm in the past (Spark rejects that) — it clamps to wm + 1 and is
     // swept at the next timeout batch
     val s6 = st[CdcUpsert.Winner](500000L)
-    CdcUpsert.upsertFn(0L, h)(1L,
+    CdcUpsert.stateFn(Ttl.EventTime(h))(1L,
       Iterator(CdcUpsert.Op(1L, 7000000L, 1L, 100L, del = false)), s6)
     assert(s6.getTimeoutTimestampMs.get() == 500001L)
     // and the timed-out path still evicts
     val s7 = TestGroupState.create[NearDedup.Anchor](
       Optional.of(NearDedup.Anchor(7L)), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(999999L), true)
-    assert(NearDedup.hitsTsFn(h)((0, 1L), Iterator.empty, s7).isEmpty)
+    assert(NearDedup.tsStateFn(Ttl.EventTime(h))((0, 1L), Iterator.empty, s7).isEmpty)
     assert(s7.isRemoved)
   }
 
@@ -505,7 +515,7 @@ class StreamingSpec extends SparkSpec {
 
   test("event-time TTL parity: within the horizon the CDC upsert equals " +
     "the unbounded run; a stale op past it is DROPPED, never re-wins (r13)") {
-    import graft.streaming.CdcUpsert
+    import graft.streaming.{CdcUpsert, Ttl}
     import graft.streaming.CdcUpsert.{Op, Upsert}
     implicit val sqlCtx = spark.sqlContext
     def us(sec: Long) = sec * 1000000L
@@ -515,7 +525,7 @@ class StreamingSpec extends SparkSpec {
         .withColumn("ts", timestamp_micros(col("ts_us")))
         .withWatermark("ts", "0 seconds")
         .as[Op]
-      val q = CdcUpsert.upserts(src, eventTtlMs = horizonMs)
+      val q = CdcUpsert.upserts(src, Ttl.EventTime(horizonMs))
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
