@@ -180,7 +180,6 @@ object ScaleStress100 {
     {
       implicit val sqlCtx = spark.sqlContext
       val keys = sys.env.getOrElse("SPARK_GRAFT_STRESS5_KEYS", "150000").toInt
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
       def stateRowsOf(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
         Option(q.lastProgress).flatMap(_.stateOperators.headOption)
           .map(_.numRowsTotal).getOrElse(-1L)
@@ -209,17 +208,19 @@ object ScaleStress100 {
         val expected = evs.map(e => (e.user_id, e.event_type)).toSet.size.toLong
         val in = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[graft.streaming.TwsCounts.Ev]
-        val q = graft.streaming.TwsCounts.counts(in.toDS())
-          .writeStream.format("memory").queryName("stress5_counts")
-          .outputMode("append").start()
-        try {
-          evs.grouped(evs.length / 4 + 1)
-            .foreach { b => in.addData(b: _*); q.processAllAvailable() }
-          val got = awaitStateAtMost(q, expected)
-          require(got == expected,
-            s"MapState rows $got != distinct pairs $expected")
-          s"state=$got pairs=$expected rows=${evs.length}"
-        } finally { q.stop(); spark.conf.unset(provKey) }
+        graft.engine.Confs.withConfs(spark)(graft.streaming.Streams.rocksDbStore) {
+          val q = graft.streaming.TwsCounts.counts(in.toDS())
+            .writeStream.format("memory").queryName("stress5_counts")
+            .outputMode("append").start()
+          try {
+            evs.grouped(evs.length / 4 + 1)
+              .foreach { b => in.addData(b: _*); q.processAllAvailable() }
+            val got = awaitStateAtMost(q, expected)
+            require(got == expected,
+              s"MapState rows $got != distinct pairs $expected")
+            s"state=$got pairs=$expected rows=${evs.length}"
+          } finally q.stop()
+        }
       }
 
       // (b) batch-seeded initial state: every key seeded, half streamed.
@@ -232,17 +233,19 @@ object ScaleStress100 {
           graft.streaming.TwsSeeded.Ev((i * 2).toLong, 100L))
         val in = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[graft.streaming.TwsSeeded.Ev]
-        val q = graft.streaming.TwsSeeded.totals(in.toDS(), seeds)
-          .writeStream.format("memory").queryName("stress5_seeded")
-          .outputMode("append").start()
-        try {
-          evs.grouped(evs.length / 2 + 1)
-            .foreach { b => in.addData(b: _*); q.processAllAvailable() }
-          val got = awaitStateAtMost(q, keys.toLong)
-          require(got == keys.toLong,
-            s"seeded state rows $got != seeded users $keys")
-          s"state=$got seeds=$keys streamed=${evs.length}"
-        } finally { q.stop(); spark.conf.unset(provKey) }
+        graft.engine.Confs.withConfs(spark)(graft.streaming.Streams.rocksDbStore) {
+          val q = graft.streaming.TwsSeeded.totals(in.toDS(), seeds)
+            .writeStream.format("memory").queryName("stress5_seeded")
+            .outputMode("append").start()
+          try {
+            evs.grouped(evs.length / 2 + 1)
+              .foreach { b => in.addData(b: _*); q.processAllAvailable() }
+            val got = awaitStateAtMost(q, keys.toLong)
+            require(got == keys.toLong,
+              s"seeded state rows $got != seeded users $keys")
+            s"state=$got seeds=$keys streamed=${evs.length}"
+          } finally q.stop()
+        }
       }
 
       // (c) tws interval join: 3 epochs far apart (each key gets one
@@ -267,21 +270,23 @@ object ScaleStress100 {
           .withColumn("ts", timestamp_micros(col("ts_us")))
           .withWatermark("ts", "0 seconds")
           .as[Tagged]
-        val q = graft.streaming.TwsIntervalJoin.pairs(src, us(600))
-          .writeStream.format("memory").queryName("stress5_ij")
-          .outputMode("append").start()
-        try {
-          (0 until 3).foreach { b => in.addData(epoch(b): _*); q.processAllAvailable() }
-          val fed = stateRowsOf(q) // still holds the live epoch-2 horizon
-          in.addData(Tagged(1L, us(10000000L), 999999999L, 0))
-          q.processAllAvailable()
-          // sentinel wm sweep: every buffered epoch row is dead; only the
-          // sentinel click (+ its timer row) may survive
-          val got = awaitStateAtMost(q, 4L)
-          require(got <= 4L,
-            s"interval-join state not pruned: $got rows (pre-sweep $fed)")
-          s"pre-sweep=$fed post-sweep=$got"
-        } finally { q.stop(); spark.conf.unset(provKey) }
+        graft.engine.Confs.withConfs(spark)(graft.streaming.Streams.rocksDbStore) {
+          val q = graft.streaming.TwsIntervalJoin.pairs(src, us(600))
+            .writeStream.format("memory").queryName("stress5_ij")
+            .outputMode("append").start()
+          try {
+            (0 until 3).foreach { b => in.addData(epoch(b): _*); q.processAllAvailable() }
+            val fed = stateRowsOf(q) // still holds the live epoch-2 horizon
+            in.addData(Tagged(1L, us(10000000L), 999999999L, 0))
+            q.processAllAvailable()
+            // sentinel wm sweep: every buffered epoch row is dead; only the
+            // sentinel click (+ its timer row) may survive
+            val got = awaitStateAtMost(q, 4L)
+            require(got <= 4L,
+              s"interval-join state not pruned: $got rows (pre-sweep $fed)")
+            s"pre-sweep=$fed post-sweep=$got"
+          } finally q.stop()
+        }
       }
 
       // (d) engine-native stream-stream LEFT OUTER interval join under
@@ -420,28 +425,20 @@ object ScaleStress100 {
           .write.parquet(s"$base/h2")
         val halfSchema = StructType(Seq(StructField("user_id", LongType),
           StructField("event_id", LongType)))
-        graft.streaming.Streams.withTwsConf(spark, partitions = 4) {
-          val q1 = spark.readStream.schema(halfSchema).parquet(s"$base/h1")
-            .groupBy("user_id").agg(count(lit(1)).as("n"))
-            .writeStream.format("memory").queryName("stress6_rescale1")
-            .outputMode("complete")
-            .option("checkpointLocation", s"$base/chk1")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q1.awaitTermination()
-        }
+        graft.streaming.Streams.drain(
+          spark.readStream.schema(halfSchema).parquet(s"$base/h1")
+            .groupBy("user_id").agg(count(lit(1)).as("n")),
+          s"$base/chk1", 4, "complete")(
+          _.format("memory").queryName("stress6_rescale1"))
         val seeds = spark.read.format("statestore").load(s"$base/chk1")
           .select(col("key.user_id").as("user_id"),
             col("value.count").as("cents"))
           .as[TwsSeeded.Seed]
           .cache()
-        val out = graft.streaming.Streams.withTwsConf(spark, partitions = 8) {
-          graft.streaming.Streams.drainToMemory(spark, "stress6_rescale2", {
-            val ev2 = spark.readStream.schema(halfSchema).parquet(s"$base/h2")
-              .select(col("user_id"), lit(1L).as("cents")).as[TwsSeeded.Ev]
-            TwsSeeded.totals(ev2, seeds).toDF()
-          })
-        }
+        val ev2 = spark.readStream.schema(halfSchema).parquet(s"$base/h2")
+          .select(col("user_id"), lit(1L).as("cents")).as[TwsSeeded.Ev]
+        val out = graft.streaming.Streams.toMemory(
+          TwsSeeded.totals(ev2, seeds).toDF(), "stress6_rescale2", 8)
         val last = out.groupBy("user_id").agg(max("lifetime_cents").as("n2"))
         val stitched = seeds.toDF()
           .select(col("user_id"), col("cents").as("n_seed"))

@@ -29,25 +29,18 @@ object Sources extends QueryPack {
   // query's shuffle-partition layout — no replay, no single-node dump.
   q("scan_state_store",
     """SELECT DISTINCT user_id FROM events ORDER BY user_id""") { (s, dir) =>
+    import graft.streaming.Streams
     val tag = math.abs(dir.hashCode).toString
     val chk = s"/tmp/graft_io/state_scan_chk_$tag"
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(chk)).deleteRecursively()
     // state layout sized like every other graded drain (r15: this row ran
     // at the session's 32 state partitions — store init/commit dominated,
     // 13.8 s of task time for a distinct-key drain; 4 partitions is the
     // r13-measured bench layout, real deployments size UP per SCALE.md).
     // The statestore READ below maps one task per state partition either
     // way, and the distinct key set is layout-independent.
-    graft.streaming.Streams.withTwsConf(s, partitions = 4) {
-      val q = graft.streaming.Streams.eventsStream(s, dir)
-        .select("user_id").dropDuplicates("user_id")
-        .writeStream.format("memory").queryName(s"graft_state_scan_$tag")
-        .option("checkpointLocation", chk)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    Streams.drain(Streams.eventsStream(s, dir)
+        .select("user_id").dropDuplicates("user_id"), chk, 4)(
+      _.format("memory").queryName(s"graft_state_scan_$tag"))
     s.read.format("statestore").load(chk)
       .select(col("key.user_id").as("user_id"))
       .orderBy("user_id")

@@ -14,6 +14,9 @@ import org.apache.spark.sql.functions._
 object Streaming extends QueryPack {
   import Det._
 
+  /** Keeps two fixture dirs' drain tables and checkpoints apart. */
+  private def dirTag(dir: String): String = math.abs(dir.hashCode).toString
+
   q("stream_tumbling",
     s"""SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start,
       |  event_type, COUNT(*) AS n,
@@ -88,14 +91,13 @@ object Streaming extends QueryPack {
     // State layout sized to key cardinality (~dozens of hour windows),
     // not the session's 32 — store-init dominates otherwise; bench-
     // layout only, real deployments size partitions UP (SCALE.md).
-    Streams.withTwsConf(s, partitions = 4) {
-      Streams.runToMemory(s, dir, "graft_watermark", "complete") { ev =>
-        ev.withWatermark("ts", "10 minutes")
-          .groupBy(window(col("ts"), "1 hour"))
-          .agg(count(lit(1)).as("n"))
-          .select(unix_timestamp(col("window.start")).as("window_start"), col("n"))
-      }
-    }.orderBy("window_start")
+    Streams.toMemory(Streams.eventsStream(s, dir)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "1 hour"))
+        .agg(count(lit(1)).as("n"))
+        .select(unix_timestamp(col("window.start")).as("window_start"), col("n")),
+      "graft_watermark", 4, "complete", chkTag = dirTag(dir))
+      .orderBy("window_start")
   }
 
   // Windowed heavy hitters on the live stream: per 6-hour tumbling
@@ -121,14 +123,12 @@ object Streaming extends QueryPack {
       |ORDER BY window_start, rn""") { (s, dir) =>
     // |windows|×|types| keys — a 4-partition state layout (store-init
     // is the 32-partition cost, not data; bench-layout only)
-    val counts = Streams.withTwsConf(s, partitions = 4) {
-      Streams.runToMemory(s, dir, "graft_topk_window", "complete") { ev =>
-        ev.groupBy(window(col("ts"), "6 hours"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .select(unix_timestamp(col("window.start")).as("window_start"),
-            col("event_type"), col("n"))
-      }
-    }
+    val counts = Streams.toMemory(Streams.eventsStream(s, dir)
+        .groupBy(window(col("ts"), "6 hours"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(unix_timestamp(col("window.start")).as("window_start"),
+          col("event_type"), col("n")),
+      "graft_topk_window", 4, "complete", chkTag = dirTag(dir))
     val w = Window.partitionBy("window_start")
       .orderBy(col("n").desc, col("event_type"))
     counts.withColumn("rn", row_number().over(w))
@@ -155,16 +155,15 @@ object Streaming extends QueryPack {
     // dedup state is one entry per (user, type, minute) — tens of
     // thousands at sf0.1, comfortably 8 state partitions' worth; the
     // session's 32 made store-init the dominant cost (bench-layout only)
-    Streams.withTwsConf(s, partitions = 8) {
-      Streams.runToMemory(s, dir, "graft_dedup_wm") { ev =>
-        ev.withWatermark("ts", "10 minutes")
-          .select(col("user_id"), col("event_type"),
-            date_trunc("minute", col("ts")).as("minute"), col("ts"))
-          .dropDuplicatesWithinWatermark("user_id", "event_type", "minute")
-          .select(col("user_id"), col("event_type"),
-            unix_micros(col("minute")).as("minute_us"))
-      }
-    }.orderBy("user_id", "event_type", "minute_us")
+    Streams.toMemory(Streams.eventsStream(s, dir)
+        .withWatermark("ts", "10 minutes")
+        .select(col("user_id"), col("event_type"),
+          date_trunc("minute", col("ts")).as("minute"), col("ts"))
+        .dropDuplicatesWithinWatermark("user_id", "event_type", "minute")
+        .select(col("user_id"), col("event_type"),
+          unix_micros(col("minute")).as("minute_us")),
+      "graft_dedup_wm", 8, chkTag = dirTag(dir))
+      .orderBy("user_id", "event_type", "minute_us")
   }
 
   q("stream_dedup",
@@ -223,13 +222,12 @@ object Streaming extends QueryPack {
     // segment×type ≈ 30 group keys → 4-partition state layout (the
     // broadcast join itself is stateless; only the complete-mode agg
     // holds state). Bench-layout only.
-    Streams.withTwsConf(s, partitions = 4) {
-      Streams.runToMemory(s, dir, "graft_static_join", "complete") { ev =>
-        ev.join(broadcast(dim), col("user_id") === col("c_custkey"))
-          .groupBy(col("c_mktsegment"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-      }
-    }.orderBy("c_mktsegment", "event_type")
+    Streams.toMemory(Streams.eventsStream(s, dir)
+        .join(broadcast(dim), col("user_id") === col("c_custkey"))
+        .groupBy(col("c_mktsegment"), col("event_type"))
+        .agg(count(lit(1)).as("n")),
+      "graft_static_join", 4, "complete", chkTag = dirTag(dir))
+      .orderBy("c_mktsegment", "event_type")
   }
 
   // MapState per-user type counters (TwsCounts): the remaining State API
@@ -238,33 +236,30 @@ object Streaming extends QueryPack {
   // user's whole profile blob — why MapState exists instead of
   // ValueState[Map]). Graded through a real AvailableNow drain: the
   // one-batch emission IS the exact (user, type) group-by; multi-batch
-  // last-emission parity is StreamingSpec's pin. RocksDB conf
-  // snapshot/restored as in stream_interval_join_tws.
+  // last-emission parity is StreamingSpec's pin. The drain runs on the
+  // RocksDB store the API requires, as in stream_interval_join_tws.
   q("stream_tws_mapstate_counts",
     """SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n
       |FROM events GROUP BY user_id, event_type
       |ORDER BY user_id, event_type""") { (s, dir) =>
     import s.implicits._
     import graft.streaming.TwsCounts
+    val ev = Streams.eventsStream(s, dir)
+      .select(col("user_id"), col("event_type"))
+      .as[TwsCounts.Ev]
     // 4-partition state layout (one RocksDB store per partition; key
     // cardinality is user×type — store-init dominated at 8+)
-    Streams.withTwsConf(s, partitions = 4) {
-      Streams.drainToMemory(s, s"graft_tws_counts_${math.abs(dir.hashCode)}", {
-        val ev = Streams.eventsStream(s, dir)
-          .select(col("user_id"), col("event_type"))
-          .as[TwsCounts.Ev]
-        TwsCounts.counts(ev).toDF()
-      })
-        // last-emission reduction (r13 review): counts only grow, so the
-        // final figure per (user, type) is the MAX across emissions —
-        // under the current single-file/single-batch drain this is the
-        // identity, and if the fixture ever splits into multiple batches
-        // the per-batch running totals still reduce to the same graded
-        // rows instead of duplicating them
-        .groupBy("user_id", "event_type")
-        .agg(max("n").as("n"))
-        .orderBy("user_id", "event_type")
-    }
+    Streams.toMemory(TwsCounts.counts(ev).toDF(),
+        s"graft_tws_counts_${dirTag(dir)}", 4)
+      // last-emission reduction (r13 review): counts only grow, so the
+      // final figure per (user, type) is the MAX across emissions —
+      // under the current single-file/single-batch drain this is the
+      // identity, and if the fixture ever splits into multiple batches
+      // the per-batch running totals still reduce to the same graded
+      // rows instead of duplicating them
+      .groupBy("user_id", "event_type")
+      .agg(max("n").as("n"))
+      .orderBy("user_id", "event_type")
   }
 
   // Batch-seeded streaming state (TwsSeeded): per-user lifetime spend =
@@ -291,29 +286,26 @@ object Streaming extends QueryPack {
       |ORDER BY ev.user_id""") { (s, dir) =>
     import s.implicits._
     import graft.streaming.TwsSeeded
-    // stays at the 8-partition default: unlike the pure-drain siblings,
-    // this query shuffles the FULL orders seed aggregate through the
+    // 8 state partitions, not the pure-drain siblings' 4: this query
+    // shuffles the FULL orders seed aggregate through the
     // state layout, so halving partitions halves seed parallelism —
     // measured 1.83 s at 8 vs 2.29 s at 4 (r14)
-    Streams.withTwsConf(s) {
-      val seeds = Tables(s, dir, "orders")
-        .groupBy(col("o_custkey").as("user_id"))
-        .agg(sum(cents(col("o_totalprice"))).cast("long").as("cents"))
-        .as[TwsSeeded.Seed]
-      Streams.drainToMemory(s, s"graft_tws_seed_${math.abs(dir.hashCode)}", {
-        val ev = Streams.eventsStream(s, dir)
-          .select(col("user_id"), cents(col("value")).cast("long").as("cents"))
-          .as[TwsSeeded.Ev]
-        TwsSeeded.totals(ev, seeds).toDF()
-      })
-        // last-emission reduction (r13 review): event cents are
-        // non-negative fixture-wide, so the running total is monotone and
-        // MAX = the final lifetime figure even if the drain ever splits
-        // into multiple batches (identity under the current one-batch run)
-        .groupBy("user_id")
-        .agg(max("lifetime_cents").as("lifetime_cents"))
-        .orderBy("user_id")
-    }
+    val seeds = Tables(s, dir, "orders")
+      .groupBy(col("o_custkey").as("user_id"))
+      .agg(sum(cents(col("o_totalprice"))).cast("long").as("cents"))
+      .as[TwsSeeded.Seed]
+    val ev = Streams.eventsStream(s, dir)
+      .select(col("user_id"), cents(col("value")).cast("long").as("cents"))
+      .as[TwsSeeded.Ev]
+    Streams.toMemory(TwsSeeded.totals(ev, seeds).toDF(),
+        s"graft_tws_seed_${dirTag(dir)}", 8)
+      // last-emission reduction (r13 review): event cents are
+      // non-negative fixture-wide, so the running total is monotone and
+      // MAX = the final lifetime figure even if the drain ever splits
+      // into multiple batches (identity under the current one-batch run)
+      .groupBy("user_id")
+      .agg(max("lifetime_cents").as("lifetime_cents"))
+      .orderBy("user_id")
   }
 
   // cohort retention: users cohorted by first-activity week, retention =
@@ -836,14 +828,12 @@ object Streaming extends QueryPack {
     // stream-stream join opens FOUR state stores per partition, so the
     // r13 bench saw 32×4 store inits dominate (7.9 s → 2.2–2.8 s at 4
     // partitions, measured); output is layout-independent
-    Streams.withTwsConf(s, partitions = 4) {
-      Streams.drainToMemory(s,
-        s"graft_louter_${math.abs(dir.hashCode)}", joined.select(
-          col("user_id"), col("c_id").as("click_id"),
-          unix_micros(col("c_ts")).as("click_us"),
-          col("p_id").as("purchase_id"),
-          unix_micros(col("p_ts")).as("purchase_us")))
-    }
+    Streams.toMemory(joined.select(
+        col("user_id"), col("c_id").as("click_id"),
+        unix_micros(col("c_ts")).as("click_us"),
+        col("p_id").as("purchase_id"),
+        unix_micros(col("p_ts")).as("purchase_us")),
+      s"graft_louter_${dirTag(dir)}", 4)
       .orderBy(col("user_id"), col("click_id"),
         col("purchase_id").asc_nulls_first)
   }
@@ -908,15 +898,13 @@ object Streaming extends QueryPack {
       "full_outer")
     // 4-partition state layout, as in the left join above (4 stores per
     // partition; the session's 32 made store-init the whole runtime)
-    Streams.withTwsConf(s, partitions = 4) {
-      Streams.drainToMemory(s,
-        s"graft_fouter_${math.abs(dir.hashCode)}", joined.select(
-          coalesce(col("user_id"), col("p_uid")).as("user_id"),
-          col("c_id").as("click_id"),
-          unix_micros(col("c_ts")).as("click_us"),
-          col("p_id").as("purchase_id"),
-          unix_micros(col("p_ts")).as("purchase_us")))
-    }
+    Streams.toMemory(joined.select(
+        coalesce(col("user_id"), col("p_uid")).as("user_id"),
+        col("c_id").as("click_id"),
+        unix_micros(col("c_ts")).as("click_us"),
+        col("p_id").as("purchase_id"),
+        unix_micros(col("p_ts")).as("purchase_us")),
+      s"graft_fouter_${dirTag(dir)}", 4)
       .orderBy(col("user_id"), col("click_id").asc_nulls_first,
         col("purchase_id").asc_nulls_first)
   }
@@ -932,9 +920,9 @@ object Streaming extends QueryPack {
   // per-side TTL policies). Scale: state is O(rows within one window
   // horizon) per key — the same bound the native join keeps, here
   // enforced by the pruning timer (StreamingSpec pins eviction and
-  // one-batch == multi-batch pair parity). The RocksDB provider conf the
-  // API requires is snapshot/restored around the drain so later queries
-  // in the session keep the default store.
+  // one-batch == multi-batch pair parity). Streams.drain runs it on the
+  // RocksDB store the API requires (it sees transformWithState in the
+  // plan) and leaves the session's own store in place afterwards.
   q("stream_interval_join_tws",
     """SELECT c.user_id,
       |  CAST(c.event_id AS BIGINT) AS click_id,
@@ -951,18 +939,16 @@ object Streaming extends QueryPack {
     // 4-partition state layout (two ListState buffers + timers per
     // partition; measured 4.32 s at 32 → 2.48 s at 8 → the remaining
     // init cost is per-store, so 4 halves it again; bench-layout only)
-    Streams.withTwsConf(s, partitions = 4) {
-      Streams.drainToMemory(s, s"graft_tws_ij_${math.abs(dir.hashCode)}", {
-        val ev = Streams.eventsStream(s, dir)
-          .filter(col("event_type").isin("click", "purchase"))
-          .withWatermark("ts", "0 seconds")
-          .select(col("ts"), col("user_id"),
-            unix_micros(col("ts")).as("ts_us"), col("event_id"),
-            when(col("event_type") === "click", 0).otherwise(1).as("side"))
-          .as[TwsIntervalJoin.Tagged]
-        TwsIntervalJoin.pairs(ev, windowUs = 600000000L).toDF()
-      }).orderBy("user_id", "click_id", "purchase_id")
-    }
+    val ev = Streams.eventsStream(s, dir)
+      .filter(col("event_type").isin("click", "purchase"))
+      .withWatermark("ts", "0 seconds")
+      .select(col("ts"), col("user_id"),
+        unix_micros(col("ts")).as("ts_us"), col("event_id"),
+        when(col("event_type") === "click", 0).otherwise(1).as("side"))
+      .as[TwsIntervalJoin.Tagged]
+    Streams.toMemory(TwsIntervalJoin.pairs(ev, windowUs = 600000000L).toDF(),
+        s"graft_tws_ij_${dirTag(dir)}", 4)
+      .orderBy("user_id", "click_id", "purchase_id")
   }
 
   // real readStream → parquet sink with checkpoint, then re-read: the
@@ -1076,7 +1062,13 @@ object Streaming extends QueryPack {
       |FROM events
       |GROUP BY event_type
       |ORDER BY event_type""") { (s, dir) =>
-    Streams.sinkParquet(s, dir)
+    val tag = dirTag(dir)
+    val out = s"/tmp/graft_io/stream_sink_$tag"
+    new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
+    Streams.drain(Streams.eventsStream(s, dir), s"/tmp/graft_io/stream_chk_$tag",
+      s.conf.get("spark.sql.shuffle.partitions").toInt)(
+      _.format("parquet").option("path", out))
+    Tables.parquet(s, out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"))
       .orderBy("event_type")
@@ -1099,22 +1091,16 @@ object Streaming extends QueryPack {
       |FROM events GROUP BY user_id
       |ORDER BY user_id""") { (s, dir) =>
     import graft.streaming.UpsertSink
-    val tag = math.abs(dir.hashCode).toString
+    val tag = dirTag(dir)
     val tbl = s"/tmp/graft_io/upsert_tbl_$tag"
-    val chk = s"/tmp/graft_io/upsert_chk_$tag"
     UpsertSink.reset(tbl)
-    import scala.reflect.io.Directory
-    new Directory(new java.io.File(chk)).deleteRecursively()
-    val q = Streams.eventsStream(s, dir)
-      .select(col("user_id"), cents(col("value")).cast("long").as("c"))
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+    Streams.drain(Streams.eventsStream(s, dir)
+        .select(col("user_id"), cents(col("value")).cast("long").as("c")),
+      s"/tmp/graft_io/upsert_chk_$tag",
+      s.conf.get("spark.sql.shuffle.partitions").toInt)(
+      _.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
         UpsertSink.merge(b, tbl, id); ()
-      }
-      .option("checkpointLocation", chk)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     UpsertSink.read(s, tbl)
       .select(col("user_id"), col("n_events"), col("cents"))
       .orderBy("user_id")
@@ -1139,7 +1125,7 @@ object Streaming extends QueryPack {
     import s.implicits._
     import graft.streaming.TwsSeeded
     import org.apache.spark.sql.types._
-    val tag = math.abs(dir.hashCode).toString
+    val tag = dirTag(dir)
     val base = s"/tmp/graft_io/rescale_$tag"
     import scala.reflect.io.Directory
     new Directory(new java.io.File(base)).deleteRecursively()
@@ -1153,16 +1139,10 @@ object Streaming extends QueryPack {
     val halfSchema = StructType(Seq(StructField("user_id", LongType),
       StructField("event_id", LongType)))
     // phase 1: count state at 4 partitions, checkpoint retained
-    Streams.withTwsConf(s, partitions = 4) {
-      val q1 = s.readStream.schema(halfSchema).parquet(s"$base/h1")
-        .groupBy("user_id").agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(s"graft_rescale1_$tag")
-        .outputMode("complete")
-        .option("checkpointLocation", s"$base/chk1")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q1.awaitTermination()
-    }
+    Streams.drain(s.readStream.schema(halfSchema).parquet(s"$base/h1")
+        .groupBy("user_id").agg(count(lit(1)).as("n")),
+      s"$base/chk1", 4, "complete")(
+      _.format("memory").queryName(s"graft_rescale1_$tag"))
     // phase 2: state OUT as a table, IN as initial state at 8 partitions
     // cached: the seeds frame is consumed twice — as phase-2 initial
     // state and again for the stitched readout — and a second
@@ -1173,13 +1153,10 @@ object Streaming extends QueryPack {
         col("value.count").as("cents"))
       .as[TwsSeeded.Seed]
       .transform(graft.ops.PlanMemo.pin)
-    val out = Streams.withTwsConf(s, partitions = 8) {
-      Streams.drainToMemory(s, s"graft_rescale2_$tag", {
-        val ev2 = s.readStream.schema(halfSchema).parquet(s"$base/h2")
-          .select(col("user_id"), lit(1L).as("cents")).as[TwsSeeded.Ev]
-        TwsSeeded.totals(ev2, seeds).toDF()
-      })
-    }
+    val ev2 = s.readStream.schema(halfSchema).parquet(s"$base/h2")
+      .select(col("user_id"), lit(1L).as("cents")).as[TwsSeeded.Ev]
+    val out = Streams.toMemory(TwsSeeded.totals(ev2, seeds).toDF(),
+      s"graft_rescale2_$tag", 8)
     // stitched readout: phase-2-touched users emit their final total
     // (monotone → MAX, as in stream_tws_initial_state); seeded-but-
     // silent users keep their migrated phase-1 count
@@ -1216,7 +1193,7 @@ object Streaming extends QueryPack {
   q("stream_checkpoint_resume",
     """SELECT DISTINCT user_id FROM events ORDER BY user_id""") { (s, dir) =>
     import org.apache.spark.sql.types._
-    val tag = math.abs(dir.hashCode).toString
+    val tag = dirTag(dir)
     val base = s"/tmp/graft_io/chkresume_$tag"
     import scala.reflect.io.Directory
     new Directory(new java.io.File(base)).deleteRecursively()
@@ -1227,27 +1204,16 @@ object Streaming extends QueryPack {
       .write.parquet(s"$base/src")
     val srcSchema = StructType(Seq(StructField("user_id", LongType),
       StructField("event_id", LongType)))
-    def drain(): Unit = {
-      val q = s.readStream.schema(srcSchema).parquet(s"$base/src")
-        .dropDuplicates("user_id").select("user_id")
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/chk")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.engine.Confs.withConfs(s)(
-      "spark.sql.shuffle.partitions" -> "4") {
-      drain()
-    }
+    def drain(partitions: Int, resume: Boolean): Unit =
+      Streams.drain(s.readStream.schema(srcSchema).parquet(s"$base/src")
+          .dropDuplicates("user_id").select("user_id"),
+        s"$base/chk", partitions, resume = resume)(
+        _.format("parquet").option("path", s"$base/out"))
+    drain(partitions = 4, resume = false)
     // second half lands in the SAME source dir after the stop
     ev.filter(col("event_id") % 2 =!= 0).coalesce(2)
       .write.mode("append").parquet(s"$base/src")
-    graft.engine.Confs.withConfs(s)(
-      "spark.sql.shuffle.partitions" -> "8") {
-      drain()
-    }
+    drain(partitions = 8, resume = true)
     // the checkpoint's layout won over the drifted session conf
     val stateParts = Option(new java.io.File(s"$base/chk/state/0").listFiles)
       .map(_.count(f => f.isDirectory && f.getName.forall(_.isDigit)))

@@ -43,24 +43,27 @@ object TwsCounts {
     }
   }
 
-  /** ttlMs > 0 runs the op under the State API v2's OWN value TTL
-    * (TTLConfig + processing-time mode, r14 — the declarative successor
-    * to the fMGWS family's hand-armed timeout timers): an idle
-    * (user, type) VALUE expires after ttlMs and its next event recounts
+  /** `Ttl.ProcessingTime(ms)` runs the op under the State API v2's OWN
+    * value TTL (TTLConfig + processing-time mode, r14 — the declarative
+    * successor to the fMGWS family's hand-armed timeout timers): an idle
+    * (user, type) VALUE expires after `ms` and its next event recounts
     * from zero, bounding the map at the per-user types touched within
-    * one TTL window on an unbounded stream. 0 (the graded default) =
-    * lifetime state, exact counts. Eviction is spec-pinned
-    * (Round14Spec). */
-  def counts(events: Dataset[Ev], ttlMs: Long = 0L): Dataset[TypeCount] = {
+    * one TTL window on an unbounded stream. `Ttl.Off` (the graded
+    * default) = lifetime state, exact counts. Eviction is spec-pinned
+    * (Round14Spec). State API v2 value TTL runs on processing time only,
+    * so `Ttl.EventTime` is rejected. */
+  def counts(events: Dataset[Ev], ttl: Ttl = Ttl.Off): Dataset[TypeCount] = {
     implicit val keyEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.product[TypeCount]
-    Streams.useRocksDbStore(events.sparkSession)
-    val (ttl, mode) =
-      if (ttlMs > 0)
-        (TTLConfig(java.time.Duration.ofMillis(ttlMs)),
-          TimeMode.ProcessingTime())
-      else (TTLConfig.NONE, TimeMode.None())
+    val (config, mode) = ttl match {
+      case Ttl.Off => (TTLConfig.NONE, TimeMode.None())
+      case Ttl.ProcessingTime(ms) =>
+        (TTLConfig(java.time.Duration.ofMillis(ms)), TimeMode.ProcessingTime())
+      case Ttl.EventTime(_) => throw new IllegalArgumentException(
+        "TwsCounts: State API v2 value TTL is processing-time only; " +
+          "use Ttl.ProcessingTime or Ttl.Off")
+    }
     events.groupByKey(_.user_id)
-      .transformWithState(new Processor(ttl), mode, OutputMode.Append())
+      .transformWithState(new Processor(config), mode, OutputMode.Append())
   }
 }

@@ -93,7 +93,6 @@ object TwsIntervalJoin {
   def pairs(events: Dataset[Tagged], windowUs: Long): Dataset[Pair] = {
     implicit val keyEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.product[Pair]
-    Streams.useRocksDbStore(events.sparkSession)
     events.groupByKey(_.user_id)
       .transformWithState(new Processor(windowUs), TimeMode.EventTime(),
         OutputMode.Append())

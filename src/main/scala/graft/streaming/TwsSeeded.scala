@@ -49,7 +49,6 @@ object TwsSeeded {
     implicit val keyEnc = Encoders.scalaLong
     implicit val outEnc = Encoders.product[Total]
     implicit val seedEnc = Encoders.product[Seed]
-    Streams.useRocksDbStore(events.sparkSession)
     val seeded: KeyValueGroupedDataset[Long, Seed] =
       seeds.groupByKey(_.user_id)
     events.groupByKey(_.user_id)

@@ -100,6 +100,10 @@ class ExtensionsSpec extends SparkSpec {
       .map(p => p.toString -> re.findAllIn(Files.readString(p)).size)
       .filter(_._2 > 0).toMap
 
+  /** The harness mains, off the graded path. */
+  private val harness = Seq("ScaleStress", "ScaleStress100", "Dev")
+    .map(n => s"src/main/scala/graft/$n.scala").toSet
+
   test("one session factory and one function registrar in main code; " +
     "tests build no session of their own") {
     def count(dir: String, re: scala.util.matching.Regex): Int =
@@ -139,18 +143,22 @@ class ExtensionsSpec extends SparkSpec {
 
   test("one way to cache a frame (PlanMemo.pin) and one scoped-conf path") {
     // the harness mains keep their own persists and release them or exit
-    val harness = Seq("ScaleStress", "ScaleStress100", "Dev")
-      .map(n => s"src/main/scala/graft/$n.scala").toSet
     val memo = Set("src/main/scala/graft/ops/PlanMemo.scala")
     val caching = """\.(?:un)?persist\(|\.cache\(\)""".r
     assert(matches("src/main", caching).keySet -- harness == memo)
     assert(matches("src/main", "StorageLevel".r).keySet -- harness == memo)
-    // Confs.withConfs, the state-store switch tws ops need at query start,
-    // and the flag a TIMESTAMP(NANOS) events file needs
+    // Confs.withConfs and the flag a TIMESTAMP(NANOS) events file needs
     assert(matches("src/main", """conf\.set\(""".r) == Map(
       "src/main/scala/graft/engine/Confs.scala" -> 2,
-      "src/main/scala/graft/streaming/Streams.scala" -> 1,
       "src/main/scala/graft/engine/Tables.scala" -> 1))
+  }
+
+  test("one stream runner: only Streams.drain starts and awaits an " +
+    "AvailableNow drain outside the harness mains") {
+    val streams = Set("src/main/scala/graft/streaming/Streams.scala")
+    Seq("""Trigger\.AvailableNow\(""", """awaitTermination\(""").foreach { re =>
+      assert(matches("src/main", re.r).keySet -- harness == streams, re)
+    }
   }
 
   test("one rounding rule and one 128-bit cast: lit(0.5), decimal(38,0) " +

@@ -8,45 +8,51 @@ class Round14Spec extends SparkSpec {
 
   test("tws MapState value TTL: an idle counter expires and its next " +
     "event recounts from zero; lifetime mode keeps counting (r14)") {
-    import graft.streaming.TwsCounts
+    import graft.streaming.{Streams, Ttl, TwsCounts}
     import graft.streaming.TwsCounts.{Ev, TypeCount}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    def lastN(name: String, ttlMs: Long, idleMs: Long): Long = {
+    def lastN(name: String, ttl: Ttl, idleMs: Long): Long = {
       val in = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[Ev]
-      val q = TwsCounts.counts(in.toDS(), ttlMs)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      // processing-time mode + TTL runs continuous no-data maintenance
-      // batches, so processAllAvailable never settles — poll the sink
-      // for the expected emission count instead
-      def awaitRows(n: Long): Unit = {
-        val deadline = System.currentTimeMillis + 60000L
-        while (spark.table(name).count() < n
-               && System.currentTimeMillis < deadline) Thread.sleep(100L)
-        assert(spark.table(name).count() >= n,
-          s"$name: sink never reached $n emissions")
+      engine.Confs.withConfs(spark)(Streams.rocksDbStore) {
+        val q = TwsCounts.counts(in.toDS(), ttl)
+          .writeStream.format("memory").queryName(name)
+          .outputMode("append").start()
+        // processing-time mode + TTL runs continuous no-data maintenance
+        // batches, so processAllAvailable never settles — poll the sink
+        // for the expected emission count instead
+        def awaitRows(n: Long): Unit = {
+          val deadline = System.currentTimeMillis + 60000L
+          while (spark.table(name).count() < n
+                 && System.currentTimeMillis < deadline) Thread.sleep(100L)
+          assert(spark.table(name).count() >= n,
+            s"$name: sink never reached $n emissions")
+        }
+        try {
+          in.addData(Ev(1L, "click"), Ev(1L, "click"))
+          awaitRows(1L)
+          Thread.sleep(idleMs)
+          in.addData(Ev(1L, "click"))
+          awaitRows(2L)
+          // last emission for the pair is the operator's current figure
+          spark.table(name).as[TypeCount].collect().zipWithIndex
+            .filter(r => r._1.user_id == 1L && r._1.event_type == "click")
+            .maxBy(_._2)._1.n
+        } finally q.stop()
       }
-      try {
-        in.addData(Ev(1L, "click"), Ev(1L, "click"))
-        awaitRows(1L)
-        Thread.sleep(idleMs)
-        in.addData(Ev(1L, "click"))
-        awaitRows(2L)
-        // last emission for the pair is the operator's current figure
-        spark.table(name).as[TypeCount].collect().zipWithIndex
-          .filter(r => r._1.user_id == 1L && r._1.event_type == "click")
-          .maxBy(_._2)._1.n
-      } finally { q.stop(); spark.conf.unset(provKey) }
     }
     // TTL 1 s, idle 2.5 s: the value expired, the third click recounts
-    assert(lastN("tws_ttl_on", ttlMs = 1000L, idleMs = 2500L) == 1L,
+    assert(lastN("tws_ttl_on", ttl = Ttl.ProcessingTime(1000L), idleMs = 2500L) == 1L,
       "expired MapState value was not evicted")
     // lifetime mode across the same idle gap: exact count survives
-    assert(lastN("tws_ttl_off", ttlMs = 0L, idleMs = 1500L) == 3L,
+    assert(lastN("tws_ttl_off", ttl = Ttl.Off, idleMs = 1500L) == 3L,
       "lifetime-mode count lost across batches")
+    // State API v2 value TTL has no event-time clock: refused when built
+    val eventTime = intercept[IllegalArgumentException](TwsCounts.counts(
+      org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Ev].toDS(),
+      Ttl.EventTime(1000L)))
+    assert(eventTime.getMessage.contains("processing-time only"))
   }
 
   test("variant writeShredding produces typed_value subcolumns in the " +

@@ -130,7 +130,8 @@ class StreamingSpec extends SparkSpec {
         $"p_ts" <= $"c_ts" + expr("INTERVAL 10 MINUTES"))
       .select($"user_id", unix_micros($"c_ts").as("click_us"),
         unix_micros($"p_ts").as("purchase_us"))
-    val streamed = Streams.drainToMemory(spark, "ssj_test", joined)
+    val streamed = Streams.toMemory(joined, "ssj_test",
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)
       .orderBy("user_id", "click_us", "purchase_us")
       .as[(Long, Long, Long)].collect().toSeq
     val batch = SparkEntry.queries("stream_stream_join")(spark, sf)
@@ -210,11 +211,34 @@ class StreamingSpec extends SparkSpec {
       "restart wrote duplicate events — offset recovery failed")
   }
 
+  test("Streams.drain picks RocksDB from a transformWithState plan and " +
+    "leaves the session's state store provider as it found it") {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val hdfs = "org.apache.spark.sql.execution.streaming.state." +
+      "HDFSBackedStateStoreProvider"
+    implicit val sqlCtx = spark.sqlContext
+    engine.Confs.withConfs(spark)(key -> hdfs) {
+      // building a tws op writes no session conf
+      graft.streaming.TwsCounts.counts(
+        MemoryStream[graft.streaming.TwsCounts.Ev].toDS())
+      assert(spark.conf.get(key) == hdfs)
+      // transformWithState refuses every store but RocksDB, so this drain
+      // succeeds only if the runner switched the provider for its run
+      assert(SparkEntry.queries("stream_tws_mapstate_counts")(spark, sf)
+        .count() > 0)
+      assert(spark.conf.get(key) == hdfs)
+      assert(SparkEntry.queries("stream_watermark_late")(spark, sf).count() > 0)
+      assert(spark.conf.get(key) == hdfs)
+    }
+  }
+
   test("file-source streaming tumbling equals batch result") {
-    val streamed = Streams.runToMemory(spark, sf, "tumbling_test", "complete") { ev =>
-      ev.groupBy(window($"ts", "1 hour")).agg(count(lit(1)).as("n"))
-        .select(unix_timestamp($"window.start").as("ws"), $"n")
-    }.orderBy("ws").as[(Long, Long)].collect().toSeq
+    val streamed = Streams.toMemory(Streams.eventsStream(spark, sf)
+        .groupBy(window($"ts", "1 hour")).agg(count(lit(1)).as("n"))
+        .select(unix_timestamp($"window.start").as("ws"), $"n"),
+      "tumbling_test", spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      "complete")
+      .orderBy("ws").as[(Long, Long)].collect().toSeq
     val batch = engine.Tables(spark, sf, "events")
       .groupBy(window($"ts", "1 hour")).agg(count(lit(1)).as("n"))
       .select(unix_timestamp($"window.start").as("ws"), $"n")
@@ -581,13 +605,15 @@ class StreamingSpec extends SparkSpec {
         .withColumn("ts", timestamp_micros(col("ts_us")))
         .withWatermark("ts", "0 seconds")
         .as[Tagged]
-      val q = TwsIntervalJoin.pairs(src, us(60))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-        spark.table(name).as[Pair].collect().toSet
-      } finally q.stop()
+      engine.Confs.withConfs(spark)(Streams.rocksDbStore) {
+        val q = TwsIntervalJoin.pairs(src, us(60))
+          .writeStream.format("memory").queryName(name)
+          .outputMode("append").start()
+        try {
+          batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+          spark.table(name).as[Pair].collect().toSet
+        } finally q.stop()
+      }
     }
     val one = run("tws_ij_one")(b1 ++ b2 ++ b3)
     val multi = run("tws_ij_multi")(b1, b2, b3)
@@ -606,30 +632,32 @@ class StreamingSpec extends SparkSpec {
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "0 seconds")
       .as[Tagged]
-    val q = TwsIntervalJoin.pairs(src, us(60))
-      .writeStream.format("memory").queryName("tws_ij_prune")
-      .outputMode("append").start()
-    try {
-      in.addData(Tagged(1L, us(10), 1L, 0), Tagged(1L, us(20), 2L, 1))
-      q.processAllAvailable()
-      // watermark jump to 1000 s: the batch-1 timer (81 s) fires; the
-      // click@10 (dead past 70 s) and purchase@20 (dead past its own ts)
-      // are pruned; only the fresh @1000 row may remain buffered
-      in.addData(Tagged(1L, us(1000), 9L, 1))
-      q.processAllAvailable()
-      in.addData(Tagged(2L, us(2000), 10L, 0)) // push wm again → sweep runs
-      q.processAllAvailable()
-      assert(spark.table("tws_ij_prune").as[Pair].collect().toSet ==
-        Set(Pair(1L, 1L, us(10), 2L, us(20))))
-      val deadline = System.currentTimeMillis + 15000L
-      def stateRows: Long = Option(q.lastProgress)
-        .flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
-        .getOrElse(Long.MaxValue)
-      while (stateRows > 2L && System.currentTimeMillis < deadline)
-        Thread.sleep(200L)
-      // unpruned this would be ≥ 4 buffered rows (2 dead + 2 live)
-      assert(stateRows <= 2L, s"buffers not pruned: $stateRows state rows")
-    } finally q.stop()
+    engine.Confs.withConfs(spark)(Streams.rocksDbStore) {
+      val q = TwsIntervalJoin.pairs(src, us(60))
+        .writeStream.format("memory").queryName("tws_ij_prune")
+        .outputMode("append").start()
+      try {
+        in.addData(Tagged(1L, us(10), 1L, 0), Tagged(1L, us(20), 2L, 1))
+        q.processAllAvailable()
+        // watermark jump to 1000 s: the batch-1 timer (81 s) fires; the
+        // click@10 (dead past 70 s) and purchase@20 (dead past its own ts)
+        // are pruned; only the fresh @1000 row may remain buffered
+        in.addData(Tagged(1L, us(1000), 9L, 1))
+        q.processAllAvailable()
+        in.addData(Tagged(2L, us(2000), 10L, 0)) // push wm again → sweep runs
+        q.processAllAvailable()
+        assert(spark.table("tws_ij_prune").as[Pair].collect().toSet ==
+          Set(Pair(1L, 1L, us(10), 2L, us(20))))
+        val deadline = System.currentTimeMillis + 15000L
+        def stateRows: Long = Option(q.lastProgress)
+          .flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
+          .getOrElse(Long.MaxValue)
+        while (stateRows > 2L && System.currentTimeMillis < deadline)
+          Thread.sleep(200L)
+        // unpruned this would be ≥ 4 buffered rows (2 dead + 2 live)
+        assert(stateRows <= 2L, s"buffers not pruned: $stateRows state rows")
+      } finally q.stop()
+    }
   }
 
   test("tws MapState counters: last emission per (user, type) equals the " +
@@ -643,15 +671,17 @@ class StreamingSpec extends SparkSpec {
       (2L, "view") -> 2L)
     def run(name: String)(batches: Seq[Ev]*): Map[(Long, String), Long] = {
       val in = MemoryStream[Ev]
-      val q = TwsCounts.counts(in.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-        spark.table(name).as[TypeCount].collect().zipWithIndex
-          .groupBy(r => (r._1.user_id, r._1.event_type)).view
-          .mapValues(v => v.maxBy(_._2)._1.n).toMap
-      } finally q.stop()
+      engine.Confs.withConfs(spark)(Streams.rocksDbStore) {
+        val q = TwsCounts.counts(in.toDS())
+          .writeStream.format("memory").queryName(name)
+          .outputMode("append").start()
+        try {
+          batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+          spark.table(name).as[TypeCount].collect().zipWithIndex
+            .groupBy(r => (r._1.user_id, r._1.event_type)).view
+            .mapValues(v => v.maxBy(_._2)._1.n).toMap
+        } finally q.stop()
+      }
     }
     assert(run("tws_counts_one")(rows) == expected)
     assert(run("tws_counts_multi")(rows.take(2), rows.slice(2, 4),
@@ -666,21 +696,23 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val seeds = Seq(Seed(1L, 100L), Seed(2L, 200L), Seed(9L, 900L)).toDS()
     val in = MemoryStream[Ev]
-    val q = TwsSeeded.totals(in.toDS(), seeds)
-      .writeStream.format("memory").queryName("tws_seeded")
-      .outputMode("append").start()
-    try {
-      in.addData(Ev(1L, 5L), Ev(3L, 7L)) // 1 seeded, 3 not
-      q.processAllAvailable()
-      in.addData(Ev(1L, 2L), Ev(2L, 4L)) // seed 2 first touched in batch 2
-      q.processAllAvailable()
-      val last = spark.table("tws_seeded").as[Total].collect().zipWithIndex
-        .groupBy(_._1.user_id).view.mapValues(_.maxBy(_._2)._1.lifetime_cents)
-        .toMap
-      assert(last == Map(1L -> 107L, 2L -> 204L, 3L -> 7L), s"got $last")
-      // user 9 is seeded but never streamed — no emission, state waits
-      assert(!last.contains(9L))
-    } finally q.stop()
+    engine.Confs.withConfs(spark)(Streams.rocksDbStore) {
+      val q = TwsSeeded.totals(in.toDS(), seeds)
+        .writeStream.format("memory").queryName("tws_seeded")
+        .outputMode("append").start()
+      try {
+        in.addData(Ev(1L, 5L), Ev(3L, 7L)) // 1 seeded, 3 not
+        q.processAllAvailable()
+        in.addData(Ev(1L, 2L), Ev(2L, 4L)) // seed 2 first touched in batch 2
+        q.processAllAvailable()
+        val last = spark.table("tws_seeded").as[Total].collect().zipWithIndex
+          .groupBy(_._1.user_id).view.mapValues(_.maxBy(_._2)._1.lifetime_cents)
+          .toMap
+        assert(last == Map(1L -> 107L, 2L -> 204L, 3L -> 7L), s"got $last")
+        // user 9 is seeded but never streamed — no emission, state waits
+        assert(!last.contains(9L))
+      } finally q.stop()
+    }
   }
 
   test("stream_near_dedup anchors are consistent with verified minhash pairs") {
